@@ -79,6 +79,11 @@ object GraftSession {
       // (tradeoff, documented: a failed job can leave partial files; our
       // sink is truncate-and-replace idempotent, so a retry converges)
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .withExtensions(installAll)
+    // file: through the in-process permission setter (no `chmod` fork per
+    // created dir/file/.crc without libhadoop), for both FileSystem and
+    // FileContext users; see graft.sources.LocalFileSystems
+    graft.sources.LocalFileSystems.Confs.foreach { case (k, v) =>
+      b.config(s"spark.hadoop.$k", v) }
+    b.withExtensions(installAll)
   }
 }

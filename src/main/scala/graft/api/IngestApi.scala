@@ -7,6 +7,7 @@ import org.apache.spark.sql.SparkSession
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import scala.util.control.NonFatal
 
 /** The reference's HTTP surface (`/root/reference/ingestion/app.py:47-93`)
   * over the Spark engine — wire-compatible routes and response shapes:
@@ -80,7 +81,7 @@ final class IngestApi(spark: SparkSession, runner: JobRunner, cfg: IngestConfig,
     } catch {
       case e: IllegalArgumentException =>
         respond(ex, 422, s"""{"detail":${jstr(e.getMessage)}}""")
-      case e: Throwable =>
+      case NonFatal(e) =>
         respond(ex, 500, s"""{"detail":${jstr(String.valueOf(e.getMessage))}}""")
     }
   }

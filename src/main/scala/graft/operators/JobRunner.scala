@@ -7,7 +7,8 @@ import org.apache.spark.sql.SparkSession
 import java.util.UUID
 import java.util.concurrent.Executors
 import scala.collection.concurrent.TrieMap
-import scala.concurrent.{ExecutionContext, Future}
+import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
+import scala.concurrent.duration._
 import scala.util.{Failure, Success}
 
 /** J1–J3 — asynchronous load-job launch, registry, and poll (SURVEY §2.1).
@@ -146,31 +147,28 @@ final class JobRunner(spark: SparkSession, poolSize: Int = 4) {
 
   /** J2: poll a job id (`bigquery_interaction.py:78-121`). */
   def poll(jobId: String): Either[PollError, (JobState, Option[String])] =
-    registry.get(jobId) match {
-      case None    => Left(JobNotFound(jobId))
-      case Some(h) => Right(h.future.value match {
-        case None                => (JobState.Running, None)
-        case Some(Success(_))    => (JobState.Success, None)
-        case Some(Failure(e))    => (JobState.Failure, Some(describe(e)))
-      })
+    registry.get(jobId).map(resultOf).toRight(JobNotFound(jobId))
+
+  private def resultOf(h: JobHandle): (JobState, Option[String]) =
+    h.future.value match {
+      case None             => (JobState.Running, None)
+      case Some(Success(_)) => (JobState.Success, None)
+      case Some(Failure(e)) => (JobState.Failure, Some(describe(e)))
     }
 
-  private def stateOf(h: JobHandle): JobState = h.future.value match {
-    case None             => JobState.Running
-    case Some(Success(_)) => JobState.Success
-    case Some(Failure(_)) => JobState.Failure
-  }
+  private def stateOf(h: JobHandle): JobState = resultOf(h)._1
 
-  /** Block until a job leaves RUNNING (test/driver convenience). */
+  /** Block until a job leaves RUNNING (test/driver convenience): waits on the
+    * job's future itself, so it returns as soon as the job ends. */
   def await(jobId: String, timeoutSec: Int = 600): (JobState, Option[String]) = {
-    val deadline = System.nanoTime() + timeoutSec * 1_000_000_000L
-    while (System.nanoTime() < deadline) {
-      poll(jobId) match {
-        case Right((JobState.Running, _)) => Thread.sleep(50)
-        case Right(done)                  => return done
-        case Left(_) => throw new NoSuchElementException(s"job $jobId not found")
-      }
+    val h = registry.getOrElse(jobId,
+      throw new NoSuchElementException(s"job $jobId not found"))
+    try Await.ready(h.future, timeoutSec.seconds)
+    catch { case _: TimeoutException => }
+    resultOf(h) match {
+      case (JobState.Running, _) =>
+        (JobState.Running, Some(s"timeout after ${timeoutSec}s"))
+      case done => done
     }
-    (JobState.Running, Some(s"timeout after ${timeoutSec}s"))
   }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import graft.core.{IngestConfig, PartitionHour}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** S2 + S3 — the hour-partitioned, clustered landing table and its
   * truncate-and-replace partition sink (SURVEY §2.1 S2/S3).
@@ -166,6 +167,7 @@ object LandingTable {
               if (!fs.rename(st.getPath, live))
                 throw new java.io.IOException(
                   s"commit: rename ${st.getPath} -> $live failed")
+              // fatal errors too: the committing thread rethrows the first failure
             } catch { case t: Throwable => failures.add(t) }
           }
         }
@@ -212,7 +214,7 @@ object LandingTable {
           trash.toUri.getPath).stripPrefix("/")
         val live = new Path(root, rel)
         fs.exists(live) || fs.rename(st.getPath, live)
-      } catch { case _: Throwable => false }
+      } catch { case NonFatal(_) => false }
     }
   }
 

@@ -4,7 +4,6 @@ import graft.core._
 import graft.operators.{JobRunner, Workflow}
 import graft.plans.RequirePartitionFilter
 import graft.sources.LandingTable
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
 import java.nio.file.{Files, Paths}
@@ -18,13 +17,8 @@ import java.nio.file.{Files, Paths}
   */
 object IngestDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
+    val spark = graft.GraftSession.builder("local[4]", 4)
       .appName("graft-ingest-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(RequirePartitionFilter.install)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

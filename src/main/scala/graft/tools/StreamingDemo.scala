@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.core._
 import graft.streaming.StreamingIngest
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 
 import java.nio.file.{Files, Paths}
@@ -15,12 +14,8 @@ import java.nio.file.{Files, Paths}
   */
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
+    val spark = graft.GraftSession.builder("local[4]", 4)
       .appName("graft-streaming-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -78,7 +73,7 @@ object StreamingDemo {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     sq.awaitTermination(120000)
     println("== closed sessions (gap>30min or watermark-timed-out):")
-    spark.table("demo_sessions").orderBy("session_start").show(false)
+    spark.table("demo_sessions").orderBy("session_start_us").show(false)
 
     spark.stop()
   }
