@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import graft.core.JsonText
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR (default sf0.1) and prints one JSON line with
@@ -99,16 +101,29 @@ object Bench {
   private val NormFile = java.nio.file.Paths.get(".bench-anchor")
 
   private[graft] def readBestNorm(): Option[Double] =
-    try {
+    failSoft(_ => Option.empty[Double]) {
       if (java.nio.file.Files.exists(NormFile))
         Some(java.nio.file.Files.readString(NormFile).trim.toDouble)
           .filter(n => n > 0 && n.isFinite)
       else None
-    } catch { case _: Throwable => None }
+    }
 
   private def writeBestNorm(n: Double): Unit =
-    try java.nio.file.Files.writeString(NormFile, f"$n%.4f%n")
-    catch { case _: Throwable => () }
+    failSoft(_ => ()) {
+      java.nio.file.Files.writeString(NormFile, f"$n%.4f%n"); ()
+    }
+
+  /** Runs `body`, turning a non-fatal failure into `onFail`'s value. Fatal
+    * JVM errors propagate; an interrupt re-asserts the thread's interrupt
+    * flag and propagates, so a cancelled run stops instead of timing on.
+    */
+  private[graft] def failSoft[A](onFail: Throwable => A)(body: => A): A =
+    try body catch {
+      case e: InterruptedException =>
+        Thread.currentThread().interrupt()
+        throw e
+      case NonFatal(e) => onFail(e)
+    }
 
   /** Syscall-heavy fixed workload: 48 tasks each writing one small parquet
     * file, then list + read-back + delete. ~0.3s steady; an order of
@@ -128,7 +143,11 @@ object Bench {
   private val CanaryFailSec = 600.0
 
   private[graft] def canary(spark: SparkSession): Double =
-    try {
+    failSoft { e =>
+      System.err.println(s"[bench] canary probe FAILED (counts as dirty): " +
+        s"${e.getMessage}")
+      CanaryFailSec
+    } {
       val t0 = System.nanoTime()
       val dir = "target/bench-canary"
       spark.range(0, 48, 1, 48).write.mode("overwrite").parquet(dir)
@@ -136,10 +155,6 @@ object Bench {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
       (System.nanoTime() - t0) / 1e9
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] canary probe FAILED (counts as dirty): " +
-        s"${e.getMessage}")
-      CanaryFailSec
     }
 
   def main(args: Array[String]): Unit = {
@@ -152,11 +167,15 @@ object Bench {
     // driver run died rc-1 in an unprotected warm-up parquet write). On
     // failure the first timed query pays the warm-up — inflated but
     // recoverable via min-of-reps — versus losing the whole run's output.
+    // Failed labels are listed as `warm_failed` in the detail JSON.
+    var warmFailed = Vector.empty[String]
+    def warmFail(label: String)(e: Throwable): Unit = {
+      warmFailed :+= label
+      System.err.println(s"[bench] warm-up '$label' failed (continuing): " +
+        s"${e.getMessage}")
+    }
     def warm(label: String)(body: => Unit): Unit =
-      try body catch { case e: Throwable =>
-        System.err.println(s"[bench] warm-up '$label' failed (continuing): " +
-          s"${e.getMessage}")
-      }
+      failSoft(warmFail(label))(body)
     // Throwaway actions so JVM/classloading/codegen/parquet-reader warmup
     // isn't billed to whichever query happens to sort first.
     warm("range-noop") {
@@ -196,13 +215,9 @@ object Bench {
     // stamp bump (v3→v4 in r15) rebuilds here in the untimed warm step,
     // and the flag makes that visible in the emitted JSON so a reader can
     // attribute a one-round x1/st19 blip to the retrain, not the engine.
-    val st19Warm =
-      try graft.operators.CorpusPipeline.st19FrozenFixtures(spark, sfDir)._3
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] warm-up 'st19-fixtures' failed " +
-          s"(continuing): ${e.getMessage}")
-        false
-      }
+    val st19Warm = failSoft { e => warmFail("st19-fixtures")(e); false } {
+      graft.operators.CorpusPipeline.st19FrozenFixtures(spark, sfDir)._3
+    }
     System.err.println(s"[bench] st19/x1 frozen model was " +
       (if (st19Warm) "already warm" else "REBUILT in the warm step"))
 
@@ -261,13 +276,13 @@ object Bench {
     def runOnce(name: String, fn: (SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
+      try failSoft { e =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         e.printStackTrace()
         Double.MaxValue
+      } {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
       } finally {
         // Queries that persist intermediates (d28/d34/d35) cannot unpersist
         // before their caller's action; dropping the cache per query keeps
@@ -407,8 +422,11 @@ object Bench {
       s""""flap_retries":$flapRetries,"midrun_waits":$midRunWaits,""" +
       s""""flap_residual":$residualFlap,""" +
       s""""host_degraded":$hostDegraded,"failed":$failedJson"""
+    // the detail file alone lists failed warm-ups; the short line below
+    // keeps its fields
+    val warmFailedJson = warmFailed.map(JsonText.quote).mkString("[", ",", "]")
     val json =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir",$flap}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir",$flap,"warm_failed":$warmFailedJson}"""
     // Single output path (run/outputStrategy := StdoutOutput keeps println
     // un-prefixed under sbt): the full contract line first, a durable copy
     // at target/bench.json, and a SHORT parseable line LAST so tail-capture

@@ -80,9 +80,10 @@ final class IngestApi(spark: SparkSession, runner: JobRunner, cfg: IngestConfig,
       }
     } catch {
       case e: IllegalArgumentException =>
-        respond(ex, 422, s"""{"detail":${jstr(e.getMessage)}}""")
+        respond(ex, 422, s"""{"detail":${JsonText.quote(e.getMessage)}}""")
       case NonFatal(e) =>
-        respond(ex, 500, s"""{"detail":${jstr(String.valueOf(e.getMessage))}}""")
+        respond(ex, 500,
+          s"""{"detail":${JsonText.quote(String.valueOf(e.getMessage))}}""")
     }
   }
 
@@ -91,19 +92,10 @@ final class IngestApi(spark: SparkSession, runner: JobRunner, cfg: IngestConfig,
     else PartitionCodec.fromBqId(p)
 
   private def loadJobJson(jobId: String, state: JobState, msg: Option[String]) =
-    s"""{"job_id":${jstr(jobId)},"status":{"name":${jstr(state.name)},""" +
-      s""""code":${state.code},"error_msg":${msg.map(jstr).getOrElse("null")}}}"""
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    s"""{"job_id":${JsonText.quote(jobId)},""" +
+      s""""status":{"name":${JsonText.quote(state.name)},""" +
+      s""""code":${state.code},""" +
+      s""""error_msg":${msg.map(JsonText.quote).getOrElse("null")}}}"""
 
   private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Near-duplicate detection + fingerprinting for training-data pipelines:
   * MinHash signatures, SimHash clustering, n-gram Jaccard, rolling hashes,
@@ -89,7 +90,7 @@ object DedupQueries {
     cache.keys.filter(k => cutOf(k) != active).foreach { k =>
       cache.remove(k).foreach { df =>
         try if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
       }
     }
 
@@ -118,7 +119,7 @@ object DedupQueries {
       case stale =>
         stale.foreach { df =>
           try if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
-          catch { case _: Throwable => () }
+          catch { case NonFatal(_) => () }
         }
         val fresh = build()
         shingleCache.put(sfDir, fresh)
@@ -299,7 +300,7 @@ object DedupQueries {
       case stale =>
         stale.foreach { df =>
           try if (!df.sparkSession.sparkContext.isStopped) df.unpersist()
-          catch { case _: Throwable => () }
+          catch { case NonFatal(_) => () }
         }
         val good = d13LshPairs(spark, sfDir)
           .filter(col("jaccard") >= threshold)
@@ -579,20 +580,12 @@ object DedupQueries {
     */
   def e6IvfSearch(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
     val emb = table(spark, sfDir, "embeddings")
-    val cents = emb.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("c_emb"))
     def dotOf(a: Column, b: Column): Column = aggregate(
       zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
 
     // assign every vector (corpus and queries alike) to its nearest centroid
-    val wAssign = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id").orderBy(col("a_sim").desc, col("centroid_id").asc)
-    val assigned = emb.crossJoin(broadcast(cents))
-      .withColumn("a_sim", dotOf(col("embedding"), col("c_emb")).cast("decimal(20,6)"))
-      .withColumn("a_rk", row_number().over(wAssign))
-      .filter(col("a_rk") === 1)
-      .select(col("vec_id"), col("embedding"), col("centroid_id"))
+    val assigned = VectorQueries.assignToCentroids(spark, sfDir, emb)
 
     val queries = assigned.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),

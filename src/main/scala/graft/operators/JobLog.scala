@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.JobState
+import graft.core.{JobState, JsonText}
 
 /** Structured, alert-greppable job-outcome log stream — the engine analogue
   * of the reference's operational-monitoring story (`/root/reference/
@@ -32,24 +32,15 @@ object JobLog {
   def addSink(s: (String, String) => Unit): Unit = sinks.add(s)
   def removeSink(s: (String, String) => Unit): Unit = sinks.remove(s)
 
-  private def esc(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   /** Emit one outcome line. `event` is `"load_job"` (per-job completion,
     * the BQ job log analogue) or `"workflow_result"` (the final workflow
     * report the reference's alert #1 greps).
     */
   def outcome(event: String, jobId: String, status: JobState,
       msg: Option[String]): Unit = {
-    val line = s"""{"event":"${esc(event)}","job_id":"${esc(jobId)}",""" +
-      s""""status":"${status.name}","msg":"${esc(msg.getOrElse(""))}"}"""
+    val line = s"""{"event":${JsonText.quote(event)},""" +
+      s""""job_id":${JsonText.quote(jobId)},"status":"${status.name}",""" +
+      s""""msg":${JsonText.quote(msg.getOrElse(""))}}"""
     val severity = if (status == JobState.Failure) "ERROR" else "INFO"
     if (status == JobState.Failure) log.error(line) else log.info(line)
     sinks.forEach(s => s(severity, line))

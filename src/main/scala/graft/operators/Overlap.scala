@@ -41,6 +41,7 @@ private[graft] object Overlap {
         catch {
           case e: java.util.concurrent.ExecutionException =>
             Left(Option(e.getCause).getOrElse(e))
+          // fatal errors too: runAll rethrows the first failure below
           case e: Throwable => Left(e)
         })
       outcomes.collectFirst { case Left(e) => e }.foreach(e => throw e)

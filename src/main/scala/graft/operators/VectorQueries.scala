@@ -1315,15 +1315,7 @@ object VectorQueries {
     */
   def e18PersistedIvf(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
     val emb = table(spark, sfDir, "embeddings")
-    val cents = emb.filter(col("vec_id") < 4)
-      .select(col("vec_id").as("centroid_id"), col("embedding").as("c_emb"))
-    val wAssign = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id").orderBy(col("a_sim").desc, col("centroid_id").asc)
-    val assigned = emb.crossJoin(broadcast(cents))
-      .withColumn("a_sim", dot(col("embedding"), col("c_emb")).cast("decimal(20,6)"))
-      .withColumn("a_rk", row_number().over(wAssign))
-      .filter(col("a_rk") === 1)
-      .select(col("vec_id"), col("embedding"), col("centroid_id"))
+    val assigned = assignToCentroids(spark, sfDir, emb)
 
     val dir = new java.io.File(
       s"target/parity/ivf-index-${sfDir.replaceAll("[^A-Za-z0-9.]+", "_")}")
@@ -1386,19 +1378,78 @@ object VectorQueries {
       org.apache.spark.sql.types.StructField("bin",
         org.apache.spark.sql.types.LongType)))
 
+  /** A demo-schema coarse codebook (centroid_id, c_emb: array<float>)
+    * collected to the driver: its K rows in ascending centroid_id order,
+    * plus the centroid_id column's type so assignment emits exactly that
+    * type. A codebook is K rows, so collecting it costs one small job —
+    * once per stream when a caller resolves it before `.start()`.
+    */
+  private[operators] final case class Codebook(
+      centroids: Seq[(Long, Seq[java.lang.Float])],
+      idType: org.apache.spark.sql.types.DataType)
+
+  private[operators] def collectCodebook(cents: DataFrame): Codebook = {
+    val idType = cents.schema("centroid_id").dataType
+    require(cents.schema("c_emb").dataType match {
+      case org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.FloatType, _) => true
+      case _ => false
+    }, s"codebook c_emb must be array<float>: ${cents.schema.simpleString}")
+    Codebook(cents.select(col("centroid_id").cast("long"), col("c_emb"))
+      .collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[java.lang.Float](1)))
+      .sortBy(_._1), idType)
+  }
+
+  /** The demo centroid set (vec_id < 4, the e4/e6/e18 family), collected. */
+  private[operators] def demoCodebook(spark: SparkSession,
+      sfDir: String): Codebook =
+    collectCodebook(table(spark, sfDir, "embeddings").filter(col("vec_id") < 4)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("c_emb")))
+
+  /** Coarse assignment of `rows` (vec_id, embedding) to a driver-side
+    * codebook as ONE in-row argmax: each row scores every centroid with
+    * the float dot product rounded to decimal(20,6) and keeps the highest
+    * score, ties (and an all-null score row, e.g. a null embedding) going
+    * to the lowest centroid_id — exactly the order of the historical
+    * crossJoin + `row_number()` window (score DESC NULLS LAST, centroid_id
+    * ASC), with no join, window or shuffle. Output is (vec_id, embedding,
+    * centroid_id) in the input's partitioning; an empty codebook yields no
+    * rows, as the crossJoin did.
+    *
+    * The window also collapsed duplicate vec_id rows; this does not.
+    * Every caller passes rows keyed by vec_id — the embeddings table or a
+    * filter of it, a stream batch of its disjoint range split, or such a
+    * batch anti-joined with tombstones.
+    */
+  private[operators] def assignToCodebook(rows: DataFrame,
+      cb: Codebook): DataFrame = {
+    // struct order is field order: the score first, then -index, so the
+    // lower centroid_id wins a tie; a null score sorts below any score
+    val cid =
+      if (cb.centroids.isEmpty) lit(null).cast(cb.idType)
+      else array_max(array(cb.centroids.zipWithIndex.map {
+        case ((id, emb), i) => struct(
+          dot(col("embedding"), typedLit(emb)).cast("decimal(20,6)").as("s"),
+          lit(-i).as("o"),
+          lit(id).cast(cb.idType).as("c"))
+      }: _*)).getField("c")
+    val assigned = rows.select(col("vec_id"), col("embedding"),
+      cid.as("centroid_id"))
+    if (cb.centroids.isEmpty) assigned.filter(lit(false)) else assigned
+  }
+
   /** Coarse assignment of `rows` (vec_id, embedding) to the demo centroid
-    * set (vec_id < 4, the e4/e6/e18 family): each vector goes to its
-    * max-dot-product centroid with the deterministic centroid-id tiebreak.
-    * Public because the e20 append path and its file-identity spec both
-    * need to assign SUBSETS of the corpus independently — assignment is
+    * set: each vector goes to its max-dot-product centroid with the
+    * deterministic centroid-id tiebreak ([[assignToCodebook]]). Public
+    * because the e20 append path and its file-identity spec both need to
+    * assign SUBSETS of the corpus independently — assignment is
     * per-vector, so assigning a partition of the corpus in pieces yields
     * exactly the same (vector → bin) map as one full pass.
     */
   def assignToCentroids(spark: SparkSession, sfDir: String,
       rows: DataFrame): DataFrame =
-    assignToGivenCentroids(rows,
-      table(spark, sfDir, "embeddings").filter(col("vec_id") < 4)
-        .select(col("vec_id").as("centroid_id"), col("embedding").as("c_emb")))
+    assignToCodebook(rows, demoCodebook(spark, sfDir))
 
   /** [[assignToCentroids]] against an EXPLICIT demo-schema codebook
     * (centroid_id, c_emb: array<float>) — the serving side of a
@@ -1407,15 +1458,8 @@ object VectorQueries {
     * the float-dot assignment math stays bit-identical to the historical
     * demo path (the oracles restate exactly that arithmetic).
     */
-  def assignToGivenCentroids(rows: DataFrame, cents: DataFrame): DataFrame = {
-    val wAssign = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id").orderBy(col("a_sim").desc, col("centroid_id").asc)
-    rows.select("vec_id", "embedding").crossJoin(broadcast(cents))
-      .withColumn("a_sim", dot(col("embedding"), col("c_emb")).cast("decimal(20,6)"))
-      .withColumn("a_rk", row_number().over(wAssign))
-      .filter(col("a_rk") === 1)
-      .select(col("vec_id"), col("embedding"), col("centroid_id"))
-  }
+  def assignToGivenCentroids(rows: DataFrame, cents: DataFrame): DataFrame =
+    assignToCodebook(rows, collectCodebook(cents))
 
   /** e20: INCREMENTAL INDEX APPEND — the maintenance half of the persisted
     * IVF story (e18 builds + serves; this absorbs NEW vectors without a
@@ -1480,10 +1524,11 @@ object VectorQueries {
     * mechanism) at the cost of manifest-based instead of directory-based
     * bin pruning.
     *
-    * Scale shape: per batch, cost ∝ batch size (assignment broadcast is
-    * the K-row codebook; the append touches only the bins the batch maps
-    * to); the index never rewrites an existing file, so a day's stream
-    * accretes files compacted later by e23's bin-scoped sweep.
+    * Scale shape: per batch, cost ∝ batch size (assignment is an in-row
+    * argmax over the K-row codebook, collected once per stream; the append
+    * touches only the bins the batch maps to); the index never rewrites
+    * an existing file, so a day's stream accretes files compacted later
+    * by e23's bin-scoped sweep.
     */
   /** e18's ranking over an explicit manifest-file list — the serving tail
     * shared by st17 (logical-bin file selection) and st24 (map-routed
@@ -1575,6 +1620,8 @@ object VectorQueries {
     val ckptDir = new java.io.File(s"target/parity/ivf-sckpt-$sfTag")
       .getAbsoluteFile.toString
     wipeLocalDir(indexDir); wipeLocalDir(ckptDir)
+    // the codebook is resolved once per stream, not once per batch
+    val cb = demoCodebook(spark, sfDir)
 
     val ss = StreamSessions.microBatch(spark, 8)
     val q = ss.readStream
@@ -1593,7 +1640,7 @@ object VectorQueries {
         // is at-least-once, and a replay after a partial append would
         // duplicate index entries; the keyed commit no-ops on replay
         val bs = batch.sparkSession
-        val delta = assignToCentroids(bs, sfDir, batch)
+        val delta = assignToCodebook(batch, cb)
         val prior = SnapshotLog.latestVersion(bs, s"file:$indexDir")
           .map(v => SnapshotLog.manifest(bs, s"file:$indexDir", v))
           .getOrElse(Nil)
@@ -1614,7 +1661,7 @@ object VectorQueries {
     // e18's serving, over the stream-built index: probed bins resolve to
     // manifest files by their `_centroid_id=` path level — unprobed bins'
     // files are never opened
-    val queries = assignToCentroids(spark, sfDir, emb.filter(col("vec_id") < 10))
+    val queries = assignToCodebook(emb.filter(col("vec_id") < 10), cb)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id"))
     val bins = queries.select(col("centroid_id").cast("int").as("b"))
@@ -1663,6 +1710,7 @@ object VectorQueries {
     val ckptDir = new java.io.File(s"target/parity/ivf-st24ckpt-$sfTag")
       .getAbsoluteFile.toString
     wipeLocalDir(indexDir); wipeLocalDir(ckptDir); wipeLocalDir(mapDirF)
+    val cb = demoCodebook(spark, sfDir)
 
     val ss = StreamSessions.microBatch(spark, 8)
     val q = ss.readStream
@@ -1681,7 +1729,7 @@ object VectorQueries {
         // appends target the LOGICAL bin id, which is always a live
         // physical bin (child 0 of every split keeps the parent's id) —
         // the production dynamic: appends re-concentrate, splits re-cap
-        val delta = assignToCentroids(bs, sfDir, batch)
+        val delta = assignToCodebook(batch, cb)
           .withColumn("pbin", col("centroid_id"))
         val prior = SnapshotLog.latestVersion(bs, s"file:$indexDir")
           .map(v => SnapshotLog.manifest(bs, s"file:$indexDir", v))
@@ -1706,7 +1754,7 @@ object VectorQueries {
     // serving through the persisted logical→physical map: probed logical
     // bins resolve to physical children, whose manifest files are selected
     // by their `_pbin=` path level — unmapped bins' files are never opened
-    val queries = assignToCentroids(spark, sfDir, emb.filter(col("vec_id") < 10))
+    val queries = assignToCodebook(emb.filter(col("vec_id") < 10), cb)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id"))
     val probed = queries.select(col("centroid_id").cast("long").as("b"))
@@ -1768,6 +1816,7 @@ object VectorQueries {
       .getAbsoluteFile.toString
     wipeLocalDir(indexDir); wipeLocalDir(ckptDir)
     wipeLocalDir(mapDirF); wipeLocalDir(tombDir)
+    val cb = demoCodebook(spark, sfDir)
 
     val ss = StreamSessions.microBatch(spark, 8)
     val q = ss.readStream
@@ -1802,8 +1851,8 @@ object VectorQueries {
           .map(v => bs.read.parquet(
             SnapshotLog.manifest(bs, s"file:$tombDir", v): _*))
           .getOrElse(batch.sparkSession.range(0).select(col("id").as("vec_id")))
-        val delta = assignToCentroids(bs, sfDir,
-            batch.join(broadcast(tombs), Seq("vec_id"), "left_anti"))
+        val delta = assignToCodebook(
+            batch.join(broadcast(tombs), Seq("vec_id"), "left_anti"), cb)
           .withColumn("pbin", col("centroid_id"))
         val prior = SnapshotLog.latestVersion(bs, s"file:$indexDir")
           .map(v => SnapshotLog.manifest(bs, s"file:$indexDir", v))
@@ -1837,8 +1886,8 @@ object VectorQueries {
 
     // st24's serving through the persisted map; queries exclude the
     // doomed ids (the e21 convention)
-    val queries = assignToCentroids(spark, sfDir,
-      emb.filter(col("vec_id") < 10 && pmod(col("vec_id"), lit(10)) =!= 3))
+    val queries = assignToCodebook(
+      emb.filter(col("vec_id") < 10 && pmod(col("vec_id"), lit(10)) =!= 3), cb)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id"))
     val probed = queries.select(col("centroid_id").cast("long").as("b"))
@@ -1898,24 +1947,64 @@ object VectorQueries {
       ()
     }
 
+  /** A frozen RAW inverted-list index in e18's on-disk layout (one
+    * `centroid_id=<bin>` directory per list), resolved once: each bin's
+    * data files, listed when the serving stream starts. The row schema is
+    * the writers' declared [[RawIndexRowSchema]], so a read of these files
+    * infers nothing. Valid while the index is frozen — st20's index is
+    * rebuilt only before its stream starts.
+    */
+  private[operators] final case class RawIvfLists(root: String,
+      files: Map[Long, Seq[String]])
+
+  private[operators] def resolveRawIvfLists(spark: SparkSession,
+      indexDir: String): RawIvfLists = {
+    val root = new org.apache.hadoop.fs.Path(s"file:$indexDir")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val prefix = "centroid_id="
+    def visible(p: org.apache.hadoop.fs.Path) =
+      !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    val files = fs.listStatus(root)
+      .filter(d => d.isDirectory && d.getPath.getName.startsWith(prefix))
+      .map { d =>
+        d.getPath.getName.stripPrefix(prefix).toLong ->
+          fs.listStatus(d.getPath).filter(f => f.isFile && visible(f.getPath))
+            .map(_.getPath.toString).toSeq.sorted
+      }.toMap
+    RawIvfLists(root.toString, files)
+  }
+
   /** One query batch served against frozen RAW inverted lists — st20's
     * per-batch plan, factored out next to [[pqServeRefineBatch]] so the
-    * two serving generations share one structure and can't drift: collect
-    * the batch's probed bin ids (a driver list ≤ batch distinct bins),
-    * partition-prune the on-disk lists to those bins, broadcast the batch
-    * into the pruned scan, exact top-k. `queries` is assignToCentroids
-    * output (query_id, q_emb, centroid_id), materialized by the caller
-    * (who frees the blocks after consuming the result).
+    * two serving generations share one structure and can't drift. The
+    * batch (vec_id, embedding) is coarse-assigned against the driver-side
+    * codebook and collected ONCE: those rows give both the probed bin ids
+    * and the broadcast side (a local relation, so the batch's source is
+    * not scanned again). The index read opens only the probed bins' files
+    * from `lists` — no directory listing, no schema inference — under a
+    * centroid_id partition filter, and the batch is broadcast into it for
+    * the exact top-k.
     */
-  private[operators] def ivfServeBatch(bs: SparkSession, queries: DataFrame,
-      indexDir: String, k: Int): DataFrame = {
-    val bins = queries.select(col("centroid_id").cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val idx = bs.read.option("basePath", s"file:$indexDir")
-      .parquet(s"file:$indexDir")
-      .filter(col("centroid_id").cast("int").isin(bins: _*))
-      .select(col("vec_id").as("neighbor_id"), col("embedding"),
+  private[operators] def ivfServeBatch(bs: SparkSession, batch: DataFrame,
+      cb: Codebook, lists: RawIvfLists, k: Int): DataFrame = {
+    val assigned = assignToCodebook(batch, cb)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id").cast("long").as("centroid_id"))
+    val rows = assigned.collect()
+    val queries = bs.createDataFrame(java.util.Arrays.asList(rows: _*),
+      assigned.schema)
+    val bins = rows.map(_.getLong(2)).distinct.sorted
+    val files = bins.flatMap(b => lists.files.getOrElse(b, Nil))
+    // a batch whose probed bins hold no files reads an explicitly-typed
+    // empty frame: a zero-path parquet read throws
+    val idxRaw =
+      if (files.nonEmpty) bs.read.schema(RawIndexRowSchema)
+        .option("basePath", lists.root).parquet(files.toSeq: _*)
+      else bs.createDataFrame(
+        bs.sparkContext.emptyRDD[org.apache.spark.sql.Row], RawIndexRowSchema)
+    val idx = idxRaw.filter(col("centroid_id").isin(bins.toSeq: _*))
+      .select(col("vec_id").as("neighbor_id"), col("embedding"),
+        col("centroid_id"))
     val wRank = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id")
       .orderBy(col("sim_dec").desc, col("neighbor_id").asc)
@@ -1955,16 +2044,19 @@ object VectorQueries {
     * oracle states exactly that: e18's full serving SQL over the whole
     * query set, verbatim (plus the commit count).
     *
-    * Per-batch serving cost at scale: coarse-assign the batch against the
-    * broadcast centroid table (batch-sized scan), collect the probed bin
-    * ids (≤ batch distinct bins, a driver list), then read ONLY those
-    * partition directories of the on-disk inverted lists — unprobed bins
-    * are never listed — and broadcast the batch's queries into the
-    * bin-pruned scan. No stage touches the full index; per-batch I/O is
-    * ∝ Σ(probed bin sizes), the IVF serving contract. Exactly-once under
-    * foreachBatch replay: the result commit is batchId-keyed (st15's
-    * mechanism), so a replayed batch no-ops and `n_commits` = number of
-    * micro-batches survives crashes.
+    * What is resolved once per stream, before `.start()`: the K-row
+    * codebook (collected to the driver) and the frozen index's bin → file
+    * listing ([[resolveRawIvfLists]]; the row schema is the declared
+    * [[RawIndexRowSchema]]). Per batch ([[ivfServeBatch]]): one job scans
+    * the batch and collects its in-row coarse assignment (≤ batch rows);
+    * those rows give the probed bin ids and the broadcast query side; the
+    * serving read opens ONLY the probed bins' files — no batch lists a
+    * directory, unprobed bins are never listed or opened, and no schema
+    * is inferred — then the keyed result commit. No stage touches the full
+    * index; per-batch I/O is ∝ Σ(probed bin sizes), the IVF serving
+    * contract. Exactly-once under foreachBatch replay: the result commit
+    * is batchId-keyed (st15's mechanism), so a replayed batch no-ops and
+    * `n_commits` = number of micro-batches survives crashes.
     */
   def st20StreamingAnnServe(spark: SparkSession, sfDir: String,
       k: Int = 3): DataFrame = {
@@ -1982,12 +2074,14 @@ object VectorQueries {
     val idxMarker = new java.io.File(indexDir, "._index_ok")
     val idxValid = idxMarker.isFile && new String(
       java.nio.file.Files.readAllBytes(idxMarker.toPath), "UTF-8") == srcStamp
+    val cb = demoCodebook(spark, sfDir)
     if (!idxValid) {
-      assignToCentroids(spark, sfDir, emb)
+      assignToCodebook(emb, cb)
         .write.mode("overwrite").partitionBy("centroid_id")
         .parquet(s"file:$indexDir")
       java.nio.file.Files.write(idxMarker.toPath, srcStamp.getBytes("UTF-8"))
     }
+    val lists = resolveRawIvfLists(spark, indexDir)
 
     // ---- query arrivals fixture: vec_id < 40 range-split into 4 files so
     // the stream genuinely runs multiple micro-batches (st17's shape)
@@ -2032,14 +2126,7 @@ object VectorQueries {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[
           org.apache.spark.sql.Row], batchId: Long) =>
         val bs = batch.sparkSession
-        // batch-sized coarse assignment (centroids broadcast inside);
-        // checkpointed because both the bin-probe collect and the serving
-        // join read it
-        val queries = assignToCentroids(bs, sfDir, batch)
-          .select(col("vec_id").as("query_id"),
-            col("embedding").as("q_emb"), col("centroid_id"))
-          .localCheckpoint(true)
-        val res = ivfServeBatch(bs, queries, indexDir, k)
+        val res = ivfServeBatch(bs, batch, cb, lists, k)
         val prior = SnapshotLog.latestVersion(bs, s"file:$resultsPath")
           .map(v => SnapshotLog.manifest(bs, s"file:$resultsPath", v))
           .getOrElse(Nil)
@@ -2051,12 +2138,6 @@ object VectorQueries {
         // bound its own log
         maintainStreamLog(bs, s"file:$resultsPath", None,
           maxFilesPerPartition = 2, batchId)
-        // the commit materialized this batch's results; free the
-        // checkpointed query blocks eagerly — across a long-lived stream
-        // the ContextCleaner may not GC-reclaim them for many micro-batches
-        // and dead blocks accumulate in the block manager (x1's freeCut
-        // discipline, applied per batch)
-        CorpusPipeline.freeCut(queries)
         ()
       }
       .option("checkpointLocation", ckptDir)

@@ -2,6 +2,7 @@ package graft.tools
 
 import graft.SparkEntry
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dump the formatted physical plan of every SparkEntry query (skipping the
   * side-effecting parity queries) for plan review:
@@ -18,7 +19,7 @@ object ExplainAll {
         println(s"\n########## $name ##########")
         try println(fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
-        catch { case e: Throwable => println(s"EXPLAIN FAILED: ${e.getMessage}") }
+        catch { case NonFatal(e) => println(s"EXPLAIN FAILED: ${e.getMessage}") }
       }
     }
     spark.stop()

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.GraftSession
+import scala.util.control.NonFatal
 
 /** Scratch: run one SQL string against a bare session and show the result;
   * used to probe engine feature support (e.g. recursive CTEs). Not part of
@@ -16,7 +17,7 @@ object SqlProbe {
       df.show(50, truncate = false)
       System.err.println("PROBE_OK")
     } catch {
-      case e: Throwable => System.err.println(s"PROBE_FAIL ${e.getClass.getName}: ${e.getMessage.take(500)}")
+      case NonFatal(e) => System.err.println(s"PROBE_FAIL ${e.getClass.getName}: ${e.getMessage.take(500)}")
     }
     spark.stop()
   }

@@ -124,19 +124,16 @@ class PlanShapeSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-st20-plan").toString
     VectorQueries.assignToCentroids(spark, sfDir, emb)
       .write.mode("overwrite").partitionBy("centroid_id").parquet(s"file:$dir")
-    val queries = VectorQueries.assignToCentroids(spark, sfDir,
-        emb.filter(col("vec_id") < 10))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("centroid_id"))
-      .localCheckpoint(true)
-    val df = VectorQueries.ivfServeBatch(spark, queries, dir, 3)
+    val df = VectorQueries.ivfServeBatch(spark,
+      emb.filter(col("vec_id") < 10).select(col("vec_id"), col("embedding")),
+      VectorQueries.demoCodebook(spark, sfDir),
+      VectorQueries.resolveRawIvfLists(spark, dir), 3)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     assert("""PartitionFilters: \[[^\]]*centroid_id""".r.findFirstIn(p).isDefined,
       s"raw-list scan carries no centroid_id partition filter: $p")
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
-    CorpusPipeline.freeCut(queries)
   }
 
   test("e32: the persisted IVF-PQ code read is partition-pruned to probed bins") {

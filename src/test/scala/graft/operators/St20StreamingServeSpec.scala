@@ -15,7 +15,8 @@ class St20StreamingServeSpec extends SparkSpec {
     // the full query set (every batch is row-local given the frozen index,
     // so the union of per-batch answers must BE this frame)
     val emb = RelationalQueries.table(spark, sfDir, "embeddings")
-    val asg = VectorQueries.assignToCentroids(spark, sfDir, emb)
+    val asg = AssignRestatement.crossJoinAssign(emb,
+      AssignRestatement.demoCents(spark, sfDir))
     val queries = asg.filter(col("vec_id") < 40)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id"))
