@@ -152,8 +152,7 @@ object Bench {
       val dir = "target/bench-canary"
       spark.range(0, 48, 1, 48).write.mode("overwrite").parquet(dir)
       require(spark.read.parquet(dir).count() == 48, "canary lost rows")
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      graft.operators.MicroBatchJob.wipe(spark, dir)
       (System.nanoTime() - t0) / 1e9
     }
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.{cclass, h60}
-import graft.sources.SnapshotLog
+import graft.sources.{SnapshotLog, StampedArtifact}
 import RelationalQueries.table
 
 /** x1: the END-TO-END training-corpus build — every stage of the pipeline
@@ -365,9 +365,7 @@ object CorpusPipeline {
     */
   private[graft] def freshCommitAndRead(spark: SparkSession, path: String,
       df: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+    MicroBatchJob.wipe(spark, path)
     val v = SnapshotLog.commit(spark, path, df, Seq.empty)
     SnapshotLog.read(spark, path, v)
       .withColumn("snapshot_version", lit(v))
@@ -898,7 +896,7 @@ object CorpusPipeline {
     * over that stage's survivors — no pair is missed (candidates don't
     * depend on the cohort) and none is added (both-endpoint filter).
     *
-    * EXACTLY-ONCE under foreachBatch's at-least-once replay: each state
+    * EXACTLY-ONCE under the micro-batch at-least-once replay: each state
     * table's commit is batchId-keyed (st15's mechanism) — a replayed batch
     * no-ops per table; a crash BETWEEN two tables' commits replays into
     * one no-op and one fresh commit. The one cross-table hazard — the
@@ -986,16 +984,7 @@ object CorpusPipeline {
     val splitDir = new java.io.File(s"target/parity/x1s-split-$sfTag")
       .getAbsoluteFile.toString
     val stamp = s"$sfDir|${RelationalQueries.sourceStamp(sfDir, "documents")}"
-    val marker = new java.io.File(splitDir, "._split_ok")
-    val markerValid = marker.isFile && new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    if (!markerValid) {
-      table(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text"), col("source"))
-        .repartitionByRange(4, col("doc_id"))
-        .write.mode("overwrite").parquet(s"file:$splitDir")
-      java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
-    }
+    val splitValid = docArrivals(spark, sfDir, 4, splitDir, stamp)
 
     // ---- frozen fluency LM: trained ONCE on the full corpus's quality
     // survivors (exactly x1's stage-F frame — same rows, same aggregates,
@@ -1003,14 +992,11 @@ object CorpusPipeline {
     // against them. Stamp-guarded like every trained artifact.
     val modelDir = new java.io.File(s"target/parity/x1s-model-$sfTag")
       .getAbsoluteFile.toString
-    val modelMarker = new java.io.File(modelDir, "._model_ok")
     // v2: the marker guards the state-sizing stats file too
     // v3: + the frozen stop-shingle set
     // v4: stop df trained on DISTINCT texts (one vote per text)
-    val modelStamp = s"v4|$stamp"
-    val modelValid = modelMarker.isFile && new String(
-      java.nio.file.Files.readAllBytes(modelMarker.toPath), "UTF-8") == modelStamp
-    if (!modelValid) {
+    val modelValid = StampedArtifact.getOrBuild(modelDir, "._model_ok",
+        s"v4|$stamp") {
       val filtFull = scrubbedQualityDocs(
         table(spark, sfDir, "documents")
           .select(col("doc_id"), col("text"), col("source")))
@@ -1037,9 +1023,8 @@ object CorpusPipeline {
         new java.io.File(modelDir, "._state_stats").toPath,
         s"$nQual|$nGrams".getBytes("UTF-8"))
       freeCut(filtFull)
-      java.nio.file.Files.write(modelMarker.toPath, modelStamp.getBytes("UTF-8"))
     }
-    (splitDir, modelDir, markerValid && modelValid)
+    (splitDir, modelDir, splitValid && modelValid)
   }
 
   /** The frozen state-sizing stats [[st19FrozenFixtures]] persisted:
@@ -1112,21 +1097,28 @@ object CorpusPipeline {
       stateBuckets(nQual * 4), stateBuckets(nGrams), stateBuckets(nQual))
   }
 
-  /** Wipe a table location through the Hadoop FileSystem of its own scheme
-    * (HashCensus.drop's rule — never java.io).
-    */
-  private[operators] def wipeFsPath(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
+  /** The declared schema of st19's document arrivals. */
+  private val St19ArrivalSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("doc_id", LongType),
+      StructField("text", StringType), StructField("source", StringType)))
   }
+
+  /** st19's document arrivals: the corpus range-split by doc_id into
+    * `nFiles` files under `dir` (each file one "hourly" delivery), stamped.
+    * Returns true when the split on disk was already valid.
+    */
+  private def docArrivals(spark: SparkSession, sfDir: String, nFiles: Int,
+      dir: String, stamp: String): Boolean =
+    MicroBatchJob.splitArrivals(table(spark, sfDir, "documents")
+      .select(col("doc_id"), col("text"), col("source")), "doc_id", nFiles,
+      dir, "._split_ok", stamp)
 
   def st19StreamingCorpusBuild(spark: SparkSession, sfDir: String,
       requireFlatOracle: Boolean = false): DataFrame = {
     val cfg = st19Config(spark, sfDir, requireFlatOracle)
     // per-run state tables + checkpoint
-    wipeFsPath(spark, s"file:${cfg.stateRoot}")
-    wipeFsPath(spark, s"file:${cfg.ckptDir}")
+    MicroBatchJob.wipe(spark, s"file:${cfg.stateRoot}", s"file:${cfg.ckptDir}")
     st19RunStream(spark, cfg, cfg.splitDir)
     st19Freeze(spark, cfg)
   }
@@ -1218,27 +1210,14 @@ object CorpusPipeline {
     // (measured: ~30 s/batch at x10 on 32 cores). Scale with the frozen
     // per-batch volume (corpus/4 arrivals), capped at the local core
     // budget; frozen stats keep it deterministic per corpus. (AQE is off
-    // on the child session — StreamSessions.microBatch — so this explicit
+    // on the batch session — MicroBatchJob.run — so this explicit
     // width is the one partitioning the per-batch shuffles get.)
     val shufN = {
       val (nQual, _) = st19StateStats(cfg.modelDir)
       math.max(8, math.min(32, (nQual / 2000L).toInt))
     }
-    val ss = StreamSessions.microBatch(spark, shufN)
-    val q = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("source",
-          org.apache.spark.sql.types.StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"file:$arrivalDir")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = batch.sparkSession
+    val q = MicroBatchJob.run(spark, arrivalDir, St19ArrivalSchema, ckptDir,
+        shufN) { (bs, batch, batchId) =>
         val key = Some(s"batch-$batchId")
 
         // row-local scrub + filters, then frozen-LM fluency scoring: the
@@ -1424,7 +1403,7 @@ object CorpusPipeline {
         }
 
         // overlap (a)-(d); each runs its own chain of driver actions, the
-        // scheduler backfills tail idle; failures rethrow so foreachBatch
+        // scheduler backfills tail idle; failures rethrow so the stream
         // sees the batch fail exactly as in the sequential shape
         val (_, (lshPairs, entries), (semPairs, asg), g) =
           graft.operators.Overlap.par4(secA, secB, secC, secD)
@@ -1440,12 +1419,7 @@ object CorpusPipeline {
         // long-lived stream doesn't accrete dead block-manager entries
         // across micro-batches (x1's freeCut discipline, per batch)
         Seq(bsurv, entries, asg, g).foreach(freeCut)
-        ()
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     lastStreamBatchMillis = q.recentProgress.toSeq
       .filter(_.numInputRows > 0)
       .map(p => Option(p.durationMs.get("triggerExecution"))
@@ -1726,6 +1700,23 @@ object CorpusPipeline {
     }
   }
 
+  /** st19's ingest half from scratch over an `nBatches`-way equal arrival
+    * split of the corpus (stamped fixture), in the `-flat<nBatches>` state
+    * namespace. Returns that namespace's config.
+    */
+  private def st19FlatStream(spark: SparkSession, sfDir: String,
+      nBatches: Int): St19Config = {
+    val cfg = st19Config(spark, sfDir, stateTag = s"-flat$nBatches")
+    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val dir = new java.io.File(s"target/parity/x1s-split$nBatches-$sfTag")
+      .getAbsoluteFile.toString
+    docArrivals(spark, sfDir, nBatches, dir,
+      s"$sfDir|$nBatches|${RelationalQueries.sourceStamp(sfDir, "documents")}")
+    MicroBatchJob.wipe(spark, s"file:${cfg.stateRoot}", s"file:${cfg.ckptDir}")
+    st19RunStream(spark, cfg, dir)
+    cfg
+  }
+
   /** st19 PER-BATCH FLATNESS instrument (ScaleSlope's harness): run the
     * ingest half alone over an `nBatches`-way equal-size range split of
     * `sfDir`'s documents in a fresh state namespace, and return per-batch
@@ -1748,25 +1739,7 @@ object CorpusPipeline {
     */
   private[graft] def st19BatchFlatness(spark: SparkSession, sfDir: String,
       nBatches: Int): (Seq[Double], Double) = {
-    val cfg = st19Config(spark, sfDir, stateTag = s"-flat$nBatches")
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val dir = new java.io.File(s"target/parity/x1s-split$nBatches-$sfTag")
-      .getAbsoluteFile.toString
-    val stamp =
-      s"$sfDir|$nBatches|${RelationalQueries.sourceStamp(sfDir, "documents")}"
-    val marker = new java.io.File(dir, "._split_ok")
-    val ok = marker.isFile && new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    if (!ok) {
-      table(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text"), col("source"))
-        .repartitionByRange(nBatches, col("doc_id"))
-        .write.mode("overwrite").parquet(s"file:$dir")
-      java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
-    }
-    wipeFsPath(spark, s"file:${cfg.stateRoot}")
-    wipeFsPath(spark, s"file:${cfg.ckptDir}")
-    st19RunStream(spark, cfg, dir)
+    val cfg = st19FlatStream(spark, sfDir, nBatches)
     val t0 = System.nanoTime()
     st19Freeze(spark, cfg).write.format("noop").mode("overwrite").save()
     val freezeSec = (System.nanoTime() - t0) / 1e9
@@ -1783,25 +1756,7 @@ object CorpusPipeline {
     */
   private[graft] def st19BuildFlatState(spark: SparkSession, sfDir: String,
       nBatches: Int): Unit = {
-    val cfg = st19Config(spark, sfDir, stateTag = s"-flat$nBatches")
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val dir = new java.io.File(s"target/parity/x1s-split$nBatches-$sfTag")
-      .getAbsoluteFile.toString
-    val stamp =
-      s"$sfDir|$nBatches|${RelationalQueries.sourceStamp(sfDir, "documents")}"
-    val marker = new java.io.File(dir, "._split_ok")
-    val ok = marker.isFile && new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    if (!ok) {
-      table(spark, sfDir, "documents")
-        .select(col("doc_id"), col("text"), col("source"))
-        .repartitionByRange(nBatches, col("doc_id"))
-        .write.mode("overwrite").parquet(s"file:$dir")
-      java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
-    }
-    wipeFsPath(spark, s"file:${cfg.stateRoot}")
-    wipeFsPath(spark, s"file:${cfg.ckptDir}")
-    st19RunStream(spark, cfg, dir)
+    val cfg = st19FlatStream(spark, sfDir, nBatches)
     // A production long-arrival deployment runs [[st19MaintainState]] on a
     // cadence (St19RestartMaintenanceSpec proves it leaves the census
     // unchanged); the certification state gets one post-build pass so the

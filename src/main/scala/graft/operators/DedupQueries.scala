@@ -713,7 +713,7 @@ object DedupQueries {
     * commit of exactly the touched bins — untouched bins are carried by
     * reference (the manifest path encodes each file's bin, so the
     * touched/carried split is a string match, and the prior-state read
-    * opens only touched files). Exactly-once under foreachBatch's
+    * opens only touched files). Exactly-once under the micro-batch
     * at-least-once replay: a replayed batchId no-ops on its live commit
     * key, and a mid-commit crash leaves an orphan, never a torn state
     * (st15's mechanism; [[St18ReplaySpec]] proves it by replaying). The
@@ -726,29 +726,12 @@ object DedupQueries {
     val emb = table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     // the same 4-file range-split fixture st17 streams (shared memo)
-    val splitDir = new java.io.File(s"target/parity/emb-split-$sfTag")
-      .getAbsoluteFile.toString
-    val marker = new java.io.File(splitDir, "._split_ok")
-    val nVecs = emb.count()
-    val stamp = s"$sfDir|$nVecs|${RelationalQueries.sourceStamp(sfDir, "embeddings")}"
-    val markerValid = marker.isFile && new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    if (!markerValid) {
-      emb.repartitionByRange(4, col("vec_id"))
-        .write.mode("overwrite").parquet(s"file:$splitDir")
-      java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
-    }
+    val (splitDir, nVecs) = VectorQueries.embSplitFixture(emb, sfDir)
     val stateDir = new java.io.File(s"target/parity/semdedup-state-$sfTag")
       .getAbsoluteFile.toString
     val ckptDir = new java.io.File(s"target/parity/semdedup-ckpt-$sfTag")
       .getAbsoluteFile.toString
-    def wipeDir(d: String): Unit = {
-      def rec(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rec); f.delete()
-      }
-      rec(new java.io.File(d))
-    }
-    wipeDir(stateDir); wipeDir(ckptDir)
+    MicroBatchJob.wipe(spark, s"file:$stateDir", s"file:$ckptDir")
 
     // trained binning codebooks (flat at gate scale, IMI beyond — the same
     // corpus-scaled cell count as d36, via the shared semBinning helper),
@@ -770,20 +753,8 @@ object DedupQueries {
         (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
 
-    val ss = StreamSessions.microBatch(spark, 8)
-    val q = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"file:$splitDir")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = batch.sparkSession
+    MicroBatchJob.run(spark, splitDir, VectorQueries.EmbeddingArrivalSchema,
+        ckptDir, 8) { (bs, batch, batchId) =>
         import bs.implicits._
         val batchBooks = bookRows.map(_.toDF("centroid_id", "c"))
         val asgB = VectorQueries.semAssignBins(
@@ -834,7 +805,7 @@ object DedupQueries {
         // ONE atomic, batchId-keyed SnapshotLog commit per batch: the
         // touched bins' rewritten state is the commit's new data (bin in
         // the file path via partitionBy), untouched bins ride along BY
-        // REFERENCE. foreachBatch is at-least-once — a post-crash replay
+        // REFERENCE. Batch delivery is at-least-once — a post-crash replay
         // of this batchId finds its key live and no-ops, and a crash
         // mid-commit leaves only an unreferenced orphan dir, never a
         // half-rewritten state (st15's exactly-once mechanism, as the
@@ -843,11 +814,7 @@ object DedupQueries {
           newState.repartition(col("bin")), carriedFiles,
           commitKey = Some(s"batch-$batchId"), partitionBy = Some("bin"))
         ()
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
 
     val head = graft.sources.SnapshotLog
       .latestVersion(spark, s"file:$stateDir")

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core._
-import graft.sources.{HivePartitionedSource, LandingTable, MutationOps}
+import graft.sources.{HivePartitionedSource, LandingTable, MutationOps, StampedArtifact}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -61,11 +61,9 @@ object IngestParityQueries {
   /** Recreate a scratch dir empty — streaming checkpoints track processed
     * paths, so a stale checkpoint would silently skip a (re)exported tree.
     */
-  private def wipe(dir: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      val cs = f.listFiles(); if (cs != null) cs.foreach(rec); f.delete()
-    }
-    rec(new java.io.File(dir)); new java.io.File(dir).mkdirs()
+  private def recreate(spark: SparkSession, dirs: String*): Unit = {
+    MicroBatchJob.wipe(spark, dirs.map(d => s"file:$d"): _*)
+    dirs.foreach(d => new java.io.File(d).mkdirs())
   }
 
   /** Run a streaming replay on a THROWAWAY child session
@@ -115,7 +113,6 @@ object IngestParityQueries {
       // only after a verified export, so a crash mid-write never leaves a
       // valid marker on a partial tree.
       val n = events.count()
-      val marker = new java.io.File(raw, "._export_ok")
       // stamp includes the source parquet's (size, mtime): a driver-side
       // testdata regeneration with the SAME row count must still invalidate
       // the export (r13 incident: a regen plus an events-reader type change
@@ -123,9 +120,7 @@ object IngestParityQueries {
       // count-only marker that still matched)
       val src = new java.io.File(s"$sfDir/events.parquet")
       val stamp = s"$sfDir|$firstHourOnly|$n|${src.length()}|${src.lastModified()}"
-      val markerValid = marker.isFile &&
-        new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-      if (!markerValid) {
+      StampedArtifact.getOrBuild(raw, "._export_ok", stamp) {
         LandingTable.withPartitionColumns(events, "ts")
           // co-locate each hour's rows into one task => one file per partition
           // dir (matches the reference's per-hour file sets; avoids a storm of
@@ -147,7 +142,6 @@ object IngestParityQueries {
           .filter(col("ts").isNull).count()
         require(parsedNullTs == 0,
           s"parity TSV export: $parsedNullTs rows have unparseable ts under $raw")
-        java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
       }
       (s"file:$raw", s"file:$landing")
     })
@@ -211,11 +205,8 @@ object IngestParityQueries {
     // "v2" = the injected-lines version: bump when part-bad.tsv content
     // changes so memoized trees regenerate
     val stamp = "v2|" + srcFiles.map(f => s"${f.getName}:${f.length}").mkString("|")
-    val marker = new java.io.File(dirty, "._dirty_ok")
-    val markerValid = marker.isFile &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    if (!markerValid) {
-      wipe(dirty.toString)
+    StampedArtifact.getOrBuild(dirty.toString, "._dirty_ok", stamp) {
+      recreate(spark, dirty.toString)
       srcFiles.foreach { f =>
         val rel = f.getAbsolutePath.stripPrefix(srcRoot.getAbsolutePath)
           .stripPrefix("/")
@@ -240,7 +231,6 @@ object IngestParityQueries {
           "5\t2023-06-27 00:00:01\t5\tunder_arity\t1.5\n" +
           "6\t2023-06-27 00:00:02\t6\tover_arity\t2.5\tp\textra\n"
           ).getBytes("UTF-8"))
-      java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
     }
     dirty
   }
@@ -284,7 +274,7 @@ object IngestParityQueries {
     val goodDir = parityDir("squar-good", sfDir, firstHourOnly = true)
     val badDir = parityDir("squar-bad", sfDir, firstHourOnly = true)
     val ckpt = parityDir("squar-ckpt", sfDir, firstHourOnly = true)
-    wipe(goodDir); wipe(badDir); wipe(ckpt)
+    recreate(spark, goodDir, badDir, ckpt)
     val corruptCol = "_graft_corrupt"
     withStreamSession(spark, 8) { ss =>
       // text-source + shared quarantine parser (not the csv source): the
@@ -363,7 +353,7 @@ object IngestParityQueries {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
     val stats = parityDir("stream-stats", sfDir, firstHourOnly = false)
     val ckpt = parityDir("stream-ckpt", sfDir, firstHourOnly = false)
-    wipe(stats); wipe(ckpt)
+    recreate(spark, stats, ckpt)
     val cfg = cfgFor(rawBase, "unused")
     withStreamSession(spark, 8) { ss =>
       val q = graft.streaming.StreamingIngest.hourlyStats(
@@ -388,7 +378,7 @@ object IngestParityQueries {
   def st2StreamingSessions(spark: SparkSession, sfDir: String): DataFrame = {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
     val ckpt = parityDir("sess-ckpt", sfDir, firstHourOnly = false)
-    wipe(ckpt)
+    recreate(spark, ckpt)
     val qn = "st2_sessions_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
     withStreamSession(spark, 8) { ss =>
       import ss.implicits._
@@ -427,7 +417,7 @@ object IngestParityQueries {
   def st3StreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
     val ckpt = parityDir("join-ckpt", sfDir, firstHourOnly = false)
-    wipe(ckpt)
+    recreate(spark, ckpt)
     val qn = "st3_join_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
     // demo scope = day=01 via PARTITION-GLOB pruning (st6's scope — both
     // stream-stream joins exercise the same per-row state machinery): each
@@ -480,7 +470,7 @@ object IngestParityQueries {
   def st5SlidingWindow(spark: SparkSession, sfDir: String): DataFrame = {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
     val ckpt = parityDir("slide-ckpt", sfDir, firstHourOnly = false)
-    wipe(ckpt)
+    recreate(spark, ckpt)
     val qn = "st5_slide_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
     withStreamSession(spark, 8) { ss =>
       val q = ss.readStream
@@ -520,7 +510,7 @@ object IngestParityQueries {
   def st4StreamDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
     val ckpt = parityDir("dedup-ckpt", sfDir, firstHourOnly = false)
-    wipe(ckpt)
+    recreate(spark, ckpt)
     val qn = "st4_dedup_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
     withStreamSession(spark, 8) { ss =>
       val q = ss.readStream
@@ -565,7 +555,7 @@ object IngestParityQueries {
   def st10DedupWithinWatermark(spark: SparkSession, sfDir: String): DataFrame = {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
     val ckpt = parityDir("dedupww-ckpt", sfDir, firstHourOnly = false)
-    wipe(ckpt)
+    recreate(spark, ckpt)
     val qn = "st10_dedupww_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
     withStreamSession(spark, 8) { ss =>
       val q = ss.readStream
@@ -605,7 +595,7 @@ object IngestParityQueries {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
     val landing = parityDir("backfill-landing", sfDir, firstHourOnly = false)
     val ckpt = parityDir("backfill-ckpt", sfDir, firstHourOnly = false)
-    wipe(landing); wipe(ckpt)
+    recreate(spark, landing, ckpt)
     val cfg = cfgFor(rawBase, s"file:$landing")
 
     val day1 = RelationalQueries.eventsTable(spark, sfDir)
@@ -649,7 +639,7 @@ object IngestParityQueries {
   def st12SessionWindowAgg(spark: SparkSession, sfDir: String): DataFrame = {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
     val ckpt = parityDir("sesswin-ckpt", sfDir, firstHourOnly = false)
-    wipe(ckpt)
+    recreate(spark, ckpt)
     val qn = "st12_sesswin_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
     withStreamSession(spark, 8) { ss =>
       val q = ss.readStream
@@ -698,7 +688,7 @@ object IngestParityQueries {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
     val tableDir = parityDir("cdc-table", sfDir, firstHourOnly = false)
     val ckpt = parityDir("cdc-ckpt", sfDir, firstHourOnly = false)
-    wipe(tableDir); wipe(ckpt)
+    recreate(spark, tableDir, ckpt)
     val tablePath = s"file:$tableDir"
     withStreamSession(spark, 8) { ss =>
       val q = ss.readStream
@@ -746,7 +736,7 @@ object IngestParityQueries {
   def st14StreamStaticJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
     val ckpt = parityDir("sstatic-ckpt", sfDir, firstHourOnly = false)
-    wipe(ckpt)
+    recreate(spark, ckpt)
     val qn = "st14_sstatic_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
     withStreamSession(spark, 8) { ss =>
       val dim = RelationalQueries.eventsTable(ss, sfDir)
@@ -796,7 +786,7 @@ object IngestParityQueries {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
     val tableDir = parityDir("snapstream-table", sfDir, firstHourOnly = false)
     val ckpt = parityDir("snapstream-ckpt", sfDir, firstHourOnly = false)
-    wipe(tableDir); wipe(ckpt)
+    recreate(spark, tableDir, ckpt)
     val path = s"file:$tableDir"
     withStreamSession(spark, 8) { ss =>
       val q = ss.readStream
@@ -851,7 +841,7 @@ object IngestParityQueries {
   def st6StreamOuterJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
     val ckpt = parityDir("outer-ckpt", sfDir, firstHourOnly = false)
-    wipe(ckpt)
+    recreate(spark, ckpt)
     val qn = "st6_outer_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
     withStreamSession(spark, 8) { ss =>
       def stream() = ss.readStream
@@ -909,7 +899,7 @@ object IngestParityQueries {
   def st7ChainedAgg(spark: SparkSession, sfDir: String): DataFrame = {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
     val ckpt = parityDir("chain-ckpt", sfDir, firstHourOnly = false)
-    wipe(ckpt)
+    recreate(spark, ckpt)
     val qn = "st7_chain_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
     withStreamSession(spark, 8) { ss =>
       val q = ss.readStream
@@ -947,7 +937,7 @@ object IngestParityQueries {
   def st8StateReader(spark: SparkSession, sfDir: String): DataFrame = {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
     val ckpt = parityDir("stateread-ckpt", sfDir, firstHourOnly = false)
-    wipe(ckpt)
+    recreate(spark, ckpt)
     val qn = "st8_state_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
     withStreamSession(spark, 8) { ss =>
       val q = ss.readStream
@@ -988,7 +978,7 @@ object IngestParityQueries {
   def st9TransformWithState(spark: SparkSession, sfDir: String): DataFrame = {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
     val ckpt = parityDir("tws-ckpt", sfDir, firstHourOnly = false)
-    wipe(ckpt)
+    recreate(spark, ckpt)
     val qn = "st9_tws_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
     withStreamSession(spark, 8, Map(
       "spark.sql.streaming.stateStore.providerClass" ->

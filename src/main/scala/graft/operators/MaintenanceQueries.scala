@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.{IngestConfig, PartitionHour}
-import graft.sources.{FileStatsManifest, LandingMaintenance, LandingTable, MutationOps, SnapshotLog}
+import graft.sources.{FileStatsManifest, LandingMaintenance, LandingTable, MutationOps, SnapshotLog, StampedArtifact}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,13 +33,11 @@ object MaintenanceQueries {
     */
   private val s3RegisteredPath = new java.util.concurrent.atomic.AtomicReference[String]("")
 
-  private def scratch(kind: String, sfDir: String): String = {
+  private def scratch(spark: SparkSession, kind: String, sfDir: String): String = {
     val sf = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
     val d = new java.io.File(s"target/maintain/$kind-$sf").getAbsoluteFile
-    def rec(f: java.io.File): Unit = {
-      val cs = f.listFiles(); if (cs != null) cs.foreach(rec); f.delete()
-    }
-    rec(d); d.mkdirs()
+    MicroBatchJob.wipe(spark, s"file:$d")
+    d.mkdirs()
     d.toString
   }
 
@@ -63,7 +61,7 @@ object MaintenanceQueries {
     */
   def u1MergeUpsert(spark: SparkSession, sfDir: String): DataFrame = {
     val base = firstDayEvents(spark, sfDir)
-    val cfg = cfgFor(s"file:${scratch("u1", sfDir)}")
+    val cfg = cfgFor(s"file:${scratch(spark, "u1", sfDir)}")
     LandingTable.overwritePartitions(base, cfg)
 
     val dataCols = eventsSchema.fieldNames.map(col).toSeq
@@ -94,7 +92,7 @@ object MaintenanceQueries {
     */
   def u2DeleteKeys(spark: SparkSession, sfDir: String): DataFrame = {
     val base = firstDayEvents(spark, sfDir)
-    val cfg = cfgFor(s"file:${scratch("u2", sfDir)}")
+    val cfg = cfgFor(s"file:${scratch(spark, "u2", sfDir)}")
     LandingTable.overwritePartitions(base, cfg)
 
     val doomed = base.filter(col("user_id") % 5 === 0)
@@ -120,7 +118,7 @@ object MaintenanceQueries {
     val ev = RelationalQueries.eventsTable(spark, sfDir)
     val h0 = ev.agg(min(date_trunc("hour", col("ts")))).collect()(0).getTimestamp(0)
     val base = ev.filter(date_trunc("hour", col("ts")) === lit(h0))
-    val cfg = cfgFor(s"file:${scratch("c1", sfDir)}")
+    val cfg = cfgFor(s"file:${scratch(spark, "c1", sfDir)}")
     LandingTable.overwritePartitions(base.repartition(6), cfg)
 
     val hour = PartitionHour.fromInstant(h0.toInstant) // session TZ is UTC
@@ -152,7 +150,7 @@ object MaintenanceQueries {
     */
   def c3CompactSweep(spark: SparkSession, sfDir: String): DataFrame = {
     val base = firstDayEvents(spark, sfDir)
-    val cfg = cfgFor(s"file:${scratch("c3", sfDir)}")
+    val cfg = cfgFor(s"file:${scratch(spark, "c3", sfDir)}")
     // land one file per hour (hash on the hour => one task per partition)
     LandingTable.overwritePartitions(
       base.repartition(date_trunc("hour", col("ts"))), cfg)
@@ -193,7 +191,7 @@ object MaintenanceQueries {
     */
   def c4Retention(spark: SparkSession, sfDir: String): DataFrame = {
     val base = firstDayEvents(spark, sfDir)
-    val cfg = cfgFor(s"file:${scratch("c4", sfDir)}")
+    val cfg = cfgFor(s"file:${scratch(spark, "c4", sfDir)}")
     LandingTable.overwritePartitions(
       base.repartition(date_trunc("hour", col("ts"))), cfg)
     val d0 = base.agg(min(date_trunc("day", col("ts"))))
@@ -222,7 +220,7 @@ object MaintenanceQueries {
     */
   def u7TimeTravel(spark: SparkSession, sfDir: String): DataFrame = {
     val base = firstDayEvents(spark, sfDir)
-    val path = s"file:${scratch("u7", sfDir)}"
+    val path = s"file:${scratch(spark, "u7", sfDir)}"
     val v1 = SnapshotLog.commit(spark, path,
       base.withColumn("hour_part", hour(col("ts")))
         .repartition(col("hour_part")), carried = Nil)
@@ -288,7 +286,7 @@ object MaintenanceQueries {
     // story is unchanged: one doomed-id list drives all three deletions.
     // store 1: hour-partitioned landing
     val chainLanding = () => {
-      val cfg = cfgFor(s"file:${scratch("u8", sfDir)}")
+      val cfg = cfgFor(s"file:${scratch(spark, "u8", sfDir)}")
       LandingTable.overwritePartitions(base, cfg)
       val nb = LandingTable.read(spark, cfg).count()
       MutationOps.deleteByKey(spark, cfg, doomedUsers.toDF("k"), "user_id")
@@ -296,7 +294,7 @@ object MaintenanceQueries {
     }
     // store 2: key-bucket serving table (latest row per user, the st13 shape)
     val chainServing = () => {
-      val servingDir = s"file:${scratch("u8srv", sfDir)}"
+      val servingDir = s"file:${scratch(spark, "u8srv", sfDir)}"
       MutationOps.upsertLatest(spark, servingDir,
         base.select(col("user_id"), col("ts"), col("event_id"), col("value")),
         keys = Seq("user_id"), orderCols = Seq("ts", "event_id"), nBuckets = 8)
@@ -307,7 +305,7 @@ object MaintenanceQueries {
     }
     // store 3: persisted IVF index over the embeddings
     val chainIndex = () => {
-      val idxDir = s"file:${scratch("u8idx", sfDir)}"
+      val idxDir = s"file:${scratch(spark, "u8idx", sfDir)}"
       val emb = RelationalQueries.table(spark, sfDir, "embeddings")
       VectorQueries.assignToCentroids(spark, sfDir, emb)
         .write.mode("overwrite").partitionBy("centroid_id").parquet(idxDir)
@@ -332,7 +330,7 @@ object MaintenanceQueries {
     */
   def u3SchemaDrift(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = RelationalQueries.eventsTable(spark, sfDir)
-    val dir = scratch("u3", sfDir)
+    val dir = scratch(spark, "u3", sfDir)
     ev.filter(col("event_id") % 2 === 0)
       .select(col("event_id"), col("user_id"), col("value"))
       .withColumn("gen", lit(1))
@@ -375,17 +373,11 @@ object MaintenanceQueries {
     dir.mkdirs()
     val cfg = cfgFor(s"file:$dir")
     val n = base.count()
-    val marker = new java.io.File(dir, "._fixture_ok")
-    val stamp = s"$sfDir|$n|${RelationalQueries.sourceStamp(sfDir, "events")}"
-    val markerValid = marker.isFile &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    if (!markerValid) {
-      def rec(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rec); f.delete()
-      }
-      rec(dir); dir.mkdirs()
+    val markerValid = StampedArtifact.getOrBuild(dir.toString, "._fixture_ok",
+        s"$sfDir|$n|${RelationalQueries.sourceStamp(sfDir, "events")}") {
+      MicroBatchJob.wipe(spark, s"file:$dir")
+      dir.mkdirs()
       LandingTable.overwritePartitions(base, cfg)
-      java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
     }
     // (re-)register only when the fixture changed or the catalog entry is
     // absent/points at another SF's tree (one JVM runs several SFs in
@@ -422,7 +414,7 @@ object MaintenanceQueries {
   def c2ManifestSkip(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = RelationalQueries.eventsTable(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-    val dir = scratch("c2", sfDir)
+    val dir = scratch(spark, "c2", sfDir)
     ev.repartitionByRange(16, col("user_id"), col("event_id"))
       .write.mode("overwrite").parquet(s"file:$dir")
     FileStatsManifest.write(spark, s"file:$dir", Seq("user_id"))
@@ -469,7 +461,7 @@ object MaintenanceQueries {
   def c5ClusterBoxSkip(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = RelationalQueries.eventsTable(spark, sfDir)
       .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-    val dir = scratch("c5", sfDir)
+    val dir = scratch(spark, "c5", sfDir)
 
     val b = ev.agg(min(col("user_id")), max(col("user_id")),
       min(col("event_id")), max(col("event_id"))).collect()(0)
@@ -551,7 +543,7 @@ object MaintenanceQueries {
     val ev = RelationalQueries.eventsTable(spark, sfDir)
       .select(col("ts"), col("event_id"), col("user_id"), col("value"),
         col("event_type"))
-    val dir = scratch("c6", sfDir)
+    val dir = scratch(spark, "c6", sfDir)
     val root = s"file:$dir"
 
     // frozen curve grid: the key domain is fixed once (table-creation
@@ -628,10 +620,7 @@ object MaintenanceQueries {
         col("event_type"))
     clustered(deltas, 4)
       .write.mode("overwrite").parquet(s"$root/g=opt1")
-    for (g <- Seq("g=d1", "g=d2")) {
-      val p = new org.apache.hadoop.fs.Path(s"$root/$g")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
+    MicroBatchJob.wipe(spark, s"$root/g=d1", s"$root/g=d2")
     // incremental manifest maintenance after the rewrite: dead delta rows
     // drop out, only the new generation's files are scanned
     FileStatsManifest.update(spark, root, Seq("user_id", "event_id"))
@@ -666,7 +655,7 @@ object MaintenanceQueries {
     */
   def u4SnapshotDiff(spark: SparkSession, sfDir: String): DataFrame = {
     val base = firstDayEvents(spark, sfDir)
-    val cfg = cfgFor(s"file:${scratch("u4", sfDir)}")
+    val cfg = cfgFor(s"file:${scratch(spark, "u4", sfDir)}")
     LandingTable.overwritePartitions(base, cfg)
 
     val dataCols = eventsSchema.fieldNames.map(col).toSeq
@@ -723,7 +712,7 @@ object MaintenanceQueries {
   def u6Scd2Merge(spark: SparkSession, sfDir: String): DataFrame = {
     val src = RelationalQueries.eventsTable(spark, sfDir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    val dimPath = s"file:${scratch("u6", sfDir)}"
+    val dimPath = s"file:${scratch(spark, "u6", sfDir)}"
     val existing = MutationOps.scd2(src.filter(dayofmonth(col("ts")) < 20),
       Seq("user_id"), Seq("event_type"), "ts", "event_id")
     MutationOps.scd2WriteTable(existing, dimPath, Seq("user_id"), nBuckets = 8)

@@ -431,10 +431,7 @@ object TextQueries {
 
     val dir = new java.io.File(s"target/parity/incdedup-" +
       sfDir.replaceAll("[^A-Za-z0-9.]+", "_")).getAbsoluteFile
-    def rec(f: java.io.File): Unit = {
-      val cs = f.listFiles(); if (cs != null) cs.foreach(rec); f.delete()
-    }
-    rec(dir)
+    MicroBatchJob.wipe(spark, s"file:$dir")
     val census = d37CensusName(sfDir)
     HashCensus.drop(spark, census) // fresh run: snapshot dir was wiped too
     val path = s"file:$dir"
@@ -1133,17 +1130,13 @@ object TextQueries {
     val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
     val dir = new java.io.File(s"target/parity/trained-bpe$budget-$sfTag")
       .getAbsoluteFile
-    val marker = new java.io.File(dir, "._trained_ok")
     // content fingerprint, cached per JVM behind a syscall-cheap sourceStamp
     // (the memoTrained rule): one xxhash corpus scan per on-disk state
-    val stamp = s"$budget|${RelationalQueries.corpusFingerprint(
-      spark, sfDir, "documents", "doc_id, text")}"
-    val valid = marker.isFile && new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    if (!valid) {
+    graft.sources.StampedArtifact.getOrBuild(dir.toString, "._trained_ok",
+        s"$budget|${RelationalQueries.corpusFingerprint(
+          spark, sfDir, "documents", "doc_id, text")}") {
       bpeTrain(spark, sfDir, budget)._2.write.mode("overwrite")
         .parquet(s"file:$dir")
-      java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
     }
     val seg = spark.read.parquet(s"file:$dir")
     val ctoks = table(spark, sfDir, "documents")

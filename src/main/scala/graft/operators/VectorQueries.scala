@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
 object VectorQueries {
 
   import RelationalQueries.table
-  import graft.sources.SnapshotLog
+  import graft.sources.{SnapshotLog, StampedArtifact}
 
   /** Sequential double fold of sum(f(x)) over an array column — mirrors
     * duckdb `list_aggregate(list_transform(...), 'sum')` exactly.
@@ -509,18 +509,13 @@ object VectorQueries {
     // alternation — every gate run paid every training again (measured:
     // e31 26 s/run instead of its ~2 s warm serving)
     val pTag = params.replaceAll("[^A-Za-z0-9.]+", "_")
-    val dir = new java.io.File(s"target/parity/trained-$name-$pTag-$sfTag")
-      .getAbsoluteFile
-    val marker = new java.io.File(dir, "._trained_ok")
+    val dir = parityDir(s"trained-$name-$pTag-$sfTag")
     // content fingerprint, cached per JVM behind a syscall-cheap sourceStamp
     // so only the FIRST memo consumer per on-disk state pays the xxhash scan
-    val stamp = s"$params|${RelationalQueries.corpusFingerprint(
-      spark, sfDir, "embeddings", "vec_id, embedding")}"
-    val valid = marker.isFile && new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    if (!valid) {
+    StampedArtifact.getOrBuild(dir, "._trained_ok",
+        s"$params|${RelationalQueries.corpusFingerprint(
+          spark, sfDir, "embeddings", "vec_id, embedding")}") {
       train.write.mode("overwrite").parquet(s"file:$dir")
-      java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
     }
     spark.read.parquet(s"file:$dir")
   }
@@ -627,7 +622,7 @@ object VectorQueries {
     }
 
   /** Assign every vector to its semantic-dedup bin under `books` (from
-    * [[semBinning]], or rebuilt from collected rows on a foreachBatch
+    * [[semBinning]], or rebuilt from collected rows on a micro-batch
     * session). Flat: one broadcast argmax — exactly [[assignTrained]].
     * IMI: TWO chained broadcast argmaxes (left half then right half), each
     * the same partial-aggregable max-struct — no N×N join, no sort-window,
@@ -948,20 +943,14 @@ object VectorQueries {
       .select(col("vec_id"), col("embedding"))
     val coarse = assignTrained(emb, kmeansCentroids(spark, sfDir, iters))
       .select(col("vec_id"), col("centroid_id").as("bin"))
-    val indexDir = new java.io.File(s"target/parity/e32-index-$sfTag")
-      .getAbsoluteFile.toString
-    val marker = new java.io.File(indexDir, "._index_ok")
-    val stamp = s"$sfDir|$iters|" +
-      RelationalQueries.sourceStamp(sfDir, "embeddings")
-    val ok = marker.isFile && new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    if (!ok) {
+    val indexDir = parityDir(s"e32-index-$sfTag")
+    StampedArtifact.getOrBuild(indexDir, "._index_ok",
+        s"$sfDir|$iters|" + RelationalQueries.sourceStamp(sfDir, "embeddings")) {
       pqCodes(spark, sfDir, iters)
         .select(col("vec_id"), col("m"), col("centroid_id").as("code"))
         .join(coarse, "vec_id")
         .write.mode("overwrite").partitionBy("bin")
         .parquet(s"file:$indexDir")
-      java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
     }
     indexDir
   }
@@ -1572,91 +1561,82 @@ object VectorQueries {
         col("sim_dec").cast("double").as("ivf_sim"))
   }
 
-  /** Depth-first local-dir wipe for the streaming fixtures' scratch state
-    * (index/checkpoint/map dirs are rebuilt per gate run).
+  /** Absolute local path of a fixture or per-run state dir under
+    * `target/parity`.
     */
-  private def wipeLocalDir(d: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      val cs = f.listFiles(); if (cs != null) cs.foreach(rec); f.delete()
-    }
-    rec(new java.io.File(d))
+  private def parityDir(name: String): String =
+    new java.io.File(s"target/parity/$name").getAbsoluteFile.toString
+
+  /** The declared arrival schema of the vector streams: (vec_id,
+    * embedding) rows, as the arrival fixtures write them.
+    */
+  private[graft] val EmbeddingArrivalSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("vec_id", LongType),
+      StructField("embedding", ArrayType(FloatType))))
   }
 
-  /** Fixture shared by the corpus-arrival streams (st17/st24): the
-    * embeddings table split into 4 range-partitioned parquet files so a
-    * file stream genuinely runs multiple micro-batches; memoized on the
-    * source stamp across JVMs.
+  /** The declared arrival schema of the serving-tick streams (st26/st28):
+    * one `tick` row per file, each file one serving request.
     */
-  private[operators] def embSplitFixture(spark: SparkSession,
+  private val TickSchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("tick", LongType)))
+  }
+
+  /** Fixture shared by the corpus-arrival streams (st17/st18/st21/st24/
+    * st25/st27): the embeddings table split into 4 range-partitioned
+    * parquet files so a file stream genuinely runs multiple micro-batches;
+    * memoized on the source stamp across JVMs. `emb` is the caller's
+    * embeddings frame, so the fixture opens no second reader over it.
+    */
+  private[operators] def embSplitFixture(emb: DataFrame,
       sfDir: String): (String, Long) = {
     val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val emb = table(spark, sfDir, "embeddings")
-    val splitDir = new java.io.File(s"target/parity/emb-split-$sfTag")
-      .getAbsoluteFile.toString
-    val marker = new java.io.File(splitDir, "._split_ok")
+    val splitDir = parityDir(s"emb-split-$sfTag")
     val nEmb = emb.count()
-    val stamp =
-      s"$sfDir|$nEmb|${RelationalQueries.sourceStamp(sfDir, "embeddings")}"
-    val markerValid = marker.isFile && new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    if (!markerValid) {
-      emb.select(col("vec_id"), col("embedding"))
-        .repartitionByRange(4, col("vec_id"))
-        .write.mode("overwrite").parquet(s"file:$splitDir")
-      java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
-    }
+    MicroBatchJob.splitArrivals(emb.select(col("vec_id"), col("embedding")),
+      "vec_id", 4, splitDir, "._split_ok",
+      s"$sfDir|$nEmb|${RelationalQueries.sourceStamp(sfDir, "embeddings")}")
     // the count rides back so callers deriving size-scaled bounds don't
     // pay a second count job over the same table
     (splitDir, nEmb)
+  }
+
+  /** A query-arrival fixture for the serving streams (st20/st22/st23): the
+    * first `nQueries` vec_ids range-split into 4 files under `dir`, so the
+    * stream genuinely runs multiple micro-batches; stamp-guarded.
+    */
+  private def queryArrivals(emb: DataFrame, dir: String, nQueries: Int,
+      stamp: String): String = {
+    MicroBatchJob.splitArrivals(emb.filter(col("vec_id") < nQueries)
+      .select(col("vec_id"), col("embedding")), "vec_id", 4, dir,
+      "._queries_ok", stamp)
+    dir
   }
 
   def st17StreamingIndexIngest(spark: SparkSession, sfDir: String,
       k: Int = 3): DataFrame = {
     val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
     val emb = table(spark, sfDir, "embeddings")
-    val (splitDir, _) = embSplitFixture(spark, sfDir)
-    val indexDir = new java.io.File(s"target/parity/ivf-sindex-$sfTag")
-      .getAbsoluteFile.toString
-    val ckptDir = new java.io.File(s"target/parity/ivf-sckpt-$sfTag")
-      .getAbsoluteFile.toString
-    wipeLocalDir(indexDir); wipeLocalDir(ckptDir)
+    val (splitDir, _) = embSplitFixture(emb, sfDir)
+    val indexDir = parityDir(s"ivf-sindex-$sfTag")
+    val ckptDir = parityDir(s"ivf-sckpt-$sfTag")
+    MicroBatchJob.wipe(spark, s"file:$indexDir", s"file:$ckptDir")
     // the codebook is resolved once per stream, not once per batch
     val cb = demoCodebook(spark, sfDir)
 
-    val ss = StreamSessions.microBatch(spark, 8)
-    val q = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"file:$splitDir")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        // batchId-keyed SnapshotLog commit, not a plain append: foreachBatch
+    MicroBatchJob.run(spark, splitDir, EmbeddingArrivalSchema, ckptDir, 8) {
+      (bs, batch, batchId) =>
+        // batchId-keyed SnapshotLog commit, not a plain append: batch delivery
         // is at-least-once, and a replay after a partial append would
-        // duplicate index entries; the keyed commit no-ops on replay
-        val bs = batch.sparkSession
-        val delta = assignToCodebook(batch, cb)
-        val prior = SnapshotLog.latestVersion(bs, s"file:$indexDir")
-          .map(v => SnapshotLog.manifest(bs, s"file:$indexDir", v))
-          .getOrElse(Nil)
-        SnapshotLog.commit(bs, s"file:$indexDir", delta, prior,
-          commitKey = Some(s"batch-$batchId"),
-          partitionBy = Some("centroid_id"))
-        // in-loop index-log maintenance (st21's rule): per-LIST compaction,
-        // untouched inverted lists keep their files' physical identity
-        maintainStreamLog(bs, s"file:$indexDir", Some("centroid_id"),
-          maxFilesPerPartition = 2, batchId)
-        ()
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        // duplicate index entries; the keyed commit no-ops on replay. The
+        // in-loop maintenance compacts per LIST (st21's rule): untouched
+        // inverted lists keep their files' physical identity
+        MicroBatchJob.appendBatch(bs, s"file:$indexDir",
+          assignToCodebook(batch, cb), batchId, Some("centroid_id"),
+          maxFilesPerPartition = 2)
+    }
 
     // e18's serving, over the stream-built index: probed bins resolve to
     // manifest files by their `_centroid_id=` path level — unprobed bins'
@@ -1695,61 +1675,34 @@ object VectorQueries {
       k: Int = 3): DataFrame = {
     val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
     val emb = table(spark, sfDir, "embeddings")
-    val (splitDir, nEmb) = embSplitFixture(spark, sfDir)
+    val (splitDir, nEmb) = embSplitFixture(emb, sfDir)
     // (N-1)/8: tight enough that the 4-logical-bin demo layout overflows
     // by pigeonhole already at the half-corpus mark — STRICTLY, for any N
     // (ceil(N/8) > (N-1)/8 always; a plain N/8 bound admits the perfectly
     // balanced 8|N case with no overflow) — so a split lands MID-stream
     // and later appends re-concentrate into a split landscape
     val bound = math.max(1L, (nEmb - 1) / 8)
-    val indexDir = new java.io.File(s"target/parity/ivf-st24index-$sfTag")
-      .getAbsoluteFile.toString
-    val mapDirF = new java.io.File(s"target/parity/ivf-st24map-$sfTag")
-      .getAbsoluteFile.toString
+    val indexDir = parityDir(s"ivf-st24index-$sfTag")
+    val mapDirF = parityDir(s"ivf-st24map-$sfTag")
     val mapPath = s"file:$mapDirF"
-    val ckptDir = new java.io.File(s"target/parity/ivf-st24ckpt-$sfTag")
-      .getAbsoluteFile.toString
-    wipeLocalDir(indexDir); wipeLocalDir(ckptDir); wipeLocalDir(mapDirF)
+    val ckptDir = parityDir(s"ivf-st24ckpt-$sfTag")
+    MicroBatchJob.wipe(spark, s"file:$indexDir", s"file:$ckptDir", mapPath)
     val cb = demoCodebook(spark, sfDir)
 
-    val ss = StreamSessions.microBatch(spark, 8)
-    val q = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"file:$splitDir")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = batch.sparkSession
+    MicroBatchJob.run(spark, splitDir, EmbeddingArrivalSchema, ckptDir, 8) {
+      (bs, batch, batchId) =>
         // appends target the LOGICAL bin id, which is always a live
         // physical bin (child 0 of every split keeps the parent's id) —
         // the production dynamic: appends re-concentrate, splits re-cap
-        val delta = assignToCodebook(batch, cb)
-          .withColumn("pbin", col("centroid_id"))
-        val prior = SnapshotLog.latestVersion(bs, s"file:$indexDir")
-          .map(v => SnapshotLog.manifest(bs, s"file:$indexDir", v))
-          .getOrElse(Nil)
-        SnapshotLog.commit(bs, s"file:$indexDir", delta, prior,
-          commitKey = Some(s"batch-$batchId"),
-          partitionBy = Some("pbin"))
-        maintainStreamLog(bs, s"file:$indexDir", Some("pbin"),
-          maxFilesPerPartition = 2, batchId)
+        MicroBatchJob.appendBatch(bs, s"file:$indexDir",
+          assignToCodebook(batch, cb).withColumn("pbin", col("centroid_id")),
+          batchId, Some("pbin"), maxFilesPerPartition = 2)
         if (batchId % 2 == 1) {
           splitSnapshotBins(bs, s"file:$indexDir", mapPath, bound,
             commitKey = s"split-$batchId")
           ()
         }
-        ()
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
 
     // serving through the persisted logical→physical map: probed logical
     // bins resolve to physical children, whose manifest files are selected
@@ -1762,12 +1715,9 @@ object VectorQueries {
     val pbins = spark.read.parquet(mapPath)
       .filter(col("bin").isin(probed.toSeq: _*))
       .select(col("pbin")).collect().map(_.getLong(0)).toSeq.sorted
-    val vIdx = SnapshotLog.latestVersion(spark, s"file:$indexDir")
-      .getOrElse(sys.error("st24: no index commits"))
+    val (vIdx, nBatches) = MicroBatchJob.batchLog(spark, s"file:$indexDir")
     val mf = SnapshotLog.manifest(spark, s"file:$indexDir", vIdx)
     val idxFiles = mf.filter(f => pbins.exists(p => f.contains(s"/_pbin=$p/")))
-    val nBatches = SnapshotLog.commitKeys(spark, s"file:$indexDir")
-      .count(_.startsWith("batch-"))
     serveManifestFiles(spark, queries, mf, idxFiles, k)
       .withColumn("n_commits", lit(nBatches))
   }
@@ -1803,46 +1753,26 @@ object VectorQueries {
       k: Int = 3): DataFrame = {
     val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
     val emb = table(spark, sfDir, "embeddings")
-    val (splitDir, nEmb) = embSplitFixture(spark, sfDir)
+    val (splitDir, nEmb) = embSplitFixture(emb, sfDir)
     val bound = math.max(1L, (nEmb - 1) / 8)
-    val indexDir = new java.io.File(s"target/parity/ivf-st25index-$sfTag")
-      .getAbsoluteFile.toString
-    val mapDirF = new java.io.File(s"target/parity/ivf-st25map-$sfTag")
-      .getAbsoluteFile.toString
+    val indexDir = parityDir(s"ivf-st25index-$sfTag")
+    val mapDirF = parityDir(s"ivf-st25map-$sfTag")
     val mapPath = s"file:$mapDirF"
-    val tombDir = new java.io.File(s"target/parity/ivf-st25tomb-$sfTag")
-      .getAbsoluteFile.toString
-    val ckptDir = new java.io.File(s"target/parity/ivf-st25ckpt-$sfTag")
-      .getAbsoluteFile.toString
-    wipeLocalDir(indexDir); wipeLocalDir(ckptDir)
-    wipeLocalDir(mapDirF); wipeLocalDir(tombDir)
+    val tombDir = parityDir(s"ivf-st25tomb-$sfTag")
+    val ckptDir = parityDir(s"ivf-st25ckpt-$sfTag")
+    MicroBatchJob.wipe(spark, s"file:$indexDir", s"file:$ckptDir", mapPath,
+      s"file:$tombDir")
     val cb = demoCodebook(spark, sfDir)
 
-    val ss = StreamSessions.microBatch(spark, 8)
-    val q = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"file:$splitDir")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = batch.sparkSession
+    MicroBatchJob.run(spark, splitDir, EmbeddingArrivalSchema, ckptDir, 8) {
+      (bs, batch, batchId) =>
         // the takedown EVENT: batch 2 commits the doomed-id set (keyed —
         // replay no-ops) BEFORE building its own delta, so its own
         // arrivals are filtered too
         if (batchId == 2) {
           val doomed = table(bs, sfDir, "embeddings")
             .filter(pmod(col("vec_id"), lit(10)) === 3).select("vec_id")
-          val tombPrior = SnapshotLog.latestVersion(bs, s"file:$tombDir")
-            .map(v => SnapshotLog.manifest(bs, s"file:$tombDir", v))
-            .getOrElse(Nil)
-          SnapshotLog.commit(bs, s"file:$tombDir", doomed, tombPrior,
-            commitKey = Some("tomb-2"))
+          MicroBatchJob.appendKeyed(bs, s"file:$tombDir", doomed, "tomb-2")
         }
         // current tombstones (empty frame before the takedown batch) —
         // every append honors them, so erasure holds against later
@@ -1850,18 +1780,12 @@ object VectorQueries {
         val tombs = SnapshotLog.latestVersion(bs, s"file:$tombDir")
           .map(v => bs.read.parquet(
             SnapshotLog.manifest(bs, s"file:$tombDir", v): _*))
-          .getOrElse(batch.sparkSession.range(0).select(col("id").as("vec_id")))
+          .getOrElse(bs.range(0).select(col("id").as("vec_id")))
         val delta = assignToCodebook(
             batch.join(broadcast(tombs), Seq("vec_id"), "left_anti"), cb)
           .withColumn("pbin", col("centroid_id"))
-        val prior = SnapshotLog.latestVersion(bs, s"file:$indexDir")
-          .map(v => SnapshotLog.manifest(bs, s"file:$indexDir", v))
-          .getOrElse(Nil)
-        SnapshotLog.commit(bs, s"file:$indexDir", delta, prior,
-          commitKey = Some(s"batch-$batchId"),
-          partitionBy = Some("pbin"))
-        maintainStreamLog(bs, s"file:$indexDir", Some("pbin"),
-          maxFilesPerPartition = 2, batchId)
+        MicroBatchJob.appendBatch(bs, s"file:$indexDir", delta, batchId,
+          Some("pbin"), maxFilesPerPartition = 2)
         // the takedown's index half: rewrite only the bins holding doomed
         // vectors already ingested (batches 0/1 and this batch's own,
         // already filtered), refresh the map off the live manifest
@@ -1877,12 +1801,7 @@ object VectorQueries {
             commitKey = s"split-$batchId")
           ()
         }
-        ()
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
 
     // st24's serving through the persisted map; queries exclude the
     // doomed ids (the e21 convention)
@@ -1895,57 +1814,12 @@ object VectorQueries {
     val pbins = spark.read.parquet(mapPath)
       .filter(col("bin").isin(probed.toSeq: _*))
       .select(col("pbin")).collect().map(_.getLong(0)).toSeq.sorted
-    val vIdx = SnapshotLog.latestVersion(spark, s"file:$indexDir")
-      .getOrElse(sys.error("st25: no index commits"))
+    val (vIdx, nBatches) = MicroBatchJob.batchLog(spark, s"file:$indexDir")
     val mf = SnapshotLog.manifest(spark, s"file:$indexDir", vIdx)
     val idxFiles = mf.filter(f => pbins.exists(p => f.contains(s"/_pbin=$p/")))
-    val nBatches = SnapshotLog.commitKeys(spark, s"file:$indexDir")
-      .count(_.startsWith("batch-"))
     serveManifestFiles(spark, queries, mf, idxFiles, k)
       .withColumn("n_commits", lit(nBatches))
   }
-
-  /** Bounded-log MAINTENANCE for a streaming loop's SnapshotLog (result
-    * logs, stream-built index logs): the st19MaintainState discipline wired
-    * INTO the loop, so a long-lived stream never accretes one manifest
-    * version + a handful of small files per batch forever (the reference's
-    * bounded job-history semantics, `workflow.yaml:54-84`, applied to the
-    * serving logs). Called after each batch's commit: [[SnapshotLog.compact]]
-    * no-ops at O(manifest string-matching) cost until some partition group
-    * exceeds `maxFilesPerPartition`, then rewrites ONLY the over-threshold
-    * groups (untouched partitions keep their files' physical identity);
-    * when it did compact, [[SnapshotLog.retainVersions]] drops the
-    * superseded manifests — safe because compaction carried every replay
-    * key forward — and reclaims their unreferenced files. The zero reclaim
-    * horizon is safe HERE and only here: the log's single writer is this
-    * loop's own thread, and maintenance runs between its own commits, so
-    * the table is provably quiescent (the retainVersions contract).
-    *
-    * Cost shape, stated honestly: a compaction pass rewrites the
-    * over-threshold GROUPS' accreted rows, so for a group the stream
-    * keeps appending to, total maintenance I/O over B batches is
-    * O(B²/K · rowsPerBatch) — the flat-log trade every LSM eventually
-    * escalates out of. Two things bound it here: (1) `everyBatches`
-    * spaces the passes (K× fewer rewrites; the gate uses 2 so the
-    * mechanism is exercised in a 4-batch run, production sets it high);
-    * (2) the PARTITIONED logs (st17/st21's `_centroid_id=`/`_bin=`
-    * layouts) compact per group — a bin the stream has stopped appending
-    * to never rewrites again, so the quadratic term only applies to
-    * actively-growing groups. A result log a deployment keeps forever
-    * would additionally be partitioned by arrival window (day/hour),
-    * scoping every compaction to the active window — the same
-    * `partitionCol` mechanism, one more column; the gate's result logs
-    * are small enough that the flat layout is the honest simplest shape.
-    */
-  private[operators] def maintainStreamLog(bs: SparkSession, path: String,
-      partitionCol: Option[String], maxFilesPerPartition: Int,
-      batchId: Long, everyBatches: Int = 2): Unit =
-    if (batchId % everyBatches == everyBatches - 1 &&
-        SnapshotLog.compact(bs, path, partitionCol,
-          maxFilesPerPartition).isDefined) {
-      SnapshotLog.retainVersions(bs, path, keep = 1, olderThanMillis = 0L)
-      ()
-    }
 
   /** A frozen RAW inverted-list index in e18's on-disk layout (one
     * `centroid_id=<bin>` directory per list), resolved once: each bin's
@@ -2054,7 +1928,7 @@ object VectorQueries {
     * directory, unprobed bins are never listed or opened, and no schema
     * is inferred — then the keyed result commit. No stage touches the full
     * index; per-batch I/O is ∝ Σ(probed bin sizes), the IVF serving
-    * contract. Exactly-once under foreachBatch replay: the result commit
+    * contract. Exactly-once under micro-batch replay: the result commit
     * is batchId-keyed (st15's mechanism), so a replayed batch no-ops and
     * `n_commits` = number of micro-batches survives crashes.
     */
@@ -2069,91 +1943,38 @@ object VectorQueries {
     // inverted lists), built once per corpus cut and reused across runs
     // (stamp-guarded — in production this is st17's build job, not the
     // serving path's work)
-    val indexDir = new java.io.File(s"target/parity/st20-index-$sfTag")
-      .getAbsoluteFile.toString
-    val idxMarker = new java.io.File(indexDir, "._index_ok")
-    val idxValid = idxMarker.isFile && new String(
-      java.nio.file.Files.readAllBytes(idxMarker.toPath), "UTF-8") == srcStamp
+    val indexDir = parityDir(s"st20-index-$sfTag")
     val cb = demoCodebook(spark, sfDir)
-    if (!idxValid) {
+    StampedArtifact.getOrBuild(indexDir, "._index_ok", srcStamp) {
       assignToCodebook(emb, cb)
         .write.mode("overwrite").partitionBy("centroid_id")
         .parquet(s"file:$indexDir")
-      java.nio.file.Files.write(idxMarker.toPath, srcStamp.getBytes("UTF-8"))
     }
     val lists = resolveRawIvfLists(spark, indexDir)
 
     // ---- query arrivals fixture: vec_id < 40 range-split into 4 files so
     // the stream genuinely runs multiple micro-batches (st17's shape)
-    val qDir = new java.io.File(s"target/parity/st20-queries-$sfTag")
-      .getAbsoluteFile.toString
-    val qMarker = new java.io.File(qDir, "._queries_ok")
-    val qValid = qMarker.isFile && new String(
-      java.nio.file.Files.readAllBytes(qMarker.toPath), "UTF-8") == srcStamp
-    if (!qValid) {
-      emb.filter(col("vec_id") < 40)
-        .select(col("vec_id"), col("embedding"))
-        .repartitionByRange(4, col("vec_id"))
-        .write.mode("overwrite").parquet(s"file:$qDir")
-      java.nio.file.Files.write(qMarker.toPath, srcStamp.getBytes("UTF-8"))
-    }
+    val qDir = queryArrivals(emb, parityDir(s"st20-queries-$sfTag"), 40,
+      srcStamp)
 
-    // ---- per-run result log + checkpoint, wiped through each path's own
-    // FileSystem (table locations, never java.io)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def wipeFs(path: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val resultsPath = new java.io.File(s"target/parity/st20-results-$sfTag")
-      .getAbsoluteFile.toString
-    val ckptDir = new java.io.File(s"target/parity/st20-ckpt-$sfTag")
-      .getAbsoluteFile.toString
-    wipeFs(s"file:$resultsPath"); wipeFs(s"file:$ckptDir")
+    // ---- per-run result log + checkpoint
+    val resultsPath = s"file:${parityDir(s"st20-results-$sfTag")}"
+    val ckptDir = parityDir(s"st20-ckpt-$sfTag")
+    MicroBatchJob.wipe(spark, resultsPath, s"file:$ckptDir")
 
-    val ss = StreamSessions.microBatch(spark, 8)
-    val q = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"file:$qDir")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = batch.sparkSession
-        val res = ivfServeBatch(bs, batch, cb, lists, k)
-        val prior = SnapshotLog.latestVersion(bs, s"file:$resultsPath")
-          .map(v => SnapshotLog.manifest(bs, s"file:$resultsPath", v))
-          .getOrElse(Nil)
-        SnapshotLog.commit(bs, s"file:$resultsPath", res.coalesce(1), prior,
-          commitKey = Some(s"batch-$batchId"))
+    MicroBatchJob.run(spark, qDir, EmbeddingArrivalSchema, ckptDir, 8) {
+      (bs, batch, batchId) =>
         // in-loop result-log maintenance: compact accreted small files +
         // retire superseded manifests once the log exceeds the file
         // threshold (no-op below it) — a long-lived serving stream must
         // bound its own log
-        maintainStreamLog(bs, s"file:$resultsPath", None,
-          maxFilesPerPartition = 2, batchId)
-        ()
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        MicroBatchJob.appendBatch(bs, resultsPath,
+          ivfServeBatch(bs, batch, cb, lists, k).coalesce(1), batchId,
+          None, maxFilesPerPartition = 2)
+    }
 
-    val v = SnapshotLog.latestVersion(spark, s"file:$resultsPath")
-      .getOrElse(sys.error("st20: no result commits"))
-    // batch count from the distinct replay KEYS, not the version number:
-    // in-loop compaction commits advance the version counter and retention
-    // drops superseded manifests, but neither creates nor loses a batch
-    // key — n_commits stays "number of micro-batches" under maintenance
-    val nBatches = SnapshotLog.commitKeys(spark, s"file:$resultsPath")
-      .count(_.startsWith("batch-"))
-    SnapshotLog.read(spark, s"file:$resultsPath", v)
+    val (v, nBatches) = MicroBatchJob.batchLog(spark, resultsPath)
+    SnapshotLog.read(spark, resultsPath, v)
       .withColumn("n_commits", lit(nBatches))
   }
 
@@ -2171,7 +1992,7 @@ object VectorQueries {
     * equivalence, one storage generation later).
     *
     * Each batch's code rows land through a batchId-keyed [[SnapshotLog]]
-    * commit (st20's mechanism), NOT a plain parquet append: foreachBatch is
+    * commit (st20's mechanism), NOT a plain parquet append: batch delivery is
     * at-least-once, and a batch replayed after a partial plain append would
     * duplicate (vec_id, m, code) rows — silently breaking the bit-identity
     * claim outside a clean run. With the keyed commit a replay no-ops and
@@ -2189,22 +2010,9 @@ object VectorQueries {
       k: Int = 3, iters: Int = 2): DataFrame = {
     val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
     val emb = table(spark, sfDir, "embeddings")
-    // arrival fixture: st17's 4-way range split, same stamp guard (the two
-    // streams share one fixture deliberately — same arrivals, two index
-    // generations)
-    val splitDir = new java.io.File(s"target/parity/emb-split-$sfTag")
-      .getAbsoluteFile.toString
-    val marker = new java.io.File(splitDir, "._split_ok")
-    val stamp =
-      s"$sfDir|${emb.count()}|${RelationalQueries.sourceStamp(sfDir, "embeddings")}"
-    val markerValid = marker.isFile && new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    if (!markerValid) {
-      emb.select(col("vec_id"), col("embedding"))
-        .repartitionByRange(4, col("vec_id"))
-        .write.mode("overwrite").parquet(s"file:$splitDir")
-      java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
-    }
+    // arrival fixture: st17's 4-way range split (the two streams share one
+    // fixture deliberately — same arrivals, two index generations)
+    val (splitDir, _) = embSplitFixture(emb, sfDir)
 
     // frozen trained artifacts → plain rows for the per-batch sessions
     val fineRows = pqTrainedCodebooks(spark, sfDir, iters).collect()
@@ -2212,32 +2020,12 @@ object VectorQueries {
     val coarseRows = kmeansCentroids(spark, sfDir, iters).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq
 
-    val indexDir = new java.io.File(s"target/parity/st21-index-$sfTag")
-      .getAbsoluteFile.toString
-    val ckptDir = new java.io.File(s"target/parity/st21-ckpt-$sfTag")
-      .getAbsoluteFile.toString
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def wipeFs(path: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    wipeFs(s"file:$indexDir"); wipeFs(s"file:$ckptDir")
+    val indexDir = parityDir(s"st21-index-$sfTag")
+    val ckptDir = parityDir(s"st21-ckpt-$sfTag")
+    MicroBatchJob.wipe(spark, s"file:$indexDir", s"file:$ckptDir")
 
-    val ss = StreamSessions.microBatch(spark, 8)
-    val q = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"file:$splitDir")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = batch.sparkSession
+    MicroBatchJob.run(spark, splitDir, EmbeddingArrivalSchema, ckptDir, 8) {
+      (bs, batch, batchId) =>
         import bs.implicits._
         val fine = fineRows.toDF("m", "centroid_id", "c")
         val coarse = coarseRows.toDF("centroid_id", "c")
@@ -2246,25 +2034,15 @@ object VectorQueries {
           .select(col("vec_id"), col("m"), col("centroid_id").as("code"))
         val bins = assignTrained(rows, coarse)
           .select(col("vec_id"), col("centroid_id").as("bin"))
-        val delta = codes.join(bins, "vec_id")
-        val prior = SnapshotLog.latestVersion(bs, s"file:$indexDir")
-          .map(v => SnapshotLog.manifest(bs, s"file:$indexDir", v))
-          .getOrElse(Nil)
-        SnapshotLog.commit(bs, s"file:$indexDir", delta, prior,
-          commitKey = Some(s"batch-$batchId"), partitionBy = Some("bin"))
         // in-loop index-log maintenance (st19's state-table discipline):
         // per-BIN compaction — only bins holding more than the threshold's
         // worth of delta files rewrite; untouched bins keep their files'
         // physical identity, so serving's probed-bin manifest prune stays
         // page-cache-warm for bins the stream stopped appending to
-        maintainStreamLog(bs, s"file:$indexDir", Some("bin"),
-          maxFilesPerPartition = 2, batchId)
-        ()
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        MicroBatchJob.appendBatch(bs, s"file:$indexDir",
+          codes.join(bins, "vec_id"), batchId, Some("bin"),
+          maxFilesPerPartition = 2)
+    }
 
     // e26's serving over the stream-built compressed index. The committed
     // snapshot's manifest paths carry each file's bin (`_bin=` path level),
@@ -2420,46 +2198,16 @@ object VectorQueries {
 
     // query arrivals fixture: the e26/e30 query set (vec_id < 10),
     // range-split into 4 files so the stream genuinely micro-batches
-    val qDir = new java.io.File(s"target/parity/st22-queries-$sfTag")
-      .getAbsoluteFile.toString
-    val qMarker = new java.io.File(qDir, "._queries_ok")
-    val qValid = qMarker.isFile && new String(
-      java.nio.file.Files.readAllBytes(qMarker.toPath), "UTF-8") == srcStamp
-    if (!qValid) {
-      emb.filter(col("vec_id") < 10)
-        .select(col("vec_id"), col("embedding"))
-        .repartitionByRange(4, col("vec_id"))
-        .write.mode("overwrite").parquet(s"file:$qDir")
-      java.nio.file.Files.write(qMarker.toPath, srcStamp.getBytes("UTF-8"))
-    }
+    val qDir = queryArrivals(emb, parityDir(s"st22-queries-$sfTag"), 10,
+      srcStamp)
 
-    // per-run result log + checkpoint, wiped through each path's own FS
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def wipeFs(path: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val resultsPath = new java.io.File(s"target/parity/st22-results-$sfTag")
-      .getAbsoluteFile.toString
-    val ckptDir = new java.io.File(s"target/parity/st22-ckpt-$sfTag")
-      .getAbsoluteFile.toString
-    wipeFs(s"file:$resultsPath"); wipeFs(s"file:$ckptDir")
+    // per-run result log + checkpoint
+    val resultsPath = s"file:${parityDir(s"st22-results-$sfTag")}"
+    val ckptDir = parityDir(s"st22-ckpt-$sfTag")
+    MicroBatchJob.wipe(spark, resultsPath, s"file:$ckptDir")
 
-    val ss = StreamSessions.microBatch(spark, 8)
-    val q = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"file:$qDir")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = batch.sparkSession
+    MicroBatchJob.run(spark, qDir, EmbeddingArrivalSchema, ckptDir, 8) {
+      (bs, batch, batchId) =>
         import bs.implicits._
         val fine = fineRows.toDF("m", "centroid_id", "c")
         val cents = coarseRows.toDF("centroid_id", "c")
@@ -2467,29 +2215,14 @@ object VectorQueries {
           .localCheckpoint(true)
         val res = pqServeRefineBatch(bs, sfDir, qch, fine, cents,
           indexDir, k, shortlist)
-        val prior = SnapshotLog.latestVersion(bs, s"file:$resultsPath")
-          .map(v => SnapshotLog.manifest(bs, s"file:$resultsPath", v))
-          .getOrElse(Nil)
-        SnapshotLog.commit(bs, s"file:$resultsPath", res.coalesce(1), prior,
-          commitKey = Some(s"batch-$batchId"))
         // in-loop result-log maintenance (st20's rule)
-        maintainStreamLog(bs, s"file:$resultsPath", None,
-          maxFilesPerPartition = 2, batchId)
+        MicroBatchJob.appendBatch(bs, resultsPath, res.coalesce(1), batchId,
+          None, maxFilesPerPartition = 2)
         CorpusPipeline.freeCut(qch)
-        ()
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
 
-    val v = SnapshotLog.latestVersion(spark, s"file:$resultsPath")
-      .getOrElse(sys.error("st22: no result commits"))
-    // batch count from distinct replay keys — invariant under the in-loop
-    // maintenance commits (st20's rule)
-    val nBatches = SnapshotLog.commitKeys(spark, s"file:$resultsPath")
-      .count(_.startsWith("batch-"))
-    SnapshotLog.read(spark, s"file:$resultsPath", v)
+    val (v, nBatches) = MicroBatchJob.batchLog(spark, resultsPath)
+    SnapshotLog.read(spark, resultsPath, v)
       .withColumn("n_commits", lit(nBatches))
   }
 
@@ -2562,14 +2295,9 @@ object VectorQueries {
     val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
     val emb = table(spark, sfDir, "embeddings")
     val vecs = emb.select(col("vec_id"), col("embedding"))
-    val indexDir = new java.io.File(s"target/parity/e33-index-$sfTag")
-      .getAbsoluteFile.toString
-    val marker = new java.io.File(indexDir, "._index_ok")
-    val stamp = s"$sfDir|$iters|" +
-      RelationalQueries.sourceStamp(sfDir, "embeddings")
-    val ok = marker.isFile && new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    if (!ok) {
+    val indexDir = parityDir(s"e33-index-$sfTag")
+    StampedArtifact.getOrBuild(indexDir, "._index_ok",
+        s"$sfDir|$iters|" + RelationalQueries.sourceStamp(sfDir, "embeddings")) {
       pqCodes(spark, sfDir, iters)
         .select(col("vec_id"), col("m"), col("centroid_id").as("code"))
         .join(emb.select(col("vec_id"), col("label")), "vec_id")
@@ -2577,7 +2305,6 @@ object VectorQueries {
           .select(col("vec_id"), col("centroid_id").as("bin")), "vec_id")
         .write.mode("overwrite").partitionBy("bin")
         .parquet(s"file:$indexDir")
-      java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
     }
     indexDir
   }
@@ -2619,45 +2346,15 @@ object VectorQueries {
       .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq
 
     // query arrivals fixture: e33's query set, 4-way range-split
-    val qDir = new java.io.File(s"target/parity/st23-queries-$sfTag")
-      .getAbsoluteFile.toString
-    val qMarker = new java.io.File(qDir, "._queries_ok")
-    val qValid = qMarker.isFile && new String(
-      java.nio.file.Files.readAllBytes(qMarker.toPath), "UTF-8") == srcStamp
-    if (!qValid) {
-      emb.filter(col("vec_id") < 10)
-        .select(col("vec_id"), col("embedding"))
-        .repartitionByRange(4, col("vec_id"))
-        .write.mode("overwrite").parquet(s"file:$qDir")
-      java.nio.file.Files.write(qMarker.toPath, srcStamp.getBytes("UTF-8"))
-    }
+    val qDir = queryArrivals(emb, parityDir(s"st23-queries-$sfTag"), 10,
+      srcStamp)
 
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def wipeFs(path: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(hconf)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    val resultsPath = new java.io.File(s"target/parity/st23-results-$sfTag")
-      .getAbsoluteFile.toString
-    val ckptDir = new java.io.File(s"target/parity/st23-ckpt-$sfTag")
-      .getAbsoluteFile.toString
-    wipeFs(s"file:$resultsPath"); wipeFs(s"file:$ckptDir")
+    val resultsPath = s"file:${parityDir(s"st23-results-$sfTag")}"
+    val ckptDir = parityDir(s"st23-ckpt-$sfTag")
+    MicroBatchJob.wipe(spark, resultsPath, s"file:$ckptDir")
 
-    val ss = StreamSessions.microBatch(spark, 8)
-    val q = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"file:$qDir")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = batch.sparkSession
+    MicroBatchJob.run(spark, qDir, EmbeddingArrivalSchema, ckptDir, 8) {
+      (bs, batch, batchId) =>
         import bs.implicits._
         val fine = fineRows.toDF("m", "centroid_id", "c")
         val cents = coarseRows.toDF("centroid_id", "c")
@@ -2665,26 +2362,13 @@ object VectorQueries {
           .localCheckpoint(true)
         val res = filteredPqServeBatch(bs, sfDir, qch, fine, cents,
           indexDir, k, nprobe, shortlist, pred = pred)
-        val prior = SnapshotLog.latestVersion(bs, s"file:$resultsPath")
-          .map(v => SnapshotLog.manifest(bs, s"file:$resultsPath", v))
-          .getOrElse(Nil)
-        SnapshotLog.commit(bs, s"file:$resultsPath", res.coalesce(1), prior,
-          commitKey = Some(s"batch-$batchId"))
-        maintainStreamLog(bs, s"file:$resultsPath", None,
-          maxFilesPerPartition = 2, batchId)
+        MicroBatchJob.appendBatch(bs, resultsPath, res.coalesce(1), batchId,
+          None, maxFilesPerPartition = 2)
         CorpusPipeline.freeCut(qch)
-        ()
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
 
-    val v = SnapshotLog.latestVersion(spark, s"file:$resultsPath")
-      .getOrElse(sys.error("st23: no result commits"))
-    val nBatches = SnapshotLog.commitKeys(spark, s"file:$resultsPath")
-      .count(_.startsWith("batch-"))
-    SnapshotLog.read(spark, s"file:$resultsPath", v)
+    val (v, nBatches) = MicroBatchJob.batchLog(spark, resultsPath)
+    SnapshotLog.read(spark, resultsPath, v)
       .withColumn("n_commits", lit(nBatches))
   }
 
@@ -3368,10 +3052,8 @@ object VectorQueries {
     val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
     val emb = table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val tblDir = new java.io.File(s"target/parity/ivf-genlog-$sfTag")
-      .getAbsoluteFile.toString
-    wipeLocalDir(tblDir)
-    val tbl = s"file:$tblDir"
+    val tbl = s"file:${parityDir(s"ivf-genlog-$sfTag")}"
+    MicroBatchJob.wipe(spark, tbl)
 
     // generation 1 (blue): the serving geometry to date — e18's demo
     // centroids; committed keyed so a replayed build after the swap no-ops.
@@ -3474,17 +3156,11 @@ object VectorQueries {
     val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
     val emb = table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val genDirF = new java.io.File(s"target/parity/ivf-st26gen-$sfTag")
-      .getAbsoluteFile.toString
-    val resDirF = new java.io.File(s"target/parity/ivf-st26res-$sfTag")
-      .getAbsoluteFile.toString
-    val tickDirF = new java.io.File(s"target/parity/ivf-st26tick-$sfTag")
-      .getAbsoluteFile.toString
-    val ckptDir = new java.io.File(s"target/parity/ivf-st26ckpt-$sfTag")
-      .getAbsoluteFile.toString
-    wipeLocalDir(genDirF); wipeLocalDir(resDirF); wipeLocalDir(ckptDir)
-    val genTbl = s"file:$genDirF"
-    val resTbl = s"file:$resDirF"
+    val genTbl = s"file:${parityDir(s"ivf-st26gen-$sfTag")}"
+    val resTbl = s"file:${parityDir(s"ivf-st26res-$sfTag")}"
+    val tickDirF = parityDir(s"ivf-st26tick-$sfTag")
+    val ckptDir = parityDir(s"ivf-st26ckpt-$sfTag")
+    MicroBatchJob.wipe(spark, genTbl, resTbl, s"file:$ckptDir")
 
     // 4 one-row serving-tick files → 4 micro-batches (the stream carries
     // serving REQUESTS; the query set itself is fixed, so results depend
@@ -3503,17 +3179,8 @@ object VectorQueries {
       Nil, Some("gen-1-build"), partitionBy = Some("centroid_id"),
       sidecars = Seq("coarse" -> demoCents))
 
-    val ss = StreamSessions.microBatch(spark, 8)
-    val q = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("tick",
-          org.apache.spark.sql.types.LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"file:$tickDirF")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = batch.sparkSession
+    MicroBatchJob.run(spark, tickDirF, TickSchema, ckptDir, 8) {
+      (bs, _, batchId) =>
         if (batchId == 2) {
           // the re-index event: e37's re-train + replace-all swap, keyed
           // so a replay of this batch finds the key and no-ops; the
@@ -3543,22 +3210,11 @@ object VectorQueries {
         val res = serveIvfGeneration(bs, genTbl, embq, k)
           .withColumn("gen", lit(genNow))
           .withColumn("batch_id", lit(batchId))
-        val prior = SnapshotLog.latestVersion(bs, resTbl)
-          .map(v => SnapshotLog.manifest(bs, resTbl, v)).getOrElse(Nil)
-        SnapshotLog.commit(bs, resTbl, res, prior,
-          commitKey = Some(s"batch-$batchId"))
-        maintainStreamLog(bs, resTbl, None, maxFilesPerPartition = 4, batchId)
-        ()
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        MicroBatchJob.appendBatch(bs, resTbl, res, batchId, None,
+          maxFilesPerPartition = 4)
+    }
 
-    val nBatches = SnapshotLog.commitKeys(spark, resTbl)
-      .count(_.startsWith("batch-"))
-    val vRes = SnapshotLog.latestVersion(spark, resTbl)
-      .getOrElse(sys.error("st26: no result commits"))
+    val (vRes, nBatches) = MicroBatchJob.batchLog(spark, resTbl)
     SnapshotLog.read(spark, resTbl, vRes)
       .groupBy("gen", "query_id", "rank", "neighbor_id", "ivf_sim")
       .agg(countDistinct(col("batch_id")).cast("int").as("n_gen_batches"))
@@ -3605,17 +3261,12 @@ object VectorQueries {
     val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
     val emb = table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val (splitDir, nEmb) = embSplitFixture(spark, sfDir)
+    val (splitDir, nEmb) = embSplitFixture(emb, sfDir)
     val bound = math.max(1L, (nEmb - 1) / 8)
-    val indexDir = new java.io.File(s"target/parity/ivf-st27index-$sfTag")
-      .getAbsoluteFile.toString
-    val mapDirF = new java.io.File(s"target/parity/ivf-st27map-$sfTag")
-      .getAbsoluteFile.toString
-    val ckptDir = new java.io.File(s"target/parity/ivf-st27ckpt-$sfTag")
-      .getAbsoluteFile.toString
-    wipeLocalDir(indexDir); wipeLocalDir(ckptDir); wipeLocalDir(mapDirF)
-    val tbl = s"file:$indexDir"
-    val mapPath = s"file:$mapDirF"
+    val tbl = s"file:${parityDir(s"ivf-st27index-$sfTag")}"
+    val mapPath = s"file:${parityDir(s"ivf-st27map-$sfTag")}"
+    val ckptDir = parityDir(s"ivf-st27ckpt-$sfTag")
+    MicroBatchJob.wipe(spark, tbl, s"file:$ckptDir", mapPath)
 
     // gen-1 geometry deploys BEFORE any data: the demo codebook is the
     // index's first keyed commit — sidecar only, zero data rows — so
@@ -3629,20 +3280,8 @@ object VectorQueries {
       Nil, Some("gen-1-geom"), partitionBy = Some("pbin"),
       sidecars = Seq("coarse" -> demoCents))
 
-    val ss = StreamSessions.microBatch(spark, 8)
-    val q = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("vec_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("embedding",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"file:$splitDir")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = batch.sparkSession
+    MicroBatchJob.run(spark, splitDir, EmbeddingArrivalSchema, ckptDir, 8) {
+      (bs, batch, batchId) =>
         // assign under whatever generation is live NOW — geometry from
         // the head's sidecar, generation identified by the TABLE-WIDE
         // commit-key ledger (still O(manifest headers)): ordinary append
@@ -3658,13 +3297,15 @@ object VectorQueries {
         val cents = SnapshotLog.readSidecar(bs, tbl, head, "coarse")
         val gen2Live = SnapshotLog.commitKeys(bs, tbl)
           .contains("gen-2-retrain")
-        val delta = (if (gen2Live) assignTrained(batch.toDF(), cents)
-          else assignToGivenCentroids(batch.toDF(), cents))
+        val delta = (if (gen2Live) assignTrained(batch, cents)
+          else assignToGivenCentroids(batch, cents))
           .withColumn("pbin", col("centroid_id"))
+        // the batch's append commits onto the head resolved above (the
+        // generation it assigned under), so it takes no second log listing
         SnapshotLog.commit(bs, tbl, delta,
           SnapshotLog.manifest(bs, tbl, head),
           commitKey = Some(s"batch-$batchId"), partitionBy = Some("pbin"))
-        maintainStreamLog(bs, tbl, Some("pbin"),
+        MicroBatchJob.maintainStreamLog(bs, tbl, Some("pbin"),
           maxFilesPerPartition = 2, batchId)
         if (batchId == 2) {
           // the re-index event, bracketed by the batch-1 and batch-3
@@ -3690,12 +3331,7 @@ object VectorQueries {
             commitKey = s"split-$batchId")
           ()
         }
-        ()
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
 
     // serving: geometry from the head generation's sidecar (post-swap =
     // the re-trained codebook), probed logical bins routed through the
@@ -3763,10 +3399,8 @@ object VectorQueries {
     val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
     val emb = table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val tblDir = new java.io.File(s"target/parity/ivfpq-genlog-$sfTag")
-      .getAbsoluteFile.toString
-    wipeLocalDir(tblDir)
-    val tbl = s"file:$tblDir"
+    val tbl = s"file:${parityDir(s"ivfpq-genlog-$sfTag")}"
+    MicroBatchJob.wipe(spark, tbl)
 
     // generation 1 (blue): the serving geometry to date — coarse + fine
     // codebooks at ONE Lloyd round, every vector encoded under them; the
@@ -3833,17 +3467,11 @@ object VectorQueries {
     val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
     val emb = table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val genDirF = new java.io.File(s"target/parity/ivfpq-st28gen-$sfTag")
-      .getAbsoluteFile.toString
-    val resDirF = new java.io.File(s"target/parity/ivfpq-st28res-$sfTag")
-      .getAbsoluteFile.toString
-    val tickDirF = new java.io.File(s"target/parity/ivfpq-st28tick-$sfTag")
-      .getAbsoluteFile.toString
-    val ckptDir = new java.io.File(s"target/parity/ivfpq-st28ckpt-$sfTag")
-      .getAbsoluteFile.toString
-    wipeLocalDir(genDirF); wipeLocalDir(resDirF); wipeLocalDir(ckptDir)
-    val genTbl = s"file:$genDirF"
-    val resTbl = s"file:$resDirF"
+    val genTbl = s"file:${parityDir(s"ivfpq-st28gen-$sfTag")}"
+    val resTbl = s"file:${parityDir(s"ivfpq-st28res-$sfTag")}"
+    val tickDirF = parityDir(s"ivfpq-st28tick-$sfTag")
+    val ckptDir = parityDir(s"ivfpq-st28ckpt-$sfTag")
+    MicroBatchJob.wipe(spark, genTbl, resTbl, s"file:$ckptDir")
 
     spark.range(4).select(col("id").as("tick"))
       .repartitionByRange(4, col("tick"))
@@ -3857,17 +3485,8 @@ object VectorQueries {
         "coarse" -> kmeansCentroids(spark, sfDir, iters = 1),
         "fine" -> pqTrainedCodebooks(spark, sfDir, iters = 1)))
 
-    val ss = StreamSessions.microBatch(spark, 8)
-    val q = ss.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("tick",
-          org.apache.spark.sql.types.LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"file:$tickDirF")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-          org.apache.spark.sql.Row], batchId: Long) =>
-        val bs = batch.sparkSession
+    MicroBatchJob.run(spark, tickDirF, TickSchema, ckptDir, 8) {
+      (bs, _, batchId) =>
         if (batchId == 2) {
           // e38's re-index event mid-stream: coarse AND fine books
           // re-train to the production iters=2 geometry, every code
@@ -3893,22 +3512,11 @@ object VectorQueries {
         val res = serveIvfPqGeneration(bs, genTbl, embq, k)
           .withColumn("gen", lit(genNow))
           .withColumn("batch_id", lit(batchId))
-        val prior = SnapshotLog.latestVersion(bs, resTbl)
-          .map(v => SnapshotLog.manifest(bs, resTbl, v)).getOrElse(Nil)
-        SnapshotLog.commit(bs, resTbl, res, prior,
-          commitKey = Some(s"batch-$batchId"))
-        maintainStreamLog(bs, resTbl, None, maxFilesPerPartition = 4, batchId)
-        ()
-      }
-      .option("checkpointLocation", ckptDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        MicroBatchJob.appendBatch(bs, resTbl, res, batchId, None,
+          maxFilesPerPartition = 4)
+    }
 
-    val nBatches = SnapshotLog.commitKeys(spark, resTbl)
-      .count(_.startsWith("batch-"))
-    val vRes = SnapshotLog.latestVersion(spark, resTbl)
-      .getOrElse(sys.error("st28: no result commits"))
+    val (vRes, nBatches) = MicroBatchJob.batchLog(spark, resTbl)
     SnapshotLog.read(spark, resTbl, vRes)
       .groupBy("gen", "query_id", "rank", "neighbor_id", "fivfpq_sim")
       .agg(countDistinct(col("batch_id")).cast("int").as("n_gen_batches"))

@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.sql.graftbridge.GraftListenerBus
+
 /** Per-job localization for multi-action queries: run a query `reps` times
   * and print, for the LAST (warm) rep, every Spark job's wall seconds and
   * its first stage's callsite name — the measurement the optimization
@@ -35,13 +37,16 @@ object JobTrace {
         }
       })
     (1 to reps).foreach { i =>
+      // drain first: a tail event of the previous rep must not be recorded
+      // as this rep's
+      GraftListenerBus.drain(spark.sparkContext)
       record = i == reps
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       println(f"[trace] $name run $i: ${(System.nanoTime() - t0) / 1e9}%.2fs")
       spark.catalog.clearCache()
     }
-    Thread.sleep(500)
+    GraftListenerBus.drain(spark.sparkContext)
     rows.forEach(r => println(r))
     spark.stop()
   }

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.GraftSession
+import graft.sources.StampedArtifact
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -125,34 +126,25 @@ object ScaleSlope {
   private def ensureVocabScaled(spark: SparkSession, src: String,
       groupSize: Int): String = {
     val out = new java.io.File(s"target/scale/bpe-g$groupSize").getAbsoluteFile
-    val marker = new java.io.File(out, "._scale_ok")
-    val stamp = s"v1|$src|$groupSize|" +
-      graft.operators.RelationalQueries.sourceStamp(src, "documents")
-    val ok = marker.isFile &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    if (!ok) {
+    StampedArtifact.getOrBuild(out.toString, "._scale_ok", s"v1|$src|$groupSize|" +
+        graft.operators.RelationalQueries.sourceStamp(src, "documents")) {
       out.mkdirs()
       replicateVocab(spark, src, out.toString, groupSize)
-      java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
     }
     out.toString
   }
 
   private[graft] def ensureScaled(spark: SparkSession, src: String, factor: Int): String = {
     val out = new java.io.File(s"target/scale/x$factor").getAbsoluteFile
-    val marker = new java.io.File(out, "._scale_ok")
     // v3: sign-flip-decorrelated emb replicas; sourceStamp: rebuild replicas
     // when the driver regenerates the base testdata
     val stamp = s"v3|$src|$factor|" +
       graft.operators.RelationalQueries.sourceStamp(src, "documents") + "|" +
       graft.operators.RelationalQueries.sourceStamp(src, "embeddings")
-    val ok = marker.isFile &&
-      new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == stamp
-    if (!ok) {
+    StampedArtifact.getOrBuild(out.toString, "._scale_ok", stamp) {
       out.mkdirs()
       replicateDocs(spark, src, out.toString, factor)
       replicateEmb(spark, src, out.toString, factor)
-      java.nio.file.Files.write(marker.toPath, stamp.getBytes("UTF-8"))
     }
     out.toString
   }

@@ -1,13 +1,15 @@
 package graft.tools
 
+import graft.operators.{MicroBatchJob, VectorQueries}
 import org.apache.spark.sql.functions.col
 
 /** Isolate the micro-batch harness's fixed cost (optimization-guide §1:
-  * measure before touching): times an AvailableNow maxFilesPerTrigger=1
-  * stream over the st22 4-file query fixture with three bodies —
-  * (a) empty foreachBatch (pure trigger + offset/commit-log machinery),
+  * measure before touching): times [[MicroBatchJob.run]] over the st22
+  * 4-file query fixture with three bodies —
+  * (a) empty body (pure trigger + offset/commit-log machinery),
   * (b) body = count() (adds one tiny job per batch),
-  * (c) body = SnapshotLog keyed commit (adds the result-log write).
+  * (c) body = [[MicroBatchJob.appendBatch]], the keyed result-log append
+  *     with in-loop maintenance that the serving streams run.
   * The deltas attribute the family's per-query wall to machinery vs
   * driver actions vs commit I/O.
   */
@@ -22,51 +24,23 @@ object StreamFixedCost {
     val qDir = new java.io.File(s"target/parity/st22-queries-$sfTag")
       .getAbsoluteFile.toString
     require(new java.io.File(qDir).isDirectory, s"run st22 once first: $qDir")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vec_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("embedding",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.FloatType))))
+    val scratch = java.nio.file.Files.createTempDirectory("sfc").toString
 
-    def run(label: String, body: (org.apache.spark.sql.Dataset[
-        org.apache.spark.sql.Row], Long) => Unit): Unit =
+    def run(label: String,
+        body: String => (org.apache.spark.sql.SparkSession,
+          org.apache.spark.sql.DataFrame, Long) => Unit): Unit =
       (1 to reps).foreach { i =>
-        val ckpt = java.nio.file.Files
-          .createTempDirectory("sfc-ckpt").toString
-        val ss = spark.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions", "8")
-        ss.conf.set("spark.sql.adaptive.enabled", "false")
         val t0 = System.nanoTime()
-        val q = ss.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(s"file:$qDir")
-          .writeStream
-          .foreachBatch(body)
-          .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        MicroBatchJob.run(spark, qDir, VectorQueries.EmbeddingArrivalSchema,
+          s"$scratch/$label-$i-ckpt", 8)(body(s"file:$scratch/$label-$i-log"))
         println(f"[sfc] $label rep $i: ${(System.nanoTime() - t0) / 1e9}%.2fs")
       }
 
-    run("empty", (_, _) => ())
-    run("count", (b, _) => { b.count(); () })
-    val resultsRoot = java.nio.file.Files
-      .createTempDirectory("sfc-log").toString
-    var n = 0
-    run("commit", (b, id) => {
-      val bs = b.sparkSession
-      n += 1
-      val path = s"file:$resultsRoot/log-$n"
-      val prior = graft.sources.SnapshotLog.latestVersion(bs, path)
-        .map(v => graft.sources.SnapshotLog.manifest(bs, path, v))
-        .getOrElse(Nil)
-      graft.sources.SnapshotLog.commit(bs, path,
-        b.select(col("vec_id")).coalesce(1), prior,
-        commitKey = Some(s"batch-$id"))
-      ()
-    })
+    run("empty", _ => (_, _, _) => ())
+    run("count", _ => (_, b, _) => { b.count(); () })
+    run("commit", log => (bs, b, id) =>
+      MicroBatchJob.appendBatch(bs, log, b.select(col("vec_id")).coalesce(1),
+        id, None, maxFilesPerPartition = 2))
     spark.stop()
   }
 }

@@ -26,19 +26,12 @@ class GenerationSidecarSpec extends SparkSpec {
 
   private def sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
 
-  private def wipe(d: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      val cs = f.listFiles(); if (cs != null) cs.foreach(rec); f.delete()
-    }
-    rec(new java.io.File(d))
-  }
-
   test("sidecar publishes atomically with the data: read excludes it, " +
       "readSidecar returns it, missing fails loudly, compact carries it") {
     import spark.implicits._
     val dirF = new java.io.File(s"target/parity/sidecar-spec-$sfTag")
       .getAbsoluteFile.toString
-    wipe(dirF)
+    MicroBatchJob.wipe(spark, s"file:$dirF")
     val tbl = s"file:$dirF"
     val data = Seq((1L, 10L), (2L, 10L), (3L, 20L)).toDF("id", "g")
     val book = Seq((0, Seq(0.5, 1.5)), (1, Seq(2.5, 3.5)))
@@ -91,7 +84,7 @@ class GenerationSidecarSpec extends SparkSpec {
       .select(col("vec_id"), col("embedding"))
     val dirF = new java.io.File(s"target/parity/geomonly-spec-$sfTag")
       .getAbsoluteFile.toString
-    wipe(dirF)
+    MicroBatchJob.wipe(spark, s"file:$dirF")
     val tbl = s"file:$dirF"
     val demoCents = RelationalQueries.table(spark, sfDir, "embeddings")
       .filter(col("vec_id") < 4)
@@ -111,7 +104,7 @@ class GenerationSidecarSpec extends SparkSpec {
     import spark.implicits._
     val dirF = new java.io.File(s"target/parity/pqgen-swap-spec-$sfTag")
       .getAbsoluteFile.toString
-    wipe(dirF)
+    MicroBatchJob.wipe(spark, s"file:$dirF")
     val tbl = s"file:$dirF"
     def codeSet(df: org.apache.spark.sql.DataFrame) =
       df.select(col("vec_id"), col("m"),
@@ -189,7 +182,7 @@ class GenerationSidecarSpec extends SparkSpec {
     // deleting it afterward proves serving touches only index + sidecars
     val scratch = new java.io.File(s"target/parity/no-corpus-$sfTag")
       .getAbsoluteFile.toString
-    wipe(scratch)
+    MicroBatchJob.wipe(spark, s"file:$scratch")
     val tmpSf = s"$scratch/sf"
     spark.read.parquet(s"$sfDir/embeddings.parquet")
       .write.parquet(s"file:$tmpSf/embeddings.parquet")
@@ -217,7 +210,7 @@ class GenerationSidecarSpec extends SparkSpec {
 
     // THE DELETION: the training corpus is gone from disk — any serving
     // path still re-deriving geometry from it now fails with a read error
-    wipe(s"$tmpSf/embeddings.parquet")
+    MicroBatchJob.wipe(spark, s"file:$tmpSf/embeddings.parquet")
     assert(!new java.io.File(s"$tmpSf/embeddings.parquet").exists())
 
     val queries = spark.read.parquet(qPath)

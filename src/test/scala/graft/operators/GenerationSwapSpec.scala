@@ -17,19 +17,12 @@ class GenerationSwapSpec extends SparkSpec {
 
   private def sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
 
-  private def wipe(d: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      val cs = f.listFiles(); if (cs != null) cs.foreach(rec); f.delete()
-    }
-    rec(new java.io.File(d))
-  }
-
   test("e37: manifest rename is the atomic cut — mid-rebuild serves gen-1, " +
       "post-swap serves gen-2, rollback reads gen-1, vacuum reclaims it") {
     import spark.implicits._
     val dirF = new java.io.File(s"target/parity/gen-swap-spec-$sfTag")
       .getAbsoluteFile.toString
-    wipe(dirF)
+    MicroBatchJob.wipe(spark, s"file:$dirF")
     val tbl = s"file:$dirF"
     val emb = RelationalQueries.table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))

@@ -19,9 +19,6 @@ class St19RestartMaintenanceSpec extends SparkSpec {
       r.getAs[Long]("sum_ids"), r.getAs[Long]("tot_tokens"),
       r.getAs[Long]("n_bins"), r.getAs[Long]("census_hash"))
 
-  private def wipe(f: java.io.File): Unit =
-    CorpusPipeline.wipeFsPath(spark, s"file:${f.getAbsolutePath}")
-
   /** Staged-arrival cold-restart run: 2 of the 4 fixture files arrive, the
     * stream runs and TERMINATES (its SparkSession is per-run — st19RunStream
     * opens a fresh one each call), then the remaining files arrive and a
@@ -31,11 +28,10 @@ class St19RestartMaintenanceSpec extends SparkSpec {
   private lazy val restarted: (CorpusPipeline.St19Config,
       Array[org.apache.spark.sql.Row]) = {
     val cfg = CorpusPipeline.st19Config(spark, sfDir, stateTag = "-restart")
-    CorpusPipeline.wipeFsPath(spark, s"file:${cfg.stateRoot}")
-    CorpusPipeline.wipeFsPath(spark, s"file:${cfg.ckptDir}")
+    MicroBatchJob.wipe(spark, s"file:${cfg.stateRoot}", s"file:${cfg.ckptDir}")
     val arrival = new java.io.File("target/parity/x1s-arrival-restart")
       .getAbsoluteFile
-    wipe(arrival); arrival.mkdirs()
+    MicroBatchJob.wipe(spark, s"file:$arrival"); arrival.mkdirs()
     val parts = new java.io.File(cfg.splitDir).listFiles()
       .filter(f => f.getName.startsWith("part-") &&
         f.getName.endsWith(".parquet")).sortBy(_.getName)
@@ -96,7 +92,7 @@ class St19RestartMaintenanceSpec extends SparkSpec {
   test("compaction keeps untouched partitions' file identity; retention reclaims replaced files") {
     import spark.implicits._
     val root = new java.io.File("target/parity/snap-maint-spec").getAbsoluteFile
-    wipe(root)
+    MicroBatchJob.wipe(spark, s"file:$root")
     val path = s"file:$root"
     // bucket A receives two KEYED commits (2 files), bucket B one (1 file)
     def d(rows: Seq[(Long, String)]) = rows.toDF("id", "b")
@@ -166,7 +162,7 @@ class St19RestartMaintenanceSpec extends SparkSpec {
     import spark.implicits._
     val root = new java.io.File("target/parity/snap-retain-guard-spec")
       .getAbsoluteFile
-    wipe(root)
+    MicroBatchJob.wipe(spark, s"file:$root")
     val path = s"file:$root"
     def d(rows: Seq[Long]) = rows.toDF("id")
     SnapshotLog.commit(spark, path, d(Seq(1L)), Nil,

@@ -38,7 +38,7 @@ class St19StateIoSpec extends SparkSpec {
   test("a batch's prior-state read opens only its touched buckets and keeps only matched keys") {
     import spark.implicits._
     val root = new java.io.File("target/parity/st19-io-spec").getAbsoluteFile
-    CorpusPipeline.wipeFsPath(spark, s"file:${root.getAbsolutePath}")
+    MicroBatchJob.wipe(spark, s"file:${root.getAbsolutePath}")
     val path = s"file:$root"
 
     // a synthetic bucketed state table, built exactly as st19 builds its

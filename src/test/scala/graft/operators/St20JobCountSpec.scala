@@ -2,9 +2,9 @@ package graft.operators
 
 import graft.SparkSpec
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.GraftTestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerTaskEnd}
+import org.apache.spark.sql.graftbridge.GraftListenerBus
 
 /** st20's per-run Spark job budget. The codebook and the index's bin
   * listing are resolved once per stream, and each micro-batch runs one job
@@ -19,7 +19,7 @@ class St20JobCountSpec extends SparkSpec {
     val sc = spark.sparkContext
     // warm run: builds the stamp-guarded index and arrival fixtures
     VectorQueries.st20StreamingAnnServe(spark, sfDir)
-    GraftTestBus.drain(sc)
+    GraftListenerBus.drain(sc)
     val jobs = new AtomicInteger()
     val tasks = new AtomicInteger()
     val listener = new SparkListener {
@@ -33,7 +33,7 @@ class St20JobCountSpec extends SparkSpec {
     sc.addSparkListener(listener)
     try {
       VectorQueries.st20StreamingAnnServe(spark, sfDir)
-      GraftTestBus.drain(sc)
+      GraftListenerBus.drain(sc)
     } finally sc.removeSparkListener(listener)
     info(s"st20 warm run: ${jobs.get} jobs, ${tasks.get} tasks")
     assert(jobs.get <= St20JobCountSpec.MaxJobs,
