@@ -79,6 +79,10 @@ object GraftSession {
       // (tradeoff, documented: a failed job can leave partial files; our
       // sink is truncate-and-replace idempotent, so a retry converges)
       .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+      // TIMESTAMP(NANOS) parquet columns (no native Spark type) read as long
+      // nanoseconds, which `RelationalQueries.eventsTable` truncates to µs;
+      // set here once, so no read path sets a conf on a caller's session
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // file: through the in-process permission setter (no `chmod` fork per
     // created dir/file/.crc without libhadoop), for both FileSystem and
     // FileContext users; see graft.sources.LocalFileSystems

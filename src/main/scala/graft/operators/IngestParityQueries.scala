@@ -1,9 +1,11 @@
 package graft.operators
 
 import graft.core._
-import graft.sources.{HivePartitionedSource, LandingTable, MutationOps, StampedArtifact}
+import graft.sources.{HivePartitionedSource, LandingTable, MutationOps, SnapshotLog, StampedArtifact}
+import graft.streaming.{RunningTotals, Sessionize, StreamingIngest}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** The reference's own pipeline (S1 hive TSV scan, S2 partition-overwrite
@@ -66,33 +68,66 @@ object IngestParityQueries {
     dirs.foreach(d => new java.io.File(d).mkdirs())
   }
 
-  /** Run a streaming replay on a THROWAWAY child session
-    * (`spark.newSession()`: same SparkContext, shared cache and catalog
-    * metadata, but its OWN SQLConf and temp-view registry) with the
-    * stateful-operator shuffle parallelism sized to state volume.
-    *
-    * Why the smaller shuffle count: every stateful operator materializes
-    * one state-store instance — and per micro-batch, one delta file plus
-    * commit metadata — PER shuffle partition, regardless of data volume.
-    * The gate replays land a few thousand rows per side, so 32 partitions
-    * mean the run is dominated by 32× state-store file churn, not by work
-    * (measured: st3 7.9s → ~4s at 8 partitions). Partition count never
-    * changes results, only file fan-out.
-    *
-    * Why a child session: the replay owns every conf it touches — shuffle
-    * partitions here, st9's RocksDB state-store provider via `extraConf` —
-    * and they die with the session, so a concurrent query on the parent can
-    * NEVER observe them. (Earlier rounds patched the shared session conf
-    * and disclaimed "single-threaded gate only"; this closes that footgun.)
-    * Memory-sink tables register in the child's temp-view catalog, so the
-    * body both runs the stream and builds the read-back frame from `ss`.
+  /** Where a replay's rows go. */
+  private sealed trait Sink
+  /** A memory table, named after the replay's kind, on its session. */
+  private final case class MemoryTable(outputMode: String = "append") extends Sink
+  /** The caller's body, run on each micro-batch. */
+  private final case class EachBatch(body: (DataFrame, Long) => Unit) extends Sink
+
+  /** Start the stream `start` builds on a fresh stream session
+    * ([[MicroBatchJob.streamSession]], 8 shuffle partitions, AQE per
+    * `adaptive`) and wait until it has drained every arrived file. Returns
+    * that session: a memory sink's table is registered there, so the
+    * read-back is built from it.
     */
-  private def withStreamSession[T](spark: SparkSession, n: Int,
-      extraConf: Map[String, String] = Map.empty)(f: SparkSession => T): T = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", n.toString)
-    extraConf.foreach { case (k, v) => ss.conf.set(k, v) }
-    f(ss)
+  private def drained(spark: SparkSession, adaptive: Boolean = false)(
+      start: SparkSession => StreamingQuery): SparkSession = {
+    val ss = MicroBatchJob.streamSession(spark, 8, adaptive)
+    start(ss).awaitTermination()
+    ss
+  }
+
+  /** The sink/start step of a replay: `out` into `sink` under the
+    * checkpoint `ckpt`, with `AvailableNow`, so a run replays what has
+    * arrived and stops.
+    */
+  private def startSink(out: DataFrame, kind: String, ckpt: String,
+      sink: Sink): StreamingQuery = {
+    val w = out.writeStream
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+    (sink match {
+      case MemoryTable(mode) => w.format("memory").queryName(kind).outputMode(mode)
+      case EachBatch(body) => w.foreachBatch(body)
+    }).start()
+  }
+
+  /** One generic replay of the TSV export. The checkpoint of `kind` is
+    * recreated, then `query` builds the stream from the file stream of
+    * the export's `day=<days>` hours (a fresh source per call, for the
+    * two-sided joins) on the replay's session, which is returned once
+    * the stream has drained into `sink`. An [[EachBatch]] body maintains
+    * a table across batches, so its replay arrives 8 files per batch and
+    * the maintenance provably composes; a memory table takes each run
+    * whole.
+    */
+  private def replay(spark: SparkSession, sfDir: String, kind: String,
+      days: String, sink: Sink = MemoryTable(), adaptive: Boolean = false)(
+      query: (SparkSession, () => DataFrame) => DataFrame): SparkSession = {
+    val (rawBase, _) = exportEventsTsv(spark, sfDir)
+    val ckpt = parityDir(s"$kind-ckpt", sfDir, firstHourOnly = false)
+    recreate(spark, ckpt)
+    val cfg = cfgFor(rawBase, "unused")
+    val filesPerTrigger = sink match {
+      case _: EachBatch => Some(8)
+      case _: MemoryTable => None
+    }
+    drained(spark, adaptive) { ss =>
+      val hours = () => StreamingIngest.tsvStream(ss, cfg,
+        StreamingIngest.dayHours(days), filesPerTrigger)
+      startSink(query(ss, hours), kind, ckpt, sink)
+    }
   }
 
   private def exportEventsTsv(spark: SparkSession, sfDir: String,
@@ -243,16 +278,23 @@ object IngestParityQueries {
       // contract): the split classification is only stable while the
       // parsed frame is cached — a lazy aggregate escaping this block
       // would re-read the files under column pruning and reclassify
-      val nBad = bad.count()
-      val row = good.agg(
-        count(lit(1)).as("cnt_landed"),
-        sum(col("event_id")).as("sum_eid"),
-        sum(col("value").cast("decimal(30,6)")).cast("double").as("sum_value"))
-        .collect()(0)
-      import spark.implicits._
-      Seq((row.getLong(0), row.getLong(1), row.getDouble(2), nBad))
-        .toDF("cnt_landed", "sum_eid", "sum_value", "n_quarantined")
+      quarantineResult(spark, good, bad.count())
     }
+  }
+
+  /** s4's and st16's result: the aggregate of the good rows, collected
+    * eagerly, and the count of quarantined lines.
+    */
+  private def quarantineResult(spark: SparkSession, good: DataFrame,
+      nBad: Long): DataFrame = {
+    val row = good.agg(
+      count(lit(1)).as("cnt_landed"),
+      sum(col("event_id")).as("sum_eid"),
+      sum(col("value").cast("decimal(30,6)")).cast("double").as("sum_value"))
+      .collect()(0)
+    import spark.implicits._
+    Seq((row.getLong(0), row.getLong(1), row.getDouble(2), nBad))
+      .toDF("cnt_landed", "sum_eid", "sum_value", "n_quarantined")
   }
 
   /** st16: STREAMING QUARANTINE — s4's bad-record capture running inside
@@ -276,18 +318,16 @@ object IngestParityQueries {
     val ckpt = parityDir("squar-ckpt", sfDir, firstHourOnly = true)
     recreate(spark, goodDir, badDir, ckpt)
     val corruptCol = "_graft_corrupt"
-    withStreamSession(spark, 8) { ss =>
+    drained(spark) { ss =>
       // text-source + shared quarantine parser (not the csv source): the
       // same classification as batch s4, including the arity check Spark's
       // CSV PERMISSIVE cannot express
       val lines = ss.readStream
         .option("maxFilesPerTrigger", "1")
         .text(s"file:$dirty/year=*/month=*/day=*/hour=*")
-      val q = HivePartitionedSource.parseLinesWithCapture(
-          lines, eventsSchema, CsvOptions(), corruptCol)
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], _: Long) =>
+      startSink(HivePartitionedSource.parseLinesWithCapture(
+          lines, eventsSchema, CsvOptions(), corruptCol), "squar", ckpt,
+        EachBatch { (batch, _) =>
           batch.persist()
           try {
             batch.filter(col(corruptCol).isNull)
@@ -297,21 +337,10 @@ object IngestParityQueries {
               .select(col(corruptCol).as("raw_record"))
               .write.mode("append").parquet(s"file:$badDir")
           } finally { batch.unpersist(); () }
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        })
     }
     val nBad = spark.read.parquet(s"file:$badDir").count()
-    val row = spark.read.parquet(s"file:$goodDir").agg(
-      count(lit(1)).as("cnt_landed"),
-      sum(col("event_id")).as("sum_eid"),
-      sum(col("value").cast("decimal(30,6)")).cast("double").as("sum_value"))
-      .collect()(0)
-    import spark.implicits._
-    Seq((row.getLong(0), row.getLong(1), row.getDouble(2), nBad))
-      .toDF("cnt_landed", "sum_eid", "sum_value", "n_quarantined")
+    quarantineResult(spark, spark.read.parquet(s"file:$goodDir"), nBad)
   }
 
   /** J1-J3: assemble -> start -> poll one load job for the earliest event
@@ -354,12 +383,8 @@ object IngestParityQueries {
     val stats = parityDir("stream-stats", sfDir, firstHourOnly = false)
     val ckpt = parityDir("stream-ckpt", sfDir, firstHourOnly = false)
     recreate(spark, stats, ckpt)
-    val cfg = cfgFor(rawBase, "unused")
-    withStreamSession(spark, 8) { ss =>
-      val q = graft.streaming.StreamingIngest.hourlyStats(
-        ss, cfg, s"file:$stats", ckpt, graceMinutes = 40, dayGlob = "0*")
-      q.awaitTermination()
-    }
+    drained(spark)(StreamingIngest.hourlyStats(_, cfgFor(rawBase, "unused"),
+      s"file:$stats", ckpt, dayGlob = "0*"))
     spark.read.option("basePath", s"file:$stats").parquet(s"file:$stats")
       .select(col("hour_ts"), col("cnt"))
   }
@@ -375,32 +400,15 @@ object IngestParityQueries {
     * with a scoped CTE incl. the scope-local watermark): sessionization is
     * per-user-per-gap, so the full month of replay added scan time only.
     */
-  def st2StreamingSessions(spark: SparkSession, sfDir: String): DataFrame = {
-    val (rawBase, _) = exportEventsTsv(spark, sfDir)
-    val ckpt = parityDir("sess-ckpt", sfDir, firstHourOnly = false)
-    recreate(spark, ckpt)
-    val qn = "st2_sessions_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-    withStreamSession(spark, 8) { ss =>
+  def st2StreamingSessions(spark: SparkSession, sfDir: String): DataFrame =
+    replay(spark, sfDir, "sess", days = "0*") { (ss, events) =>
       import ss.implicits._
-      implicit val s: SparkSession = ss
-      val raw = ss.readStream
-        .schema(eventsSchema)
-        .options(graft.core.CsvOptions.toReaderOptions(graft.core.CsvOptions()))
-        .csv(s"${rawBase.stripSuffix("/")}/year=*/month=*/day=0*/hour=*")
+      Sessionize.sessionize(events()
         .select(col("user_id"), col("ts"), col("event_id"))
-        .as[graft.streaming.Sessionize.Event]
-      val q = graft.streaming.Sessionize.sessionize(raw)
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(qn)
-        .select(col("user_id"), col("session_start_us"),
-          col("session_end_us"), col("n_events"))
-    }
-  }
+        .as[Sessionize.Event])(ss).toDF()
+    }.table("sess")
+      .select(col("user_id"), col("session_start_us"),
+        col("session_end_us"), col("n_events"))
 
   /** st3: STREAM-STREAM interval join end-to-end in the gate — two file
     * streams over the same TSV export (views and purchases), both
@@ -414,45 +422,38 @@ object IngestParityQueries {
     * result compact while still pinning every matched pair through the
     * sums).
     */
-  def st3StreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val (rawBase, _) = exportEventsTsv(spark, sfDir)
-    val ckpt = parityDir("join-ckpt", sfDir, firstHourOnly = false)
-    recreate(spark, ckpt)
-    val qn = "st3_join_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+  def st3StreamJoin(spark: SparkSession, sfDir: String): DataFrame =
     // demo scope = day=01 via PARTITION-GLOB pruning (st6's scope — both
     // stream-stream joins exercise the same per-row state machinery): each
     // side is its own file source, so directory pruning, not a post-read
     // filter, is what keeps two tree scans off the gate; the oracle mirrors
     // the scope with a day() predicate on both sides, which also keeps the
     // boundary consistent (a pair spanning midnight is excluded by BOTH)
-    withStreamSession(spark, 8) { ss =>
-      def stream() = ss.readStream
-        .schema(eventsSchema)
-        .options(CsvOptions.toReaderOptions(CsvOptions()))
-        .csv(s"${rawBase.stripSuffix("/")}/year=*/month=*/day=01/hour=*")
-      val views = stream().filter(col("event_type") === "view")
-        .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
-          col("event_id").as("v_id"))
-        .withWatermark("v_ts", "40 minutes")
-      val purchases = stream().filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-          col("event_id").as("p_id"))
-        .withWatermark("p_ts", "40 minutes")
-      val joined = views.join(purchases, expr(
-        "v_user = p_user AND p_ts >= v_ts AND p_ts <= v_ts + INTERVAL 30 MINUTES"))
-      val q = joined
-        .select(col("v_user").as("user_id"), col("v_id"), col("p_id"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(qn)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(col("v_id")).as("sum_v_id"), sum(col("p_id")).as("sum_p_id"))
-    }
+    replay(spark, sfDir, "join", days = "01", adaptive = true) { (_, events) =>
+      viewPurchasePairs(events, "inner")
+    }.table("join")
+      .groupBy("user_id")
+      .agg(count(lit(1)).as("n_pairs"),
+        sum(col("v_id")).as("sum_v_id"), sum(col("p_id")).as("sum_p_id"))
+
+  /** st3/st6's stream-stream join: views joined to the same user's
+    * purchases within [v_ts, v_ts + 30 min], both sides watermarked 40
+    * minutes, each side its own file source.
+    */
+  private def viewPurchasePairs(events: () => DataFrame,
+      joinType: String): DataFrame = {
+    val views = events().filter(col("event_type") === "view")
+      .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
+        col("event_id").as("v_id"))
+      .withWatermark("v_ts", "40 minutes")
+    val purchases = events().filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
+        col("event_id").as("p_id"))
+      .withWatermark("p_ts", "40 minutes")
+    views.join(purchases, expr(
+      "v_user = p_user AND p_ts >= v_ts AND p_ts <= v_ts + INTERVAL 30 MINUTES"),
+      joinType)
+      .select(col("v_user").as("user_id"), col("v_id"), col("p_id"))
   }
 
   /** st5: SLIDING windows — 1-hour windows every 30 minutes over the file
@@ -467,29 +468,14 @@ object IngestParityQueries {
     * are per-window and the oracle mirrors the scope, so the extra three
     * weeks of replay bought nothing but local-FS scan time.
     */
-  def st5SlidingWindow(spark: SparkSession, sfDir: String): DataFrame = {
-    val (rawBase, _) = exportEventsTsv(spark, sfDir)
-    val ckpt = parityDir("slide-ckpt", sfDir, firstHourOnly = false)
-    recreate(spark, ckpt)
-    val qn = "st5_slide_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-    withStreamSession(spark, 8) { ss =>
-      val q = ss.readStream
-        .schema(eventsSchema)
-        .options(CsvOptions.toReaderOptions(CsvOptions()))
-        .csv(s"${rawBase.stripSuffix("/")}/year=*/month=*/day=0*/hour=*")
+  def st5SlidingWindow(spark: SparkSession, sfDir: String): DataFrame =
+    replay(spark, sfDir, "slide", days = "0*") { (_, events) =>
+      events()
         .withWatermark("ts", "40 minutes")
         .groupBy(window(col("ts"), "1 hour", "30 minutes"))
         .agg(count(lit(1)).as("cnt"), sum(col("user_id")).as("sum_uid"))
         .select(col("window.start").as("win_start"), col("cnt"), col("sum_uid"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(qn).select("win_start", "cnt", "sum_uid")
-    }
-  }
+    }.table("slide").select("win_start", "cnt", "sum_uid")
 
   /** st4: STREAMING exact deduplication — `dropDuplicates` over the file
     * stream emits each (user_id, event_type) key once, on first arrival;
@@ -507,30 +493,14 @@ object IngestParityQueries {
     * so the extra three weeks of 720-directory local-FS replay bought
     * nothing but gate time.
     */
-  def st4StreamDedup(spark: SparkSession, sfDir: String): DataFrame = {
-    val (rawBase, _) = exportEventsTsv(spark, sfDir)
-    val ckpt = parityDir("dedup-ckpt", sfDir, firstHourOnly = false)
-    recreate(spark, ckpt)
-    val qn = "st4_dedup_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-    withStreamSession(spark, 8) { ss =>
-      val q = ss.readStream
-        .schema(eventsSchema)
-        .options(CsvOptions.toReaderOptions(CsvOptions()))
-        .csv(s"${rawBase.stripSuffix("/")}/year=*/month=*/day=0*/hour=*")
-        .select(col("user_id"), col("event_type"))
+  def st4StreamDedup(spark: SparkSession, sfDir: String): DataFrame =
+    replay(spark, sfDir, "dedup", days = "0*") { (_, events) =>
+      events().select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(qn)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_unique_users"),
-          sum(col("user_id")).as("sum_user_ids"))
-    }
-  }
+    }.table("dedup")
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n_unique_users"),
+        sum(col("user_id")).as("sum_user_ids"))
 
   /** st10: BOUNDED-STATE streaming dedup — `dropDuplicatesWithinWatermark`,
     * the variant st4's docstring promises: state for a key is kept only
@@ -552,32 +522,16 @@ object IngestParityQueries {
     * re-emit) and in-horizon suppression are pinned with explicitly
     * controlled batches in `DedupWithinWatermarkSpec`.
     */
-  def st10DedupWithinWatermark(spark: SparkSession, sfDir: String): DataFrame = {
-    val (rawBase, _) = exportEventsTsv(spark, sfDir)
-    val ckpt = parityDir("dedupww-ckpt", sfDir, firstHourOnly = false)
-    recreate(spark, ckpt)
-    val qn = "st10_dedupww_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-    withStreamSession(spark, 8) { ss =>
-      val q = ss.readStream
-        .schema(eventsSchema)
-        .options(CsvOptions.toReaderOptions(CsvOptions()))
-        .csv(s"${rawBase.stripSuffix("/")}/year=*/month=*/day=01/hour=*")
-        .select(col("user_id"), col("event_type"), col("ts"))
+  def st10DedupWithinWatermark(spark: SparkSession, sfDir: String): DataFrame =
+    replay(spark, sfDir, "dedupww", days = "01") { (_, events) =>
+      events().select(col("user_id"), col("event_type"), col("ts"))
         .withWatermark("ts", "25 hours")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(qn)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_unique_users"),
-          sum(col("user_id")).as("sum_user_ids"))
-    }
-  }
+    }.table("dedupww")
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n_unique_users"),
+        sum(col("user_id")).as("sum_user_ids"))
 
   /** st11: STREAMING BACKFILL parity — the reference's backfill story
     * (`/root/reference/README.md:49-60`: re-run the hour's load, the
@@ -607,10 +561,7 @@ object IngestParityQueries {
     LandingTable.overwritePartitions(crippled, cfg)
 
     val hour = PartitionHour.fromInstant(h0.toInstant) // session TZ is UTC
-    withStreamSession(spark, 8) { ss =>
-      val q = graft.streaming.StreamingIngest.backfillHour(ss, cfg, hour, ckpt)
-      q.awaitTermination()
-    }
+    drained(spark)(StreamingIngest.backfillHour(_, cfg, hour, ckpt))
     LandingTable.read(spark, cfg)
       .groupBy(date_trunc("hour", col("ts")).as("hour_ts"))
       .agg(count(lit(1)).as("cnt"),
@@ -636,16 +587,9 @@ object IngestParityQueries {
     * like st6/st8-st11 — session state is per (user, open session), so
     * directory pruning bounds replay cost without touching semantics.
     */
-  def st12SessionWindowAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    val (rawBase, _) = exportEventsTsv(spark, sfDir)
-    val ckpt = parityDir("sesswin-ckpt", sfDir, firstHourOnly = false)
-    recreate(spark, ckpt)
-    val qn = "st12_sesswin_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-    withStreamSession(spark, 8) { ss =>
-      val q = ss.readStream
-        .schema(eventsSchema)
-        .options(CsvOptions.toReaderOptions(CsvOptions()))
-        .csv(s"${rawBase.stripSuffix("/")}/year=*/month=*/day=01/hour=*")
+  def st12SessionWindowAgg(spark: SparkSession, sfDir: String): DataFrame =
+    replay(spark, sfDir, "sesswin", days = "01") { (_, events) =>
+      events()
         .withWatermark("ts", "40 minutes")
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"), sum(col("event_id")).as("sum_eid"))
@@ -653,17 +597,9 @@ object IngestParityQueries {
           unix_micros(col("session_window.start")).as("session_start_us"),
           unix_micros(col("session_window.end")).as("session_end_us"),
           col("n_events"), col("sum_eid"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(qn)
-        .select("user_id", "session_start_us", "session_end_us",
-          "n_events", "sum_eid")
-    }
-  }
+    }.table("sesswin")
+      .select("user_id", "session_start_us", "session_end_us",
+        "n_events", "sum_eid")
 
   /** st13: STREAMING CDC APPLY — a change stream incrementally maintaining a
     * keyed table on disk, the production upsert loop Spark has no built-in
@@ -685,31 +621,16 @@ object IngestParityQueries {
     * contracts are pinned in `MutationOpsSpec`.
     */
   def st13StreamingCdcApply(spark: SparkSession, sfDir: String): DataFrame = {
-    val (rawBase, _) = exportEventsTsv(spark, sfDir)
     val tableDir = parityDir("cdc-table", sfDir, firstHourOnly = false)
-    val ckpt = parityDir("cdc-ckpt", sfDir, firstHourOnly = false)
-    recreate(spark, tableDir, ckpt)
+    recreate(spark, tableDir)
     val tablePath = s"file:$tableDir"
-    withStreamSession(spark, 8) { ss =>
-      val q = ss.readStream
-        .schema(eventsSchema)
-        .options(CsvOptions.toReaderOptions(CsvOptions()))
-        .option("maxFilesPerTrigger", "8")
-        .csv(s"${rawBase.stripSuffix("/")}/year=*/month=*/day=01/hour=*")
-        .select(col("user_id"), col("ts"), col("event_type"),
-          col("value"), col("event_id"))
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], _: Long) =>
-          MutationOps.upsertLatest(batch.sparkSession, tablePath, batch.toDF(),
-            keys = Seq("user_id"), orderCols = Seq("ts", "event_id"),
-            nBuckets = 8)
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    replay(spark, sfDir, "cdc", days = "01", EachBatch { (batch, _) =>
+      MutationOps.upsertLatest(batch.sparkSession, tablePath, batch,
+        keys = Seq("user_id"), orderCols = Seq("ts", "event_id"),
+        nBuckets = 8)
+    }) { (_, events) =>
+      events().select(col("user_id"), col("ts"), col("event_type"),
+        col("value"), col("event_id"))
     }
     spark.read.option("basePath", tablePath).parquet(tablePath)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
@@ -733,36 +654,20 @@ object IngestParityQueries {
     * store is involved either way — memory cost is O(dim), constant in
     * stream length.
     */
-  def st14StreamStaticJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val (rawBase, _) = exportEventsTsv(spark, sfDir)
-    val ckpt = parityDir("sstatic-ckpt", sfDir, firstHourOnly = false)
-    recreate(spark, ckpt)
-    val qn = "st14_sstatic_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-    withStreamSession(spark, 8) { ss =>
+  def st14StreamStaticJoin(spark: SparkSession, sfDir: String): DataFrame =
+    replay(spark, sfDir, "sstatic", days = "01") { (ss, events) =>
       val dim = RelationalQueries.eventsTable(ss, sfDir)
         .select(col("user_id")).distinct()
         .filter(col("user_id") % 3 =!= 1)
         .withColumn("segment", pmod(col("user_id"), lit(5)))
-      val q = ss.readStream
-        .schema(eventsSchema)
-        .options(CsvOptions.toReaderOptions(CsvOptions()))
-        .csv(s"${rawBase.stripSuffix("/")}/year=*/month=*/day=01/hour=*")
-        .select(col("user_id"), col("event_id"), col("value"))
+      events().select(col("user_id"), col("event_id"), col("value"))
         .join(broadcast(dim), "user_id")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(qn)
-        .groupBy("segment")
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("event_id")).as("sum_eid"),
-          sum(col("value").cast("decimal(30,6)")).cast("double").as("sum_value"),
-          countDistinct(col("user_id")).as("n_users"))
-    }
-  }
+    }.table("sstatic")
+      .groupBy("segment")
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("event_id")).as("sum_eid"),
+        sum(col("value").cast("decimal(30,6)")).cast("double").as("sum_value"),
+        countDistinct(col("user_id")).as("n_users"))
 
   /** st15: STREAMING COMMIT LOG — each micro-batch lands as one atomic
     * [[graft.sources.SnapshotLog]] commit (new immutable files + a manifest
@@ -783,41 +688,22 @@ object IngestParityQueries {
     * scaladoc).
     */
   def st15StreamingSnapshots(spark: SparkSession, sfDir: String): DataFrame = {
-    val (rawBase, _) = exportEventsTsv(spark, sfDir)
     val tableDir = parityDir("snapstream-table", sfDir, firstHourOnly = false)
-    val ckpt = parityDir("snapstream-ckpt", sfDir, firstHourOnly = false)
-    recreate(spark, tableDir, ckpt)
+    recreate(spark, tableDir)
     val path = s"file:$tableDir"
-    withStreamSession(spark, 8) { ss =>
-      val q = ss.readStream
-        .schema(eventsSchema)
-        .options(CsvOptions.toReaderOptions(CsvOptions()))
-        .option("maxFilesPerTrigger", "8")
-        .csv(s"${rawBase.stripSuffix("/")}/year=*/month=*/day=01/hour=*")
-        .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-        .writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-            org.apache.spark.sql.Row], batchId: Long) =>
-          // batchId keys the commit: foreachBatch is at-least-once, so a
-          // post-crash replay of a batch must find its key already live and
-          // no-op instead of double-committing (torn attempts are reclaimed
-          // inside commit — see SnapshotLog scaladoc)
-          val bs = batch.sparkSession
-          val carried = graft.sources.SnapshotLog.latestVersion(bs, path)
-            .map(v => graft.sources.SnapshotLog.manifest(bs, path, v))
-            .getOrElse(Nil)
-          graft.sources.SnapshotLog.commit(
-            bs, path, batch.toDF(), carried, commitKey = Some(s"batch-$batchId"))
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    replay(spark, sfDir, "snapstream", days = "01", EachBatch { (batch, batchId) =>
+      // batchId keys the commit: foreachBatch is at-least-once, so a
+      // post-crash replay of a batch must find its key already live and
+      // no-op instead of double-committing (torn attempts are reclaimed
+      // inside commit — see SnapshotLog scaladoc)
+      MicroBatchJob.appendKeyed(batch.sparkSession, path, batch,
+        s"batch-$batchId")
+    }) { (_, events) =>
+      events().select(col("user_id"), col("ts"), col("event_id"), col("value"))
     }
-    val head = graft.sources.SnapshotLog.latestVersion(spark, path)
+    val head = SnapshotLog.latestVersion(spark, path)
       .getOrElse(sys.error("streaming snapshots: no version committed"))
-    graft.sources.SnapshotLog.read(spark, path, head)
+    SnapshotLog.read(spark, path, head)
       .groupBy(date_trunc("hour", col("ts")).as("hour_ts"))
       .agg(count(lit(1)).as("cnt"),
         sum(col("event_id")).as("sum_eid"),
@@ -838,43 +724,15 @@ object IngestParityQueries {
     * — outer-join state is per-row, so the demo bounds input by directory
     * pruning like st3.
     */
-  def st6StreamOuterJoin(spark: SparkSession, sfDir: String): DataFrame = {
-    val (rawBase, _) = exportEventsTsv(spark, sfDir)
-    val ckpt = parityDir("outer-ckpt", sfDir, firstHourOnly = false)
-    recreate(spark, ckpt)
-    val qn = "st6_outer_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-    withStreamSession(spark, 8) { ss =>
-      def stream() = ss.readStream
-        .schema(eventsSchema)
-        .options(CsvOptions.toReaderOptions(CsvOptions()))
-        .csv(s"${rawBase.stripSuffix("/")}/year=*/month=*/day=01/hour=*")
-      val views = stream().filter(col("event_type") === "view")
-        .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
-          col("event_id").as("v_id"))
-        .withWatermark("v_ts", "40 minutes")
-      val purchases = stream().filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-          col("event_id").as("p_id"))
-        .withWatermark("p_ts", "40 minutes")
-      val joined = views.join(purchases, expr(
-        "v_user = p_user AND p_ts >= v_ts AND p_ts <= v_ts + INTERVAL 30 MINUTES"),
-        "left_outer")
-      val q = joined
-        .select(col("v_user").as("user_id"), col("v_id"), col("p_id"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(qn)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_rows"),
-          count(col("p_id")).as("n_matched"),
-          sum(col("v_id")).as("sum_v_id"),
-          sum(col("p_id")).as("sum_p_id"))
-    }
-  }
+  def st6StreamOuterJoin(spark: SparkSession, sfDir: String): DataFrame =
+    replay(spark, sfDir, "outer", days = "01") { (_, events) =>
+      viewPurchasePairs(events, "left_outer")
+    }.table("outer")
+      .groupBy("user_id")
+      .agg(count(lit(1)).as("n_rows"),
+        count(col("p_id")).as("n_matched"),
+        sum(col("v_id")).as("sum_v_id"),
+        sum(col("p_id")).as("sum_p_id"))
 
   /** st7: CHAINED stateful aggregation — two time-window aggregations in a
     * single append-mode streaming query (the multiple-stateful-operator
@@ -896,16 +754,9 @@ object IngestParityQueries {
     * scope-local final watermark): the two-level emission rule is
     * per-window, so the full month of replay is gate cost, not proof.
     */
-  def st7ChainedAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    val (rawBase, _) = exportEventsTsv(spark, sfDir)
-    val ckpt = parityDir("chain-ckpt", sfDir, firstHourOnly = false)
-    recreate(spark, ckpt)
-    val qn = "st7_chain_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-    withStreamSession(spark, 8) { ss =>
-      val q = ss.readStream
-        .schema(eventsSchema)
-        .options(CsvOptions.toReaderOptions(CsvOptions()))
-        .csv(s"${rawBase.stripSuffix("/")}/year=*/month=*/day=0*/hour=*")
+  def st7ChainedAgg(spark: SparkSession, sfDir: String): DataFrame =
+    replay(spark, sfDir, "chain", days = "0*") { (_, events) =>
+      events()
         .withWatermark("ts", "40 minutes")
         .groupBy(window(col("ts"), "15 minutes"))
         .agg(count(lit(1)).as("cnt15"))
@@ -914,15 +765,7 @@ object IngestParityQueries {
           max(col("cnt15")).as("max_quarter"))
         .select(col("window.start").as("hour_ts"), col("n_quarters"),
           col("cnt"), col("max_quarter"))
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(qn).select("hour_ts", "n_quarters", "cnt", "max_quarter")
-    }
-  }
+    }.table("chain").select("hour_ts", "n_quarters", "cnt", "max_quarter")
 
   /** st8: streaming-state OBSERVABILITY — the state-store data source. A
     * dedup replay (st4's operator, scoped to day=01) leaves its key state in
@@ -935,25 +778,12 @@ object IngestParityQueries {
     * correctness proof of the dedup operator's state contract.
     */
   def st8StateReader(spark: SparkSession, sfDir: String): DataFrame = {
-    val (rawBase, _) = exportEventsTsv(spark, sfDir)
-    val ckpt = parityDir("stateread-ckpt", sfDir, firstHourOnly = false)
-    recreate(spark, ckpt)
-    val qn = "st8_state_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-    withStreamSession(spark, 8) { ss =>
-      val q = ss.readStream
-        .schema(eventsSchema)
-        .options(CsvOptions.toReaderOptions(CsvOptions()))
-        .csv(s"${rawBase.stripSuffix("/")}/year=*/month=*/day=01/hour=*")
-        .select(col("user_id"), col("event_type"))
+    replay(spark, sfDir, "stateread", days = "01") { (_, events) =>
+      events().select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
     }
-    spark.read.format("statestore").load(ckpt)
+    spark.read.format("statestore")
+      .load(parityDir("stateread-ckpt", sfDir, firstHourOnly = false))
       .select(col("key.user_id").as("user_id"),
         col("key.event_type").as("event_type"))
       .groupBy("event_type")
@@ -975,37 +805,19 @@ object IngestParityQueries {
     * INPUT by directory pruning keeps replay cost off the gate without
     * touching semantics.
     */
-  def st9TransformWithState(spark: SparkSession, sfDir: String): DataFrame = {
-    val (rawBase, _) = exportEventsTsv(spark, sfDir)
-    val ckpt = parityDir("tws-ckpt", sfDir, firstHourOnly = false)
-    recreate(spark, ckpt)
-    val qn = "st9_tws_" + sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-    withStreamSession(spark, 8, Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    ) { ss =>
+  def st9TransformWithState(spark: SparkSession, sfDir: String): DataFrame =
+    replay(spark, sfDir, "tws", days = "01", MemoryTable("update")) { (ss, events) =>
       import ss.implicits._
-      implicit val s: SparkSession = ss
-      val in = ss.readStream
-        .schema(eventsSchema)
-        .options(CsvOptions.toReaderOptions(CsvOptions()))
-        .csv(s"${rawBase.stripSuffix("/")}/year=*/month=*/day=01/hour=*")
+      ss.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      RunningTotals.totals(events()
         .select(col("event_type"), col("user_id"))
-        .as[graft.streaming.RunningTotals.In]
-      val q = graft.streaming.RunningTotals.totals(in)
-        .writeStream.format("memory").queryName(qn)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      ss.table(qn)
-        .groupBy("event_type")
-        .agg(max(struct(col("n"), col("sum_uid"))).as("m"))
-        .select(col("event_type"), col("m.n").as("n_events"),
-          col("m.sum_uid").as("sum_uid"))
-    }
-  }
+        .as[RunningTotals.In])(ss).toDF()
+    }.table("tws")
+      .groupBy("event_type")
+      .agg(max(struct(col("n"), col("sum_uid"))).as("m"))
+      .select(col("event_type"), col("m.n").as("n_events"),
+        col("m.sum_uid").as("sum_uid"))
 
   /** O1: the workflow loop on one existing hour (probe -> ingest -> poll ->
     * SUCCESS) and one absent hour (probe -> skip -> NOT_CREATED). Oracle is

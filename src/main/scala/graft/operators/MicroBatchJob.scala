@@ -15,27 +15,8 @@ import org.apache.spark.sql.types.StructType
   * the at-least-once replay of `foreachBatch` no-ops on a batch that
   * already committed, and `n_commits` counts the distinct batch keys.
   *
-  * Every batch runs on a CHILD session (`newSession()`: own conf, shared
-  * SparkContext), so per-stream settings never leak into, or race with,
-  * concurrent work on the parent (the u8 lesson, applied to conf scope).
-  * Two settings are applied:
-  *
-  *  - `spark.sql.shuffle.partitions = shufflePartitions`: per-batch shuffle
-  *    width sized explicitly to the batch volume by each caller (gate-scale
-  *    micro-batches are a few hundred rows; st19 scales it from its frozen
-  *    per-batch stats). Scale-adaptive sizing here is the CALLER's job
-  *    because AQE is off (below).
-  *  - `spark.sql.adaptive.enabled = false`: AQE's value is runtime
-  *    re-planning of LARGE shuffles (coalescing hundreds of empty
-  *    partitions, splitting skewed ones). A micro-batch serve/ingest body
-  *    shuffles batch-sized frames across an explicitly-sized small
-  *    partition count, where AQE can improve nothing — but it still costs
-  *    one extra driver re-optimization round + job per query stage, per
-  *    action, per batch (measured on st22: 91 → 67 Spark jobs per run from
-  *    this setting alone). This is a per-batch-volume decision, not a
-  *    local-mode tune: a serving batch is small on any cluster; the BATCH
-  *    jobs that scan the full corpus (index builds, the one-shot e-family
-  *    queries) run on the parent session and keep AQE on.
+  * Every batch runs on a child session built by [[streamSession]], the
+  * one builder of the streams' sessions.
   *
   * [[run]] does not wipe: a second run on the same checkpoint resumes
   * after the last processed file (st19's restart contract). Callers that
@@ -48,6 +29,51 @@ object MicroBatchJob {
     */
   private val FilesPerTrigger = "1"
 
+  /** The child session a stream runs on: every stream, here and in the
+    * generic replays of `IngestParityQueries`, gets one from this builder.
+    * A child (`newSession()`: own conf and temp views, shared SparkContext
+    * and cache) owns every conf its stream sets, so per-stream settings
+    * never leak into, or race with, concurrent work on the parent (the u8
+    * lesson, applied to conf scope); a caller may set more on it before
+    * its query starts (st9's RocksDB state-store provider). Two settings
+    * are applied:
+    *
+    *  - `spark.sql.shuffle.partitions = shufflePartitions`, sized by the
+    *    caller to the batch or state volume (8 for gate-scale streams; st19
+    *    scales it from its frozen per-batch stats). Scale-adaptive sizing
+    *    is the caller's job because AQE is off (below). A stateful operator
+    *    keeps one state-store instance, and per micro-batch one delta file
+    *    plus commit metadata, for EVERY shuffle partition whatever the data
+    *    volume, so a gate replay of a few thousand rows per side at 32
+    *    partitions is dominated by state-store file fan-out, not work
+    *    (measured: st3 went from 7.9 s to about 4 s at 8 partitions). The
+    *    count never changes results, only file fan-out.
+    *  - `spark.sql.adaptive.enabled = adaptive`: off for every stream but
+    *    st3. AQE's value is runtime re-planning of LARGE shuffles
+    *    (coalescing hundreds of empty partitions, splitting skewed ones). A
+    *    micro-batch shuffles batch-sized frames across an explicitly sized
+    *    small partition count, where AQE can improve nothing, but it still
+    *    costs one extra driver re-optimization round and job per query
+    *    stage, per action, per batch (measured on st22: 91 -> 67 Spark jobs
+    *    per run from this setting alone; st13 19 -> 10 and st14 7 -> 4 per
+    *    warm fixture run). It is a per-batch-volume decision, not a
+    *    local-mode tune: a batch is small on any cluster, while the BATCH
+    *    jobs that scan a full corpus (index builds, the one-shot queries)
+    *    run on the parent session and keep AQE on. Spark already turns AQE
+    *    off inside a stateful query, so for st3's stream-stream join the
+    *    setting reaches only the read-back aggregate over its memory table.
+    *    On the test fixture that table is empty, and AQE runs the aggregate
+    *    of an empty shuffle with no job where the AQE-off plan runs one
+    *    (2 -> 3 jobs per warm run), so st3 keeps AQE on.
+    */
+  def streamSession(spark: SparkSession, shufflePartitions: Int,
+      adaptive: Boolean): SparkSession = {
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
+    ss.conf.set("spark.sql.adaptive.enabled", adaptive.toString)
+    ss
+  }
+
   /** Stream the parquet files under the local directory `arrivalsDir`
     * (read with the declared `schema`, so no file is opened to infer one)
     * through `body(batchSession, batch, batchId)`, one file per batch,
@@ -57,10 +83,7 @@ object MicroBatchJob {
   def run(spark: SparkSession, arrivalsDir: String, schema: StructType,
       ckptDir: String, shufflePartitions: Int)(
       body: (SparkSession, DataFrame, Long) => Unit): StreamingQuery = {
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
-    ss.conf.set("spark.sql.adaptive.enabled", "false")
-    val q = ss.readStream
+    val q = streamSession(spark, shufflePartitions, adaptive = false).readStream
       .schema(schema)
       .option("maxFilesPerTrigger", FilesPerTrigger)
       .parquet(s"file:$arrivalsDir")

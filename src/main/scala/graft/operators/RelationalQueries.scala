@@ -96,13 +96,13 @@ object RelationalQueries {
 
   /** The events table's `ts` physical type has varied across testdata
     * generations: TIMESTAMP(NANOS) (no native Spark type — read as long ns
-    * via the legacy conf and truncate to µs with integer `div`; ns epoch
+    * via the legacy conf `GraftSession.builder` sets once for every session
+    * and its children, and truncate to µs with integer `div`; ns epoch
     * values exceed 2^53 so float division would lose precision) vs plain
     * TIMESTAMP(MICROS) (read natively). Adapt to whichever the file carries
     * so both oracle paths (duckdb truncates ns->µs too) agree.
     */
   def eventsTable(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.{CsvOptions, IngestConfig}
+import graft.core.{CsvOptions, IngestConfig, PartitionCodec, PartitionHour}
 import graft.sources.LandingTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,7 +15,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *  - the hive TSV tree becomes a file *stream* source (new files are
   *    discovered per micro-batch — the event push the reference's cron poll
   *    approximates);
-  *  - the 40-minute grace becomes `withWatermark("ts", "40 minutes")`;
+  *  - the 40-minute grace becomes `withWatermark("ts", "40 minutes")`
+  *    ([[GraceMinutes]]);
   *  - the hourly partition becomes a 1-hour tumbling window;
   *  - the truncate-and-replace partition load becomes Append-mode windowed
   *    aggregation + `foreachBatch` dynamic partition overwrite: a window is
@@ -28,23 +29,48 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (`rawToLanding`) is stateless pass-through with file-listing as the only
   * driver-side cost; use partitioned directories + `maxFilesPerTrigger` to
   * bound batch size on a 100 TB/day feed.
+  *
+  * Every stream here runs under `Trigger.AvailableNow`: a run drains the
+  * files that have arrived and stops, the streaming form of one scheduled
+  * load.
   */
 object StreamingIngest {
+
+  /** The reference's late-data allowance: its hourly cron runs at :40. */
+  val GraceMinutes = 40
+
+  /** The hive glob of every hour of the days `dayGlob` matches, relative
+    * to a tree's base.
+    */
+  def dayHours(dayGlob: String): String = s"year=*/month=*/day=$dayGlob/hour=*"
+
+  /** The file stream of the TSV tree at `cfg.sourceBase`, over the hour
+    * directories the hive glob `hours` (relative to the base) matches: the
+    * declared `cfg.schema` (never inferred) and the `cfg.csv` text
+    * contract. `maxFilesPerTrigger` caps the files one micro-batch takes;
+    * unset, `AvailableNow` delivers every arrived file in one batch.
+    */
+  def tsvStream(spark: SparkSession, cfg: IngestConfig, hours: String,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val reader = spark.readStream
+      .schema(cfg.schema)
+      .options(CsvOptions.toReaderOptions(cfg.csv))
+    maxFilesPerTrigger.fold(reader)(n =>
+        reader.option("maxFilesPerTrigger", n.toString))
+      .csv(s"${cfg.sourceBase.stripSuffix("/")}/$hours")
+  }
 
   /** Continuous raw landing: stream new TSV files into the hive-partitioned
     * landing tree (append; a partition accumulates files as they arrive).
     */
   def rawToLanding(spark: SparkSession, cfg: IngestConfig,
-      checkpoint: String, trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val raw = spark.readStream
-      .schema(cfg.schema)
-      .options(CsvOptions.toReaderOptions(cfg.csv))
-      .csv(s"${cfg.sourceBase.stripSuffix("/")}/year=*/month=*/day=*/hour=*")
+      checkpoint: String): StreamingQuery = {
+    val raw = tsvStream(spark, cfg, dayHours("*"))
     LandingTable.withPartitionColumns(raw, cfg.partitionField)
       .writeStream
       .partitionBy(LandingTable.PartitionCols: _*)
       .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .format("parquet")
       .option("path", cfg.landingPath)
       .start()
@@ -61,27 +87,23 @@ object StreamingIngest {
     * can run next to live traffic on other hours.
     *
     * Batch-atomicity contract: each micro-batch overwrites the partitions IT
-    * contains, so the replayed hour must arrive as one batch — leave
-    * `maxFilesPerTrigger` unset and `Trigger.AvailableNow` delivers all
-    * files of the hour in a single batch, mirroring the reference's
+    * contains, so the replayed hour must arrive as one batch — with
+    * `maxFilesPerTrigger` unset, `Trigger.AvailableNow` delivers all files
+    * of the hour in a single batch, mirroring the reference's
     * one-job-per-hour atomicity unit. (A multi-batch feed would need a
     * stage-then-swap at query end; per-hour backfill doesn't.) The contract
-    * is ENFORCED, not just documented: a second non-empty batch (someone
-    * passed `maxFilesPerTrigger`, or a non-AvailableNow trigger split the
-    * hour) fails the query loudly instead of silently leaving only the last
-    * batch's rows in the partition.
+    * is ENFORCED, not just documented: a second non-empty batch (files that
+    * reached the hour after batch 0 committed on this checkpoint) fails the
+    * query loudly instead of silently leaving only the last batch's rows in
+    * the partition.
     */
   def backfillHour(spark: SparkSession, cfg: IngestConfig,
-      hour: graft.core.PartitionHour, checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val raw = spark.readStream
-      .schema(cfg.schema)
-      .options(CsvOptions.toReaderOptions(cfg.csv))
-      .csv(graft.core.PartitionCodec.toDir(cfg.sourceBase, hour))
-    raw.writeStream
+      hour: PartitionHour, checkpoint: String): StreamingQuery =
+    tsvStream(spark, cfg, PartitionCodec.toHivePath(hour))
+      .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           require(batchId == 0,
@@ -93,10 +115,9 @@ object StreamingIngest {
         }
       }
       .start()
-  }
 
   /** Watermarked hourly aggregate stream: emits each hour's final count
-    * exactly once, `graceMinutes` after the hour closes (append mode — only
+    * exactly once, [[GraceMinutes]] after the hour closes (append mode — only
     * watermark-closed windows leave the operator), into a batch-keyed stats
     * table.
     *
@@ -112,18 +133,12 @@ object StreamingIngest {
     * immutable, so batch-grain idempotency is exactly as strong.
     */
   def hourlyStats(spark: SparkSession, cfg: IngestConfig, statsPath: String,
-      checkpoint: String, graceMinutes: Int = 40,
-      trigger: Trigger = Trigger.AvailableNow(),
-      dayGlob: String = "*"): StreamingQuery = {
+      checkpoint: String, dayGlob: String = "*"): StreamingQuery = {
     // dayGlob prunes the replay at the DIRECTORY level (days outside the
     // glob are never even listed) — the windowing semantics are per-window,
     // so a scoped replay is the same operator over fewer partitions
-    val raw = spark.readStream
-      .schema(cfg.schema)
-      .options(CsvOptions.toReaderOptions(cfg.csv))
-      .csv(s"${cfg.sourceBase.stripSuffix("/")}/year=*/month=*/day=$dayGlob/hour=*")
-    val agg = raw
-      .withWatermark(cfg.partitionField, s"$graceMinutes minutes")
+    val agg = tsvStream(spark, cfg, dayHours(dayGlob))
+      .withWatermark(cfg.partitionField, s"$GraceMinutes minutes")
       .groupBy(window(col(cfg.partitionField), "1 hour"))
       .agg(count(lit(1)).as("cnt"))
       .select(col("window.start").as("hour_ts"), col("cnt"))
@@ -131,7 +146,7 @@ object StreamingIngest {
     agg.writeStream
       .outputMode("append") // final windows only (watermark-closed)
       .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, id: Long) =>
         // persist: the emptiness probe and the write would otherwise each
         // recompute the batch — for a flush batch that means replaying the

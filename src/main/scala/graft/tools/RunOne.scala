@@ -1,5 +1,6 @@
 package graft.tools
 import graft.GraftSession
+import graft.core.JsonText
 
 /** Ad-hoc single-query oracle check: runMain graft.tools.RunOne <name> [sfDir]
   * — writes the query result + its oracle SQL under target/verify-one/ in
@@ -14,21 +15,9 @@ object RunOne {
     val out = s"target/verify-one/$name"
     graft.SparkEntry.queries(name)(spark, dir)
       .write.mode("overwrite").parquet(out)
-    // JSON-escape the oracle SQL: beyond backslash/quote/newline, ANY
-    // control char < 0x20 (\r, \t, ...) must be escaped or the emitted
-    // file is invalid JSON and compare_oracle.py fails to parse it.
-    val sql = graft.SparkEntry.oracleSql(name).flatMap {
-      case '\\' => "\\\\"
-      case '"'  => "\\\""
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < 0x20 => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get("target/verify-one/oracle_sql.json"),
-      s"""{"$name": "$sql"}""")
+      s"{${JsonText.quote(name)}: ${JsonText.quote(graft.SparkEntry.oracleSql(name))}}")
     println("rows=" + spark.read.parquet(out).count())
     spark.stop()
   }

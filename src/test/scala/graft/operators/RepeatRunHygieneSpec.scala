@@ -60,7 +60,14 @@ class RepeatRunHygieneSpec extends SparkSpec {
       "e38" -> (() => VectorQueries.e38RetrainSwapCompressed(spark, sfDir)),
       "st27" -> (() => VectorQueries.st27SwapUnderMaintenance(spark, sfDir)),
       "st28" -> (() => VectorQueries.st28StreamingPqGenerationSwap(spark, sfDir)),
-      "x4" -> (() => CorpusPipeline.x4PersistedPackMap(spark, sfDir)))
+      "x4" -> (() => CorpusPipeline.x4PersistedPackMap(spark, sfDir)),
+      // generic replays: st1, st13 and st15 recreate their sink tables and
+      // checkpoints per run; st16 reuses the stamped dirty tree and
+      // recreates its good/bad tables and checkpoint
+      "st1" -> (() => IngestParityQueries.st1StreamingHourly(spark, sfDir)),
+      "st13" -> (() => IngestParityQueries.st13StreamingCdcApply(spark, sfDir)),
+      "st15" -> (() => IngestParityQueries.st15StreamingSnapshots(spark, sfDir)),
+      "st16" -> (() => IngestParityQueries.st16StreamingQuarantine(spark, sfDir)))
     runs.foreach { case (name, fn) =>
       val first = rows(fn())
       val second = rows(fn())
