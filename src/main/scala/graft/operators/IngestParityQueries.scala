@@ -76,14 +76,14 @@ object IngestParityQueries {
   private final case class EachBatch(body: (DataFrame, Long) => Unit) extends Sink
 
   /** Start the stream `start` builds on a fresh stream session
-    * ([[MicroBatchJob.streamSession]], 8 shuffle partitions, AQE per
-    * `adaptive`) and wait until it has drained every arrived file. Returns
-    * that session: a memory sink's table is registered there, so the
-    * read-back is built from it.
+    * ([[MicroBatchJob.streamSession]], 8 shuffle partitions) and wait
+    * until it has drained every arrived file. Returns that session: a
+    * memory sink's table is registered there, so the read-back is built
+    * from it.
     */
-  private def drained(spark: SparkSession, adaptive: Boolean = false)(
+  private def drained(spark: SparkSession)(
       start: SparkSession => StreamingQuery): SparkSession = {
-    val ss = MicroBatchJob.streamSession(spark, 8, adaptive)
+    val ss = MicroBatchJob.streamSession(spark, 8)
     start(ss).awaitTermination()
     ss
   }
@@ -113,7 +113,7 @@ object IngestParityQueries {
     * whole.
     */
   private def replay(spark: SparkSession, sfDir: String, kind: String,
-      days: String, sink: Sink = MemoryTable(), adaptive: Boolean = false)(
+      days: String, sink: Sink = MemoryTable())(
       query: (SparkSession, () => DataFrame) => DataFrame): SparkSession = {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
     val ckpt = parityDir(s"$kind-ckpt", sfDir, firstHourOnly = false)
@@ -123,7 +123,7 @@ object IngestParityQueries {
       case _: EachBatch => Some(8)
       case _: MemoryTable => None
     }
-    drained(spark, adaptive) { ss =>
+    drained(spark) { ss =>
       val hours = () => StreamingIngest.tsvStream(ss, cfg,
         StreamingIngest.dayHours(days), filesPerTrigger)
       startSink(query(ss, hours), kind, ckpt, sink)
@@ -429,7 +429,7 @@ object IngestParityQueries {
     // filter, is what keeps two tree scans off the gate; the oracle mirrors
     // the scope with a day() predicate on both sides, which also keeps the
     // boundary consistent (a pair spanning midnight is excluded by BOTH)
-    replay(spark, sfDir, "join", days = "01", adaptive = true) { (_, events) =>
+    replay(spark, sfDir, "join", days = "01") { (_, events) =>
       viewPurchasePairs(events, "inner")
     }.table("join")
       .groupBy("user_id")
@@ -445,11 +445,11 @@ object IngestParityQueries {
     val views = events().filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
         col("event_id").as("v_id"))
-      .withWatermark("v_ts", "40 minutes")
+      .withWatermark("v_ts", StreamingIngest.Grace)
     val purchases = events().filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("p_id"))
-      .withWatermark("p_ts", "40 minutes")
+      .withWatermark("p_ts", StreamingIngest.Grace)
     views.join(purchases, expr(
       "v_user = p_user AND p_ts >= v_ts AND p_ts <= v_ts + INTERVAL 30 MINUTES"),
       joinType)
@@ -471,7 +471,7 @@ object IngestParityQueries {
   def st5SlidingWindow(spark: SparkSession, sfDir: String): DataFrame =
     replay(spark, sfDir, "slide", days = "0*") { (_, events) =>
       events()
-        .withWatermark("ts", "40 minutes")
+        .withWatermark("ts", StreamingIngest.Grace)
         .groupBy(window(col("ts"), "1 hour", "30 minutes"))
         .agg(count(lit(1)).as("cnt"), sum(col("user_id")).as("sum_uid"))
         .select(col("window.start").as("win_start"), col("cnt"), col("sum_uid"))
@@ -590,7 +590,7 @@ object IngestParityQueries {
   def st12SessionWindowAgg(spark: SparkSession, sfDir: String): DataFrame =
     replay(spark, sfDir, "sesswin", days = "01") { (_, events) =>
       events()
-        .withWatermark("ts", "40 minutes")
+        .withWatermark("ts", StreamingIngest.Grace)
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"), sum(col("event_id")).as("sum_eid"))
         .select(col("user_id"),
@@ -757,7 +757,7 @@ object IngestParityQueries {
   def st7ChainedAgg(spark: SparkSession, sfDir: String): DataFrame =
     replay(spark, sfDir, "chain", days = "0*") { (_, events) =>
       events()
-        .withWatermark("ts", "40 minutes")
+        .withWatermark("ts", StreamingIngest.Grace)
         .groupBy(window(col("ts"), "15 minutes"))
         .agg(count(lit(1)).as("cnt15"))
         .groupBy(window(col("window"), "1 hour"))

@@ -48,29 +48,25 @@ object MicroBatchJob {
     *    partitions is dominated by state-store file fan-out, not work
     *    (measured: st3 went from 7.9 s to about 4 s at 8 partitions). The
     *    count never changes results, only file fan-out.
-    *  - `spark.sql.adaptive.enabled = adaptive`: off for every stream but
-    *    st3. AQE's value is runtime re-planning of LARGE shuffles
-    *    (coalescing hundreds of empty partitions, splitting skewed ones). A
-    *    micro-batch shuffles batch-sized frames across an explicitly sized
-    *    small partition count, where AQE can improve nothing, but it still
-    *    costs one extra driver re-optimization round and job per query
-    *    stage, per action, per batch (measured on st22: 91 -> 67 Spark jobs
-    *    per run from this setting alone; st13 19 -> 10 and st14 7 -> 4 per
-    *    warm fixture run). It is a per-batch-volume decision, not a
-    *    local-mode tune: a batch is small on any cluster, while the BATCH
-    *    jobs that scan a full corpus (index builds, the one-shot queries)
-    *    run on the parent session and keep AQE on. Spark already turns AQE
-    *    off inside a stateful query, so for st3's stream-stream join the
-    *    setting reaches only the read-back aggregate over its memory table.
-    *    On the test fixture that table is empty, and AQE runs the aggregate
-    *    of an empty shuffle with no job where the AQE-off plan runs one
-    *    (2 -> 3 jobs per warm run), so st3 keeps AQE on.
+    *  - `spark.sql.adaptive.enabled = false`, for every stream. AQE's
+    *    value is runtime re-planning of LARGE shuffles (coalescing hundreds
+    *    of empty partitions, splitting skewed ones). A micro-batch shuffles
+    *    batch-sized frames across an explicitly sized small partition
+    *    count, where AQE can improve nothing, but it still costs one extra
+    *    driver re-optimization round and job per query stage, per action,
+    *    per batch (measured on st22: 91 -> 67 Spark jobs per run from this
+    *    setting alone; st13 19 -> 10 and st14 7 -> 4 per warm fixture run;
+    *    st3 at sf 0.01, whose join has rows there, 4 -> 3). It is a
+    *    per-batch-volume decision, not a local-mode tune: a batch is small
+    *    on any cluster, while the BATCH jobs that scan a full corpus (index
+    *    builds, the one-shot queries) run on the parent session and keep
+    *    AQE on.
     */
-  def streamSession(spark: SparkSession, shufflePartitions: Int,
-      adaptive: Boolean): SparkSession = {
+  def streamSession(spark: SparkSession,
+      shufflePartitions: Int): SparkSession = {
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
-    ss.conf.set("spark.sql.adaptive.enabled", adaptive.toString)
+    ss.conf.set("spark.sql.adaptive.enabled", "false")
     ss
   }
 
@@ -83,7 +79,7 @@ object MicroBatchJob {
   def run(spark: SparkSession, arrivalsDir: String, schema: StructType,
       ckptDir: String, shufflePartitions: Int)(
       body: (SparkSession, DataFrame, Long) => Unit): StreamingQuery = {
-    val q = streamSession(spark, shufflePartitions, adaptive = false).readStream
+    val q = streamSession(spark, shufflePartitions).readStream
       .schema(schema)
       .option("maxFilesPerTrigger", FilesPerTrigger)
       .parquet(s"file:$arrivalsDir")

@@ -37,8 +37,7 @@ object Workflow {
   final case class Policy(
       pollInterval: FiniteDuration = 30.seconds,
       maxRetries: Int = 3,              // scheduler --max-retry-attempts 3
-      attemptDeadline: FiniteDuration = 540.seconds, // --attempt-deadline 540s
-      graceMinutes: Int = 40)           // cron minute offset
+      attemptDeadline: FiniteDuration = 540.seconds) // --attempt-deadline 540s
 
   /** Blocking probe→start→poll composition for one partition (defaults to the
     * reference's scheduled "last hour" target).

@@ -37,7 +37,7 @@ object Sessionize {
     import spark.implicits._
     val gapUs = gapSec * 1000000L
     events
-      .withWatermark("ts", "40 minutes")
+      .withWatermark("ts", StreamingIngest.Grace)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, Session](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {

@@ -15,8 +15,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *  - the hive TSV tree becomes a file *stream* source (new files are
   *    discovered per micro-batch — the event push the reference's cron poll
   *    approximates);
-  *  - the 40-minute grace becomes `withWatermark("ts", "40 minutes")`
-  *    ([[GraceMinutes]]);
+  *  - the 40-minute grace becomes `withWatermark("ts", Grace)`
+  *    ([[Grace]], the one statement of it: every watermarked stream in
+  *    graft uses it);
   *  - the hourly partition becomes a 1-hour tumbling window;
   *  - the truncate-and-replace partition load becomes Append-mode windowed
   *    aggregation + `foreachBatch` dynamic partition overwrite: a window is
@@ -36,8 +37,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamingIngest {
 
-  /** The reference's late-data allowance: its hourly cron runs at :40. */
-  val GraceMinutes = 40
+  /** The reference's late-data allowance as a watermark delay: its hourly
+    * cron runs at :40.
+    */
+  val Grace = "40 minutes"
 
   /** The hive glob of every hour of the days `dayGlob` matches, relative
     * to a tree's base.
@@ -117,7 +120,7 @@ object StreamingIngest {
       .start()
 
   /** Watermarked hourly aggregate stream: emits each hour's final count
-    * exactly once, [[GraceMinutes]] after the hour closes (append mode — only
+    * exactly once, [[Grace]] after the hour closes (append mode — only
     * watermark-closed windows leave the operator), into a batch-keyed stats
     * table.
     *
@@ -138,7 +141,7 @@ object StreamingIngest {
     // glob are never even listed) — the windowing semantics are per-window,
     // so a scoped replay is the same operator over fewer partitions
     val agg = tsvStream(spark, cfg, dayHours(dayGlob))
-      .withWatermark(cfg.partitionField, s"$GraceMinutes minutes")
+      .withWatermark(cfg.partitionField, Grace)
       .groupBy(window(col(cfg.partitionField), "1 hour"))
       .agg(count(lit(1)).as("cnt"))
       .select(col("window.start").as("hour_ts"), col("cnt"))
