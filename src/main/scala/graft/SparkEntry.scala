@@ -1465,7 +1465,7 @@ object SparkEntry {
     "x1_corpus_pipeline" -> x1OracleSql,
     "x2_bpe_tokenized_corpus" -> x2OracleSql(),
     "x3_packed_sequences" -> x3OracleSql(),
-    // x4 persists the pack map (split-partitioned dynamic-overwrite
+    // x4 persists the pack map (split-partitioned staged-swap
     // landing write) and censuses the RE-READ artifact with placement
     // reconstructed from the stored columns alone — round-trip ≡
     // in-flight, so x3's oracle restates it verbatim

@@ -95,10 +95,6 @@ final case class IngestConfig(
     // extension), "parquet", "json", or "orc" — the schema contract is
     // identical (explicit, never inferred) for all four
     sourceFormat: String = "csv",
-    // stage-and-swap partition commit (two metadata renames, no torn reads —
-    // see LandingTable.overwritePartitionsStaged); false = Spark's built-in
-    // dynamic partition overwrite (for object stores where rename copies)
-    atomicCommit: Boolean = true,
     // BigQuery load-config `max_bad_records` parity: when > 0, a load job
     // parses PERMISSIVE-with-capture (HivePartitionedSource.withQuarantine),
     // EXCLUDES malformed rows from the landed data, and FAILS if their

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.{cclass, h60}
-import graft.sources.{SnapshotLog, StampedArtifact}
+import graft.sources.{PartitionSwap, SnapshotLog, StampedArtifact}
 import RelationalQueries.table
 
 /** x1: the END-TO-END training-corpus build — every stage of the pipeline
@@ -767,7 +767,7 @@ object CorpusPipeline {
     * that turns a piece stream into attention-reset boundaries. x4 writes
     * exactly that, one row per surviving document — (doc_id, seq_id =
     * start sequence, start_pos = offset within it, n_pieces) — as a
-    * SPLIT-PARTITIONED landing write under DYNAMIC partition overwrite
+    * SPLIT-PARTITIONED landing write through the staged partition swap
     * (the S2 discipline: re-running a cut replaces exactly the splits it
     * produces, never the table wholesale, so a re-run is idempotent and a
     * partial corpus refresh touches only its own splits). The gate output
@@ -803,14 +803,8 @@ object CorpusPipeline {
         col("n").as("n_pieces"))
     val dir = new java.io.File(s"target/parity/x4-packmap-$sfTag")
       .getAbsoluteFile.toString
-    // dynamic partition overwrite: only the split partitions THIS cut
-    // produces are replaced. Requested per write via the writer option
-    // (overrides the session conf) so no session-wide toggle can race a
-    // concurrent Overlap chain (the u8 lesson).
-    packMap.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("split")
-      .parquet(s"file:$dir")
+    // only the split partitions THIS cut produces are replaced
+    PartitionSwap.overwrite(packMap, s"file:$dir", Seq("split"))
     dir
   }
 

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * table that a duckdb oracle reproduces directly from the original parquet.
   * A lossless round-trip is exactly what hash-equality proves.
   *
-  * Scale note: the batch ingest uses ONE dynamic-partition-overwrite job for
+  * Scale note: the batch ingest uses ONE staged-partition-swap job for
   * all hours (Spark-first; per-hour jobs are the reference's BigQuery-ism).
   * It is shuffle-free: scan -> derive partition cols -> local sort
   * (clustering) -> fan-out write. The per-hour JobRunner path is exercised by

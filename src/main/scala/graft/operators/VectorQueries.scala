@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
 object VectorQueries {
 
   import RelationalQueries.table
-  import graft.sources.{SnapshotLog, StampedArtifact}
+  import graft.sources.{PartitionSwap, SnapshotLog, StampedArtifact}
 
   /** Sequential double fold of sum(f(x)) over an array column — mirrors
     * duckdb `list_aggregate(list_transform(...), 'sum')` exactly.
@@ -2454,12 +2454,13 @@ object VectorQueries {
 
   /** Remove `doomed` (a vec_id frame) from a persisted IVF index in place:
     * probe the affected bins with a column-pruned semi-join scan, then one
-    * dynamic partition overwrite rewrites exactly those bins anti-joined
-    * against the tombstones. Bins without a doomed vector keep their files
-    * physically intact (pinned in `PipelineQueriesSpec`). Returns the
-    * rewritten bin ids. `partCol` names the index's partition column —
-    * `centroid_id` for the flat e18/e20 layout, `pbin` for a split-
-    * maintained (e35/e36) layout; the same bounded-rewrite discipline
+    * staged swap ([[PartitionSwap]]) rewrites exactly those bins
+    * anti-joined against the tombstones, old-or-new per bin, and removes a
+    * bin whose vectors were all doomed. Bins without a doomed vector keep
+    * their files physically intact (pinned in `PipelineQueriesSpec`).
+    * Returns the rewritten bin ids. `partCol` names the index's partition
+    * column — `centroid_id` for the flat e18/e20 layout, `pbin` for a
+    * split-maintained (e35/e36) layout; the same bounded-rewrite discipline
     * holds either way, which is exactly what lets a takedown land in a
     * split CHILD without touching its calm siblings.
     */
@@ -2482,28 +2483,8 @@ object VectorQueries {
         .join(broadcast(doomed), Seq("vec_id"), "left_anti")
         .select(dataCols.map(col) :+
           col(partCol).cast("long").as(partCol): _*)
-      // survivor probe BEFORE the overwrite mutates the directories
-      val survivorBins = kept.select(col(partCol).cast("long"))
-        .distinct().collect().map(_.getLong(0)).toSet
-      // per-write dynamic overwrite (the writer option overrides the
-      // session conf) — concurrency-safe under Overlap, unlike the old
-      // session-wide set/restore (the u8 race)
-      kept.repartition(col(partCol))
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partCol)
-        .parquet(indexPath)
-      // a bin whose vectors were ALL doomed writes zero rows above, which
-      // leaves its old files in place (the u2 emptied-partition lesson) —
-      // drop such bins' directories explicitly, through the path's own
-      // Hadoop FS so non-local indexes behave identically
-      val emptiedBins = affected.filterNot(survivorBins)
-      if (emptiedBins.nonEmpty) {
-        import org.apache.hadoop.fs.Path
-        val root = new Path(indexPath)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        emptiedBins.foreach(b =>
-          fs.delete(new Path(root, s"$partCol=$b"), true))
-      }
+      PartitionSwap.overwrite(kept.repartition(col(partCol)), indexPath,
+        Seq(partCol), affected.map(b => s"$partCol=$b"))
     }
     affected
   }
@@ -2541,10 +2522,7 @@ object VectorQueries {
       .filter(col(partCol).cast("long").isin(frag: _*))
       .select(dataCols.map(col) :+
         col(partCol).cast("long").as(partCol): _*)
-    // per-write dynamic overwrite (concurrency-safe, see deleteFromIvfIndex)
-    kept.repartition(col(partCol))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCol).parquet(indexPath)
+    PartitionSwap.overwrite(kept.repartition(col(partCol)), indexPath, Seq(partCol))
     frag
   }
 
@@ -2598,12 +2576,12 @@ object VectorQueries {
     * delete, re-cluster — a full-partition monster). Physical layout:
     * partition column `pbin`, initially equal to the logical coarse bin
     * `centroid_id`; a split rewrites ONLY the overflowing partitions
-    * (dynamic partition overwrite — untouched bins keep file identity,
-    * spec-pinned) into analytically-counted balanced children along each
-    * bin's own mean direction (dot with the bin mean, vec_id tiebreak) —
-    * geometry-aware, so children stay locally coherent. The logical →
-    * physical map lands as a tiny parquet at `mapPath`; serving probes a
-    * logical bin and reads its physical children via the map. Query
+    * (one staged swap, old-or-new per bin — untouched bins keep file
+    * identity, spec-pinned) into analytically-counted balanced children
+    * along each bin's own mean direction (dot with the bin mean, vec_id
+    * tiebreak) — geometry-aware, so children stay locally coherent. The
+    * logical → physical map lands as a tiny parquet at `mapPath`; serving
+    * probes a logical bin and reads its physical children via the map. Query
     * results are INVARIANT by construction (children partition the
     * parent), which is exactly what the e35 oracle states.
     *
@@ -2637,21 +2615,11 @@ object VectorQueries {
         .select(col("vec_id"), col("embedding"),
           col("centroid_id").cast("long").as("centroid_id"),
           col("pbin").cast("long").as("pbin"))
-      // MATERIALIZE the reassignment before the destructive overwrite:
-      // `rewritten`'s lineage lazily reads the very partitions the write
-      // below replaces (read-modify-overwrite of one parquet dir in a
-      // single plan). The current writer materializes the whole task
-      // output before committing, but that is the writer's private
-      // behavior — a localCheckpoint pins the rows first so no future
-      // re-read of a source partition can race the destructive commit.
-      val rewritten = splitAssign(rows, over.map(b => b -> sizes(b)).toMap,
-        bound, logicalOf, splits)
-        .repartition(col("pbin")).localCheckpoint(true)
-      // per-write dynamic overwrite (concurrency-safe, see deleteFromIvfIndex)
-      rewritten
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("pbin").parquet(indexPath)
-      graft.operators.CorpusPipeline.freeCut(rewritten)
+      // the staged write reads every source row before any live bin moves
+      PartitionSwap.overwrite(
+        splitAssign(rows, over.map(b => b -> sizes(b)).toMap, bound,
+          logicalOf, splits).repartition(col("pbin")),
+        indexPath, Seq("pbin"))
     }
     writeBinMap(spark, mapPath, logicalOf.toMap)
     splits.toSeq
@@ -3603,7 +3571,7 @@ object VectorQueries {
     * inverted lists by rewriting ONLY the bins that contain a doomed
     * vector. The affected-bin probe reads just (vec_id, centroid_id) — a
     * column-pruned scan with the doomed set broadcast as a semi-join —
-    * then one dynamic partition overwrite rewrites those bins anti-joined
+    * then one staged partition swap rewrites those bins anti-joined
     * against the tombstones. Untouched bins keep their files. Serving is
     * e18's path unchanged; the oracle restates the search over the corpus
     * MINUS the doomed set (queries likewise), so the hash fails if a

@@ -70,12 +70,13 @@ object FileStatsManifest {
     * keep/drop set is computed as a distributed semi/anti join — manifest
     * rows never collect to the driver (a 10^8-file manifest is multi-GB);
     * only the NEW files' paths do, and those are O(files since last update)
-    * by construction. The new generation is staged beside the live manifest
-    * and swapped in by rename, because the merged frame lazily reads the
-    * old one. Cost is O(new files' bytes) + one manifest-sized join, never
-    * a full-tree rescan — after an hourly ingest at 100 TB the update reads
-    * one hour, not the table. Returns (filesScanned, filesTotal). Requires
-    * an existing manifest ([[write]] bootstraps).
+    * by construction. The new generation is staged and swapped in by
+    * [[PartitionSwap]]'s set-aside/rename/rollback, because the merged
+    * frame lazily reads the old one. Cost is O(new files' bytes) + one
+    * manifest-sized join, never a full-tree rescan — after an hourly
+    * ingest at 100 TB the update reads one hour, not the table. Returns
+    * (filesScanned, filesTotal). Requires an existing manifest ([[write]]
+    * bootstraps).
     */
   def update(spark: SparkSession, root: String, statCols: Seq[String]): (Int, Int) = {
     import org.apache.hadoop.fs.Path
@@ -104,21 +105,14 @@ object FileStatsManifest {
       if (newFiles.isEmpty) kept
       else kept.unionByName(
         collect(spark, root, statCols, newFiles).select(old.columns.map(col): _*))
-    // stage-then-swap: `merged` still lazily READS mDir, so write the new
-    // generation beside it (leading underscore keeps it invisible) and
-    // rename over the old one only after the write committed
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val liveP = new Path(s"${root.stripSuffix("/")}/$ManifestDirName")
-    val token = java.util.UUID.randomUUID().toString
-    val tmp = new Path(liveP.getParent, s"$ManifestDirName-staged-$token")
-    val trash = new Path(liveP.getParent, s"$ManifestDirName-trash-$token")
-    merged.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    require(fs.rename(liveP, trash), s"manifest swap: could not set aside $liveP")
-    if (!fs.rename(tmp, liveP)) {
-      fs.rename(trash, liveP) // restore; the update is lost, the table is not
-      throw new IllegalStateException(s"manifest swap: could not publish $tmp")
+    // stage-then-swap: `merged` still lazily READS mDir, so the new
+    // generation is written in full before the old one is set aside
+    val rootP = new Path(root)
+    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    PartitionSwap.swap(fs, rootP, ManifestDirName) { staging =>
+      merged.coalesce(1).write.mode("overwrite")
+        .parquet(new Path(staging, ManifestDirName).toString)
     }
-    fs.delete(trash, true)
     (newFiles.length, live.length)
   }
 

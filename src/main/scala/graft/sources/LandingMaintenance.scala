@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions.col
   *    partition; small files tax every downstream scan (task-per-file,
   *    footer overhead, no row-group locality). `compactPartition` rewrites
   *    one hour into `targetFiles` clustered files, idempotently, using the
-  *    same dynamic-overwrite path as the loads themselves.
+  *    same staged partition swap as the loads themselves.
   *  - **catalog registration**: expose the landing tree as a SQL table with
   *    recovered partitions so `spark.sql` queries prune on
   *    year/month/day/hour like any catalog table.
@@ -46,7 +46,7 @@ object LandingMaintenance {
     * than `maxFiles` data files, and compact the whole selected set in ONE
     * job: the read carries a partition-tuple predicate (directories prune
     * at planning), rows re-cluster to one task per hour (one output file
-    * per partition dir), and the dynamic overwrite replaces exactly the
+    * per partition dir), and the staged swap replaces exactly the
     * fragmented directories — every other partition keeps its files
     * physically untouched (pinned in `LandingMaintenanceSpec`).
     *

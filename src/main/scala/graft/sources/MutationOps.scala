@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.core.IngestConfig
+import graft.core.{IngestConfig, PartitionCodec, PartitionHour}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,15 +21,15 @@ import org.apache.spark.sql.functions._
   *    derived from the updates' own partition field (driver-side list,
   *    bounded by partitions-touched), the current-state scan carries a
   *    partition-column predicate that prunes directories before any file
-  *    opens, and the rewrite goes through the same dynamic-overwrite commit
-  *    as ingest — untouched partitions are physically untouched.
+  *    opens, and the rewrite goes through the same staged swap as ingest
+  *    ([[PartitionSwap]]) — old-or-new per partition, untouched partitions
+  *    physically untouched.
   *  - [[deleteByKey]] cannot know partitions a priori, so it runs a PROBE
   *    pass first: a column-pruned scan of (key, partition cols) — parquet
   *    reads just the key column, with the key set broadcast into the scan as
   *    a semi-join — then rewrites only partitions that actually contain a
-  *    doomed key. Partitions whose rows are all deleted are dropped
-  *    explicitly (a dynamic overwrite writing zero rows for a partition
-  *    would leave the old files in place).
+  *    doomed key. A partition whose rows are all deleted is named to the
+  *    swap, which removes it in the same commit.
   */
 object MutationOps {
 
@@ -72,8 +72,8 @@ object MutationOps {
       .filter(partitionPredicate(touched))
       .join(updates.select(keyCols.map(col): _*), keyCols, "left_anti")
       .select(dataCols.map(col): _*)
-    // merged frame holds exactly the touched partitions' rows => dynamic
-    // overwrite replaces exactly those directories, atomically per partition
+    // merged frame holds exactly the touched partitions' rows => the staged
+    // swap replaces exactly those directories, old-or-new per partition
     LandingTable.overwritePartitions(
       survivors.unionByName(updates.select(dataCols.map(col): _*)), cfg)
     touched
@@ -82,9 +82,9 @@ object MutationOps {
   /** Delete every row whose `keyCol` appears in `keys` (a one-column frame;
     * assumed small relative to the table — a takedown list). Two passes:
     * probe for affected partitions (column-pruned scan + broadcast semi
-    * join), then rewrite only those. Returns (touched, dropped) partition
-    * tuple lists, `dropped` ⊆ `touched` being partitions left empty and
-    * removed outright.
+    * join), then rewrite only those in one staged swap. Returns (touched,
+    * dropped) partition tuple lists, `dropped` ⊆ `touched` being partitions
+    * left empty and removed by that swap.
     */
   def deleteByKey(spark: SparkSession, cfg: IngestConfig, keys: DataFrame,
       keyCol: String): (Seq[Seq[Int]], Seq[Seq[Int]]) = {
@@ -98,24 +98,12 @@ object MutationOps {
       .filter(partitionPredicate(touched))
       .join(broadcast(keyList), Seq(keyCol), "left_anti")
       .select(cfg.schema.fieldNames.map(col): _*)
-
-    // partitions with at least one survivor get rewritten; fully-emptied
-    // ones must be dropped by path (zero rows written = old files kept)
-    val nonEmpty = touchedPartitions(
-      LandingTable.withPartitionColumns(kept, cfg.partitionField))
-    val emptied = touched.diff(nonEmpty)
-    if (nonEmpty.nonEmpty)
-      LandingTable.overwritePartitions(
-        kept.filter(partitionPredicate(nonEmpty)), cfg)
-    if (emptied.nonEmpty) {
-      import org.apache.hadoop.fs.Path
-      val root = new Path(cfg.landingPath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      emptied.foreach { case Seq(y, m, d, h) =>
-        fs.delete(new Path(root, f"year=$y%04d/month=$m%02d/day=$d%02d/hour=$h%02d"), true)
-      }
-    }
-    (touched, emptied)
+    val emptied = PartitionSwap.overwrite(LandingTable.clustered(kept, cfg),
+      cfg.landingPath, LandingTable.PartitionCols, touched.map {
+        case Seq(y, m, d, h) => PartitionCodec.toHivePath(PartitionHour(y, m, d, h))
+      })
+    (touched, emptied.map(PartitionCodec.fromHivePath)
+      .map(p => Seq(p.year, p.month, p.day, p.hour)))
   }
 
   /** CDC between two snapshots of a keyed table: classify every key as
@@ -257,8 +245,8 @@ object MutationOps {
     * touched-bucket list is derived from the batch's own keys (driver list,
     * ≤ nBuckets ints); the current-state read carries a bucket partition
     * predicate (directories pruned before any file opens); the merge is one
-    * union + per-key arg-max window over only those buckets' rows; the write
-    * is a dynamic partition overwrite of exactly those bucket directories.
+    * union + per-key arg-max window over only those buckets' rows; one
+    * staged swap replaces exactly those bucket directories, old-or-new each.
     * Untouched buckets keep their files physically intact (pinned in
     * `MutationOpsSpec`). Returns the touched bucket ids.
     */
@@ -299,23 +287,14 @@ object MutationOps {
       .unionByName(batch.select(dataCols.map(col): _*).withColumn("__graft_src", lit(1)))
       .withColumn("__graft_rn", row_number().over(w))
       .filter(col("__graft_rn") === 1).drop("__graft_rn", "__graft_src")
-    // dynamic partition overwrite requested PER WRITE (the writer option
-    // overrides the session conf) — a session-wide set/restore here raced
-    // against concurrent chains sharing the SparkSession (u8 under
-    // Overlap.par3: one chain's `finally` restored "static" mid-commit of
-    // another chain's overwrite, wiping its untouched buckets)
-    merged
-      .withColumn("bucket", pmod(hash(keys.map(col): _*), lit(nBuckets)))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(tablePath)
+    PartitionSwap.overwrite(bucketed(merged, keys, nBuckets), tablePath, Seq("bucket"))
     touched
   }
 
   /** Key takedown against a key-bucket-partitioned table (the
     * [[scd2WriteTable]]/[[upsertLatest]] layout): rows whose key is in
     * `doomed` are removed by rewriting ONLY the buckets those keys hash
-    * into; a bucket left empty has its directory dropped explicitly (the
+    * into; a bucket left empty is removed by the same staged swap (the
     * [[deleteByKey]] emptied-partition rule). Returns (touched, emptied)
     * bucket ids. Cost ∝ buckets touched, never table size.
     */
@@ -331,26 +310,17 @@ object MutationOps {
     val dataCols = scoped.columns.filterNot(_ == "bucket").toSeq
     val kept = scoped.join(broadcast(keys), Seq(keyCol), "left_anti")
       .select(dataCols.map(col): _*)
-    val survivorBuckets = kept
-      .select(pmod(hash(col(keyCol)), lit(nBuckets)).as("bucket"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    // per-write dynamic overwrite (concurrency-safe, see upsertLatest)
-    kept
-      .withColumn("bucket", pmod(hash(col(keyCol)), lit(nBuckets)))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(tablePath)
-    val emptied = touched.filterNot(survivorBuckets)
-    if (emptied.nonEmpty) {
-      // Hadoop FS like deleteByKey's emptied-partition drop, so bucket
-      // tables on non-local filesystems behave identically
-      import org.apache.hadoop.fs.Path
-      val root = new Path(tablePath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      emptied.foreach(b => fs.delete(new Path(root, s"bucket=$b"), true))
-    }
-    (touched, emptied)
+    val emptied = PartitionSwap.overwrite(bucketed(kept, Seq(keyCol), nBuckets),
+      tablePath, Seq("bucket"), touched.map(b => s"bucket=$b"))
+    (touched, emptied.map(_.stripPrefix("bucket=").toInt).sorted)
   }
+
+  /** `df` with its key-hash `bucket` column, one task per bucket ⇒ one file
+    * per bucket directory.
+    */
+  private def bucketed(df: DataFrame, keys: Seq[String], nBuckets: Int): DataFrame =
+    df.withColumn("bucket", pmod(hash(keys.map(col): _*), lit(nBuckets)))
+      .repartition(col("bucket"))
 
   /** Key-bucket-partitioned physical form of the SCD2 dimension, the layout
     * [[scd2MergeTable]] needs to make merges partition-scoped on disk: a
@@ -360,15 +330,14 @@ object MutationOps {
     */
   def scd2WriteTable(dim: DataFrame, dimPath: String, keys: Seq[String],
       nBuckets: Int): Unit =
-    dim.withColumn("bucket", pmod(hash(keys.map(col): _*), lit(nBuckets)))
-      .repartition(col("bucket"))
+    bucketed(dim, keys, nBuckets)
       .write.mode("overwrite").partitionBy("bucket").parquet(dimPath)
 
   /** [[scd2Merge]] against a [[scd2WriteTable]]-layout dimension on disk,
     * touching only the buckets the change batch's keys hash into: the read
     * carries a bucket-list partition predicate (directory-pruned before any
-    * file opens), and the write is a dynamic partition overwrite of exactly
-    * those bucket directories — untouched buckets keep their files
+    * file opens), and one staged swap replaces exactly those bucket
+    * directories, old-or-new each — untouched buckets keep their files
     * physically intact (the u1/u2 discipline, pinned in `MutationOpsSpec`).
     * Returns the touched bucket ids.
     */
@@ -383,12 +352,7 @@ object MutationOps {
       .filter(col("bucket").cast("int").isin(touched: _*))
       .drop("bucket")
     val merged = scd2Merge(affectedDim, changes, keys, attrs, tsCol, tiebreak)
-    // per-write dynamic overwrite (concurrency-safe, see upsertLatest)
-    merged
-      .withColumn("bucket", pmod(hash(keys.map(col): _*), lit(nBuckets)))
-      .repartition(col("bucket"))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(dimPath)
+    PartitionSwap.overwrite(bucketed(merged, keys, nBuckets), dimPath, Seq("bucket"))
     touched
   }
 }

@@ -20,7 +20,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    graft uses it);
   *  - the hourly partition becomes a 1-hour tumbling window;
   *  - the truncate-and-replace partition load becomes Append-mode windowed
-  *    aggregation + `foreachBatch` dynamic partition overwrite: a window is
+  *    aggregation + `foreachBatch` staged partition swap: a window is
   *    emitted exactly once, when the watermark passes hour-end + grace — i.e.
   *    each landing partition is written once, complete, like the reference's
   *    `WRITE_TRUNCATE` decorator load.

@@ -3,10 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Text gates over `src/main` for the session rules: a conf is set only on
-  * a child session a query owns, never on the caller's, and child sessions
-  * come from one builder. Comment lines are skipped, so the scaladoc may
-  * still name what the code must not do.
+/** Text gates over `src/main` for the session and commit rules: a conf is
+  * set only on a child session a query owns, never on the caller's, child
+  * sessions come from one builder, and partitions are replaced through one
+  * staged swap. Comment lines are skipped, so the scaladoc may still name
+  * what the code must not do.
   */
 class SourceGatesSpec extends AnyFunSuite {
 
@@ -66,6 +67,20 @@ class SourceGatesSpec extends AnyFunSuite {
       ("operators/RelationalQueries.scala", "q38BloomJoin")),
       sites.mkString("\n"))
     assert(sites.size == 2, sites.mkString("\n"))
+  }
+
+  test("partitions are replaced only through PartitionSwap") {
+    // no write requests Spark's dynamic overwrite, and no directory moves
+    // outside the two commit primitives: the staged partition swap and the
+    // snapshot log
+    val modes = codeLines.filter(_._3.contains("partitionOverwriteMode"))
+    assert(modes.isEmpty, modes.mkString("\n"))
+    val renames = codeLines.collect {
+      case (f, _, line) if Seq("operators/", "sources/").exists(f.startsWith) &&
+          line.contains(".rename(") => f
+    }.toSet
+    assert(renames == Set("sources/PartitionSwap.scala", "sources/SnapshotLog.scala"),
+      renames.mkString("\n"))
   }
 
   test("withStreamSession appears nowhere") {

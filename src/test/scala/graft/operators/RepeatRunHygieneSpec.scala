@@ -54,7 +54,7 @@ class RepeatRunHygieneSpec extends SparkSpec {
       // index/map/checkpoint state and replays the full maintained ingest
       // with the mid-stream swap; st28 wipes gen/result/checkpoint state
       // and replays the 4-batch ADC serving stream across the compressed
-      // swap; x4 re-lands its pack map via dynamic partition overwrite —
+      // swap; x4 re-lands its pack map via the staged partition swap —
       // a second run must replace each split's partition in place and
       // census identically
       "e38" -> (() => VectorQueries.e38RetrainSwapCompressed(spark, sfDir)),

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** x4 — the persisted pack map. The DuckDB oracle proves the censused
   * round-trip equals x3's in-flight arithmetic; these pin the ARTIFACT
-  * properties the census cannot see: re-run idempotency under dynamic
-  * partition overwrite (same rows, no accretion, no stale survivors), the
+  * properties the census cannot see: re-run idempotency under the staged
+  * partition swap (same rows, no accretion, no stale survivors), the
   * split-partitioned layout a trainer prunes on, and that the stored
   * columns alone fully determine every document's placement.
   */
@@ -29,9 +29,9 @@ class X4PackMapSpec extends SparkSpec {
     assert(splitDirs == Set("split=train", "split=valid", "split=test"),
       s"unexpected partition layout: $splitDirs")
 
-    // plant a bogus row in one split: a NON-dynamic overwrite would drop
-    // the whole table and a plain append would accrete — dynamic overwrite
-    // must REPLACE the produced splits, erasing the bogus row
+    // plant a bogus row in one split: a whole-table overwrite would drop
+    // the other splits and a plain append would accrete — the partition
+    // swap must REPLACE the produced splits, erasing the bogus row
     Seq(("train", -1L, -1L, -1L, -1L))
       .toDF("split", "doc_id", "seq_id", "start_pos", "n_pieces")
       .write.mode("append").partitionBy("split").parquet(s"file:$dir")

@@ -2,16 +2,18 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.core._
+import graft.operators.VectorQueries
 import org.apache.spark.sql.types._
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicBoolean
 
-/** Stage-and-swap commit (LandingTable.overwritePartitionsStaged): a reader
-  * racing repeated overwrites of one partition must never observe a TORN
-  * partition — every successful read returns exactly one generation's full
-  * content (count AND content-marker agree), never a mix of generations or
-  * a partial file set. Transient absence/read errors during the two-rename
-  * window are legitimate retryable outcomes and are ignored.
+/** Stage-and-swap commit ([[PartitionSwap]]): a reader racing repeated
+  * overwrites of one partition must never observe a TORN partition — every
+  * successful read returns exactly one generation's full content (count AND
+  * content-marker agree), never a mix of generations or a partial file set.
+  * Transient absence/read errors during the two-rename window are
+  * legitimate retryable outcomes and are ignored. Landing, a bucket upsert
+  * and an IVF bin split all go through the one swap.
   */
 class AtomicCommitSpec extends SparkSpec {
 
@@ -34,41 +36,30 @@ class AtomicCommitSpec extends SparkSpec {
     spark.createDataFrame(data, schema).repartition(4)
   }
 
-  test("concurrent reader never sees a torn partition during staged overwrite") {
-    val landing = Files.createTempDirectory("graft-atomic")
-    val cfg = IngestConfig(sourceBase = "unused", landingPath = s"file:$landing",
-      schema = schema, partitionField = "event_ts", clusterField = "device_id")
-
-    val gens = Seq("old" -> 40, "new" -> 25)
-    LandingTable.overwritePartitions(frame(gens(0)._1, gens(0)._2), cfg)
-
+  /** Runs `write(1)` … `write(rounds)` while a reader thread repeats
+    * `read` (row count, content markers). Every completed read must be one
+    * of `valid` or the clean transient absence.
+    */
+  private def assertNoTornReads(rounds: Int, valid: Set[(Long, Set[String])],
+      read: () => (Long, Set[String]))(write: Int => Unit): Unit = {
     val done = new AtomicBoolean(false)
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Set[String])]()
     val reader = new Thread(() => {
       while (!done.get()) {
-        try {
-          val rows = LandingTable.readPartition(spark, cfg, h)
-            .select("device_id").collect()
-          val markers = rows.map(_.getString(0).takeWhile(_ != '-')).toSet
-          seen.add((rows.length.toLong, markers))
-        } catch { case _: Throwable => () } // clean transient error: retryable
+        try seen.add(read())
+        catch { case _: Throwable => () } // clean transient error: retryable
       }
     })
     reader.start()
-    try {
-      (1 to 6).foreach { i =>
-        val (m, n) = gens(i % 2)
-        LandingTable.overwritePartitions(frame(m, n), cfg)
-      }
-    } finally {
+    try (1 to rounds).foreach(write)
+    finally {
       done.set(true)
       reader.join(30000)
     }
-
-    val valid = gens.map { case (m, n) => (n.toLong, Set(m)) }.toSet
     // a reader whose partition listing lands inside the two-rename window
-    // legitimately sees the hour absent => 0 rows; per the commit contract
-    // that is a retryable transient observation, like a read error — not torn
+    // legitimately sees the partition absent => 0 rows; per the commit
+    // contract that is a retryable transient observation, like a read
+    // error — not torn
     val transientAbsence = (0L, Set.empty[String])
     val observed = seen.toArray(Array.empty[(Long, Set[String])]).toSet
     assert(observed.nonEmpty, "reader never completed a read")
@@ -76,20 +67,79 @@ class AtomicCommitSpec extends SparkSpec {
     assert(torn.isEmpty, s"torn reads observed: $torn")
   }
 
-  test("staged and dynamic commits produce identical table content") {
-    val l1 = Files.createTempDirectory("graft-eq-staged")
-    val l2 = Files.createTempDirectory("graft-eq-dyn")
-    def cfgAt(p: java.nio.file.Path, atomic: Boolean) = IngestConfig(
-      sourceBase = "unused", landingPath = s"file:$p", schema = schema,
-      partitionField = "event_ts", clusterField = "device_id",
-      atomicCommit = atomic)
-    Seq("old" -> 12, "new" -> 9).foreach { case (m, n) =>
-      LandingTable.overwritePartitions(frame(m, n), cfgAt(l1, atomic = true))
-      LandingTable.overwritePartitions(frame(m, n), cfgAt(l2, atomic = false))
+  /** (row count, distinct values of `markerCol`) of a parquet read. */
+  private def countAndMarkers(path: String, markerCol: String) = {
+    val rows = spark.read.parquet(path).select(markerCol).collect()
+    (rows.length.toLong, rows.map(_.get(0).toString).toSet)
+  }
+
+  test("concurrent reader never sees a torn partition during staged overwrite") {
+    val landing = Files.createTempDirectory("graft-atomic")
+    val cfg = IngestConfig(sourceBase = "unused", landingPath = s"file:$landing",
+      schema = schema, partitionField = "event_ts", clusterField = "device_id")
+
+    val gens = Seq("old" -> 40, "new" -> 25)
+    LandingTable.overwritePartitions(frame(gens(0)._1, gens(0)._2), cfg)
+    assertNoTornReads(6, gens.map { case (m, n) => (n.toLong, Set(m)) }.toSet,
+      () => {
+        val rows = LandingTable.readPartition(spark, cfg, h)
+          .select("device_id").collect()
+        (rows.length.toLong, rows.map(_.getString(0).takeWhile(_ != '-')).toSet)
+      }) { i =>
+      val (m, n) = gens(i % 2)
+      LandingTable.overwritePartitions(frame(m, n), cfg)
     }
-    val a = LandingTable.read(spark, cfgAt(l1, atomic = true))
+  }
+
+  test("concurrent reader never sees a torn bucket during upsertLatest") {
+    import spark.implicits._
+    val dir = s"file:${Files.createTempDirectory("graft-atomic-upsert")}"
+    // one bucket, every key rewritten each round with that round's marker:
+    // a torn read shows two markers or a count other than 40
+    def batch(i: Int) = (0 until 40).map(k => (k.toLong, i.toLong, s"g$i"))
+      .toDF("user_id", "ts", "gen").repartition(4)
+    def upsert(i: Int) = MutationOps.upsertLatest(spark, dir, batch(i),
+      keys = Seq("user_id"), orderCols = Seq("ts"), nBuckets = 1)
+    upsert(0)
+    assertNoTornReads(6, (0 to 6).map(i => (40L, Set(s"g$i"))).toSet,
+      () => countAndMarkers(s"$dir/bucket=0", "gen"))(i => upsert(i))
+  }
+
+  test("concurrent reader never sees a torn bin during splitIvfBins") {
+    import spark.implicits._
+    val dir = s"file:${Files.createTempDirectory("graft-atomic-split")}"
+    // bin 0 holds 40 vectors in 4 files; a split at bound 20 leaves 20 in
+    // bin 0 and mints bin 1, and each round puts the 40 back through the
+    // swap (bin 1 named, so it is removed) — a reader of bin 0 sees 40 or
+    // 20, never a partial file set or both generations
+    val full = (0 until 40)
+      .map(v => (v.toLong, Seq(v.toFloat, 1f), 0L, 0L))
+      .toDF("vec_id", "embedding", "centroid_id", "pbin").repartition(4)
+    def restore() = PartitionSwap.overwrite(full, dir, Seq("pbin"), Seq("pbin=1"))
+    restore()
+    assertNoTornReads(3, Set((40L, Set("0")), (20L, Set("0"))),
+      () => countAndMarkers(s"$dir/pbin=0", "centroid_id")) { _ =>
+      assert(VectorQueries.splitIvfBins(spark, dir, s"$dir-map", 20L) == Seq((0L, 1L)))
+      restore()
+    }
+  }
+
+  test("staged and dynamic commits produce identical table content") {
+    // dynamic overwrite's content is the last generation's plain
+    // partitioned write into a fresh directory
+    val l1 = Files.createTempDirectory("graft-eq-staged")
+    val l2 = Files.createTempDirectory("graft-eq-plain")
+    def cfgAt(p: java.nio.file.Path) = IngestConfig(
+      sourceBase = "unused", landingPath = s"file:$p", schema = schema,
+      partitionField = "event_ts", clusterField = "device_id")
+    Seq("old" -> 12, "new" -> 9).foreach { case (m, n) =>
+      LandingTable.overwritePartitions(frame(m, n), cfgAt(l1))
+    }
+    LandingTable.withPartitionColumns(frame("new", 9), "event_ts")
+      .write.mode("overwrite").partitionBy(LandingTable.PartitionCols: _*).parquet(s"file:$l2")
+    val a = LandingTable.read(spark, cfgAt(l1))
       .select("device_id", "bytes", "year", "month", "day", "hour")
-    val b = LandingTable.read(spark, cfgAt(l2, atomic = false))
+    val b = LandingTable.read(spark, cfgAt(l2))
       .select("device_id", "bytes", "year", "month", "day", "hour")
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
     assert(a.count() == 9)
@@ -135,7 +185,7 @@ class AtomicCommitSpec extends SparkSpec {
     assert(fs.rename(live, new Path(trash, rel)))
     assert(!fs.exists(live))
 
-    assert(LandingTable.restoreFromTrash(fs, root, trash,
+    assert(PartitionSwap.restoreFromTrash(fs, root, trash,
       LandingTable.PartitionCols.map(c => s"$c=*").mkString("/")),
       "restore must report full success")
     assert(LandingTable.readPartition(spark, cfg, h).count() == 10,
@@ -152,9 +202,45 @@ class AtomicCommitSpec extends SparkSpec {
       sourceBase = "unused", landingPath = s"file:$landing/.trash-scratch",
       schema = schema, partitionField = "event_ts", clusterField = "device_id"))
     assert(fs.rename(new Path(s"$landing/.trash-scratch/$rel"), new Path(trash2, rel)))
-    assert(LandingTable.restoreFromTrash(fs, root, trash2,
+    assert(PartitionSwap.restoreFromTrash(fs, root, trash2,
       LandingTable.PartitionCols.map(c => s"$c=*").mkString("/")))
     assert(LandingTable.readPartition(spark, cfg, h).count() == 4,
       "superseded trash copy must not clobber committed content")
+
+    // an emptied partition rolls back too (one-level bucket= layout): the
+    // commit names bucket=0 (emptied) and bucket=1 (rewritten), and the
+    // staged rename fails after both live buckets went to trash
+    import spark.implicits._
+    val bRoot = new Path(s"file:${Files.createTempDirectory("graft-rollback-bucket")}")
+    Seq((1L, 0), (2L, 1)).toDF("k", "bucket")
+      .write.mode("overwrite").partitionBy("bucket").parquet(bRoot.toString)
+    def failingSwap(restoreBucket0: Boolean) = intercept[java.io.IOException] {
+      val failing = new org.apache.hadoop.fs.FilterFileSystem(fs) {
+        override def rename(src: Path, dst: Path): Boolean =
+          if (src.toString.contains("/.staging-")) false
+          else if (!restoreBucket0 && src.toString.contains("/.trash-") &&
+            src.getName == "bucket=0") false
+          else super.rename(src, dst)
+      }
+      PartitionSwap.swap(failing, bRoot, "bucket=*", Seq("bucket=0", "bucket=1")) {
+        staging => Seq(3L).toDF("k").write.parquet(new Path(staging, "bucket=1").toString)
+      }
+    }
+    def bucketRows() = spark.read.parquet(bRoot.toString)
+      .select($"k", $"bucket".cast("int")).as[(Long, Int)].collect().toSet
+    def residue() = fs.listStatus(bRoot).map(_.getPath.getName)
+      .filter(n => n.startsWith(".trash-") || n.startsWith(".staging-")).toSeq
+
+    failingSwap(restoreBucket0 = true)
+    assert(bucketRows() == Set((1L, 0), (2L, 1)),
+      "the emptied bucket must be back after the rollback")
+    assert(residue().isEmpty, "trash must go once every entry was restored")
+
+    failingSwap(restoreBucket0 = false)
+    assert(bucketRows() == Set((2L, 1)), "bucket=1 must still be restored")
+    val kept = residue()
+    assert(kept.size == 1 && kept.head.startsWith(".trash-") &&
+      fs.exists(new Path(new Path(bRoot, kept.head), "bucket=0")),
+      s"trash holding the unrestored bucket must be kept: $kept")
   }
 }

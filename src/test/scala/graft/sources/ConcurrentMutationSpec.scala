@@ -2,24 +2,25 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.core._
-import graft.operators.Overlap
+import graft.operators.{Overlap, VectorQueries}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.Files
 
 /** Regression guard for the u8 session-conf race (round 21): three mutation
-  * chains run concurrently on ONE SparkSession, each doing a partitioned
-  * `mode("overwrite")` write that needs DYNAMIC semantics. The old
-  * implementation toggled the session-wide
-  * `spark.sql.sources.partitionOverwriteMode` with a set/restore pattern;
-  * under Overlap one chain's `finally` restored "static" while another
-  * chain's write was committing, and that write silently wiped every
-  * partition it did not touch. The fix requests the mode per write via the
-  * writer option. This spec hammers the exact three store shapes u8 uses,
-  * many times, asserting no count drift and no lost partition — the race
-  * was intermittent, so one green run proves nothing; N concurrent rounds
-  * make a silent static-overwrite regression overwhelmingly likely to trip.
+  * chains run concurrently on ONE SparkSession, each replacing some
+  * partitions of a tree and leaving the rest. The old implementation
+  * toggled the session-wide `spark.sql.sources.partitionOverwriteMode` with
+  * a set/restore pattern; under Overlap one chain's `finally` restored
+  * "static" while another chain's write was committing, and that write
+  * silently wiped every partition it did not touch. Every such write now
+  * goes through the staged swap ([[PartitionSwap]]), which requests no
+  * overwrite mode at all. This spec hammers the exact three store shapes u8
+  * uses, many times, asserting no count drift and no lost partition — the
+  * race was intermittent, so one green run proves nothing; N concurrent
+  * rounds make a silent static-overwrite regression overwhelmingly likely
+  * to trip.
   *
   * Iteration count: default keeps `sbt test` fast; set
   * GRAFT_CONCURRENCY_ITERS=100 (env — sbt forks the test JVM, which
@@ -50,8 +51,7 @@ class ConcurrentMutationSpec extends SparkSpec {
     val indexDir = s"file:${Files.createTempDirectory("graft-conc-index")}"
     val cfg = IngestConfig(sourceBase = "unused",
       landingPath = s"file:$landingDir", schema = schema,
-      partitionField = "event_ts", clusterField = "device_id",
-      atomicCommit = false) // the dynamic-overwrite path under test
+      partitionField = "event_ts", clusterField = "device_id")
 
     (1 to iters).foreach { i =>
       // store 1: hour-partitioned landing — build (3 partitions), delete
@@ -76,20 +76,15 @@ class ConcurrentMutationSpec extends SparkSpec {
           Seq(4L).toDF("user_id"), "user_id", nBuckets = 4)
         (nb, spark.read.parquet(servingDir).count())
       }
-      // store 3: a partitioned index — full build (3 bins), then a dynamic
-      // overwrite that rewrites ONLY bin 0; bins 1 and 2 must survive
+      // store 3: a partitioned index — full build (3 bins), then a delete
+      // that rewrites ONLY bin 0; bins 1 and 2 must survive
       val chainIndex = () => {
         Seq((1L, 0L), (2L, 0L), (3L, 1L), (4L, 2L))
           .toDF("vec_id", "centroid_id")
           .write.mode("overwrite").partitionBy("centroid_id")
           .parquet(indexDir)
         val nb = spark.read.parquet(indexDir).count()
-        spark.read.option("basePath", indexDir).parquet(indexDir)
-          .filter(col("centroid_id").cast("long") === 0L)
-          .filter(col("vec_id") =!= 2L)
-          .select(col("vec_id"), col("centroid_id").cast("long").as("centroid_id"))
-          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("centroid_id").parquet(indexDir)
+        VectorQueries.deleteFromIvfIndex(spark, indexDir, Seq(2L).toDF("vec_id"))
         (nb, spark.read.parquet(indexDir).count())
       }
       val (l, s, x) = Overlap.par3(chainLanding, chainServing, chainIndex)
