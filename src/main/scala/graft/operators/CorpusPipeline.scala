@@ -1295,7 +1295,7 @@ object CorpusPipeline {
             touchedPb.map(b => s"/_pb=$b/"))
           val lshPrior =
             if (lshPriorFiles.isEmpty) entries.filter(lit(false))
-            else bs.read.parquet(lshPriorFiles: _*)
+            else SnapshotLog.readFiles(bs, lshPriorFiles)
               .select(col("doc_id"), col("band_idx"), col("bkey"),
                 col("pb").cast("int").as("pb"))
               .join(broadcast(entries.select("bkey").distinct()),
@@ -1327,7 +1327,7 @@ object CorpusPipeline {
         // touched sb dirs, and the row-level semi-join on the batch's
         // exact bin set restores bin-precision before the pair join.
         val secC = () => {
-          val bemb = bs.read.parquet(s"$sfDir/embeddings.parquet")
+          val bemb = table(bs, sfDir, "embeddings")
             .select(col("vec_id"), col("embedding"))
             .join(bsurv.select(col("doc_id").as("vec_id")),
               Seq("vec_id"), "left_semi")
@@ -1351,7 +1351,7 @@ object CorpusPipeline {
             touchedSb.map(b => s"/_sb=$b/"))
           val semPrior =
             if (semPriorFiles.isEmpty) asg.drop("sb").filter(lit(false))
-            else bs.read.parquet(semPriorFiles: _*)
+            else SnapshotLog.readFiles(bs, semPriorFiles)
               .select(col("vec_id"), col("bin").cast("int").as("bin"))
               .join(broadcast(asg.select("bin").distinct()),
                 Seq("bin"), "left_semi")
@@ -1457,7 +1457,7 @@ object CorpusPipeline {
               org.apache.spark.sql.types.LongType),
             org.apache.spark.sql.types.StructField("id_b",
               org.apache.spark.sql.types.LongType))))
-      else spark.read.parquet(pairManifest: _*)
+      else SnapshotLog.readFiles(spark, pairManifest)
 
     def bothIn(pairs: DataFrame, surv: DataFrame): DataFrame =
       pairs
@@ -1580,8 +1580,8 @@ object CorpusPipeline {
     // the same plan runs with the h-equi-join shuffled — cost ∝ census,
     // once, with no materialization; the broadcast is the gate-scale
     // fast path, not a correctness dependency.)
-    val gramsRaw = spark.read
-      .parquet(SnapshotLog.manifest(spark, cfg.gramsPath, vGrams): _*)
+    val gramsRaw = SnapshotLog
+      .readFiles(spark, SnapshotLog.manifest(spark, cfg.gramsPath, vGrams))
       .select(col("doc_id"), col("h"))
     val surv3Ids = surv3.select("doc_id")
     val evalH = gramsRaw.filter(pmod(col("doc_id"), lit(40L)) === 0)

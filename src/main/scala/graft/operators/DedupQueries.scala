@@ -778,7 +778,7 @@ object DedupQueries {
           .partition(f => touchedSeg.exists(f.contains))
         val prior =
           if (touchedFiles.isEmpty) asgB.filter(lit(false))
-          else bs.read.parquet(touchedFiles: _*)
+          else graft.sources.SnapshotLog.readFiles(bs, touchedFiles)
             .select(col("vec_id"), col("embedding"),
               col("bin").cast("int").as("bin"), col("nrm"), col("kept"),
               lit(0).as("src"))

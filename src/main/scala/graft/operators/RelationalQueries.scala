@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sources.ParquetFooterSchema
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,9 +24,11 @@ import org.apache.spark.sql.functions._
   */
 object RelationalQueries {
 
+  /** A source table, typed from its footer on the driver
+    * ([[graft.sources.ParquetFooterSchema]]): no Spark job runs here. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     if (name == "events") eventsTable(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    else ParquetFooterSchema.read(spark, s"$sfDir/$name.parquet")
 
   /** Cheap fingerprint of a source parquet (file OR directory dataset), for
     * memo-marker stamps: the driver regenerates `/root/testdata` between
@@ -103,7 +106,7 @@ object RelationalQueries {
     * so both oracle paths (duckdb truncates ns->µs too) agree.
     */
   def eventsTable(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = ParquetFooterSchema.read(spark, s"$sfDir/events.parquet")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

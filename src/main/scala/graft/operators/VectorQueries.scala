@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
 object VectorQueries {
 
   import RelationalQueries.table
-  import graft.sources.{PartitionSwap, SnapshotLog, StampedArtifact}
+  import graft.sources.{ParquetFooterSchema, PartitionSwap, SnapshotLog, StampedArtifact}
 
   /** Sequential double fold of sum(f(x)) over an array column — mirrors
     * duckdb `list_aggregate(list_transform(...), 'sum')` exactly.
@@ -1541,9 +1541,9 @@ object VectorQueries {
     // [[RawIndexRowSchema]] — the writer and this fallback cannot drift)
     val dataMf = SnapshotLog.dataFiles(mf)
     val idxRaw =
-      if (idxFiles.nonEmpty) spark.read.parquet(idxFiles: _*)
+      if (idxFiles.nonEmpty) SnapshotLog.readFiles(spark, idxFiles)
       else if (dataMf.nonEmpty)
-        spark.read.parquet(dataMf: _*).filter(lit(false))
+        SnapshotLog.readFiles(spark, dataMf).filter(lit(false))
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         RawIndexRowSchema)
@@ -1712,7 +1712,7 @@ object VectorQueries {
         col("centroid_id"))
     val probed = queries.select(col("centroid_id").cast("long").as("b"))
       .distinct().collect().map(_.getLong(0)).toSet
-    val pbins = spark.read.parquet(mapPath)
+    val pbins = ParquetFooterSchema.read(spark, mapPath)
       .filter(col("bin").isin(probed.toSeq: _*))
       .select(col("pbin")).collect().map(_.getLong(0)).toSeq.sorted
     val (vIdx, nBatches) = MicroBatchJob.batchLog(spark, s"file:$indexDir")
@@ -1778,8 +1778,8 @@ object VectorQueries {
         // every append honors them, so erasure holds against later
         // arrivals of the same ids
         val tombs = SnapshotLog.latestVersion(bs, s"file:$tombDir")
-          .map(v => bs.read.parquet(
-            SnapshotLog.manifest(bs, s"file:$tombDir", v): _*))
+          .map(v => SnapshotLog.readFiles(bs,
+            SnapshotLog.manifest(bs, s"file:$tombDir", v)))
           .getOrElse(bs.range(0).select(col("id").as("vec_id")))
         val delta = assignToCodebook(
             batch.join(broadcast(tombs), Seq("vec_id"), "left_anti"), cb)
@@ -1811,7 +1811,7 @@ object VectorQueries {
         col("centroid_id"))
     val probed = queries.select(col("centroid_id").cast("long").as("b"))
       .distinct().collect().map(_.getLong(0)).toSet
-    val pbins = spark.read.parquet(mapPath)
+    val pbins = ParquetFooterSchema.read(spark, mapPath)
       .filter(col("bin").isin(probed.toSeq: _*))
       .select(col("pbin")).collect().map(_.getLong(0)).toSeq.sorted
     val (vIdx, nBatches) = MicroBatchJob.batchLog(spark, s"file:$indexDir")
@@ -2070,8 +2070,8 @@ object VectorQueries {
     // empty probed-bin match → empty result, not a zero-path read error
     // (st17's guard; schema from the full manifest, filtered false)
     val idxRaw =
-      if (idxFiles.isEmpty) spark.read.parquet(mf: _*).filter(lit(false))
-      else spark.read.parquet(idxFiles: _*)
+      if (idxFiles.isEmpty) SnapshotLog.readFiles(spark, mf).filter(lit(false))
+      else SnapshotLog.readFiles(spark, idxFiles)
     val idx = idxRaw
       .select(col("vec_id").as("neighbor_id"), col("m"), col("code"),
         col("bin").cast("long").as("bin"))
@@ -2713,7 +2713,7 @@ object VectorQueries {
     // ONE bounded aggregation yields both the logical map (each physical
     // bin holds a single logical bin — appends target logical ids, splits
     // inherit the parent's) and the per-bin sizes
-    val agg = spark.read.parquet(mf: _*)
+    val agg = SnapshotLog.readFiles(spark, mf)
       .groupBy(col("pbin").cast("long").as("pbin"),
         col("centroid_id").cast("long").as("l")).count()
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -2727,7 +2727,7 @@ object VectorQueries {
       if (over.nonEmpty) {
         val parentFiles = mf.filter(f =>
           over.exists(b => f.contains(s"/_pbin=$b/")))
-        val rows = spark.read.parquet(parentFiles: _*)
+        val rows = SnapshotLog.readFiles(spark, parentFiles)
           .select(col("vec_id"), col("embedding"),
             col("centroid_id").cast("long").as("centroid_id"),
             col("pbin").cast("long").as("pbin"))
@@ -2763,7 +2763,7 @@ object VectorQueries {
     if (!replayed) {
       val mfAll = SnapshotLog.manifest(spark, tablePath, v)
       val mf = SnapshotLog.dataFiles(mfAll) // sidecars carried, never scanned
-      val scanned = spark.read.parquet(mf: _*)
+      val scanned = SnapshotLog.readFiles(spark, mf)
       affected = scanned
         .join(broadcast(doomed), Seq("vec_id"), "left_semi")
         .select(col("pbin").cast("long").as("b"))
@@ -2773,7 +2773,7 @@ object VectorQueries {
           affected.exists(b => f.contains(s"/_pbin=$b/")))
         // schema-derived projection (the deleteFromIvfIndex rule):
         // metadata columns in the lists must survive the rewrite
-        val touched = spark.read.parquet(parentFiles: _*)
+        val touched = SnapshotLog.readFiles(spark, parentFiles)
         val dataCols = touched.columns.filterNot(_ == "pbin").toSeq
         val kept = touched
           .join(broadcast(doomed), Seq("vec_id"), "left_anti")
@@ -2791,7 +2791,7 @@ object VectorQueries {
     val mfNow = SnapshotLog.dataFiles(
       SnapshotLog.manifest(spark, tablePath, vNow))
     if (mfNow.nonEmpty) {
-      val live = spark.read.parquet(mfNow: _*)
+      val live = SnapshotLog.readFiles(spark, mfNow)
         .select(col("pbin").cast("long").as("pbin"),
           col("centroid_id").cast("long").as("l"))
         .distinct().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -2844,7 +2844,7 @@ object VectorQueries {
     val probed = queries.select(col("centroid_id").cast("long").as("b"))
       .distinct().collect().map(_.getLong(0)).toSeq.sorted
     // logical → physical through the persisted map (bounded rows)
-    val pbins = spark.read.parquet(mapPath)
+    val pbins = ParquetFooterSchema.read(spark, mapPath)
       .filter(col("bin").isin(probed: _*))
       .select(col("pbin")).collect().map(_.getLong(0)).toSeq.sorted
     val idx = spark.read.option("basePath", s"file:$dir").parquet(s"file:$dir")
@@ -2953,7 +2953,7 @@ object VectorQueries {
         col("centroid_id"))
     val probed = queries.select(col("centroid_id").cast("long").as("b"))
       .distinct().collect().map(_.getLong(0)).toSeq.sorted
-    val pbins = spark.read.parquet(mapPath)
+    val pbins = ParquetFooterSchema.read(spark, mapPath)
       .filter(col("bin").isin(probed: _*))
       .select(col("pbin")).collect().map(_.getLong(0)).toSeq.sorted
     val idx = spark.read.option("basePath", s"file:$dir").parquet(s"file:$dir")
@@ -3312,7 +3312,7 @@ object VectorQueries {
         col("centroid_id"))
     val probed = queries.select(col("centroid_id").cast("long").as("b"))
       .distinct().collect().map(_.getLong(0)).toSet
-    val pbins = spark.read.parquet(mapPath)
+    val pbins = ParquetFooterSchema.read(spark, mapPath)
       .filter(col("bin").isin(probed.toSeq: _*))
       .select(col("pbin")).collect().map(_.getLong(0)).toSeq.sorted
     val mf = SnapshotLog.manifest(spark, tbl, vIdx)
@@ -3544,9 +3544,9 @@ object VectorQueries {
     // [[PqIndexRowSchema]] — the writer and this fallback cannot drift)
     val dataMf = SnapshotLog.dataFiles(mf)
     val idxRaw =
-      if (idxFiles.nonEmpty) spark.read.parquet(idxFiles: _*)
+      if (idxFiles.nonEmpty) SnapshotLog.readFiles(spark, idxFiles)
       else if (dataMf.nonEmpty)
-        spark.read.parquet(dataMf: _*).filter(lit(false))
+        SnapshotLog.readFiles(spark, dataMf).filter(lit(false))
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         PqIndexRowSchema)

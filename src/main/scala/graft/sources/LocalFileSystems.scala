@@ -1,11 +1,12 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsServerDefaults,
-  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
+import java.io.File
 import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermissions
@@ -30,6 +31,11 @@ object LocalFileSystems {
   * instead of a forked `chmod` process. NIO cannot express the sticky bit,
   * and a store without POSIX attributes cannot take the call at all; both
   * keep Hadoop's own path.
+  *
+  * `getFileLinkStatus` reads the link in-process too. Hadoop's version
+  * forks `readlink` (`FileUtil.readLink`) on every call, and `FileContext`
+  * calls it four times per checksummed rename: every streaming checkpoint
+  * file and state-store delta commit.
   */
 class GraftRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit =
@@ -39,6 +45,18 @@ class GraftRawLocalFileSystem extends RawLocalFileSystem {
       Files.setPosixFilePermissions(pathToFile(p).toPath,
         PosixFilePermissions.fromString(permission.toString))
     } catch { case _: UnsupportedOperationException => super.setPermission(p, permission) }
+
+  /** `FileUtil.readLink`'s answer without its fork: the link target read
+    * from the same `new File(f.toString)` (so a `file:`-qualified path is
+    * never a link, as for the forked `readlink`), `""` on any error. A
+    * non-link is its `getFileStatus`, exactly what Hadoop returns; a real
+    * link keeps Hadoop's own path. */
+  override def getFileLinkStatus(f: Path): FileStatus = {
+    val target =
+      try Files.readSymbolicLink(new File(f.toString).toPath).toString
+      catch { case _: Exception => "" }
+    if (target.isEmpty) getFileStatus(f) else super.getFileLinkStatus(f)
+  }
 }
 
 /** `fs.file.impl`: the stock checksummed `LocalFileSystem` over the

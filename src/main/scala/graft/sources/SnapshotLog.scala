@@ -342,8 +342,15 @@ object SnapshotLog {
     * with [[readSidecar]].
     */
   def read(spark: SparkSession, tablePath: String, version: Int): DataFrame =
-    spark.read.parquet(
-      manifest(spark, tablePath, version).filterNot(isSidecar): _*)
+    readFiles(spark, manifest(spark, tablePath, version).filterNot(isSidecar))
+
+  /** `spark.read.parquet(files: _*)` over a manifest's file list, typed
+    * from one footer on the driver ([[ParquetFooterSchema]]) instead of an
+    * inference job. An empty list keeps Spark's own zero-path error.
+    */
+  def readFiles(spark: SparkSession, files: Seq[String]): DataFrame =
+    if (files.isEmpty) spark.read.parquet()
+    else spark.read.schema(ParquetFooterSchema.of(spark, files)).parquet(files: _*)
 
   /** Read one named sidecar of `version` — the typed artifact committed
     * atomically with the data (see [[SidecarSeg]]). A version that never
@@ -358,7 +365,7 @@ object SnapshotLog {
       .filter(_.contains(s"$SidecarSeg$name/"))
     require(files.nonEmpty,
       s"version $version of $tablePath carries no sidecar '$name'")
-    spark.read.parquet(files: _*)
+    readFiles(spark, files)
   }
 
   /** Distinct commit keys recorded across ALL live version manifests (own
@@ -419,7 +426,7 @@ object SnapshotLog {
     val grouped = mf.groupBy(seg)
     val (rewrite, carry) = grouped.partition(_._2.size > maxFilesPerPartition)
     if (rewrite.isEmpty) return None
-    val rows = spark.read.parquet(rewrite.values.flatten.toSeq: _*)
+    val rows = readFiles(spark, rewrite.values.flatten.toSeq)
     // one output file per group: hash-repartition on the partition key
     // puts each value's rows in one task (collisions only co-locate
     // values, never split one); unpartitioned tables coalesce to one file

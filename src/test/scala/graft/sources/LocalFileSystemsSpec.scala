@@ -2,13 +2,15 @@ package graft.sources
 
 import graft.SparkSpec
 import graft.core._
-import graft.operators.JobRunner
+import graft.operators.{JobRunner, MicroBatchJob}
 import graft.streaming.StreamingIngest
-import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileContext, FileSystem, LocalFileSystem, Path => HPath,
+  RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalFs
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.types._
 
+import java.io.FileNotFoundException
 import java.net.URI
 import java.nio.file.{Files, Path, Paths}
 import java.nio.file.attribute.PosixFilePermissions
@@ -116,6 +118,43 @@ class LocalFileSystemsSpec extends SparkSpec {
     assert(graftSink == stockSink)
     assert(graftCkpt.exists { case (p, _) => p == "offsets/.0.crc" }, graftCkpt)
     assert(graftCkpt.exists { case (p, _) => p == "commits/.0.crc" }, graftCkpt)
+  }
+
+  test("a stateful stream at 8 partitions leaves the checkpoint and state tree the stock file system leaves") {
+    def statsOnce(cfg: IngestConfig): Seq[(String, String)] = {
+      val ckpt = Files.createTempDirectory("graft-lfs-stats").resolve("c")
+      val stats = Files.createTempDirectory("graft-lfs-stats-out").resolve("s")
+      val q = StreamingIngest.hourlyStats(MicroBatchJob.streamSession(spark, 8), cfg,
+        s"file:$stats", s"file:$ckpt")
+      assert(q.awaitTermination(60000))
+      shape(ckpt)
+    }
+    val graftCkpt = statsOnce(fixture())
+    val stockCkpt = withStockLocalFs(statsOnce(fixture()))
+    assert(graftCkpt == stockCkpt)
+    // one state store per shuffle partition, each with its checksummed delta
+    assert((0 until 8).forall(p => graftCkpt.exists(_._1 == s"state/0/$p/.1.delta.crc")), graftCkpt)
+  }
+
+  test("getFileLinkStatus equals the stock RawLocalFileSystem's, file:-qualified and bare") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val graft = new GraftRawLocalFileSystem
+    val stock = new RawLocalFileSystem
+    Seq(graft, stock).foreach(_.initialize(new URI("file:///"), conf))
+    val dir = Files.createTempDirectory("graft-lfs-link")
+    val file = Files.write(dir.resolve("f.txt"), "x".getBytes("UTF-8"))
+    val link = Files.createSymbolicLink(dir.resolve("link"), file)
+    val dangling = Files.createSymbolicLink(dir.resolve("dangling"), dir.resolve("gone"))
+    def status(fs: RawLocalFileSystem, p: HPath): Either[String, String] =
+      try Right(fs.getFileLinkStatus(p).toString)
+      catch { case e: FileNotFoundException => Left(e.getClass.getName) }
+    for (p <- Seq(file, dir, dir.resolve("missing"), link, dangling);
+         hp <- Seq(new HPath(p.toUri), new HPath(p.toString))) {
+      assert(status(graft, hp) == status(stock, hp), hp)
+    }
+    // a bare link path is a link to both; its file:-qualified form is the target
+    assert(graft.getFileLinkStatus(new HPath(link.toString)).isSymlink)
+    assert(!graft.getFileLinkStatus(new HPath(link.toUri)).isSymlink)
   }
 
   test("setPermission sets every mode in-process and still takes the sticky bit") {
