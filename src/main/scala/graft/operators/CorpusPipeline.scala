@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.{cclass, h60}
-import graft.sources.{PartitionSwap, SnapshotLog, StampedArtifact}
+import graft.sources.{ParquetFooterSchema, PartitionSwap, SnapshotLog, StampedArtifact}
 import RelationalQueries.table
 
 /** x1: the END-TO-END training-corpus build — every stage of the pipeline
@@ -336,7 +336,7 @@ object CorpusPipeline {
 
   def x1CorpusPipeline(spark: SparkSession, sfDir: String,
       requireFlatOracle: Boolean = false): DataFrame = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sfTag = ScratchDirs.tag(sfDir)
     val cuts = scala.collection.mutable.Buffer.empty[DataFrame]
     val census = x1Census(spark, sfDir, requireFlatOracle, cuts)
 
@@ -348,8 +348,7 @@ object CorpusPipeline {
     // FileSystem of its scheme (HashCensus.drop's rule), never
     // java.io.File — the same code must work against a non-file:
     // warehouse (MockFsSpec drives that).
-    val snapDir = new java.io.File(s"target/parity/x1-snap-$sfTag")
-      .getAbsoluteFile
+    val snapDir = ScratchDirs.parity(s"x1-snap-$sfTag")
     val out = freshCommitAndRead(spark, s"file:$snapDir", census)
     // the commit materialized the census; the checkpointed stage frames
     // are dead scratch from here — free their blocks eagerly (see freeCut)
@@ -424,14 +423,13 @@ object CorpusPipeline {
       requireFlatOracle: Boolean = false,
       cuts: scala.collection.mutable.Buffer[DataFrame] =
         scala.collection.mutable.Buffer.empty): DataFrame = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sfTag = ScratchDirs.tag(sfDir)
 
     // ---- Stage S (S1/S2): hive ingest — land the corpus partitioned by
     // lang (the corpus analogue of the reference's hour partitions), read
     // it back through partition discovery. Downstream consumes the LANDED
     // table, so any ingest loss/corruption surfaces in the final census.
-    val landing = new java.io.File(s"target/parity/x1-landing-$sfTag")
-      .getAbsoluteFile.toString
+    val landing = ScratchDirs.parity(s"x1-landing-$sfTag")
     table(spark, sfDir, "documents")
       // range-partition (lang, doc_id): rows co-locate by lang FIRST, so
       // partition dirs get contiguous writers, but the corpus still spreads
@@ -444,7 +442,7 @@ object CorpusPipeline {
       .repartitionByRange(32, col("lang"), col("doc_id"))
       .write.mode("overwrite").partitionBy("lang")
       .parquet(s"file:$landing")
-    val docs = spark.read.parquet(s"file:$landing")
+    val docs = ParquetFooterSchema.read(spark, s"file:$landing")
 
     // ---- Stages R+F (d24, d27+d14): PII redaction fused with the learned
     // quality score and chargram junk gate over the REDACTED text — see
@@ -795,14 +793,13 @@ object CorpusPipeline {
   private[operators] def x4WritePackMap(spark: SparkSession, sfDir: String,
       requireFlatOracle: Boolean = false, budget: Int = 10): String = {
     val L = X3SeqLen
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sfTag = ScratchDirs.tag(sfDir)
     val packMap = x3Placed(spark, sfDir, requireFlatOracle, budget)
       .select(col("split"), col("doc_id"),
         col("start_seq").as("seq_id"),
         expr(s"(cum - n) % $L").as("start_pos"),
         col("n").as("n_pieces"))
-    val dir = new java.io.File(s"target/parity/x4-packmap-$sfTag")
-      .getAbsoluteFile.toString
+    val dir = ScratchDirs.parity(s"x4-packmap-$sfTag")
     // only the split partitions THIS cut produces are replaced
     PartitionSwap.overwrite(packMap, s"file:$dir", Seq("split"))
     dir
@@ -815,7 +812,7 @@ object CorpusPipeline {
   private[operators] def x4ReadPackMap(spark: SparkSession,
       dir: String): DataFrame = {
     val L = X3SeqLen
-    spark.read.parquet(s"file:$dir")
+    ParquetFooterSchema.read(spark, s"file:$dir")
       .withColumn("n", col("n_pieces"))
       .withColumn("cum",
         col("seq_id") * L + col("start_pos") + col("n_pieces"))
@@ -970,13 +967,12 @@ object CorpusPipeline {
     */
   private[graft] def st19FrozenFixtures(spark: SparkSession,
       sfDir: String): (String, String, Boolean) = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sfTag = ScratchDirs.tag(sfDir)
 
     // ---- stream fixture: the corpus 4-way range-split by doc_id (st17/
     // st18's arrival shape — each file is one "hourly" delivery),
     // stamp-guarded so regeneration only happens when the source changed
-    val splitDir = new java.io.File(s"target/parity/x1s-split-$sfTag")
-      .getAbsoluteFile.toString
+    val splitDir = ScratchDirs.parity(s"x1s-split-$sfTag")
     val stamp = s"$sfDir|${RelationalQueries.sourceStamp(sfDir, "documents")}"
     val splitValid = docArrivals(spark, sfDir, 4, splitDir, stamp)
 
@@ -984,8 +980,7 @@ object CorpusPipeline {
     // survivors (exactly x1's stage-F frame — same rows, same aggregates,
     // same model) and persisted as tables; each batch broadcast-joins
     // against them. Stamp-guarded like every trained artifact.
-    val modelDir = new java.io.File(s"target/parity/x1s-model-$sfTag")
-      .getAbsoluteFile.toString
+    val modelDir = ScratchDirs.parity(s"x1s-model-$sfTag")
     // v2: the marker guards the state-sizing stats file too
     // v3: + the frozen stop-shingle set
     // v4: stop df trained on DISTINCT texts (one vote per text)
@@ -1056,7 +1051,7 @@ object CorpusPipeline {
     */
   private[operators] def st19Config(spark: SparkSession, sfDir: String,
       requireFlatOracle: Boolean = false, stateTag: String = ""): St19Config = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_") + stateTag
+    val sfTag = ScratchDirs.tag(sfDir) + stateTag
     val (splitDir, modelDir, _) = st19FrozenFixtures(spark, sfDir)
     // frozen state-bucket counts, scaled to expected state size (the semK
     // discipline — see stateBuckets): LSH state holds 4 band entries per
@@ -1069,8 +1064,8 @@ object CorpusPipeline {
     // rows) — overlap as concurrent driver jobs; all are read-only over
     // warm fixtures, and only one thread touches the codebook memo.
     val (vocabV, stopSh, (bookRows, kSide)) = Overlap.par3(
-      () => spark.read.parquet(s"file:$modelDir/uni").count(),
-      () => spark.read.parquet(s"file:$modelDir/stop")
+      () => ParquetFooterSchema.read(spark, s"file:$modelDir/uni").count(),
+      () => ParquetFooterSchema.read(spark, s"file:$modelDir/stop")
         .collect().map(_.getString(0)).toSeq.sorted,
       () => {
         val emb = table(spark, sfDir, "embeddings")
@@ -1084,10 +1079,8 @@ object CorpusPipeline {
           .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq), kSide)
       })
     St19Config(sfDir, splitDir, modelDir, vocabV, stopSh, bookRows, kSide,
-      new java.io.File(s"target/parity/x1s-state-$sfTag")
-        .getAbsoluteFile.toString,
-      new java.io.File(s"target/parity/x1s-ckpt-$sfTag")
-        .getAbsoluteFile.toString,
+      ScratchDirs.parity(s"x1s-state-$sfTag"),
+      ScratchDirs.parity(s"x1s-ckpt-$sfTag"),
       stateBuckets(nQual * 4), stateBuckets(nGrams), stateBuckets(nQual))
   }
 
@@ -1225,8 +1218,8 @@ object CorpusPipeline {
         val bq = scrubbedQualityDocs(
           batch.select(col("doc_id"), col("text"), col("source"))
             .repartition(shufN))
-        val uniM = bs.read.parquet(s"file:$modelDir/uni")
-        val bigM = bs.read.parquet(s"file:$modelDir/big")
+        val uniM = ParquetFooterSchema.read(bs, s"file:$modelDir/uni")
+        val bigM = ParquetFooterSchema.read(bs, s"file:$modelDir/big")
         val vocabM = bs.range(1).select(lit(vocabV).as("v"))
         val disfl = disfluentIds(bigramPairs(bq), uniM, bigM, vocabM)
         val bsurv = bq.join(disfl, Seq("doc_id"), "left_anti")
@@ -1701,9 +1694,8 @@ object CorpusPipeline {
   private def st19FlatStream(spark: SparkSession, sfDir: String,
       nBatches: Int): St19Config = {
     val cfg = st19Config(spark, sfDir, stateTag = s"-flat$nBatches")
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val dir = new java.io.File(s"target/parity/x1s-split$nBatches-$sfTag")
-      .getAbsoluteFile.toString
+    val sfTag = ScratchDirs.tag(sfDir)
+    val dir = ScratchDirs.parity(s"x1s-split$nBatches-$sfTag")
     docArrivals(spark, sfDir, nBatches, dir,
       s"$sfDir|$nBatches|${RelationalQueries.sourceStamp(sfDir, "documents")}")
     MicroBatchJob.wipe(spark, s"file:${cfg.stateRoot}", s"file:${cfg.ckptDir}")

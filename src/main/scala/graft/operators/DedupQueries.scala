@@ -722,15 +722,13 @@ object DedupQueries {
   def st18StreamingSemanticDedup(spark: SparkSession, sfDir: String,
       threshold: Double = 0.25, iters: Int = 2,
       requireFlatOracle: Boolean = false): DataFrame = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sfTag = ScratchDirs.tag(sfDir)
     val emb = table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     // the same 4-file range-split fixture st17 streams (shared memo)
     val (splitDir, nVecs) = VectorQueries.embSplitFixture(emb, sfDir)
-    val stateDir = new java.io.File(s"target/parity/semdedup-state-$sfTag")
-      .getAbsoluteFile.toString
-    val ckptDir = new java.io.File(s"target/parity/semdedup-ckpt-$sfTag")
-      .getAbsoluteFile.toString
+    val stateDir = ScratchDirs.parity(s"semdedup-state-$sfTag")
+    val ckptDir = ScratchDirs.parity(s"semdedup-ckpt-$sfTag")
     MicroBatchJob.wipe(spark, s"file:$stateDir", s"file:$ckptDir")
 
     // trained binning codebooks (flat at gate scale, IMI beyond — the same

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core._
-import graft.sources.{HivePartitionedSource, LandingTable, MutationOps, SnapshotLog, StampedArtifact}
+import graft.sources.{HivePartitionedSource, LandingTable, MutationOps, ParquetFooterSchema, SnapshotLog, StampedArtifact}
 import graft.streaming.{RunningTotals, Sessionize, StreamingIngest}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -50,14 +50,14 @@ object IngestParityQueries {
     * filesystem as the repo, never cleaned by external tmp reapers — a /tmp
     * export tree disappearing mid-bench is a failure mode we have hit).
     * Dirs are keyed by (sfDir, scope) and rewritten with mode=overwrite, so
-    * re-runs converge instead of littering.
+    * re-runs converge instead of littering. Returns the created
+    * `target/parity/<kind>-<first|full>-<sf tag>`.
     */
-  private def parityDir(kind: String, sfDir: String, firstHourOnly: Boolean): String = {
-    val sf = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+  private def scopedDir(kind: String, sfDir: String, firstHourOnly: Boolean): String = {
     val scope = if (firstHourOnly) "first" else "full"
-    val d = new java.io.File(s"target/parity/$kind-$scope-$sf").getAbsoluteFile
-    d.mkdirs()
-    d.toString
+    val d = ScratchDirs.parity(s"$kind-$scope-${ScratchDirs.tag(sfDir)}")
+    new java.io.File(d).mkdirs()
+    d
   }
 
   /** Recreate a scratch dir empty — streaming checkpoints track processed
@@ -116,7 +116,7 @@ object IngestParityQueries {
       days: String, sink: Sink = MemoryTable())(
       query: (SparkSession, () => DataFrame) => DataFrame): SparkSession = {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
-    val ckpt = parityDir(s"$kind-ckpt", sfDir, firstHourOnly = false)
+    val ckpt = scopedDir(s"$kind-ckpt", sfDir, firstHourOnly = false)
     recreate(spark, ckpt)
     val cfg = cfgFor(rawBase, "unused")
     val filesPerTrigger = sink match {
@@ -133,8 +133,8 @@ object IngestParityQueries {
   private def exportEventsTsv(spark: SparkSession, sfDir: String,
       firstHourOnly: Boolean = false): (String, String) =
     exportCache.getOrElseUpdate((sfDir, firstHourOnly), {
-      val raw = parityDir("raw", sfDir, firstHourOnly)
-      val landing = parityDir("landing", sfDir, firstHourOnly)
+      val raw = scopedDir("raw", sfDir, firstHourOnly)
+      val landing = scopedDir("landing", sfDir, firstHourOnly)
       val events0 = RelationalQueries.eventsTable(spark, sfDir)
       val events =
         if (firstHourOnly)
@@ -223,7 +223,7 @@ object IngestParityQueries {
   private def dirtyFirstHourTree(spark: SparkSession, sfDir: String): java.io.File = {
     val (rawBase, _) = exportEventsTsv(spark, sfDir, firstHourOnly = true)
     val srcRoot = new java.io.File(rawBase.stripPrefix("file:"))
-    val dirty = new java.io.File(parityDir("quarantine-raw", sfDir,
+    val dirty = new java.io.File(scopedDir("quarantine-raw", sfDir,
       firstHourOnly = true))
     // fixture memo: copy the (single-hour) export tree and add one file of
     // malformed lines; stamp = source data-file names+sizes so a re-export
@@ -313,9 +313,9 @@ object IngestParityQueries {
     */
   def st16StreamingQuarantine(spark: SparkSession, sfDir: String): DataFrame = {
     val dirty = dirtyFirstHourTree(spark, sfDir)
-    val goodDir = parityDir("squar-good", sfDir, firstHourOnly = true)
-    val badDir = parityDir("squar-bad", sfDir, firstHourOnly = true)
-    val ckpt = parityDir("squar-ckpt", sfDir, firstHourOnly = true)
+    val goodDir = scopedDir("squar-good", sfDir, firstHourOnly = true)
+    val badDir = scopedDir("squar-bad", sfDir, firstHourOnly = true)
+    val ckpt = scopedDir("squar-ckpt", sfDir, firstHourOnly = true)
     recreate(spark, goodDir, badDir, ckpt)
     val corruptCol = "_graft_corrupt"
     drained(spark) { ss =>
@@ -339,8 +339,8 @@ object IngestParityQueries {
           } finally { batch.unpersist(); () }
         })
     }
-    val nBad = spark.read.parquet(s"file:$badDir").count()
-    quarantineResult(spark, spark.read.parquet(s"file:$goodDir"), nBad)
+    val nBad = ParquetFooterSchema.read(spark, s"file:$badDir").count()
+    quarantineResult(spark, ParquetFooterSchema.read(spark, s"file:$goodDir"), nBad)
   }
 
   /** J1-J3: assemble -> start -> poll one load job for the earliest event
@@ -380,8 +380,8 @@ object IngestParityQueries {
     */
   def st1StreamingHourly(spark: SparkSession, sfDir: String): DataFrame = {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
-    val stats = parityDir("stream-stats", sfDir, firstHourOnly = false)
-    val ckpt = parityDir("stream-ckpt", sfDir, firstHourOnly = false)
+    val stats = scopedDir("stream-stats", sfDir, firstHourOnly = false)
+    val ckpt = scopedDir("stream-ckpt", sfDir, firstHourOnly = false)
     recreate(spark, stats, ckpt)
     drained(spark)(StreamingIngest.hourlyStats(_, cfgFor(rawBase, "unused"),
       s"file:$stats", ckpt, dayGlob = "0*"))
@@ -547,8 +547,8 @@ object IngestParityQueries {
     */
   def st11StreamingBackfill(spark: SparkSession, sfDir: String): DataFrame = {
     val (rawBase, _) = exportEventsTsv(spark, sfDir)
-    val landing = parityDir("backfill-landing", sfDir, firstHourOnly = false)
-    val ckpt = parityDir("backfill-ckpt", sfDir, firstHourOnly = false)
+    val landing = scopedDir("backfill-landing", sfDir, firstHourOnly = false)
+    val ckpt = scopedDir("backfill-ckpt", sfDir, firstHourOnly = false)
     recreate(spark, landing, ckpt)
     val cfg = cfgFor(rawBase, s"file:$landing")
 
@@ -621,7 +621,7 @@ object IngestParityQueries {
     * contracts are pinned in `MutationOpsSpec`.
     */
   def st13StreamingCdcApply(spark: SparkSession, sfDir: String): DataFrame = {
-    val tableDir = parityDir("cdc-table", sfDir, firstHourOnly = false)
+    val tableDir = scopedDir("cdc-table", sfDir, firstHourOnly = false)
     recreate(spark, tableDir)
     val tablePath = s"file:$tableDir"
     replay(spark, sfDir, "cdc", days = "01", EachBatch { (batch, _) =>
@@ -688,7 +688,7 @@ object IngestParityQueries {
     * scaladoc).
     */
   def st15StreamingSnapshots(spark: SparkSession, sfDir: String): DataFrame = {
-    val tableDir = parityDir("snapstream-table", sfDir, firstHourOnly = false)
+    val tableDir = scopedDir("snapstream-table", sfDir, firstHourOnly = false)
     recreate(spark, tableDir)
     val path = s"file:$tableDir"
     replay(spark, sfDir, "snapstream", days = "01", EachBatch { (batch, batchId) =>
@@ -783,7 +783,7 @@ object IngestParityQueries {
         .dropDuplicates("user_id", "event_type")
     }
     spark.read.format("statestore")
-      .load(parityDir("stateread-ckpt", sfDir, firstHourOnly = false))
+      .load(scopedDir("stateread-ckpt", sfDir, firstHourOnly = false))
       .select(col("key.user_id").as("user_id"),
         col("key.event_type").as("event_type"))
       .groupBy("event_type")

@@ -34,7 +34,7 @@ object MaintenanceQueries {
   private val s3RegisteredPath = new java.util.concurrent.atomic.AtomicReference[String]("")
 
   private def scratch(spark: SparkSession, kind: String, sfDir: String): String = {
-    val sf = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sf = ScratchDirs.tag(sfDir)
     val d = new java.io.File(s"target/maintain/$kind-$sf").getAbsoluteFile
     MicroBatchJob.wipe(spark, s"file:$d")
     d.mkdirs()
@@ -261,8 +261,8 @@ object MaintenanceQueries {
     * the hour-partitioned landing ([[MutationOps.deleteByKey]] — probe
     * pass then partition-pruned rewrite), the key-bucket serving table
     * ([[MutationOps.deleteFromBucketTable]] — bucket-pruned rewrite), and
-    * the persisted IVF index ([[graft.operators.VectorQueries
-    * .deleteFromIvfIndex]] — bin-pruned rewrite). Output: per-store
+    * the persisted IVF index ([[graft.operators.VectorQueries.deleteBins]]
+    * — a commit rewriting only the bins holding a doomed vector). Output: per-store
     * before/after row counts; the oracle restates all three from the id
     * arithmetic, so the hash fails if a doomed row survives in ANY store
     * or an innocent row is lost in any.
@@ -305,14 +305,16 @@ object MaintenanceQueries {
     }
     // store 3: persisted IVF index over the embeddings
     val chainIndex = () => {
-      val idxDir = s"file:${scratch(spark, "u8idx", sfDir)}"
+      val idx = s"file:${scratch(spark, "u8idx", sfDir)}"
       val emb = RelationalQueries.table(spark, sfDir, "embeddings")
-      VectorQueries.assignToCentroids(spark, sfDir, emb)
-        .write.mode("overwrite").partitionBy("centroid_id").parquet(idxDir)
-      val nb = spark.read.parquet(idxDir).count()
-      VectorQueries.deleteFromIvfIndex(spark, idxDir,
-        emb.filter(col("vec_id") % 7 === 0).select("vec_id"))
-      (nb, spark.read.parquet(idxDir).count())
+      val v1 = SnapshotLog.commit(spark, idx,
+        VectorQueries.assignToCentroids(spark, sfDir, emb), carried = Nil,
+        partitionBy = Some("centroid_id"))
+      val nb = SnapshotLog.read(spark, idx, v1).count()
+      VectorQueries.deleteBins(spark, idx,
+        emb.filter(col("vec_id") % 7 === 0).select("vec_id"), "centroid_id")
+      (nb, SnapshotLog.read(spark, idx,
+        SnapshotLog.latestVersion(spark, idx).get).count())
     }
     val (l, s, i) = Overlap.par3(chainLanding, chainServing, chainIndex)
     Seq(("landing", l._1, l._2), ("serving", s._1, s._2),
@@ -368,7 +370,7 @@ object MaintenanceQueries {
     // (sfDir, row count); when it matches, the tree on disk is the same
     // deterministic table this code would rewrite. Written only after a
     // verified overwrite, so a crash mid-write never leaves a valid marker.
-    val sf = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sf = ScratchDirs.tag(sfDir)
     val dir = new java.io.File(s"target/maintain/s3sql-$sf").getAbsoluteFile
     dir.mkdirs()
     val cfg = cfgFor(s"file:$dir")

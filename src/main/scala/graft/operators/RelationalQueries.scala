@@ -1035,9 +1035,7 @@ object RelationalQueries {
           col("user_id").as("uid")).as("meta"),
         array(col("event_type"), lit("fixed")).as("tags")),
       Map("ignoreNullFields" -> "false"))
-    val shredDir = new java.io.File(
-      s"target/parity/variant-shred-${sfDir.replaceAll("[^A-Za-z0-9.]+", "_")}")
-      .getAbsoluteFile.toString
+    val shredDir = ScratchDirs.parity(s"variant-shred-${ScratchDirs.tag(sfDir)}")
     // shred on write: one parse per row, hot paths -> typed columns
     table(spark, sfDir, "events")
       .select(col("event_id"), parse_json(doc).as("v"))
@@ -1050,7 +1048,7 @@ object RelationalQueries {
       .write.mode("overwrite").parquet(s"file:$shredDir")
     // query the shredded columns only: the variant blob column is pruned
     // out of the scan entirely
-    spark.read.parquet(s"file:$shredDir")
+    ParquetFooterSchema.read(spark, s"file:$shredDir")
       .groupBy("et", "tag1")
       .agg(count(lit(1)).as("cnt"), sum(col("k")).as("sum_k"),
         sum(col("uid")).as("sum_uid"))

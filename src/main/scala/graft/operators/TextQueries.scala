@@ -421,7 +421,7 @@ object TextQueries {
 
   /** The census table name d37 maintains for `sfDir`. */
   private[operators] def d37CensusName(sfDir: String): String =
-    "incdedup_census_" + sfDir.replaceAll("[^A-Za-z0-9.]+", "_").replace(".", "_")
+    "incdedup_census_" + ScratchDirs.tag(sfDir).replace(".", "_")
 
   def d37IncrementalDedup(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.sources.{HashCensus, SnapshotLog}
@@ -429,8 +429,7 @@ object TextQueries {
     val prior = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
     val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
 
-    val dir = new java.io.File(s"target/parity/incdedup-" +
-      sfDir.replaceAll("[^A-Za-z0-9.]+", "_")).getAbsoluteFile
+    val dir = ScratchDirs.parity(s"incdedup-${ScratchDirs.tag(sfDir)}")
     MicroBatchJob.wipe(spark, s"file:$dir")
     val census = d37CensusName(sfDir)
     HashCensus.drop(spark, census) // fresh run: snapshot dir was wiped too
@@ -1127,18 +1126,16 @@ object TextQueries {
     // serving measures serving (the memoTrained rule): the trained
     // segmentation persists behind a corpus fingerprint; d38 itself stays
     // un-memoized because it IS the training demonstration
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val dir = new java.io.File(s"target/parity/trained-bpe$budget-$sfTag")
-      .getAbsoluteFile
+    val dir = ScratchDirs.parity(s"trained-bpe$budget-${ScratchDirs.tag(sfDir)}")
     // content fingerprint, cached per JVM behind a syscall-cheap sourceStamp
     // (the memoTrained rule): one xxhash corpus scan per on-disk state
-    graft.sources.StampedArtifact.getOrBuild(dir.toString, "._trained_ok",
+    graft.sources.StampedArtifact.getOrBuild(dir, "._trained_ok",
         s"$budget|${RelationalQueries.corpusFingerprint(
           spark, sfDir, "documents", "doc_id, text")}") {
       bpeTrain(spark, sfDir, budget)._2.write.mode("overwrite")
         .parquet(s"file:$dir")
     }
-    val seg = spark.read.parquet(s"file:$dir")
+    val seg = graft.sources.ParquetFooterSchema.read(spark, s"file:$dir")
     val ctoks = table(spark, sfDir, "documents")
       .select(col("source"),
         explode(split(trim(col("text")), "\\s+")).as("w"))

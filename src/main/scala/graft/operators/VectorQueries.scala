@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
 object VectorQueries {
 
   import RelationalQueries.table
-  import graft.sources.{ParquetFooterSchema, PartitionSwap, SnapshotLog, StampedArtifact}
+  import graft.sources.{ParquetFooterSchema, SnapshotLog, StampedArtifact}
 
   /** Sequential double fold of sum(f(x)) over an array column — mirrors
     * duckdb `list_aggregate(list_transform(...), 'sum')` exactly.
@@ -501,15 +501,15 @@ object VectorQueries {
 
   private def memoTrained(spark: SparkSession, sfDir: String, name: String,
       params: String)(train: => DataFrame): DataFrame = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sfTag = ScratchDirs.tag(sfDir)
     // params belong in the DIRECTORY key, not just the stamp: consumers of
     // the same artifact family at different geometries (e25 K=4 / e27 K=64
     // / e31 K=256 all name "pqbooks"; d36 k=4 vs d41 k=16 both "kmeans")
     // would otherwise share one slot and re-train + overwrite it on every
     // alternation — every gate run paid every training again (measured:
     // e31 26 s/run instead of its ~2 s warm serving)
-    val pTag = params.replaceAll("[^A-Za-z0-9.]+", "_")
-    val dir = parityDir(s"trained-$name-$pTag-$sfTag")
+    val pTag = ScratchDirs.tag(params)
+    val dir = ScratchDirs.parity(s"trained-$name-$pTag-$sfTag")
     // content fingerprint, cached per JVM behind a syscall-cheap sourceStamp
     // so only the FIRST memo consumer per on-disk state pays the xxhash scan
     StampedArtifact.getOrBuild(dir, "._trained_ok",
@@ -517,7 +517,7 @@ object VectorQueries {
           spark, sfDir, "embeddings", "vec_id, embedding")}") {
       train.write.mode("overwrite").parquet(s"file:$dir")
     }
-    spark.read.parquet(s"file:$dir")
+    ParquetFooterSchema.read(spark, s"file:$dir")
   }
 
   /** The trained codebook itself — `iters` Lloyd rounds from the demo seeds,
@@ -913,16 +913,16 @@ object VectorQueries {
     * family tied together into the production artifact: e18 persists
     * inverted lists but stores RAW vectors; pqCodes persists the code
     * table but only as an in-session memo. A deployed IVF-PQ index is one
-    * on-disk object — the inverted lists, partitioned by coarse bin, whose
+    * on-disk object — the inverted lists, keyed by coarse bin, whose
     * entries are the M-byte PQ codes (32× smaller than the vectors here) —
-    * and serving reads ONLY the probed bins' code partitions and scores
-    * them by ADC. This operator materializes exactly that: (vec_id, m,
-    * code) rows under trained coarse assignment, written
-    * `partitionBy(bin)` once per corpus cut (stamp-guarded — the build is
+    * and serving reads ONLY the probed bins' code files and scores them by
+    * ADC. This operator materializes exactly that: (vec_id, m, code) rows
+    * under trained coarse assignment, committed as a [[SnapshotLog]] table
+    * keyed by `bin` once per corpus cut (stamp-guarded — the build is
     * st17's job class, not serving work), then e26's relational ADC
-    * serving runs with the candidate read partition-pruned to the queries'
-    * bins. The oracle is e26's fully-trained SQL verbatim: same math, same
-    * rows — only the storage path differs, which is the claim.
+    * serving runs with the candidate read limited to the queries' bins'
+    * manifest files. The oracle is e26's fully-trained SQL verbatim: same
+    * math, same rows — only the storage path differs, which is the claim.
     *
     * Scale shape: per-query serving I/O is nprobe/C of the CODE table
     * (M bytes/vector, not the vector itself) — the 100 TB ANN recipe's
@@ -930,30 +930,19 @@ object VectorQueries {
     * PQ divides the bytes per entry; the ADC join build side stays Q·M·K
     * broadcast rows and the score shuffle carries partial sums only.
     */
-  /** Build-once accessor for e32's on-disk IVF-PQ index (bin-partitioned
+  /** Build-once accessor for e32's on-disk IVF-PQ index (`bin`-keyed
     * inverted lists of M-byte PQ codes under the trained coarse
     * assignment). Stamp-guarded per corpus cut — the build is st17's job
     * class; e32's serving and st22's streaming serving both read this one
-    * artifact. Returns the index directory.
+    * artifact. Returns the index table path.
     */
-  private[operators] def persistedIvfPqIndexDir(spark: SparkSession,
-      sfDir: String, iters: Int): String = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val emb = table(spark, sfDir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-    val coarse = assignTrained(emb, kmeansCentroids(spark, sfDir, iters))
-      .select(col("vec_id"), col("centroid_id").as("bin"))
-    val indexDir = parityDir(s"e32-index-$sfTag")
-    StampedArtifact.getOrBuild(indexDir, "._index_ok",
-        s"$sfDir|$iters|" + RelationalQueries.sourceStamp(sfDir, "embeddings")) {
-      pqCodes(spark, sfDir, iters)
-        .select(col("vec_id"), col("m"), col("centroid_id").as("code"))
-        .join(coarse, "vec_id")
-        .write.mode("overwrite").partitionBy("bin")
-        .parquet(s"file:$indexDir")
+  private[operators] def persistedIvfPqIndex(spark: SparkSession,
+      sfDir: String, iters: Int): String =
+    stampedIndex(spark, ScratchDirs.parity(s"e32-index-${ScratchDirs.tag(sfDir)}"),
+        s"$sfDir|$iters|" + RelationalQueries.sourceStamp(sfDir, "embeddings"),
+        "bin") {
+      ivfPqIndexRows(spark, sfDir, iters)
     }
-    indexDir
-  }
 
   def e32PersistedIvfPq(spark: SparkSession, sfDir: String, k: Int = 3,
       iters: Int = 2): DataFrame = {
@@ -962,7 +951,8 @@ object VectorQueries {
     val fine = pqTrainedCodebooks(spark, sfDir, iters)
     val coarse = assignTrained(emb, kmeansCentroids(spark, sfDir, iters))
       .select(col("vec_id"), col("centroid_id").as("bin"))
-    val indexDir = persistedIvfPqIndexDir(spark, sfDir, iters)
+    val lists = ivfLists(spark,
+      headManifest(spark, persistedIvfPqIndex(spark, sfDir, iters)), "bin")
 
     // query side: the M×K sub-dot ADC table + each query's own coarse bin
     // (nprobe=1, e26's geometry)
@@ -973,11 +963,18 @@ object VectorQueries {
       .select(col("vec_id").as("query_id"), col("m"),
         col("centroid_id").as("code"), dotc.as("qd"))
       .join(coarse.withColumnRenamed("vec_id", "query_id"), "query_id")
-    val probed = qdots.select(col("bin").cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val idx = spark.read.option("basePath", s"file:$indexDir")
-      .parquet(s"file:$indexDir")
-      .filter(col("bin").cast("int").isin(probed: _*))
+    serveAdc(spark, lists, qdots, k)
+  }
+
+  /** e26's ADC top-k over compressed inverted lists: the query sub-dot
+    * table `qdots` (query_id, m, code, qd, bin) names the probed bins, of
+    * which only the files are read; then the (bin, m, code) equi-join with
+    * `qdots` broadcast, the per-(query, neighbor) score sum and the
+    * deterministic rank. Shared by e32, st21 and the e38/st28 generations.
+    */
+  private def serveAdc(spark: SparkSession, lists: IvfLists, qdots: DataFrame,
+      k: Int): DataFrame = {
+    val idx = lists.read(spark, binIds(qdots.select(col("bin"))))
       .select(col("vec_id").as("neighbor_id"), col("m"), col("code"),
         col("bin").cast("long").as("bin"))
     val w = org.apache.spark.sql.expressions.Window
@@ -1289,49 +1286,30 @@ object VectorQueries {
         col("sim_dec").cast("double").as("tivfpq_sim"))
   }
 
-  /** e18: PERSISTED IVF index + partition-pruned serving — the storage side
+  /** e18: PERSISTED IVF index + bin-pruned serving — the storage side
     * of the ANN family. e6/e14/e17 rebuild their inverted lists in memory
     * on every run; a production index is built ONCE per corpus cut and
     * persisted, and a query then touches only its probed bins ON DISK.
     * Here the corpus assignment (e6's demo centroids, so the oracle is
-    * e6's restatement verbatim — same result, persisted path) is written
-    * as parquet PARTITIONED BY centroid_id — the on-disk form of IVF's
-    * inverted lists — and the serving read carries a centroid_id partition
-    * predicate: unprobed bins' directories are never listed, let alone
-    * scanned (`PartitionFilters` pinned in `PlanShapeSpec`). At 100 TB the
-    * build cost amortizes over every query; per-query serving I/O is
-    * ∝ nprobe/C of the corpus plus a broadcast of the query rows.
+    * e6's restatement verbatim — same result, persisted path) is committed
+    * as a [[SnapshotLog]] table keyed by centroid_id — each inverted list
+    * is the set of manifest files under its `_centroid_id=` path level —
+    * and serving reads only the probed lists' files: unprobed bins' files
+    * are never opened, and nothing is listed or inferred (the scan's input
+    * files are pinned in `PlanShapeSpec`). At 100 TB the build cost
+    * amortizes over every query; per-query serving I/O is ∝ nprobe/C of
+    * the corpus plus a broadcast of the query rows.
     */
   def e18PersistedIvf(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
     val emb = table(spark, sfDir, "embeddings")
     val assigned = assignToCentroids(spark, sfDir, emb)
-
-    val dir = new java.io.File(
-      s"target/parity/ivf-index-${sfDir.replaceAll("[^A-Za-z0-9.]+", "_")}")
-      .getAbsoluteFile.toString
-    assigned.write.mode("overwrite")
-      .partitionBy("centroid_id").parquet(s"file:$dir")
-
+    val tbl = rebuildIndex(spark,
+      ScratchDirs.parity(s"ivf-index-${ScratchDirs.tag(sfDir)}"), assigned,
+      "centroid_id")
     val queries = assigned.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id"))
-    // nprobe=1 probe set: the distinct centroids the queries map to — a
-    // tiny driver list that becomes the index read's partition predicate
-    val bins = queries.select(col("centroid_id").cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val idx = spark.read.option("basePath", s"file:$dir").parquet(s"file:$dir")
-      .filter(col("centroid_id").cast("int").isin(bins: _*))
-      .select(col("vec_id").as("neighbor_id"), col("embedding"),
-        col("centroid_id").cast("long").as("centroid_id"))
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("sim_dec").desc, col("neighbor_id").asc)
-    idx.join(broadcast(queries), "centroid_id")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim_dec", dot(col("q_emb"), col("embedding")).cast("decimal(20,6)"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("sim_dec").cast("double").as("ivf_sim"))
+    serveManifestFiles(spark, queries, headManifest(spark, tbl), k)
   }
 
   /** The RAW inverted-list index row schema — what [[assignToCentroids]] /
@@ -1454,99 +1432,64 @@ object VectorQueries {
     * IVF story (e18 builds + serves; this absorbs NEW vectors without a
     * rebuild). 90% of the corpus is indexed as the base; the remaining 10%
     * arrives later and is assigned ALONE (a batch-sized scan, not a corpus
-    * scan) and appended into its bins as new parquet files — existing index
-    * files are never rewritten (file identity pinned in
-    * `PipelineQueriesSpec`). Because coarse assignment is per-vector, base
-    * ∪ append is bit-identical to a full rebuild — which is exactly what
-    * the oracle states: e18's full-corpus SQL, verbatim. Serving is
-    * unchanged (bin-pruned read over the merged lists).
+    * scan) and committed into its bins as new parquet files, carrying the
+    * base's files by reference — existing index files are never rewritten
+    * (file identity pinned in `PipelineQueriesSpec`). Because coarse
+    * assignment is per-vector, base ∪ append is bit-identical to a full
+    * rebuild — which is exactly what the oracle states: e18's full-corpus
+    * SQL, verbatim. Serving is unchanged (probed lists of the head
+    * manifest).
     *
     * Scale shape: absorbing a day's new embeddings into a 10^10-vector
-    * index costs one batch-sized assignment scan + appends touching only
-    * the bins the batch maps to; compaction of accreted small files is c3's
-    * sweep applied to bin directories.
+    * index costs one batch-sized assignment scan + a commit touching only
+    * the bins the batch maps to; compaction of accreted small files is
+    * e23's per-bin [[SnapshotLog.compact]].
     */
   def e20IvfAppend(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
     val emb = table(spark, sfDir, "embeddings")
-    val dir = new java.io.File(
-      s"target/parity/ivf-aindex-${sfDir.replaceAll("[^A-Za-z0-9.]+", "_")}")
-      .getAbsoluteFile.toString
     val oldCorpus = emb.filter(pmod(col("vec_id"), lit(10)) =!= 7)
     val newBatch = emb.filter(pmod(col("vec_id"), lit(10)) === 7)
-    assignToCentroids(spark, sfDir, oldCorpus)
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(s"file:$dir")
-    assignToCentroids(spark, sfDir, newBatch)
-      .write.mode("append").partitionBy("centroid_id").parquet(s"file:$dir")
+    val tbl = rebuildIndex(spark,
+      ScratchDirs.parity(s"ivf-aindex-${ScratchDirs.tag(sfDir)}"),
+      assignToCentroids(spark, sfDir, oldCorpus), "centroid_id")
+    MicroBatchJob.appendKeyed(spark, tbl,
+      assignToCentroids(spark, sfDir, newBatch), "append", Some("centroid_id"))
 
     val queries = assignToCentroids(spark, sfDir, emb.filter(col("vec_id") < 10))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id"))
-    val bins = queries.select(col("centroid_id").cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val idx = spark.read.option("basePath", s"file:$dir").parquet(s"file:$dir")
-      .filter(col("centroid_id").cast("int").isin(bins: _*))
-      .select(col("vec_id").as("neighbor_id"), col("embedding"),
-        col("centroid_id").cast("long").as("centroid_id"))
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("sim_dec").desc, col("neighbor_id").asc)
-    idx.join(broadcast(queries), "centroid_id")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim_dec", dot(col("q_emb"), col("embedding")).cast("decimal(20,6)"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("sim_dec").cast("double").as("ivf_sim"))
+    serveManifestFiles(spark, queries, headManifest(spark, tbl), k)
   }
 
-  /** st17: STREAMING INDEX INGEST — the continuous-embedding-pipeline form
-    * of e20's incremental append: the corpus arrives as a file STREAM
-    * (`maxFilesPerTrigger=1` forces multi-batch), and every micro-batch is
-    * assigned alone (a batch-sized scan, never a corpus scan) and appended
-    * into its bins of the persisted partitioned index; serving is e18's
-    * bin-pruned read over the accreted lists. Because coarse assignment is
-    * per-vector, stream-built ∪ equals the one-shot build bit-exactly —
-    * the oracle is e18's full-corpus restatement verbatim, which is the
-    * strongest possible statement of the equivalence. The gate replay uses
-    * a fresh checkpoint + overwritten index per run; a production deploy
-    * makes the append exactly-once by routing batch files through
-    * [[graft.sources.SnapshotLog]] with the batchId as commitKey (st15's
-    * mechanism) at the cost of manifest-based instead of directory-based
-    * bin pruning.
-    *
-    * Scale shape: per batch, cost ∝ batch size (assignment is an in-row
-    * argmax over the K-row codebook, collected once per stream; the append
-    * touches only the bins the batch maps to); the index never rewrites
-    * an existing file, so a day's stream accretes files compacted later
-    * by e23's bin-scoped sweep.
-    */
-  /** e18's ranking over an explicit manifest-file list — the serving tail
-    * shared by st17 (logical-bin file selection) and st24 (map-routed
-    * physical-bin selection), factored so the two generations cannot
-    * drift (the ivfServeBatch rule): queries whose probed bins match NO
-    * manifest file (only reachable for queries outside the indexed
-    * corpus) degrade to an empty result, not an AnalysisException from a
-    * zero-path read — the schema comes from the full manifest, filtered
-    * false so no data file is opened (the lshPrior rule); then the bin
-    * equi-join with the broadcast query set and the deterministic top-k.
+  /** e18's serving over one version of a raw index — the tail every raw
+    * index serves through (e18–e23, e35, e36, st17, st24, st25, st27 and
+    * the e37/st26 generations): the queries' probed coarse bins (their
+    * `centroid_id`s, one small collect) select the inverted lists to read
+    * from the manifest `mf`. A split index routes them through its
+    * logical → physical map at `mapPath` and selects by `_pbin=`;
+    * otherwise by `_centroid_id=`. Unprobed lists' files are never opened.
+    * Then [[rankIvf]].
     */
   private def serveManifestFiles(spark: SparkSession, queries: DataFrame,
-      mf: Seq[String], idxFiles: Seq[String], k: Int): DataFrame = {
-    // the zero-match schema fallback must read DATA files only — a
-    // sidecar-bearing generation manifest would otherwise merge the
-    // codebook's schema into the (empty) index scan — and must survive a
-    // manifest with NO data files at all (st27's geometry-first deploy:
-    // a generation commit carrying only the codebook sidecar, before any
-    // ingest lands): a zero-path parquet read throws, so that case gets
-    // an explicitly-typed empty frame instead (shared constant: see
-    // [[RawIndexRowSchema]] — the writer and this fallback cannot drift)
-    val dataMf = SnapshotLog.dataFiles(mf)
-    val idxRaw =
-      if (idxFiles.nonEmpty) SnapshotLog.readFiles(spark, idxFiles)
-      else if (dataMf.nonEmpty)
-        SnapshotLog.readFiles(spark, dataMf).filter(lit(false))
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        RawIndexRowSchema)
+      mf: Seq[String], k: Int, mapPath: Option[String] = None): DataFrame = {
+    val probed = binIds(queries.select(col("centroid_id")))
+    val (partCol, bins) = mapPath match {
+      // the map holds one row per physical bin: no distinct to pay
+      case Some(m) => ("pbin", ParquetFooterSchema.read(spark, m)
+        .filter(col("bin").isin(probed: _*)).select(col("pbin"))
+        .collect().map(_.getLong(0)).toSeq)
+      case None => ("centroid_id", probed)
+    }
+    rankIvf(queries, ivfLists(spark, mf, partCol).read(spark, bins), k)
+  }
+
+  /** The exact top-k of every query (query_id, q_emb, centroid_id) over
+    * the raw index rows `idxRaw` (vec_id, embedding, centroid_id, …):
+    * the bin equi-join with the broadcast query set, the decimal dot, and
+    * the deterministic rank (similarity, then neighbor id).
+    */
+  private def rankIvf(queries: DataFrame, idxRaw: DataFrame,
+      k: Int): DataFrame = {
     val idx = idxRaw
       .select(col("vec_id").as("neighbor_id"), col("embedding"),
         col("centroid_id").cast("long").as("centroid_id"))
@@ -1561,11 +1504,81 @@ object VectorQueries {
         col("sim_dec").cast("double").as("ivf_sim"))
   }
 
-  /** Absolute local path of a fixture or per-run state dir under
-    * `target/parity`.
+  /** The distinct values of `ids`' one integral column, collected in
+    * ascending order: a probe set of bin ids.
     */
-  private def parityDir(name: String): String =
-    new java.io.File(s"target/parity/$name").getAbsoluteFile.toString
+  private def binIds(ids: DataFrame): Seq[Long] =
+    ids.select(col(ids.columns.head).cast("long")).distinct()
+      .collect().map(_.getLong(0)).toSeq.sorted
+
+  /** The head manifest of the [[SnapshotLog]] table at `tbl`. */
+  private def headManifest(spark: SparkSession, tbl: String): Seq[String] =
+    SnapshotLog.manifest(spark, tbl, SnapshotLog.latestVersion(spark, tbl)
+      .getOrElse(sys.error(s"no version committed at $tbl")))
+
+  /** The inverted lists of one index version: its data files grouped by
+    * the bin in their `_<col>=` path level, and the row schema. A reader
+    * that resolves them once (a serving stream, before `.start()`) opens
+    * only the probed bins' files per read, and lists or infers nothing.
+    */
+  private[operators] final case class IvfLists(
+      schema: org.apache.spark.sql.types.StructType,
+      files: Map[Long, Seq[String]]) {
+
+    /** The rows of `bins`. Bins that hold no file read as an explicitly
+      * typed empty frame: a zero-path parquet read throws.
+      */
+    def read(spark: SparkSession, bins: Iterable[Long]): DataFrame = {
+      val fs = bins.toSeq.distinct.sorted.flatMap(b => files.getOrElse(b, Nil))
+      if (fs.nonEmpty) spark.read.schema(schema).parquet(fs: _*)
+      else spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    }
+  }
+
+  /** [[IvfLists]] of the manifest `mf`, keyed by its `_<partCol>=` level.
+    * Sidecars are never lists. The schema comes from one data file's
+    * footer; a manifest with no data file (st27's geometry-first deploy,
+    * a generation holding only its codebook sidecar) takes the declared
+    * `emptySchema` — the writers' row schema, so the two cannot drift.
+    */
+  private[operators] def ivfLists(spark: SparkSession, mf: Seq[String],
+      partCol: String,
+      emptySchema: org.apache.spark.sql.types.StructType = RawIndexRowSchema)
+      : IvfLists = {
+    val seg = (s"/_${java.util.regex.Pattern.quote(partCol)}=(-?\\d+)/").r
+    val data = SnapshotLog.dataFiles(mf)
+    IvfLists(
+      if (data.isEmpty) emptySchema else ParquetFooterSchema.of(spark, data),
+      data.flatMap(f => seg.findFirstMatchIn(f).map(_.group(1).toLong -> f))
+        .groupMap(_._1)(_._2))
+  }
+
+  /** The index table at the local directory `dir`, rebuilt: wiped, then
+    * `rows` committed as its first version keyed by `partCol`. Returns the
+    * table path.
+    */
+  private def rebuildIndex(spark: SparkSession, dir: String,
+      rows: DataFrame, partCol: String): String = {
+    val tbl = s"file:$dir"
+    MicroBatchJob.wipe(spark, tbl)
+    MicroBatchJob.appendKeyed(spark, tbl, rows, "build", Some(partCol))
+    tbl
+  }
+
+  /** The build-once index table at `dir`: rebuilt ([[rebuildIndex]]'s
+    * wipe and commit) only when its stamp differs from `stamp`. The stamp
+    * carries the storage layout, so a directory another layout left
+    * behind is rebuilt, never read as a log. Returns the table path.
+    */
+  private def stampedIndex(spark: SparkSession, dir: String, stamp: String,
+      partCol: String)(rows: => DataFrame): String = {
+    StampedArtifact.getOrBuild(dir, "._index_ok", s"snapshot-log|$stamp") {
+      rebuildIndex(spark, dir, rows, partCol)
+      ()
+    }
+    s"file:$dir"
+  }
 
   /** The declared arrival schema of the vector streams: (vec_id,
     * embedding) rows, as the arrival fixtures write them.
@@ -1592,8 +1605,8 @@ object VectorQueries {
     */
   private[operators] def embSplitFixture(emb: DataFrame,
       sfDir: String): (String, Long) = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val splitDir = parityDir(s"emb-split-$sfTag")
+    val sfTag = ScratchDirs.tag(sfDir)
+    val splitDir = ScratchDirs.parity(s"emb-split-$sfTag")
     val nEmb = emb.count()
     MicroBatchJob.splitArrivals(emb.select(col("vec_id"), col("embedding")),
       "vec_id", 4, splitDir, "._split_ok",
@@ -1615,13 +1628,32 @@ object VectorQueries {
     dir
   }
 
+  /** st17: STREAMING INDEX INGEST — the continuous-embedding-pipeline form
+    * of e20's incremental append: the corpus arrives as a file STREAM
+    * (`maxFilesPerTrigger=1` forces multi-batch), and every micro-batch is
+    * assigned alone (a batch-sized scan, never a corpus scan) and appended
+    * into its bins of the persisted index as a batchId-keyed
+    * [[graft.sources.SnapshotLog]] commit (st15's mechanism: a replayed
+    * batch no-ops); serving is e18's bin-pruned read over the accreted
+    * lists. Because coarse assignment is per-vector, stream-built ∪ equals
+    * the one-shot build bit-exactly — the oracle is e18's full-corpus
+    * restatement verbatim, which is the strongest possible statement of
+    * the equivalence. The gate replay uses a fresh checkpoint and index
+    * per run.
+    *
+    * Scale shape: per batch, cost ∝ batch size (assignment is an in-row
+    * argmax over the K-row codebook, collected once per stream; the append
+    * touches only the bins the batch maps to); the index never rewrites
+    * an existing file, so a day's stream accretes files compacted later
+    * by e23's bin-scoped sweep.
+    */
   def st17StreamingIndexIngest(spark: SparkSession, sfDir: String,
       k: Int = 3): DataFrame = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sfTag = ScratchDirs.tag(sfDir)
     val emb = table(spark, sfDir, "embeddings")
     val (splitDir, _) = embSplitFixture(emb, sfDir)
-    val indexDir = parityDir(s"ivf-sindex-$sfTag")
-    val ckptDir = parityDir(s"ivf-sckpt-$sfTag")
+    val indexDir = ScratchDirs.parity(s"ivf-sindex-$sfTag")
+    val ckptDir = ScratchDirs.parity(s"ivf-sckpt-$sfTag")
     MicroBatchJob.wipe(spark, s"file:$indexDir", s"file:$ckptDir")
     // the codebook is resolved once per stream, not once per batch
     val cb = demoCodebook(spark, sfDir)
@@ -1644,14 +1676,7 @@ object VectorQueries {
     val queries = assignToCodebook(emb.filter(col("vec_id") < 10), cb)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id"))
-    val bins = queries.select(col("centroid_id").cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val vIdx = SnapshotLog.latestVersion(spark, s"file:$indexDir")
-      .getOrElse(sys.error("st17: no index commits"))
-    val mf = SnapshotLog.manifest(spark, s"file:$indexDir", vIdx)
-    val idxFiles = mf
-      .filter(f => bins.exists(b => f.contains(s"/_centroid_id=$b/")))
-    serveManifestFiles(spark, queries, mf, idxFiles, k)
+    serveManifestFiles(spark, queries, headManifest(spark, s"file:$indexDir"), k)
   }
 
   /** st24: STREAMING INGEST WITH IN-LOOP BIN-SPLIT MAINTENANCE — e35's
@@ -1659,7 +1684,7 @@ object VectorQueries {
     * "maintenance under live appends" discipline on the ANN side): the
     * corpus arrives as a file stream, every batch appends its assigned
     * vectors as a batchId-keyed SnapshotLog commit into `pbin`-keyed
-    * inverted lists, and every other batch [[splitSnapshotBins]] caps the
+    * inverted lists, and every other batch [[splitBins]] caps the
     * accreting bins — the split is itself a keyed commit (replay no-ops;
     * only overflowing bins' files are replaced, the rest carried by
     * reference), exactly the bounded-rewrite guarantee a long-lived
@@ -1673,7 +1698,7 @@ object VectorQueries {
     */
   def st24StreamingSplitMaintain(spark: SparkSession, sfDir: String,
       k: Int = 3): DataFrame = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sfTag = ScratchDirs.tag(sfDir)
     val emb = table(spark, sfDir, "embeddings")
     val (splitDir, nEmb) = embSplitFixture(emb, sfDir)
     // (N-1)/8: tight enough that the 4-logical-bin demo layout overflows
@@ -1682,10 +1707,10 @@ object VectorQueries {
     // balanced 8|N case with no overflow) — so a split lands MID-stream
     // and later appends re-concentrate into a split landscape
     val bound = math.max(1L, (nEmb - 1) / 8)
-    val indexDir = parityDir(s"ivf-st24index-$sfTag")
-    val mapDirF = parityDir(s"ivf-st24map-$sfTag")
+    val indexDir = ScratchDirs.parity(s"ivf-st24index-$sfTag")
+    val mapDirF = ScratchDirs.parity(s"ivf-st24map-$sfTag")
     val mapPath = s"file:$mapDirF"
-    val ckptDir = parityDir(s"ivf-st24ckpt-$sfTag")
+    val ckptDir = ScratchDirs.parity(s"ivf-st24ckpt-$sfTag")
     MicroBatchJob.wipe(spark, s"file:$indexDir", s"file:$ckptDir", mapPath)
     val cb = demoCodebook(spark, sfDir)
 
@@ -1698,8 +1723,8 @@ object VectorQueries {
           assignToCodebook(batch, cb).withColumn("pbin", col("centroid_id")),
           batchId, Some("pbin"), maxFilesPerPartition = 2)
         if (batchId % 2 == 1) {
-          splitSnapshotBins(bs, s"file:$indexDir", mapPath, bound,
-            commitKey = s"split-$batchId")
+          splitBins(bs, s"file:$indexDir", mapPath, bound,
+            commitKey = Some(s"split-$batchId"))
           ()
         }
     }
@@ -1710,15 +1735,9 @@ object VectorQueries {
     val queries = assignToCodebook(emb.filter(col("vec_id") < 10), cb)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id"))
-    val probed = queries.select(col("centroid_id").cast("long").as("b"))
-      .distinct().collect().map(_.getLong(0)).toSet
-    val pbins = ParquetFooterSchema.read(spark, mapPath)
-      .filter(col("bin").isin(probed.toSeq: _*))
-      .select(col("pbin")).collect().map(_.getLong(0)).toSeq.sorted
     val (vIdx, nBatches) = MicroBatchJob.batchLog(spark, s"file:$indexDir")
-    val mf = SnapshotLog.manifest(spark, s"file:$indexDir", vIdx)
-    val idxFiles = mf.filter(f => pbins.exists(p => f.contains(s"/_pbin=$p/")))
-    serveManifestFiles(spark, queries, mf, idxFiles, k)
+    serveManifestFiles(spark, queries,
+      SnapshotLog.manifest(spark, s"file:$indexDir", vIdx), k, Some(mapPath))
       .withColumn("n_commits", lit(nBatches))
   }
 
@@ -1728,7 +1747,7 @@ object VectorQueries {
     * append+split): a right-to-erasure event arrives MID-STREAM and must
     * hold against everything that follows. Mechanics on top of st24's
     * loop: (a) the takedown batch commits the doomed-id set as its own
-    * keyed TOMBSTONE table, then [[deleteSnapshotBins]] rewrites only the
+    * keyed TOMBSTONE table, then [[deleteBins]] rewrites only the
     * bins holding a doomed vector (a keyed commit — replay no-ops, calm
     * bins carried by reference) and refreshes the map off the live
     * manifest; (b) EVERY batch's append anti-joins the current tombstones,
@@ -1751,15 +1770,15 @@ object VectorQueries {
     */
   def st25StreamingSplitTakedown(spark: SparkSession, sfDir: String,
       k: Int = 3): DataFrame = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sfTag = ScratchDirs.tag(sfDir)
     val emb = table(spark, sfDir, "embeddings")
     val (splitDir, nEmb) = embSplitFixture(emb, sfDir)
     val bound = math.max(1L, (nEmb - 1) / 8)
-    val indexDir = parityDir(s"ivf-st25index-$sfTag")
-    val mapDirF = parityDir(s"ivf-st25map-$sfTag")
+    val indexDir = ScratchDirs.parity(s"ivf-st25index-$sfTag")
+    val mapDirF = ScratchDirs.parity(s"ivf-st25map-$sfTag")
     val mapPath = s"file:$mapDirF"
-    val tombDir = parityDir(s"ivf-st25tomb-$sfTag")
-    val ckptDir = parityDir(s"ivf-st25ckpt-$sfTag")
+    val tombDir = ScratchDirs.parity(s"ivf-st25tomb-$sfTag")
+    val ckptDir = ScratchDirs.parity(s"ivf-st25ckpt-$sfTag")
     MicroBatchJob.wipe(spark, s"file:$indexDir", s"file:$ckptDir", mapPath,
       s"file:$tombDir")
     val cb = demoCodebook(spark, sfDir)
@@ -1792,13 +1811,13 @@ object VectorQueries {
         if (batchId == 2) {
           val doomed = table(bs, sfDir, "embeddings")
             .filter(pmod(col("vec_id"), lit(10)) === 3).select("vec_id")
-          deleteSnapshotBins(bs, s"file:$indexDir", doomed, mapPath,
-            commitKey = "delete-2")
+          deleteBins(bs, s"file:$indexDir", doomed, "pbin", Some(mapPath),
+            commitKey = Some("delete-2"))
           ()
         }
         if (batchId % 2 == 1) {
-          splitSnapshotBins(bs, s"file:$indexDir", mapPath, bound,
-            commitKey = s"split-$batchId")
+          splitBins(bs, s"file:$indexDir", mapPath, bound,
+            commitKey = Some(s"split-$batchId"))
           ()
         }
     }
@@ -1809,43 +1828,10 @@ object VectorQueries {
       emb.filter(col("vec_id") < 10 && pmod(col("vec_id"), lit(10)) =!= 3), cb)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id"))
-    val probed = queries.select(col("centroid_id").cast("long").as("b"))
-      .distinct().collect().map(_.getLong(0)).toSet
-    val pbins = ParquetFooterSchema.read(spark, mapPath)
-      .filter(col("bin").isin(probed.toSeq: _*))
-      .select(col("pbin")).collect().map(_.getLong(0)).toSeq.sorted
     val (vIdx, nBatches) = MicroBatchJob.batchLog(spark, s"file:$indexDir")
-    val mf = SnapshotLog.manifest(spark, s"file:$indexDir", vIdx)
-    val idxFiles = mf.filter(f => pbins.exists(p => f.contains(s"/_pbin=$p/")))
-    serveManifestFiles(spark, queries, mf, idxFiles, k)
+    serveManifestFiles(spark, queries,
+      SnapshotLog.manifest(spark, s"file:$indexDir", vIdx), k, Some(mapPath))
       .withColumn("n_commits", lit(nBatches))
-  }
-
-  /** A frozen RAW inverted-list index in e18's on-disk layout (one
-    * `centroid_id=<bin>` directory per list), resolved once: each bin's
-    * data files, listed when the serving stream starts. The row schema is
-    * the writers' declared [[RawIndexRowSchema]], so a read of these files
-    * infers nothing. Valid while the index is frozen — st20's index is
-    * rebuilt only before its stream starts.
-    */
-  private[operators] final case class RawIvfLists(root: String,
-      files: Map[Long, Seq[String]])
-
-  private[operators] def resolveRawIvfLists(spark: SparkSession,
-      indexDir: String): RawIvfLists = {
-    val root = new org.apache.hadoop.fs.Path(s"file:$indexDir")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prefix = "centroid_id="
-    def visible(p: org.apache.hadoop.fs.Path) =
-      !p.getName.startsWith("_") && !p.getName.startsWith(".")
-    val files = fs.listStatus(root)
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith(prefix))
-      .map { d =>
-        d.getPath.getName.stripPrefix(prefix).toLong ->
-          fs.listStatus(d.getPath).filter(f => f.isFile && visible(f.getPath))
-            .map(_.getPath.toString).toSeq.sorted
-      }.toMap
-    RawIvfLists(root.toString, files)
   }
 
   /** One query batch served against frozen RAW inverted lists — st20's
@@ -1855,41 +1841,18 @@ object VectorQueries {
     * codebook and collected ONCE: those rows give both the probed bin ids
     * and the broadcast side (a local relation, so the batch's source is
     * not scanned again). The index read opens only the probed bins' files
-    * from `lists` — no directory listing, no schema inference — under a
-    * centroid_id partition filter, and the batch is broadcast into it for
-    * the exact top-k.
+    * from `lists` — no directory listing, no schema inference — and
+    * [[rankIvf]] broadcasts the batch into it for the exact top-k.
     */
   private[operators] def ivfServeBatch(bs: SparkSession, batch: DataFrame,
-      cb: Codebook, lists: RawIvfLists, k: Int): DataFrame = {
+      cb: Codebook, lists: IvfLists, k: Int): DataFrame = {
     val assigned = assignToCodebook(batch, cb)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id").cast("long").as("centroid_id"))
     val rows = assigned.collect()
     val queries = bs.createDataFrame(java.util.Arrays.asList(rows: _*),
       assigned.schema)
-    val bins = rows.map(_.getLong(2)).distinct.sorted
-    val files = bins.flatMap(b => lists.files.getOrElse(b, Nil))
-    // a batch whose probed bins hold no files reads an explicitly-typed
-    // empty frame: a zero-path parquet read throws
-    val idxRaw =
-      if (files.nonEmpty) bs.read.schema(RawIndexRowSchema)
-        .option("basePath", lists.root).parquet(files.toSeq: _*)
-      else bs.createDataFrame(
-        bs.sparkContext.emptyRDD[org.apache.spark.sql.Row], RawIndexRowSchema)
-    val idx = idxRaw.filter(col("centroid_id").isin(bins.toSeq: _*))
-      .select(col("vec_id").as("neighbor_id"), col("embedding"),
-        col("centroid_id"))
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id")
-      .orderBy(col("sim_dec").desc, col("neighbor_id").asc)
-    idx.join(broadcast(queries), "centroid_id")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim_dec",
-        dot(col("q_emb"), col("embedding")).cast("decimal(20,6)"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("sim_dec").cast("double").as("ivf_sim"))
+    rankIvf(queries, lists.read(bs, rows.map(_.getLong(2))), k)
   }
 
   /** st20: STREAMING ANN SERVING — the query-side twin of st17 (which
@@ -1919,14 +1882,14 @@ object VectorQueries {
     * query set, verbatim (plus the commit count).
     *
     * What is resolved once per stream, before `.start()`: the K-row
-    * codebook (collected to the driver) and the frozen index's bin → file
-    * listing ([[resolveRawIvfLists]]; the row schema is the declared
-    * [[RawIndexRowSchema]]). Per batch ([[ivfServeBatch]]): one job scans
-    * the batch and collects its in-row coarse assignment (≤ batch rows);
-    * those rows give the probed bin ids and the broadcast query side; the
+    * codebook (collected to the driver) and the frozen index's head
+    * manifest, as its bin → files map and one footer's row schema
+    * ([[IvfLists]]). Per batch ([[ivfServeBatch]]): one job scans the
+    * batch and collects its in-row coarse assignment (≤ batch rows); those
+    * rows give the probed bin ids and the broadcast query side; the
     * serving read opens ONLY the probed bins' files — no batch lists a
-    * directory, unprobed bins are never listed or opened, and no schema
-    * is inferred — then the keyed result commit. No stage touches the full
+    * directory or reads a manifest, unprobed bins are never opened, and
+    * no schema is inferred — then the keyed result commit. No stage touches the full
     * index; per-batch I/O is ∝ Σ(probed bin sizes), the IVF serving
     * contract. Exactly-once under micro-batch replay: the result commit
     * is batchId-keyed (st15's mechanism), so a replayed batch no-ops and
@@ -1934,32 +1897,30 @@ object VectorQueries {
     */
   def st20StreamingAnnServe(spark: SparkSession, sfDir: String,
       k: Int = 3): DataFrame = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sfTag = ScratchDirs.tag(sfDir)
     val emb = table(spark, sfDir, "embeddings")
     val srcStamp =
       s"$sfDir|${RelationalQueries.sourceStamp(sfDir, "embeddings")}"
 
-    // ---- the served index: e18's persisted layout (partition dirs = the
-    // inverted lists), built once per corpus cut and reused across runs
+    // ---- the served index: e18's layout (a `centroid_id`-keyed
+    // SnapshotLog table), built once per corpus cut and reused across runs
     // (stamp-guarded — in production this is st17's build job, not the
     // serving path's work)
-    val indexDir = parityDir(s"st20-index-$sfTag")
     val cb = demoCodebook(spark, sfDir)
-    StampedArtifact.getOrBuild(indexDir, "._index_ok", srcStamp) {
+    val tbl = stampedIndex(spark, ScratchDirs.parity(s"st20-index-$sfTag"),
+        srcStamp, "centroid_id") {
       assignToCodebook(emb, cb)
-        .write.mode("overwrite").partitionBy("centroid_id")
-        .parquet(s"file:$indexDir")
     }
-    val lists = resolveRawIvfLists(spark, indexDir)
+    val lists = ivfLists(spark, headManifest(spark, tbl), "centroid_id")
 
     // ---- query arrivals fixture: vec_id < 40 range-split into 4 files so
     // the stream genuinely runs multiple micro-batches (st17's shape)
-    val qDir = queryArrivals(emb, parityDir(s"st20-queries-$sfTag"), 40,
+    val qDir = queryArrivals(emb, ScratchDirs.parity(s"st20-queries-$sfTag"), 40,
       srcStamp)
 
     // ---- per-run result log + checkpoint
-    val resultsPath = s"file:${parityDir(s"st20-results-$sfTag")}"
-    val ckptDir = parityDir(s"st20-ckpt-$sfTag")
+    val resultsPath = s"file:${ScratchDirs.parity(s"st20-results-$sfTag")}"
+    val ckptDir = ScratchDirs.parity(s"st20-ckpt-$sfTag")
     MicroBatchJob.wipe(spark, resultsPath, s"file:$ckptDir")
 
     MicroBatchJob.run(spark, qDir, EmbeddingArrivalSchema, ckptDir, 8) {
@@ -1984,7 +1945,7 @@ object VectorQueries {
     * assigned under the FROZEN trained codebooks (memo-trained once at
     * corpus start, carried to every batch session as plain rows — the
     * st18/st19 trained-artifact discipline), and its (vec_id, m, code)
-    * rows append into the bin-partitioned on-disk inverted lists. Both
+    * rows append into the `bin`-keyed on-disk inverted lists. Both
     * encodings are per-vector functions of (vector, frozen codebooks), so
     * batch-built ∪ … ∪ batch-built is bit-identical to e32's one-shot
     * build; serving the stream-built index answers exactly e26's trained
@@ -2008,7 +1969,7 @@ object VectorQueries {
     */
   def st21StreamingPqIngest(spark: SparkSession, sfDir: String,
       k: Int = 3, iters: Int = 2): DataFrame = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sfTag = ScratchDirs.tag(sfDir)
     val emb = table(spark, sfDir, "embeddings")
     // arrival fixture: st17's 4-way range split (the two streams share one
     // fixture deliberately — same arrivals, two index generations)
@@ -2020,8 +1981,8 @@ object VectorQueries {
     val coarseRows = kmeansCentroids(spark, sfDir, iters).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq
 
-    val indexDir = parityDir(s"st21-index-$sfTag")
-    val ckptDir = parityDir(s"st21-ckpt-$sfTag")
+    val indexDir = ScratchDirs.parity(s"st21-index-$sfTag")
+    val ckptDir = ScratchDirs.parity(s"st21-ckpt-$sfTag")
     MicroBatchJob.wipe(spark, s"file:$indexDir", s"file:$ckptDir")
 
     MicroBatchJob.run(spark, splitDir, EmbeddingArrivalSchema, ckptDir, 8) {
@@ -2048,7 +2009,7 @@ object VectorQueries {
     // snapshot's manifest paths carry each file's bin (`_bin=` path level),
     // so the probed-bin prune is a string match over the manifest —
     // unprobed bins' files are never opened (st19's touched-partition
-    // discipline; the manifest analogue of e32's PartitionFilters prune)
+    // discipline, as in e32)
     val fine = pqTrainedCodebooks(spark, sfDir, iters)
     val coarse = assignTrained(emb.select(col("vec_id"), col("embedding")),
       kmeansCentroids(spark, sfDir, iters))
@@ -2060,31 +2021,8 @@ object VectorQueries {
       .select(col("vec_id").as("query_id"), col("m"),
         col("centroid_id").as("code"), dotc.as("qd"))
       .join(coarse.withColumnRenamed("vec_id", "query_id"), "query_id")
-    val probed = qdots.select(col("bin").cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val vIdx = SnapshotLog.latestVersion(spark, s"file:$indexDir")
-      .getOrElse(sys.error("st21: no index commits"))
-    val mf = SnapshotLog.manifest(spark, s"file:$indexDir", vIdx)
-    val idxFiles = mf
-      .filter(f => probed.exists(b => f.contains(s"/_bin=$b/")))
-    // empty probed-bin match → empty result, not a zero-path read error
-    // (st17's guard; schema from the full manifest, filtered false)
-    val idxRaw =
-      if (idxFiles.isEmpty) SnapshotLog.readFiles(spark, mf).filter(lit(false))
-      else SnapshotLog.readFiles(spark, idxFiles)
-    val idx = idxRaw
-      .select(col("vec_id").as("neighbor_id"), col("m"), col("code"),
-        col("bin").cast("long").as("bin"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("sim_sum").desc, col("neighbor_id").asc)
-    idx.join(broadcast(qdots), Seq("bin", "m", "code"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(sum(col("qd")).as("sim_sum"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("sim_sum").cast("double").as("fivfpq_sim"))
+    serveAdc(spark, ivfLists(spark, headManifest(spark, s"file:$indexDir"),
+      "bin", PqIndexRowSchema), qdots, k)
   }
 
   /** One query batch served against the frozen persisted IVF-PQ index with
@@ -2094,10 +2032,9 @@ object VectorQueries {
     *  1. coarse-assign the batch against the broadcast centroid table and
     *     build its M×K ADC sub-dot table (batch-sized work);
     *  2. collect the probed bin ids (≤ batch distinct bins, a driver
-    *     list — exactly how partition pruning must be driven) and scan
-    *     ONLY those `bin=` partitions of the on-disk code lists: the scan
-    *     carries a bin PartitionFilter and reads M-byte codes, never
-    *     vectors;
+    *     list) and scan ONLY those bins' files of the code lists resolved
+    *     once per stream (`lists`): the scan reads M-byte codes, never
+    *     vectors, and lists or infers nothing;
     *  3. ADC-score the pruned candidates, keep a per-query SHORTLIST
     *     (top-`shortlist` by ADC sum — e30's two-stage recipe);
     *  4. REFINE: fetch raw vectors for just the Q×shortlist candidate
@@ -2110,7 +2047,7 @@ object VectorQueries {
     * bytes by ~dim·4/M; refine restores exact ranking on a bounded set).
     */
   private[operators] def pqServeRefineBatch(bs: SparkSession, sfDir: String,
-      queries: DataFrame, fine: DataFrame, cents: DataFrame, indexDir: String,
+      queries: DataFrame, fine: DataFrame, cents: DataFrame, lists: IvfLists,
       k: Int, shortlist: Int): DataFrame = {
     // `queries` (vec_id, embedding) is read by the bin-probe collect, the
     // ADC table, AND the refine join — the caller materializes it
@@ -2125,11 +2062,7 @@ object VectorQueries {
       .select(col("vec_id").as("query_id"), col("m"),
         col("centroid_id").as("code"), dotc.as("qd"))
       .join(qAsg, "query_id")
-    val probed = qdots.select(col("bin").cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val idx = bs.read.option("basePath", s"file:$indexDir")
-      .parquet(s"file:$indexDir")
-      .filter(col("bin").cast("int").isin(probed: _*))
+    val idx = lists.read(bs, binIds(qdots.select(col("bin"))))
       .select(col("vec_id").as("neighbor_id"), col("m"), col("code"),
         col("bin").cast("long").as("bin"))
     val wS = org.apache.spark.sql.expressions.Window
@@ -2180,14 +2113,16 @@ object VectorQueries {
     */
   def st22StreamingPqServe(spark: SparkSession, sfDir: String, k: Int = 3,
       iters: Int = 2, shortlist: Int = 10): DataFrame = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sfTag = ScratchDirs.tag(sfDir)
     val emb = table(spark, sfDir, "embeddings")
     val srcStamp = s"$sfDir|$iters|" +
       RelationalQueries.sourceStamp(sfDir, "embeddings")
 
     // the served artifact: e32's persisted compressed index (build-once,
-    // stamp-guarded — a build job, not serving work)
-    val indexDir = persistedIvfPqIndexDir(spark, sfDir, iters)
+    // stamp-guarded — a build job, not serving work), its lists resolved
+    // once per stream
+    val lists = ivfLists(spark,
+      headManifest(spark, persistedIvfPqIndex(spark, sfDir, iters)), "bin")
 
     // frozen trained codebooks → plain rows for the per-batch sessions
     // (st21's trained-artifact discipline)
@@ -2198,12 +2133,12 @@ object VectorQueries {
 
     // query arrivals fixture: the e26/e30 query set (vec_id < 10),
     // range-split into 4 files so the stream genuinely micro-batches
-    val qDir = queryArrivals(emb, parityDir(s"st22-queries-$sfTag"), 10,
+    val qDir = queryArrivals(emb, ScratchDirs.parity(s"st22-queries-$sfTag"), 10,
       srcStamp)
 
     // per-run result log + checkpoint
-    val resultsPath = s"file:${parityDir(s"st22-results-$sfTag")}"
-    val ckptDir = parityDir(s"st22-ckpt-$sfTag")
+    val resultsPath = s"file:${ScratchDirs.parity(s"st22-results-$sfTag")}"
+    val ckptDir = ScratchDirs.parity(s"st22-ckpt-$sfTag")
     MicroBatchJob.wipe(spark, resultsPath, s"file:$ckptDir")
 
     MicroBatchJob.run(spark, qDir, EmbeddingArrivalSchema, ckptDir, 8) {
@@ -2214,7 +2149,7 @@ object VectorQueries {
         val qch = batch.select(col("vec_id"), col("embedding"))
           .localCheckpoint(true)
         val res = pqServeRefineBatch(bs, sfDir, qch, fine, cents,
-          indexDir, k, shortlist)
+          lists, k, shortlist)
         // in-loop result-log maintenance (st20's rule)
         MicroBatchJob.appendBatch(bs, resultsPath, res.coalesce(1), batchId,
           None, maxFilesPerPartition = 2)
@@ -2256,11 +2191,10 @@ object VectorQueries {
       iters: Int = 2, nprobe: Int = 2, shortlist: Int = 10): DataFrame = {
     val vecs = table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val indexDir = filteredIvfPqIndexDir(spark, sfDir, iters)
     filteredPqServeBatch(spark, sfDir, vecs.filter(col("vec_id") < 10),
       pqTrainedCodebooks(spark, sfDir, iters),
       kmeansCentroids(spark, sfDir, iters),
-      indexDir, k, nprobe, shortlist)
+      filteredIvfPqLists(spark, sfDir, iters), k, nprobe, shortlist)
   }
 
   /** e34: a SECOND predicate through the identical filtered-serving plan —
@@ -2276,37 +2210,31 @@ object VectorQueries {
       iters: Int = 2, nprobe: Int = 2, shortlist: Int = 10): DataFrame = {
     val vecs = table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val indexDir = filteredIvfPqIndexDir(spark, sfDir, iters)
     filteredPqServeBatch(spark, sfDir, vecs.filter(col("vec_id") < 10),
       pqTrainedCodebooks(spark, sfDir, iters),
       kmeansCentroids(spark, sfDir, iters),
-      indexDir, k, nprobe, shortlist, pred = col("label") >= 6)
+      filteredIvfPqLists(spark, sfDir, iters), k, nprobe, shortlist,
+      pred = col("label") >= 6)
   }
 
   /** Build-once accessor for the FILTERED compressed index (e33's
-    * artifact): (vec_id, m, code, label) bin-partitioned inverted lists —
-    * the label payload rides in the lists so serving can push the
-    * predicate into the code scan. Stamp-guarded per corpus cut; e33's
-    * one-shot serving and st23's streaming serving both read this one
-    * artifact (the e32↔st22 pairing, filtered generation).
+    * artifact): (vec_id, m, code, label) `bin`-keyed inverted lists — the
+    * label payload rides in the lists so serving can push the predicate
+    * into the code scan. Stamp-guarded per corpus cut; e33's one-shot
+    * serving and st23's streaming serving both read this one artifact
+    * (the e32↔st22 pairing, filtered generation). Returns its lists.
     */
-  private[operators] def filteredIvfPqIndexDir(spark: SparkSession,
-      sfDir: String, iters: Int): String = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+  private[operators] def filteredIvfPqLists(spark: SparkSession,
+      sfDir: String, iters: Int): IvfLists = {
     val emb = table(spark, sfDir, "embeddings")
-    val vecs = emb.select(col("vec_id"), col("embedding"))
-    val indexDir = parityDir(s"e33-index-$sfTag")
-    StampedArtifact.getOrBuild(indexDir, "._index_ok",
-        s"$sfDir|$iters|" + RelationalQueries.sourceStamp(sfDir, "embeddings")) {
-      pqCodes(spark, sfDir, iters)
-        .select(col("vec_id"), col("m"), col("centroid_id").as("code"))
+    val tbl = stampedIndex(spark,
+        ScratchDirs.parity(s"e33-index-${ScratchDirs.tag(sfDir)}"),
+        s"$sfDir|$iters|" + RelationalQueries.sourceStamp(sfDir, "embeddings"),
+        "bin") {
+      ivfPqIndexRows(spark, sfDir, iters)
         .join(emb.select(col("vec_id"), col("label")), "vec_id")
-        .join(assignTrained(vecs, kmeansCentroids(spark, sfDir, iters))
-          .select(col("vec_id"), col("centroid_id").as("bin")), "vec_id")
-        .write.mode("overwrite").partitionBy("bin")
-        .parquet(s"file:$indexDir")
     }
-    indexDir
+    ivfLists(spark, headManifest(spark, tbl), "bin")
   }
 
   /** st23: STREAMING FILTERED SERVING OVER THE COMPRESSED INDEX — the
@@ -2333,24 +2261,24 @@ object VectorQueries {
       k: Int = 3, iters: Int = 2, nprobe: Int = 2,
       shortlist: Int = 10, pred: Column = col("label").isin(1, 3, 5),
       stateTag: String = ""): DataFrame = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_") + stateTag
+    val sfTag = ScratchDirs.tag(sfDir) + stateTag
     val emb = table(spark, sfDir, "embeddings")
     val srcStamp = s"$sfDir|$iters|" +
       RelationalQueries.sourceStamp(sfDir, "embeddings")
 
-    // the served artifact + frozen trained rows (st22's discipline)
-    val indexDir = filteredIvfPqIndexDir(spark, sfDir, iters)
+    // the served artifact's lists + frozen trained rows (st22's discipline)
+    val lists = filteredIvfPqLists(spark, sfDir, iters)
     val fineRows = pqTrainedCodebooks(spark, sfDir, iters).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2))).toSeq
     val coarseRows = kmeansCentroids(spark, sfDir, iters).collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq
 
     // query arrivals fixture: e33's query set, 4-way range-split
-    val qDir = queryArrivals(emb, parityDir(s"st23-queries-$sfTag"), 10,
+    val qDir = queryArrivals(emb, ScratchDirs.parity(s"st23-queries-$sfTag"), 10,
       srcStamp)
 
-    val resultsPath = s"file:${parityDir(s"st23-results-$sfTag")}"
-    val ckptDir = parityDir(s"st23-ckpt-$sfTag")
+    val resultsPath = s"file:${ScratchDirs.parity(s"st23-results-$sfTag")}"
+    val ckptDir = ScratchDirs.parity(s"st23-ckpt-$sfTag")
     MicroBatchJob.wipe(spark, resultsPath, s"file:$ckptDir")
 
     MicroBatchJob.run(spark, qDir, EmbeddingArrivalSchema, ckptDir, 8) {
@@ -2361,7 +2289,7 @@ object VectorQueries {
         val qch = batch.select(col("vec_id"), col("embedding"))
           .localCheckpoint(true)
         val res = filteredPqServeBatch(bs, sfDir, qch, fine, cents,
-          indexDir, k, nprobe, shortlist, pred = pred)
+          lists, k, nprobe, shortlist, pred = pred)
         MicroBatchJob.appendBatch(bs, resultsPath, res.coalesce(1), batchId,
           None, maxFilesPerPartition = 2)
         CorpusPipeline.freeCut(qch)
@@ -2376,8 +2304,8 @@ object VectorQueries {
     * e33's per-batch plan, factored out beside [[ivfServeBatch]] and
     * [[pqServeRefineBatch]] so the one-shot query and the st23 stream
     * execute the identical plan: nprobe trained probe ranking →
-    * bin-pruned, label-filtered code scan (partition prune from the
-    * probed-bin driver list; the predicate pushes into the reader) → ADC
+    * bin-pruned, label-filtered code scan (the probed-bin driver list
+    * picks the files; the predicate pushes into the reader) → ADC
     * shortlist → exact decimal-cosine refine. `queries` is a (vec_id,
     * embedding) frame the caller may localCheckpoint (it feeds the probe
     * ranking, the ADC table, AND the refine join) and free afterward.
@@ -2389,7 +2317,7 @@ object VectorQueries {
     */
   private[operators] def filteredPqServeBatch(bs: SparkSession,
       sfDir: String, queries: DataFrame, fine: DataFrame, cents: DataFrame,
-      indexDir: String, k: Int, nprobe: Int, shortlist: Int,
+      lists: IvfLists, k: Int, nprobe: Int, shortlist: Int,
       pred: Column = col("label").isin(1, 3, 5)): DataFrame = {
     // nprobe nearest trained centroids per query (e28's probe ranking)
     val wp = org.apache.spark.sql.expressions.Window
@@ -2408,13 +2336,9 @@ object VectorQueries {
       .select(col("vec_id").as("query_id"), col("m"),
         col("centroid_id").as("code"), dotc.as("qd"))
 
-    // bin-pruned, attribute-filtered code scan: the probed-bin list drives
-    // partition pruning; the caller's predicate pushes into the reader
-    val probed = probes.select(col("bin").cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val idx = bs.read.option("basePath", s"file:$indexDir")
-      .parquet(s"file:$indexDir")
-      .filter(col("bin").cast("int").isin(probed: _*))
+    // bin-pruned, attribute-filtered code scan: the probed-bin list picks
+    // the files to open; the caller's predicate pushes into the reader
+    val idx = lists.read(bs, binIds(probes.select(col("bin"))))
       .filter(pred)
       .select(col("vec_id").as("neighbor_id"), col("m"), col("code"),
         col("bin").cast("long").as("bin"))
@@ -2452,182 +2376,146 @@ object VectorQueries {
         col("sim_dec").cast("double").as("refined_sim"))
   }
 
-  /** Remove `doomed` (a vec_id frame) from a persisted IVF index in place:
-    * probe the affected bins with a column-pruned semi-join scan, then one
-    * staged swap ([[PartitionSwap]]) rewrites exactly those bins
-    * anti-joined against the tombstones, old-or-new per bin, and removes a
-    * bin whose vectors were all doomed. Bins without a doomed vector keep
-    * their files physically intact (pinned in `PipelineQueriesSpec`).
-    * Returns the rewritten bin ids. `partCol` names the index's partition
-    * column — `centroid_id` for the flat e18/e20 layout, `pbin` for a
-    * split-maintained (e35/e36) layout; the same bounded-rewrite discipline
-    * holds either way, which is exactly what lets a takedown land in a
-    * split CHILD without touching its calm siblings.
+  /** Remove `doomed` (a vec_id frame) from the head of an index table
+    * keyed by `partCol` (`centroid_id` for e18's flat layout, `pbin` for a
+    * split one): the bins holding a doomed vector are found by a
+    * column-pruned semi-join over the live manifest, ONLY those bins'
+    * files are read and rewritten anti-joined against the tombstones, and
+    * every other file is CARRIED by reference, so calm bins keep their
+    * files (pinned in `PipelineQueriesSpec`) and readers of the old
+    * version are never disturbed. A fully-doomed bin contributes no fresh
+    * files and its old ones are not carried, so it leaves the manifest.
+    * With `commitKey` the takedown is a keyed commit that a replay
+    * no-ops. A split index passes its `mapPath`, which is re-derived from
+    * the post-delete manifest ([[refreshBinMap]]) so serving never probes
+    * an emptied child. Returns the rewritten bin ids (empty on replay or
+    * no match).
     */
-  def deleteFromIvfIndex(spark: SparkSession, indexPath: String,
-      doomed: DataFrame, partCol: String = "centroid_id"): Seq[Long] = {
-    val scanned = spark.read.option("basePath", indexPath).parquet(indexPath)
-    val affected = scanned
-      .join(broadcast(doomed), Seq("vec_id"), "left_semi")
-      .select(col(partCol).cast("long").as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq.sorted
-    if (affected.nonEmpty) {
-      // rewrite projection = the scanned schema (partition col cast back to
-      // long), NOT a hardcoded column list — a metadata-bearing index (e19's
-      // label column in the inverted lists) must round-trip its extra
-      // columns through a delete, or rewritten bins drop them and the index
-      // ends up mixed-schema (the deleteFromBucketTable rule)
-      val dataCols = scanned.columns.filterNot(_ == partCol).toSeq
-      val kept = scanned
-        .filter(col(partCol).cast("long").isin(affected: _*))
-        .join(broadcast(doomed), Seq("vec_id"), "left_anti")
-        .select(dataCols.map(col) :+
-          col(partCol).cast("long").as(partCol): _*)
-      PartitionSwap.overwrite(kept.repartition(col(partCol)), indexPath,
-        Seq(partCol), affected.map(b => s"$partCol=$b"))
-    }
+  def deleteBins(spark: SparkSession, tablePath: String, doomed: DataFrame,
+      partCol: String, mapPath: Option[String] = None,
+      commitKey: Option[String] = None): Seq[Long] = {
+    val mf = SnapshotLog.latestVersion(spark, tablePath)
+      .map(SnapshotLog.manifest(spark, tablePath, _)).getOrElse(return Nil)
+    val affected =
+      if (commitKey.exists(SnapshotLog.commitKeys(spark, tablePath).contains)) Nil
+      else {
+        val lists = ivfLists(spark, mf, partCol)
+        val hit = binIds(lists.read(spark, lists.files.keys)
+          .join(broadcast(doomed), Seq("vec_id"), "left_semi")
+          .select(col(partCol)))
+        if (hit.nonEmpty) {
+          // schema-derived projection: a metadata column in the lists
+          // (e19's label) must survive the rewrite
+          val touched = lists.read(spark, hit)
+          val kept = touched
+            .join(broadcast(doomed), Seq("vec_id"), "left_anti")
+            .select(touched.columns.filterNot(_ == partCol).map(col).toSeq :+
+              col(partCol).cast("long").as(partCol): _*)
+          SnapshotLog.commit(spark, tablePath, kept,
+            carried = mf.filterNot(hit.flatMap(lists.files).toSet),
+            commitKey = commitKey, partitionBy = Some(partCol))
+        }
+        hit
+      }
+    mapPath.foreach(refreshBinMap(spark, tablePath, _))
     affected
   }
 
-  /** Compact every inverted-list bin holding more than `maxFiles` data
-    * files down to one file per bin — the c3 sweep at index granularity,
-    * the maintenance pass that keeps e20's append-accreted small files
-    * from degrading scan efficiency. The planner is a driver-side dir
-    * listing (bounded by bin count); the rewrite reads ONLY the fragmented
-    * bins (partition-pruned) and lands one file per bin (`repartition` on
-    * the partition column ⇒ one writer task's output per bin, the
-    * scd2WriteTable layout rule). Bins at or under the threshold keep
-    * their files (pinned in `PipelineQueriesSpec`). Returns compacted bins.
-    * `partCol` names the partition column, as in [[deleteFromIvfIndex]].
-    */
-  def compactIvfIndex(spark: SparkSession, indexPath: String,
-      maxFiles: Int = 1, partCol: String = "centroid_id"): Seq[Long] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(indexPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val frag = (if (fs.exists(root)) fs.listStatus(root).toSeq else Nil)
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith(s"$partCol="))
-      .filter(d => fs.listStatus(d.getPath).count { f =>
-        val n = f.getPath.getName
-        f.isFile && n.startsWith("part-") && n.endsWith(".parquet")
-      } > maxFiles)
-      .map(_.getPath.getName.stripPrefix(s"$partCol=").toLong)
-      .sorted
-    if (frag.isEmpty) return Nil
-    val scanned = spark.read.option("basePath", indexPath).parquet(indexPath)
-    // schema-derived projection, like deleteFromIvfIndex: metadata columns
-    // in the inverted lists must survive a compaction rewrite
-    val dataCols = scanned.columns.filterNot(_ == partCol).toSeq
-    val kept = scanned
-      .filter(col(partCol).cast("long").isin(frag: _*))
-      .select(dataCols.map(col) :+
-        col(partCol).cast("long").as(partCol): _*)
-    PartitionSwap.overwrite(kept.repartition(col(partCol)), indexPath, Seq(partCol))
-    frag
-  }
-
   /** e23: INDEX COMPACTION in the gate — e20's append pattern run three
-    * ways (the corpus lands in three chunks, so every bin accretes ~3
-    * small files), then [[compactIvfIndex]] collapses each fragmented bin
-    * to one file, then e18's serving runs over the compacted lists. The
-    * oracle is e18's full-corpus SQL for the THIRD time — persist (e18),
-    * append (e20), and now compact must each be invisible to query
-    * results; hash equality is the compaction-lost-nothing proof, and the
-    * one-file-per-bin physical outcome is spec-pinned.
+    * ways (the corpus lands in three commits, so every bin accretes ~3
+    * small files), then [[SnapshotLog.compact]] collapses each fragmented
+    * bin to one file (calm bins carried by reference), then e18's serving
+    * runs over the compacted lists. The oracle is e18's full-corpus SQL
+    * for the THIRD time — persist (e18), append (e20), and now compact
+    * must each be invisible to query results; hash equality is the
+    * compaction-lost-nothing proof, and the one-file-per-bin physical
+    * outcome is spec-pinned.
     */
   def e23IvfCompact(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
     val emb = table(spark, sfDir, "embeddings")
-    val dir = new java.io.File(
-      s"target/parity/ivf-cindex-${sfDir.replaceAll("[^A-Za-z0-9.]+", "_")}")
-      .getAbsoluteFile.toString
-    (0 to 2).foreach { r =>
-      assignToCentroids(spark, sfDir,
-          emb.filter(pmod(col("vec_id"), lit(3)) === r))
-        .write.mode(if (r == 0) "overwrite" else "append")
-        .partitionBy("centroid_id").parquet(s"file:$dir")
-    }
-    compactIvfIndex(spark, s"file:$dir", maxFiles = 1)
+    def chunk(r: Int) = assignToCentroids(spark, sfDir,
+      emb.filter(pmod(col("vec_id"), lit(3)) === r))
+    val tbl = rebuildIndex(spark,
+      ScratchDirs.parity(s"ivf-cindex-${ScratchDirs.tag(sfDir)}"), chunk(0),
+      "centroid_id")
+    (1 to 2).foreach(r =>
+      MicroBatchJob.appendKeyed(spark, tbl, chunk(r), s"chunk-$r",
+        Some("centroid_id")))
+    SnapshotLog.compact(spark, tbl, Some("centroid_id"), maxFilesPerPartition = 1)
 
     val queries = assignToCentroids(spark, sfDir, emb.filter(col("vec_id") < 10))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id"))
-    val bins = queries.select(col("centroid_id").cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val idx = spark.read.option("basePath", s"file:$dir").parquet(s"file:$dir")
-      .filter(col("centroid_id").cast("int").isin(bins: _*))
-      .select(col("vec_id").as("neighbor_id"), col("embedding"),
-        col("centroid_id").cast("long").as("centroid_id"))
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("sim_dec").desc, col("neighbor_id").asc)
-    idx.join(broadcast(queries), "centroid_id")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim_dec", dot(col("q_emb"), col("embedding")).cast("decimal(20,6)"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("sim_dec").cast("double").as("ivf_sim"))
+    serveManifestFiles(spark, queries, headManifest(spark, tbl), k)
   }
 
-  /** Split every physical bin of a persisted IVF index holding more than
-    * `bound` vectors into ceil(m/bound) balanced children in ONE pass (the
-    * SPFresh/DiskANN bin-split discipline: appends are cheap because they
-    * never rebalance, so SOME maintenance must keep per-bin partitions
-    * bounded or the hottest bin eventually makes every rewrite — compact,
-    * delete, re-cluster — a full-partition monster). Physical layout:
-    * partition column `pbin`, initially equal to the logical coarse bin
-    * `centroid_id`; a split rewrites ONLY the overflowing partitions
-    * (one staged swap, old-or-new per bin — untouched bins keep file
-    * identity, spec-pinned) into analytically-counted balanced children
-    * along each bin's own mean direction (dot with the bin mean, vec_id
-    * tiebreak) — geometry-aware, so children stay locally coherent. The
-    * logical → physical map lands as a tiny parquet at `mapPath`; serving
-    * probes a logical bin and reads its physical children via the map. Query
-    * results are INVARIANT by construction (children partition the
-    * parent), which is exactly what the e35 oracle states.
+  /** Split every physical bin of the head of a `pbin`-keyed index table
+    * holding more than `bound` vectors into ceil(m/bound) balanced
+    * children in ONE pass (the SPFresh/DiskANN bin-split discipline:
+    * appends are cheap because they never rebalance, so SOME maintenance
+    * must keep per-bin lists bounded or the hottest bin eventually makes
+    * every rewrite — compact, delete, re-cluster — a full-list monster).
+    * `pbin` starts equal to the logical coarse bin `centroid_id`; the
+    * split is itself a COMMIT: the overflowing bins' files are read
+    * (selected by their `_pbin=` manifest path level, pure string
+    * matching), the reassigned children ([[splitAssign]]) land as the
+    * commit's fresh files, and every other file is CARRIED by reference,
+    * so untouched bins keep physical identity (spec-pinned). With
+    * `commitKey` a replay no-ops. The logical → physical map re-persists
+    * at `mapPath` from the same aggregation, so serving always reads a map
+    * consistent with the live manifest: it probes a logical bin and reads
+    * its physical children. Query results are INVARIANT by construction
+    * (children partition the parent), which is exactly what the e35
+    * oracle states.
     *
-    * Scale shape: sizes come from one zero-column counting scan; the
-    * single rewrite touches only overflowing partitions (cost ∝ overflow
-    * volume, never index size — the child count is computed analytically,
-    * so there is no per-level loop to pay); the map is bounded by
-    * physical-bin count. Split-key determinism is NOT load-bearing: any
-    * assignment of a parent's rows to its children serves identically.
+    * Scale shape: sizes and the map come from one column-pruned
+    * aggregation (output bounded by bin count); the single rewrite touches
+    * only overflowing bins (cost ∝ overflow volume, never index size — the
+    * child count is computed analytically, so there is no per-level loop
+    * to pay). Split-key determinism is NOT load-bearing: any assignment of
+    * a parent's rows to its children serves identically.
     */
-  def splitIvfBins(spark: SparkSession, indexPath: String, mapPath: String,
-      bound: Long): Seq[(Long, Long)] = {
-    // ONE bounded aggregation (column-pruned, output bounded by bin
-    // count) yields both the logical map and the per-bin sizes — a
-    // production deploy persists the map incrementally instead
-    val agg = spark.read.option("basePath", indexPath).parquet(indexPath)
+  def splitBins(spark: SparkSession, tablePath: String, mapPath: String,
+      bound: Long, commitKey: Option[String] = None): Seq[(Long, Long)] = {
+    val mf = SnapshotLog.latestVersion(spark, tablePath)
+      .map(SnapshotLog.manifest(spark, tablePath, _)).getOrElse(return Nil)
+    val replayed =
+      commitKey.exists(SnapshotLog.commitKeys(spark, tablePath).contains)
+    // a generation's codebook sidecar has its own schema and describes the
+    // whole index, never one bin: it is never a list, and it is carried
+    // forward with every other file the split does not rewrite
+    val lists = ivfLists(spark, mf, "pbin")
+    // ONE bounded aggregation yields both the logical map (each physical
+    // bin holds a single logical bin — appends target logical ids, splits
+    // inherit the parent's) and the per-bin sizes
+    val agg = lists.read(spark, lists.files.keys)
       .groupBy(col("pbin").cast("long").as("pbin"),
         col("centroid_id").cast("long").as("l")).count()
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val logicalOf = scala.collection.mutable.Map.empty[Long, Long]
     agg.foreach { case (p, l, _) => logicalOf(p) = l }
-    val sizes = agg.groupBy(_._1).map { case (p, rs) =>
-      p -> rs.map(_._3).sum }
-    val over = sizes.filter(_._2 > bound).keys.toSeq.sorted
     val splits = scala.collection.mutable.Buffer.empty[(Long, Long)]
-    if (over.nonEmpty) {
-      // one partition-pruned read of the overflowing bins
-      val rows = spark.read.option("basePath", indexPath)
-        .parquet(indexPath)
-        .filter(col("pbin").cast("long").isin(over: _*))
-        .select(col("vec_id"), col("embedding"),
-          col("centroid_id").cast("long").as("centroid_id"),
-          col("pbin").cast("long").as("pbin"))
-      // the staged write reads every source row before any live bin moves
-      PartitionSwap.overwrite(
-        splitAssign(rows, over.map(b => b -> sizes(b)).toMap, bound,
-          logicalOf, splits).repartition(col("pbin")),
-        indexPath, Seq("pbin"))
+    if (!replayed) {
+      val sizes = agg.groupBy(_._1).map { case (p, rs) =>
+        p -> rs.map(_._3).sum }
+      val over = sizes.filter(_._2 > bound).keys.toSeq.sorted
+      if (over.nonEmpty) {
+        val rows = lists.read(spark, over)
+          .select(col("vec_id"), col("embedding"),
+            col("centroid_id").cast("long").as("centroid_id"),
+            col("pbin").cast("long").as("pbin"))
+        SnapshotLog.commit(spark, tablePath,
+          splitAssign(rows, over.map(b => b -> sizes(b)).toMap, bound,
+            logicalOf, splits),
+          carried = mf.filterNot(over.flatMap(lists.files).toSet),
+          commitKey = commitKey, partitionBy = Some("pbin"))
+      }
     }
     writeBinMap(spark, mapPath, logicalOf.toMap)
     splits.toSeq
   }
 
-  /** The split core shared by [[splitIvfBins]] (directory-partitioned
-    * index) and [[splitSnapshotBins]] (SnapshotLog-backed index): given
-    * the rows of the OVERFLOWING bins and their sizes, return the same
+  /** The split core of [[splitBins]]: given the rows of the OVERFLOWING bins and their sizes, return the same
     * rows with `pbin` reassigned to c = ceil(m/bound) balanced children
     * per bin — the child count computed ANALYTICALLY from the bin size
     * alone (what repeated median splitting converges to, without paying
@@ -2690,114 +2578,24 @@ object VectorQueries {
       logicalOf.toSeq.map { case (p, l) => (l, p) }).toDF("bin", "pbin")
       .coalesce(1).write.mode("overwrite").parquet(mapPath)
 
-  /** [[splitIvfBins]] for a SnapshotLog-backed stream-built index (st24):
-    * the split is itself a keyed SnapshotLog COMMIT — the overflowing
-    * bins' files are read (selected by their `_pbin=` manifest path level,
-    * pure string matching), the reassigned children land as the commit's
-    * fresh files, and every other file is CARRIED by reference, so replay
-    * no-ops on the key and untouched bins keep physical identity. The
-    * logical→physical map re-persists from the post-split data (bounded
-    * distinct over two int columns) so serving always reads a map
-    * consistent with the live manifest.
+  /** Re-derive a split index's logical → physical map from its LIVE head
+    * manifest (one bounded, column-pruned aggregation — output ∝ physical
+    * bin count) and re-persist it at `mapPath`: the map-refresh half of a
+    * destructive maintenance pass. A delete can empty a physical child
+    * out of the manifest, and a map that still names it would make serving
+    * probe a child with no files. Each physical bin holds exactly one
+    * logical bin — an invariant appends (target logical ids) and splits
+    * (children inherit the parent's) both preserve — so the map derived
+    * from the data is consistent with the manifest by construction.
     */
-  def splitSnapshotBins(spark: SparkSession, tablePath: String,
-      mapPath: String, bound: Long, commitKey: String): Seq[(Long, Long)] = {
-    val v = SnapshotLog.latestVersion(spark, tablePath)
-      .getOrElse(return Nil)
-    val replayed = SnapshotLog.commitKeys(spark, tablePath).contains(commitKey)
-    val mfAll = SnapshotLog.manifest(spark, tablePath, v)
-    // scan DATA files only — a generation's codebook sidecar has its own
-    // schema and describes the whole index, never one bin; it is carried
-    // forward by reference with every other non-rewritten file
-    val mf = SnapshotLog.dataFiles(mfAll)
-    // ONE bounded aggregation yields both the logical map (each physical
-    // bin holds a single logical bin — appends target logical ids, splits
-    // inherit the parent's) and the per-bin sizes
-    val agg = SnapshotLog.readFiles(spark, mf)
-      .groupBy(col("pbin").cast("long").as("pbin"),
-        col("centroid_id").cast("long").as("l")).count()
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val logicalOf = scala.collection.mutable.Map.empty[Long, Long]
-    agg.foreach { case (p, l, _) => logicalOf(p) = l }
-    val splits = scala.collection.mutable.Buffer.empty[(Long, Long)]
-    if (!replayed) {
-      val sizes = agg.groupBy(_._1).map { case (p, rs) =>
-        p -> rs.map(_._3).sum }
-      val over = sizes.filter(_._2 > bound).keys.toSeq.sorted
-      if (over.nonEmpty) {
-        val parentFiles = mf.filter(f =>
-          over.exists(b => f.contains(s"/_pbin=$b/")))
-        val rows = SnapshotLog.readFiles(spark, parentFiles)
-          .select(col("vec_id"), col("embedding"),
-            col("centroid_id").cast("long").as("centroid_id"),
-            col("pbin").cast("long").as("pbin"))
-        val rewritten = splitAssign(rows,
-          over.map(b => b -> sizes(b)).toMap, bound, logicalOf, splits)
-        SnapshotLog.commit(spark, tablePath, rewritten,
-          carried = mfAll.filterNot(parentFiles.toSet),
-          commitKey = Some(commitKey), partitionBy = Some("pbin"))
-      }
-    }
-    writeBinMap(spark, mapPath, logicalOf.toMap)
-    splits.toSeq
-  }
-
-  /** [[deleteFromIvfIndex]] for a SnapshotLog-backed split index (st25):
-    * the takedown is itself a keyed SnapshotLog COMMIT — the bins holding
-    * a doomed vector are found by a column-pruned semi-join over the live
-    * manifest, ONLY those bins' files are read and rewritten anti-joined
-    * against the tombstones, every other file is CARRIED by reference, and
-    * a replay no-ops on the key. A fully-doomed bin simply contributes no
-    * fresh files and its old ones are not carried, so it vanishes from the
-    * manifest without any directory surgery (cleaner than the raw-dir
-    * case's emptied-partition sweep). The logical→physical map re-persists
-    * from the post-delete manifest so serving never probes a dead child.
-    * Returns the rewritten bin ids (empty on replay or no-match).
-    */
-  def deleteSnapshotBins(spark: SparkSession, tablePath: String,
-      doomed: DataFrame, mapPath: String, commitKey: String): Seq[Long] = {
-    val v = SnapshotLog.latestVersion(spark, tablePath)
-      .getOrElse(return Nil)
-    val replayed = SnapshotLog.commitKeys(spark, tablePath).contains(commitKey)
-    var affected: Seq[Long] = Nil
-    if (!replayed) {
-      val mfAll = SnapshotLog.manifest(spark, tablePath, v)
-      val mf = SnapshotLog.dataFiles(mfAll) // sidecars carried, never scanned
-      val scanned = SnapshotLog.readFiles(spark, mf)
-      affected = scanned
-        .join(broadcast(doomed), Seq("vec_id"), "left_semi")
-        .select(col("pbin").cast("long").as("b"))
-        .distinct().collect().map(_.getLong(0)).toSeq.sorted
-      if (affected.nonEmpty) {
-        val parentFiles = mf.filter(f =>
-          affected.exists(b => f.contains(s"/_pbin=$b/")))
-        // schema-derived projection (the deleteFromIvfIndex rule):
-        // metadata columns in the lists must survive the rewrite
-        val touched = SnapshotLog.readFiles(spark, parentFiles)
-        val dataCols = touched.columns.filterNot(_ == "pbin").toSeq
-        val kept = touched
-          .join(broadcast(doomed), Seq("vec_id"), "left_anti")
-          .select(dataCols.map(col) :+
-            col("pbin").cast("long").as("pbin"): _*)
-        SnapshotLog.commit(spark, tablePath, kept,
-          carried = mfAll.filterNot(parentFiles.toSet),
-          commitKey = Some(commitKey), partitionBy = Some("pbin"))
-      }
-    }
-    // map refresh from the LIVE manifest — bounded agg, the
-    // splitSnapshotBins discipline: serving must never probe a child the
-    // delete emptied out of the manifest
-    val vNow = SnapshotLog.latestVersion(spark, tablePath).getOrElse(return affected)
-    val mfNow = SnapshotLog.dataFiles(
-      SnapshotLog.manifest(spark, tablePath, vNow))
-    if (mfNow.nonEmpty) {
-      val live = SnapshotLog.readFiles(spark, mfNow)
+  def refreshBinMap(spark: SparkSession, tablePath: String,
+      mapPath: String): Unit = {
+    val lists = ivfLists(spark, headManifest(spark, tablePath), "pbin")
+    if (lists.files.nonEmpty)
+      writeBinMap(spark, mapPath, lists.read(spark, lists.files.keys)
         .select(col("pbin").cast("long").as("pbin"),
           col("centroid_id").cast("long").as("l"))
-        .distinct().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      writeBinMap(spark, mapPath, live)
-    }
-    affected
+        .distinct().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
   }
 
   /** e35: BIN-SPLIT MAINTENANCE — the missing piece between e20 (append
@@ -2805,82 +2603,48 @@ object VectorQueries {
     * under sustained appends the hottest coarse bin grows without bound,
     * and with it the cost of every per-bin rewrite and every probe that
     * touches it. e35 builds the index with e20's base+append, then
-    * [[splitIvfBins]] caps every physical bin at corpus/5 (the 4-bin demo
+    * [[splitBins]] caps every physical bin at corpus/5 (the 4-bin demo
     * layout guarantees an overflow by pigeonhole), then serves e20's
     * query set THROUGH the persisted logical→physical map: probed coarse
-    * bins map to their physical children, the scan partition-prunes on
-    * the children, and the ranking math is e20's verbatim. The oracle is
-    * e18's full-corpus SQL for the FOURTH time — persist, append, compact,
-    * and now split must each be invisible to results; hash equality proves
-    * the split lost nothing and the map routes every probe correctly.
+    * bins map to their physical children, the read opens only the
+    * children's files, and the ranking math is e20's verbatim. The oracle
+    * is e18's full-corpus SQL for the FOURTH time — persist, append,
+    * compact, and now split must each be invisible to results; hash
+    * equality proves the split lost nothing and the map routes every
+    * probe correctly.
     *
     * Scale shape: maintenance cost ∝ overflow volume (only oversized
-    * partitions rewrite, logarithmic rounds); serving adds one broadcast-
-    * sized map lookup; bounded bins keep delete/compact/re-cluster
-    * rewrites bounded forever after.
+    * bins rewrite, in one pass); serving adds one broadcast-sized map
+    * lookup; bounded bins keep delete/compact/re-cluster rewrites bounded
+    * forever after.
     */
   def e35BinSplitMaintain(spark: SparkSession, sfDir: String,
       k: Int = 3): DataFrame = {
     val emb = table(spark, sfDir, "embeddings")
-    val dir = new java.io.File(
-      s"target/parity/ivf-bindex-${sfDir.replaceAll("[^A-Za-z0-9.]+", "_")}")
-      .getAbsoluteFile.toString
-    val oldCorpus = emb.filter(pmod(col("vec_id"), lit(10)) =!= 7)
-    val newBatch = emb.filter(pmod(col("vec_id"), lit(10)) === 7)
-    assignToCentroids(spark, sfDir, oldCorpus)
-      .withColumn("pbin", col("centroid_id"))
-      .write.mode("overwrite").partitionBy("pbin").parquet(s"file:$dir")
-    assignToCentroids(spark, sfDir, newBatch)
-      .withColumn("pbin", col("centroid_id"))
-      .write.mode("append").partitionBy("pbin").parquet(s"file:$dir")
-
-    val bound = math.max(1L, emb.count() / 5)
-    val mapPath = s"file:$dir-map"
-    splitIvfBins(spark, s"file:$dir", mapPath, bound)
-
+    val (tbl, mapPath) = splitIndex(spark, sfDir, emb, "ivf-bindex")
     val queries = assignToCentroids(spark, sfDir, emb.filter(col("vec_id") < 10))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id"))
-    val probed = queries.select(col("centroid_id").cast("long").as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq.sorted
-    // logical → physical through the persisted map (bounded rows)
-    val pbins = ParquetFooterSchema.read(spark, mapPath)
-      .filter(col("bin").isin(probed: _*))
-      .select(col("pbin")).collect().map(_.getLong(0)).toSeq.sorted
-    val idx = spark.read.option("basePath", s"file:$dir").parquet(s"file:$dir")
-      .filter(col("pbin").cast("long").isin(pbins: _*))
-      .select(col("vec_id").as("neighbor_id"), col("embedding"),
-        col("centroid_id").cast("long").as("centroid_id"))
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("sim_dec").desc, col("neighbor_id").asc)
-    idx.join(broadcast(queries), "centroid_id")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim_dec", dot(col("q_emb"), col("embedding")).cast("decimal(20,6)"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("sim_dec").cast("double").as("ivf_sim"))
+    serveManifestFiles(spark, queries, headManifest(spark, tbl), k, Some(mapPath))
   }
 
-  /** Re-derive a split index's logical→physical map from the LIVE index
-    * contents (one bounded, column-pruned aggregation — output ∝ physical
-    * bin count) and re-persist it at `mapPath`. This is the map-refresh
-    * half of every destructive maintenance pass: a delete can empty a
-    * physical child entirely (its directory is dropped), and a map that
-    * still names the dead child would make serving probe paths that no
-    * longer exist. Deriving from the data itself — each physical bin holds
-    * exactly one logical bin, an invariant appends (target logical ids)
-    * and splits (children inherit the parent's) both preserve — keeps the
-    * persisted map consistent with the live manifest by construction, the
-    * same discipline [[splitSnapshotBins]] applies per commit.
+  /** The split index e35 and e36 start from, at `target/parity/<kind>-<sf>`:
+    * e20's base+append build keyed by `pbin` (= centroid_id), then
+    * [[splitBins]] at bound corpus/5, its map beside the table at
+    * `<table>-map`. Returns (table path, map path).
     */
-  def refreshBinMap(spark: SparkSession, indexPath: String,
-      mapPath: String): Unit = {
-    val live = spark.read.option("basePath", indexPath).parquet(indexPath)
-      .select(col("pbin").cast("long").as("pbin"),
-        col("centroid_id").cast("long").as("l"))
-      .distinct().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    writeBinMap(spark, mapPath, live)
+  private def splitIndex(spark: SparkSession, sfDir: String, emb: DataFrame,
+      kind: String): (String, String) = {
+    def asg(rows: DataFrame) = assignToCentroids(spark, sfDir, rows)
+      .withColumn("pbin", col("centroid_id"))
+    val tbl = rebuildIndex(spark,
+      ScratchDirs.parity(s"$kind-${ScratchDirs.tag(sfDir)}"),
+      asg(emb.filter(pmod(col("vec_id"), lit(10)) =!= 7)), "pbin")
+    MicroBatchJob.appendKeyed(spark, tbl,
+      asg(emb.filter(pmod(col("vec_id"), lit(10)) === 7)), "append", Some("pbin"))
+    val mapPath = s"$tbl-map"
+    splitBins(spark, tbl, mapPath, math.max(1L, emb.count() / 5))
+    (tbl, mapPath)
   }
 
   /** e36: THE FULL SPLIT-BIN MAINTENANCE LIFECYCLE — e35 proved
@@ -2888,24 +2652,24 @@ object VectorQueries {
     * interaction is a TAKEDOWN landing in a split CHILD routed through the
     * logical→physical map, followed by a compaction — the e21/u8 deletion
     * discipline and the e23 compaction discipline composed onto the split
-    * layout. Chain: e20's base+append build (pbin = centroid_id) →
-    * [[splitIvfBins]] caps every physical bin at corpus/5 (pigeonhole
-    * guarantees at least one coarse bin splits) → [[deleteFromIvfIndex]]
-    * over `pbin` removes a scattered doomed set (vec_id % 10 = 3 — ids in
-    * every coarse bin, so deletions land in split children, not just
-    * un-split parents) rewriting only the children that actually hold a
-    * doomed vector → [[compactIvfIndex]] over `pbin` collapses fragmented
-    * children → [[refreshBinMap]] re-derives the map from the live index
-    * (a fully-doomed child's directory is gone; the map must not name it)
-    * → e35's serving path through the refreshed map. The oracle is e21's
-    * SQL (the e18 search over corpus MINUS the doomed set): split,
-    * delete-routing, compaction, and the map refresh must each be
-    * invisible to results — hash equality proves no deleted vector
-    * survives, no innocent one is lost, and the map routes every probe
-    * to the surviving children. (The reference analogue is the idempotent
-    * partition-rewrite discipline of `bigquery_interaction.py:19-20` —
-    * rewrite exactly the affected partition, leave the rest byte-stable —
-    * applied to index bins.)
+    * layout. Chain: e35's split index (e20's base+append build, pbin =
+    * centroid_id, [[splitBins]] capping every physical bin at corpus/5 —
+    * pigeonhole guarantees at least one coarse bin splits) →
+    * [[deleteBins]] over `pbin` removes a scattered doomed set (vec_id %
+    * 10 = 3 — ids in every coarse bin, so deletions land in split
+    * children, not just un-split parents) rewriting only the children
+    * that actually hold a doomed vector, and refreshes the map off the
+    * live manifest (a fully-doomed child has no files left; the map must
+    * not name it) → [[SnapshotLog.compact]] over `pbin` collapses
+    * fragmented children → e35's serving path through the refreshed map.
+    * The oracle is e21's SQL (the e18 search over corpus MINUS the doomed
+    * set): split, delete-routing, compaction, and the map refresh must
+    * each be invisible to results — hash equality proves no deleted
+    * vector survives, no innocent one is lost, and the map routes every
+    * probe to the surviving children. (The reference analogue is the
+    * idempotent partition-rewrite discipline of
+    * `bigquery_interaction.py:19-20` — rewrite exactly the affected
+    * partition, leave the rest byte-stable — applied to index bins.)
     *
     * Scale shape: every stage's rewrite is bounded — split ∝ overflow
     * volume, delete ∝ bins holding doomed ids, compact ∝ fragmented bins,
@@ -2916,59 +2680,24 @@ object VectorQueries {
   def e36SplitLifecycle(spark: SparkSession, sfDir: String,
       k: Int = 3): DataFrame = {
     val emb = table(spark, sfDir, "embeddings")
-    val dir = new java.io.File(
-      s"target/parity/ivf-lindex-${sfDir.replaceAll("[^A-Za-z0-9.]+", "_")}")
-      .getAbsoluteFile.toString
-    val oldCorpus = emb.filter(pmod(col("vec_id"), lit(10)) =!= 7)
-    val newBatch = emb.filter(pmod(col("vec_id"), lit(10)) === 7)
-    assignToCentroids(spark, sfDir, oldCorpus)
-      .withColumn("pbin", col("centroid_id"))
-      .write.mode("overwrite").partitionBy("pbin").parquet(s"file:$dir")
-    assignToCentroids(spark, sfDir, newBatch)
-      .withColumn("pbin", col("centroid_id"))
-      .write.mode("append").partitionBy("pbin").parquet(s"file:$dir")
-
-    val bound = math.max(1L, emb.count() / 5)
-    val mapPath = s"file:$dir-map"
-    splitIvfBins(spark, s"file:$dir", mapPath, bound)
-
+    val (tbl, mapPath) = splitIndex(spark, sfDir, emb, "ivf-lindex")
     // takedown routed through the split layout: only children holding a
     // doomed vector rewrite (calm siblings keep file identity — pinned in
-    // PipelineQueriesSpec on the isolated-bin variant), then compaction
-    // collapses whatever the delete fragmented, then the map refreshes
-    // off the live index
-    val doomed = emb.filter(pmod(col("vec_id"), lit(10)) === 3)
-      .select("vec_id")
-    deleteFromIvfIndex(spark, s"file:$dir", doomed, partCol = "pbin")
-    compactIvfIndex(spark, s"file:$dir", maxFiles = 1, partCol = "pbin")
-    refreshBinMap(spark, s"file:$dir", mapPath)
+    // PipelineQueriesSpec on the isolated-bin variant), the map refreshes
+    // off the live manifest, then compaction collapses whatever the
+    // delete fragmented
+    deleteBins(spark, tbl,
+      emb.filter(pmod(col("vec_id"), lit(10)) === 3).select("vec_id"),
+      "pbin", Some(mapPath))
+    SnapshotLog.compact(spark, tbl, Some("pbin"), maxFilesPerPartition = 1)
 
-    // e35's serving path, verbatim, over the post-lifecycle index: probe
-    // logical bins, map to surviving physical children, partition-prune
-    // the scan to those children (queries exclude the doomed ids, the e21
-    // convention)
+    // e35's serving path, verbatim, over the post-lifecycle index (queries
+    // exclude the doomed ids, the e21 convention)
     val queries = assignToCentroids(spark, sfDir,
       emb.filter(col("vec_id") < 10 && pmod(col("vec_id"), lit(10)) =!= 3))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id"))
-    val probed = queries.select(col("centroid_id").cast("long").as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq.sorted
-    val pbins = ParquetFooterSchema.read(spark, mapPath)
-      .filter(col("bin").isin(probed: _*))
-      .select(col("pbin")).collect().map(_.getLong(0)).toSeq.sorted
-    val idx = spark.read.option("basePath", s"file:$dir").parquet(s"file:$dir")
-      .filter(col("pbin").cast("long").isin(pbins: _*))
-      .select(col("vec_id").as("neighbor_id"), col("embedding"),
-        col("centroid_id").cast("long").as("centroid_id"))
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("sim_dec").desc, col("neighbor_id").asc)
-    idx.join(broadcast(queries), "centroid_id")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim_dec", dot(col("q_emb"), col("embedding")).cast("decimal(20,6)"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("sim_dec").cast("double").as("ivf_sim"))
+    serveManifestFiles(spark, queries, headManifest(spark, tbl), k, Some(mapPath))
   }
 
   /** e37: INDEX RE-TRAIN + BLUE-GREEN GENERATION SWAP — the one ANN
@@ -3017,10 +2746,10 @@ object VectorQueries {
     */
   def e37RetrainSwap(spark: SparkSession, sfDir: String,
       k: Int = 3): DataFrame = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sfTag = ScratchDirs.tag(sfDir)
     val emb = table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val tbl = s"file:${parityDir(s"ivf-genlog-$sfTag")}"
+    val tbl = s"file:${ScratchDirs.parity(s"ivf-genlog-$sfTag")}"
     MicroBatchJob.wipe(spark, tbl)
 
     // generation 1 (blue): the serving geometry to date — e18's demo
@@ -3087,12 +2816,7 @@ object VectorQueries {
       else assignToGivenCentroids(qEmb, cents))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id"))
-    val probed = queries.select(col("centroid_id").cast("long").as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq.sorted
-    val mf = SnapshotLog.manifest(spark, tbl, head)
-    val idxFiles = SnapshotLog.dataFiles(mf)
-      .filter(f => probed.exists(b => f.contains(s"/_centroid_id=$b/")))
-    serveManifestFiles(spark, queries, mf, idxFiles, k)
+    serveManifestFiles(spark, queries, SnapshotLog.manifest(spark, tbl, head), k)
   }
 
   /** st26: STREAMING SERVING ACROSS THE GENERATION SWAP — e37's blue-green
@@ -3121,13 +2845,13 @@ object VectorQueries {
     */
   def st26StreamingGenerationSwap(spark: SparkSession, sfDir: String,
       k: Int = 3): DataFrame = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sfTag = ScratchDirs.tag(sfDir)
     val emb = table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val genTbl = s"file:${parityDir(s"ivf-st26gen-$sfTag")}"
-    val resTbl = s"file:${parityDir(s"ivf-st26res-$sfTag")}"
-    val tickDirF = parityDir(s"ivf-st26tick-$sfTag")
-    val ckptDir = parityDir(s"ivf-st26ckpt-$sfTag")
+    val genTbl = s"file:${ScratchDirs.parity(s"ivf-st26gen-$sfTag")}"
+    val resTbl = s"file:${ScratchDirs.parity(s"ivf-st26res-$sfTag")}"
+    val tickDirF = ScratchDirs.parity(s"ivf-st26tick-$sfTag")
+    val ckptDir = ScratchDirs.parity(s"ivf-st26ckpt-$sfTag")
     MicroBatchJob.wipe(spark, genTbl, resTbl, s"file:$ckptDir")
 
     // 4 one-row serving-tick files → 4 micro-batches (the stream carries
@@ -3194,7 +2918,7 @@ object VectorQueries {
     * lands in the MIDDLE of st24's maintained ingest stream, proving the
     * re-index does not race the maintenance commits. The loop is st24's
     * verbatim — batchId-keyed appends into `pbin`-keyed inverted lists,
-    * in-loop per-list compaction, [[splitSnapshotBins]] capping bins at
+    * in-loop per-list compaction, [[splitBins]] capping bins at
     * odd batches — with two generation twists: (a) the serving GEOMETRY
     * deploys as the index's FIRST commit (a codebook sidecar with zero
     * data rows — the production order: a trained codebook ships, then
@@ -3226,14 +2950,14 @@ object VectorQueries {
     */
   def st27SwapUnderMaintenance(spark: SparkSession, sfDir: String,
       k: Int = 3): DataFrame = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sfTag = ScratchDirs.tag(sfDir)
     val emb = table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val (splitDir, nEmb) = embSplitFixture(emb, sfDir)
     val bound = math.max(1L, (nEmb - 1) / 8)
-    val tbl = s"file:${parityDir(s"ivf-st27index-$sfTag")}"
-    val mapPath = s"file:${parityDir(s"ivf-st27map-$sfTag")}"
-    val ckptDir = parityDir(s"ivf-st27ckpt-$sfTag")
+    val tbl = s"file:${ScratchDirs.parity(s"ivf-st27index-$sfTag")}"
+    val mapPath = s"file:${ScratchDirs.parity(s"ivf-st27map-$sfTag")}"
+    val ckptDir = ScratchDirs.parity(s"ivf-st27ckpt-$sfTag")
     MicroBatchJob.wipe(spark, tbl, s"file:$ckptDir", mapPath)
 
     // gen-1 geometry deploys BEFORE any data: the demo codebook is the
@@ -3295,8 +3019,8 @@ object VectorQueries {
           ()
         }
         if (batchId % 2 == 1) {
-          splitSnapshotBins(bs, tbl, mapPath, bound,
-            commitKey = s"split-$batchId")
+          splitBins(bs, tbl, mapPath, bound,
+            commitKey = Some(s"split-$batchId"))
           ()
         }
     }
@@ -3310,16 +3034,9 @@ object VectorQueries {
     val queries = assignTrained(emb.filter(col("vec_id") < 10), centsHead)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id"))
-    val probed = queries.select(col("centroid_id").cast("long").as("b"))
-      .distinct().collect().map(_.getLong(0)).toSet
-    val pbins = ParquetFooterSchema.read(spark, mapPath)
-      .filter(col("bin").isin(probed.toSeq: _*))
-      .select(col("pbin")).collect().map(_.getLong(0)).toSeq.sorted
-    val mf = SnapshotLog.manifest(spark, tbl, vIdx)
-    val idxFiles = SnapshotLog.dataFiles(mf)
-      .filter(f => pbins.exists(p => f.contains(s"/_pbin=$p/")))
     val keys = SnapshotLog.commitKeys(spark, tbl)
-    serveManifestFiles(spark, queries, mf, idxFiles, k)
+    serveManifestFiles(spark, queries, SnapshotLog.manifest(spark, tbl, vIdx), k,
+      Some(mapPath))
       .withColumn("n_commits", lit(keys.count(_.startsWith("batch-"))))
       .withColumn("n_swaps", lit(keys.count(_ == "gen-2-retrain")))
       .withColumn("n_splits", lit(keys.count(_.startsWith("split-"))))
@@ -3327,7 +3044,7 @@ object VectorQueries {
 
   /** e38: BLUE-GREEN RE-TRAIN OF THE COMPRESSED INDEX — e37's generation
     * swap carried to the repo's own production ANN artifact, the IVF-PQ
-    * index (e32: bin-partitioned inverted lists of M-byte PQ codes). A
+    * index (e32: `bin`-keyed inverted lists of M-byte PQ codes). A
     * re-index here is strictly more than e37's: the coarse codebook AND
     * the M per-subspace fine codebooks re-train on the live corpus, and
     * every vector's CODES are re-encoded under the new fine geometry —
@@ -3364,10 +3081,10 @@ object VectorQueries {
     */
   def e38RetrainSwapCompressed(spark: SparkSession, sfDir: String,
       k: Int = 3): DataFrame = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sfTag = ScratchDirs.tag(sfDir)
     val emb = table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val tbl = s"file:${parityDir(s"ivfpq-genlog-$sfTag")}"
+    val tbl = s"file:${ScratchDirs.parity(s"ivfpq-genlog-$sfTag")}"
     MicroBatchJob.wipe(spark, tbl)
 
     // generation 1 (blue): the serving geometry to date — coarse + fine
@@ -3432,13 +3149,13 @@ object VectorQueries {
     */
   def st28StreamingPqGenerationSwap(spark: SparkSession, sfDir: String,
       k: Int = 3): DataFrame = {
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
+    val sfTag = ScratchDirs.tag(sfDir)
     val emb = table(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val genTbl = s"file:${parityDir(s"ivfpq-st28gen-$sfTag")}"
-    val resTbl = s"file:${parityDir(s"ivfpq-st28res-$sfTag")}"
-    val tickDirF = parityDir(s"ivfpq-st28tick-$sfTag")
-    val ckptDir = parityDir(s"ivfpq-st28ckpt-$sfTag")
+    val genTbl = s"file:${ScratchDirs.parity(s"ivfpq-st28gen-$sfTag")}"
+    val resTbl = s"file:${ScratchDirs.parity(s"ivfpq-st28res-$sfTag")}"
+    val tickDirF = ScratchDirs.parity(s"ivfpq-st28tick-$sfTag")
+    val ckptDir = ScratchDirs.parity(s"ivfpq-st28ckpt-$sfTag")
     MicroBatchJob.wipe(spark, genTbl, resTbl, s"file:$ckptDir")
 
     spark.range(4).select(col("id").as("tick"))
@@ -3532,103 +3249,60 @@ object VectorQueries {
       .join(assignTrained(qEmb, coarse)
         .select(col("vec_id").as("query_id"),
           col("centroid_id").as("bin")), "query_id")
-    val probed = qdots.select(col("bin").cast("long").as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq.sorted
-    val mf = SnapshotLog.manifest(spark, tbl, head)
-    val idxFiles = SnapshotLog.dataFiles(mf)
-      .filter(f => probed.exists(b => f.contains(s"/_bin=$b/")))
-    // the serveManifestFiles fallback rule, compressed: data files only,
-    // and an explicitly-typed empty frame when the generation holds ONLY
-    // its codebook sidecars (geometry deployed, no codes ingested yet) —
-    // a zero-path parquet read would throw (shared constant: see
-    // [[PqIndexRowSchema]] — the writer and this fallback cannot drift)
-    val dataMf = SnapshotLog.dataFiles(mf)
-    val idxRaw =
-      if (idxFiles.nonEmpty) SnapshotLog.readFiles(spark, idxFiles)
-      else if (dataMf.nonEmpty)
-        SnapshotLog.readFiles(spark, dataMf).filter(lit(false))
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        PqIndexRowSchema)
-    val idx = idxRaw
-      .select(col("vec_id").as("neighbor_id"), col("m"), col("code"),
-        col("bin").cast("long").as("bin"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("sim_sum").desc, col("neighbor_id").asc)
-    idx.join(broadcast(qdots), Seq("bin", "m", "code"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .groupBy("query_id", "neighbor_id")
-      .agg(sum(col("qd")).as("sim_sum"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("sim_sum").cast("double").as("fivfpq_sim"))
+    // a generation holding ONLY its codebook sidecars (geometry deployed,
+    // no codes ingested yet) reads as an empty PqIndexRowSchema frame
+    serveAdc(spark, ivfLists(spark, SnapshotLog.manifest(spark, tbl, head),
+      "bin", PqIndexRowSchema), qdots, k)
   }
 
   /** e21: INDEX DELETE — the takedown half of index maintenance (e20 adds,
     * this removes): a doomed-id list (content takedown / right-to-erasure,
     * the u2 scenario at index granularity) is removed from the persisted
     * inverted lists by rewriting ONLY the bins that contain a doomed
-    * vector. The affected-bin probe reads just (vec_id, centroid_id) — a
-    * column-pruned scan with the doomed set broadcast as a semi-join —
-    * then one staged partition swap rewrites those bins anti-joined
-    * against the tombstones. Untouched bins keep their files. Serving is
-    * e18's path unchanged; the oracle restates the search over the corpus
-    * MINUS the doomed set (queries likewise), so the hash fails if a
-    * deleted vector survives anywhere or an innocent one is lost.
+    * vector ([[deleteBins]]): the affected-bin probe reads just (vec_id,
+    * centroid_id) — a column-pruned scan with the doomed set broadcast as
+    * a semi-join — then one commit replaces those bins' files with their
+    * rewrite anti-joined against the tombstones. Untouched bins keep
+    * their files. Serving is e18's path unchanged; the oracle restates the
+    * search over the corpus MINUS the doomed set (queries likewise), so
+    * the hash fails if a deleted vector survives anywhere or an innocent
+    * one is lost.
     *
     * Scale shape: cost ∝ bins containing doomed ids, never index size —
     * a thousand-id takedown over a 10^10-vector index touches a handful of
-    * bin directories; centroids are trained PARAMETERS, so deleting corpus
+    * bins' files; centroids are trained PARAMETERS, so deleting corpus
     * vectors never changes bin geometry.
     */
   def e21IvfDelete(spark: SparkSession, sfDir: String, k: Int = 3): DataFrame = {
     val emb = table(spark, sfDir, "embeddings")
-    val dir = new java.io.File(
-      s"target/parity/ivf-dindex-${sfDir.replaceAll("[^A-Za-z0-9.]+", "_")}")
-      .getAbsoluteFile.toString
-    assignToCentroids(spark, sfDir, emb)
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(s"file:$dir")
-
-    val doomed = emb.filter(pmod(col("vec_id"), lit(10)) === 3)
-      .select("vec_id")
-    deleteFromIvfIndex(spark, s"file:$dir", doomed)
+    val tbl = rebuildIndex(spark,
+      ScratchDirs.parity(s"ivf-dindex-${ScratchDirs.tag(sfDir)}"),
+      assignToCentroids(spark, sfDir, emb), "centroid_id")
+    deleteBins(spark, tbl,
+      emb.filter(pmod(col("vec_id"), lit(10)) === 3).select("vec_id"),
+      "centroid_id")
 
     val queries = assignToCentroids(spark, sfDir,
       emb.filter(col("vec_id") < 10 && pmod(col("vec_id"), lit(10)) =!= 3))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id"))
-    val bins = queries.select(col("centroid_id").cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val idx = spark.read.option("basePath", s"file:$dir").parquet(s"file:$dir")
-      .filter(col("centroid_id").cast("int").isin(bins: _*))
-      .select(col("vec_id").as("neighbor_id"), col("embedding"),
-        col("centroid_id").cast("long").as("centroid_id"))
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("sim_dec").desc, col("neighbor_id").asc)
-    idx.join(broadcast(queries), "centroid_id")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim_dec", dot(col("q_emb"), col("embedding")).cast("decimal(20,6)"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("sim_dec").cast("double").as("ivf_sim"))
+    serveManifestFiles(spark, queries, headManifest(spark, tbl), k)
   }
 
   /** e19: FILTERED ANN — metadata-constrained search over the e18 persisted
     * index, the missing production dial: "nearest neighbors of q AMONG docs
     * matching a predicate" (licensed-only corpora, language slices, safety
     * tiers). The metadata column (`label`) is stored IN the inverted lists,
-    * so the filter is a parquet row-group predicate on the already
-    * bin-pruned read — post-filtering inside probed bins, the standard
+    * so the filter is a parquet row-group predicate on the read of the
+    * probed bins' files — post-filtering inside probed bins, the standard
     * filtered-IVF strategy. nprobe=2 compensates the thinner candidate set
     * (a fixed predicate prunes every bin roughly uniformly, so recall decay
     * is the e16 curve shifted, and the same dial recovers it).
     *
-    * Plan shape at 100 TB: probed-bin partition pruning (PartitionFilters)
-    * × pushed label predicate (PushedFilters) means the scan touches only
-    * matching row groups of probed bins — the read does the filtering, not
-    * a downstream operator. Both pins live in `PlanShapeSpec`. Candidates
+    * Plan shape at 100 TB: probed-bin file selection × pushed label
+    * predicate (PushedFilters) means the scan touches only matching row
+    * groups of probed bins — the read does the filtering, not a downstream
+    * operator. Both pins live in `PlanShapeSpec`. Candidates
     * are disjoint across probed bins by construction (a vector lives in
     * exactly one bin), so no cross-bin dedup.
     */
@@ -3645,31 +3319,17 @@ object VectorQueries {
     val assigned = ranked.filter(col("a_rk") === 1)
       .select(col("vec_id"), col("embedding"), col("label"), col("centroid_id"))
 
-    val dir = new java.io.File(
-      s"target/parity/ivf-findex-${sfDir.replaceAll("[^A-Za-z0-9.]+", "_")}")
-      .getAbsoluteFile.toString
-    assigned.write.mode("overwrite")
-      .partitionBy("centroid_id").parquet(s"file:$dir")
+    val tbl = rebuildIndex(spark,
+      ScratchDirs.parity(s"ivf-findex-${ScratchDirs.tag(sfDir)}"), assigned,
+      "centroid_id")
 
     val probes = ranked.filter(col("vec_id") < 10 && col("a_rk") <= nprobe)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("centroid_id"))
-    val bins = probes.select(col("centroid_id").cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val idx = spark.read.option("basePath", s"file:$dir").parquet(s"file:$dir")
-      .filter(col("centroid_id").cast("int").isin(bins: _*))
-      .filter(col("label").isin(1, 3, 5))
-      .select(col("vec_id").as("neighbor_id"), col("embedding"),
-        col("centroid_id").cast("long").as("centroid_id"))
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("sim_dec").desc, col("neighbor_id").asc)
-    idx.join(broadcast(probes), "centroid_id")
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim_dec", dot(col("q_emb"), col("embedding")).cast("decimal(20,6)"))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("sim_dec").cast("double").as("ivf_sim"))
+    rankIvf(probes,
+      ivfLists(spark, headManifest(spark, tbl), "centroid_id")
+        .read(spark, binIds(probes.select(col("centroid_id"))))
+        .filter(col("label").isin(1, 3, 5)), k)
   }
 
   /** e22: recall of the FILTERED search (e19) against the filtered

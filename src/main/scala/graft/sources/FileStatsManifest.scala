@@ -80,8 +80,7 @@ object FileStatsManifest {
     */
   def update(spark: SparkSession, root: String, statCols: Seq[String]): (Int, Int) = {
     import org.apache.hadoop.fs.Path
-    val mDir = s"${root.stripSuffix("/")}/$ManifestDirName"
-    val old = spark.read.parquet(mDir)
+    val old = readManifest(spark, root)
     val live = liveFiles(spark, root)
     import spark.implicits._
     // `_metadata.file_path` is URI-form (`file:///…`), FileSystem listings
@@ -105,8 +104,9 @@ object FileStatsManifest {
       if (newFiles.isEmpty) kept
       else kept.unionByName(
         collect(spark, root, statCols, newFiles).select(old.columns.map(col): _*))
-    // stage-then-swap: `merged` still lazily READS mDir, so the new
-    // generation is written in full before the old one is set aside
+    // stage-then-swap: `merged` still lazily READS the old manifest, so
+    // the new generation is written in full before the old one is set
+    // aside
     val rootP = new Path(root)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     PartitionSwap.swap(fs, rootP, ManifestDirName) { staging =>
@@ -114,6 +114,20 @@ object FileStatsManifest {
         .parquet(new Path(staging, ManifestDirName).toString)
     }
     (newFiles.length, live.length)
+  }
+
+  /** The manifest's rows: its `part-*.parquet` files, listed and read
+    * typed from one footer ([[SnapshotLog.readFiles]]). A read of the
+    * `_manifest` directory itself would log Spark's hidden-path warning
+    * and infer the schema in a job.
+    */
+  private def readManifest(spark: SparkSession, root: String): DataFrame = {
+    import org.apache.hadoop.fs.Path
+    val dir = new Path(s"${root.stripSuffix("/")}/$ManifestDirName")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    SnapshotLog.readFiles(spark, fs.listStatus(dir).toSeq.map(_.getPath)
+      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+      .map(_.toString))
   }
 
   /** All current data-file paths under `root` (what a scan would read). */
@@ -163,8 +177,7 @@ object FileStatsManifest {
     def norm(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
     val statCols = box.flatMap { case (c, _, _) =>
       Seq(col(s"min_$c").cast("long"), col(s"max_$c").cast("long")) }
-    val manifest = spark.read
-      .parquet(s"${root.stripSuffix("/")}/$ManifestDirName")
+    val manifest = readManifest(spark, root)
       .select(col("file") +: statCols: _*)
       .collect()
     val known = manifest.map(r => norm(r.getString(0))).toSet

@@ -10,9 +10,10 @@ import scala.util.control.NonFatal
   * single commit rule — one `table$YYYYMMDDHH` decorator loaded with
   * `WRITE_TRUNCATE`, atomically and idempotently
   * (`bigquery_interaction.py:18-20`, SURVEY §3.1) — stated once for every
-  * tree graft overwrites: the landing table (`year/month/day/hour`),
-  * key-bucket tables (`bucket`), IVF indexes (`centroid_id`, `pbin`) and
-  * x4's pack map (`split`).
+  * tree a plain parquet reader must discover and graft overwrites: the
+  * landing table (`year/month/day/hour`), key-bucket tables (`bucket`) and
+  * x4's pack map (`split`). Persisted vector indexes are not such trees:
+  * they are [[SnapshotLog]] tables, whose readers pin one manifest.
   *
   * Why not Spark's dynamic partition overwrite: a BigQuery decorator load
   * is job-atomic, while dynamic overwrite exposes a commit window as long as
@@ -22,8 +23,8 @@ import scala.util.control.NonFatal
   * two renames, and what remains is benign: a reader sees the old set, the
   * new set, or a clean transient absence/error it can retry — never a
   * silent mix. (Full reader-transparent atomicity needs a table format with
-  * a commit pointer — metastore/Iceberg-class — out of scope with no
-  * external deps.)
+  * a commit pointer, which [[SnapshotLog]] is for the tables that do not
+  * need discovery by other readers.)
   */
 object PartitionSwap {
 

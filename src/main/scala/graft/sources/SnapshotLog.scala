@@ -92,7 +92,10 @@ object SnapshotLog {
   private def versionFile(root: Path, v: Int) =
     new Path(logDir(root), f"v$v%05d.manifest")
 
-  private val ManifestName = raw"v(\d{5})\.manifest".r
+  /** A published manifest's name: `%05d` pads to five digits, and a
+    * version past 99,999 simply has more, so the match takes five or more.
+    */
+  private val ManifestName = raw"v(\d{5,})\.manifest".r
 
   private def listVersions(fs: FileSystem, root: Path): Seq[Int] = {
     val dir = logDir(root)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.operators.{MicroBatchJob, VectorQueries}
+import graft.operators.{MicroBatchJob, ScratchDirs, VectorQueries}
 import org.apache.spark.sql.functions.col
 
 /** Isolate the micro-batch harness's fixed cost (optimization-guide §1:
@@ -20,9 +20,8 @@ object StreamFixedCost {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = graft.GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val sfTag = sfDir.replaceAll("[^A-Za-z0-9.]+", "_")
-    val qDir = new java.io.File(s"target/parity/st22-queries-$sfTag")
-      .getAbsoluteFile.toString
+    val sfTag = ScratchDirs.tag(sfDir)
+    val qDir = ScratchDirs.parity(s"st22-queries-$sfTag")
     require(new java.io.File(qDir).isDirectory, s"run st22 once first: $qDir")
     val scratch = java.nio.file.Files.createTempDirectory("sfc").toString
 

@@ -83,6 +83,34 @@ class SourceGatesSpec extends AnyFunSuite {
       renames.mkString("\n"))
   }
 
+  test("PartitionSwap serves only the trees a plain parquet reader discovers") {
+    // landing, the bucket tables, x4's pack map and the file-stats
+    // manifest; every persisted index is a SnapshotLog table
+    val callers = codeLines.collect {
+      case (f, _, line) if line.contains("PartitionSwap.") &&
+          f != "sources/PartitionSwap.scala" => f
+    }.toSet
+    assert(callers == Set("sources/LandingTable.scala",
+      "sources/MutationOps.scala", "operators/CorpusPipeline.scala",
+      "sources/FileStatsManifest.scala"), callers.mkString("\n"))
+  }
+
+  test("VectorQueries discovers no partitions and writes no partitioned tree") {
+    // an index is read as manifest files with a known schema, and written
+    // through SnapshotLog.commit's partitionBy, never a writer's
+    val text = codeLines.collect {
+      case (f, _, line) if f == "operators/VectorQueries.scala" => line
+    }.mkString("\n")
+    val basePath = """option\(\s*"basePath"""".r.findAllIn(text).toSeq
+    assert(basePath.isEmpty, s"${basePath.size} basePath reads")
+    val call = """\s*\.\w+\([^()]*\)"""
+    val writes = Seq(
+      raw"\.write\b(?:$call)*\s*\.partitionBy\(",
+      raw"\.partitionBy\([^()]*\)(?:$call)*\s*\.(?:parquet|save)\(")
+      .flatMap(_.r.findAllIn(text))
+    assert(writes.isEmpty, writes.mkString("\n"))
+  }
+
   test("withStreamSession appears nowhere") {
     val all = java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))

@@ -1,12 +1,46 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.sources.SnapshotLog
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Invariants of the round-2 training-data pipeline operators (the oracle
   * gate proves value equality; these prove the semantic shape).
   */
 class PipelineQueriesSpec extends SparkSpec {
+
+  /** A scratch index table: `rows` committed as its first version, keyed
+    * by `partCol`.
+    */
+  private def indexTable(prefix: String, rows: DataFrame,
+      partCol: String): String = {
+    val tbl = s"file:${java.nio.file.Files.createTempDirectory(prefix)}"
+    SnapshotLog.commit(spark, tbl, rows, carried = Nil,
+      partitionBy = Some(partCol))
+    tbl
+  }
+
+  private def headVersion(tbl: String): Int =
+    SnapshotLog.latestVersion(spark, tbl).get
+
+  /** The head version's rows. */
+  private def headRows(tbl: String): DataFrame =
+    SnapshotLog.read(spark, tbl, headVersion(tbl))
+
+  /** The head manifest's data files by their `_<partCol>=` bin, each as
+    * path:mtime — file identity over manifest entries.
+    */
+  private def binFiles(tbl: String, partCol: String): Map[Long, Set[String]] = {
+    val seg = s"/_$partCol=(-?\\d+)/".r
+    SnapshotLog.dataFiles(SnapshotLog.manifest(spark, tbl, headVersion(tbl)))
+      .map { f =>
+        val mtime = new java.io.File(
+          new org.apache.hadoop.fs.Path(f).toUri.getPath).lastModified()
+        seg.findFirstMatchIn(f).get.group(1).toLong -> s"$f:$mtime"
+      }
+      .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+  }
 
   test("d13: every candidate pair shares at least one LSH band") {
     val sig = DedupQueries.d7MinhashSig(spark, sfDir)
@@ -76,88 +110,62 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("e20: appending a batch never rewrites existing index files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-aidx").toString
     val emb = RelationalQueries.table(spark, sfDir, "embeddings")
-    VectorQueries.assignToCentroids(spark, sfDir,
-        emb.filter(pmod(col("vec_id"), lit(10)) =!= 7))
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(s"file:$dir")
-    def files(): Map[String, Set[String]] =
-      new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("centroid_id=")).map { b =>
-          b.getName -> b.listFiles().filter(f => f.isFile &&
-            f.getName.startsWith("part-"))
-            .map(f => f.getName + ":" + f.lastModified()).toSet
-        }.toMap
-    val before = files()
+    val tbl = indexTable("graft-aidx", VectorQueries.assignToCentroids(spark,
+      sfDir, emb.filter(pmod(col("vec_id"), lit(10)) =!= 7)), "centroid_id")
+    val before = binFiles(tbl, "centroid_id")
 
     val newAsg = VectorQueries.assignToCentroids(spark, sfDir,
       emb.filter(pmod(col("vec_id"), lit(10)) === 7))
     val newBins = newAsg.select("centroid_id").distinct()
       .collect().map(_.getLong(0)).toSet
-    newAsg.write.mode("append").partitionBy("centroid_id").parquet(s"file:$dir")
-    val after = files()
+    MicroBatchJob.appendKeyed(spark, tbl, newAsg, "append", Some("centroid_id"))
+    val after = binFiles(tbl, "centroid_id")
 
-    // every base-build file survives byte-identical (name + mtime)
+    // every base-build file survives into the head manifest, byte-identical
+    // (path + mtime)
     before.foreach { case (bin, fs) =>
       assert(fs.subsetOf(after.getOrElse(bin, Set.empty)),
-        s"base files of $bin were rewritten")
+        s"base files of bin $bin were rewritten")
     }
     // growth happens only in bins the new batch maps to
     after.foreach { case (bin, fs) =>
-      val added = fs -- before.getOrElse(bin, Set.empty)
-      if (added.nonEmpty) {
-        val id = bin.stripPrefix("centroid_id=").toLong
-        assert(newBins.contains(id), s"$bin grew but the batch avoids it")
-      }
+      if ((fs -- before.getOrElse(bin, Set.empty)).nonEmpty)
+        assert(newBins.contains(bin), s"bin $bin grew but the batch avoids it")
     }
     // merged lists hold the whole corpus exactly once
-    val merged = spark.read.parquet(s"file:$dir")
+    val merged = headRows(tbl)
     assert(merged.count() == emb.count())
     assert(merged.select("vec_id").distinct().count() == emb.count())
   }
 
   test("e35: split rewrites only overflowing bins, bounds all bins, loses nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bidx").toString
     val emb = RelationalQueries.table(spark, sfDir, "embeddings")
-    VectorQueries.assignToCentroids(spark, sfDir, emb)
-      .withColumn("pbin", col("centroid_id"))
-      .write.mode("overwrite").partitionBy("pbin").parquet(s"file:$dir")
-    def files(): Map[String, Set[String]] =
-      new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("pbin=")).map { b =>
-          b.getName -> b.listFiles().filter(f => f.isFile &&
-            f.getName.startsWith("part-"))
-            .map(f => f.getName + ":" + f.lastModified()).toSet
-        }.toMap
-    val before = files()
-    val sizesBefore = spark.read.option("basePath", s"file:$dir")
-      .parquet(s"file:$dir")
+    val tbl = indexTable("graft-bidx", VectorQueries.assignToCentroids(spark,
+      sfDir, emb).withColumn("pbin", col("centroid_id")), "pbin")
+    val before = binFiles(tbl, "pbin")
+    def sizes(): Map[Long, Long] = headRows(tbl)
       .groupBy(col("pbin").cast("long").as("p")).count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val bound = math.max(1L, emb.count() / 5)
-    val calm = sizesBefore.filter(_._2 <= bound).keySet
+    val calm = sizes().filter(_._2 <= bound).keySet
 
-    val mapPath = s"file:$dir-map"
-    val splits = VectorQueries.splitIvfBins(spark, s"file:$dir", mapPath, bound)
+    val mapPath = s"$tbl-map"
+    val splits = VectorQueries.splitBins(spark, tbl, mapPath, bound)
     assert(splits.nonEmpty, "fixture produced no overflow — bound too high")
 
-    // calm partitions keep file identity (name + mtime)
-    val after = files()
+    // calm bins keep their manifest files (name + mtime)
+    val after = binFiles(tbl, "pbin")
     calm.foreach { p =>
-      assert(before(s"pbin=$p") == after(s"pbin=$p"),
-        s"calm bin $p was rewritten by the split")
+      assert(before(p) == after(p), s"calm bin $p was rewritten by the split")
     }
     // every physical bin is now at or under the bound
-    val sizesAfter = spark.read.option("basePath", s"file:$dir")
-      .parquet(s"file:$dir")
-      .groupBy(col("pbin").cast("long").as("p")).count()
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val sizesAfter = sizes()
     sizesAfter.foreach { case (p, n) =>
       assert(n <= bound, s"bin $p still holds $n > $bound after split")
     }
     // nothing lost, nothing duplicated
-    val merged = spark.read.option("basePath", s"file:$dir")
-      .parquet(s"file:$dir")
+    val merged = headRows(tbl)
     assert(merged.count() == emb.count())
     assert(merged.select("vec_id").distinct().count() == emb.count())
     // the persisted map routes every physical bin to exactly one logical
@@ -177,24 +185,14 @@ class PipelineQueriesSpec extends SparkSpec {
 
   test("e36: a takedown routed to one split child rewrites only that child; " +
       "the map refresh drops the emptied child") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-lidx").toString
     val emb = RelationalQueries.table(spark, sfDir, "embeddings")
-    VectorQueries.assignToCentroids(spark, sfDir, emb)
-      .withColumn("pbin", col("centroid_id"))
-      .write.mode("overwrite").partitionBy("pbin").parquet(s"file:$dir")
+    val tbl = indexTable("graft-lidx", VectorQueries.assignToCentroids(spark,
+      sfDir, emb).withColumn("pbin", col("centroid_id")), "pbin")
     val bound = math.max(1L, emb.count() / 5)
-    val mapPath = s"file:$dir-map"
-    val splits = VectorQueries.splitIvfBins(spark, s"file:$dir", mapPath, bound)
+    val mapPath = s"$tbl-map"
+    val splits = VectorQueries.splitBins(spark, tbl, mapPath, bound)
     assert(splits.nonEmpty, "fixture produced no overflow — bound too high")
-
-    def files(): Map[String, Set[String]] =
-      new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("pbin=")).map { b =>
-          b.getName -> b.listFiles().filter(f => f.isFile &&
-            f.getName.startsWith("part-"))
-            .map(f => f.getName + ":" + f.lastModified()).toSet
-        }.toMap
-    val before = files()
+    val before = binFiles(tbl, "pbin")
 
     // doom EXACTLY the contents of one child minted by the split — the
     // takedown must route through the physical layout and rewrite (here:
@@ -202,39 +200,32 @@ class PipelineQueriesSpec extends SparkSpec {
     // the doomed child's own split siblings — byte-identical
     val child = splits.head._2
     import spark.implicits._
-    val doomedIds = spark.read.option("basePath", s"file:$dir")
-      .parquet(s"file:$dir")
+    val doomedIds = headRows(tbl)
       .filter(col("pbin").cast("long") === child)
       .select("vec_id").as[Long].collect().toSeq
     assert(doomedIds.nonEmpty)
-    val rewritten = VectorQueries.deleteFromIvfIndex(
-      spark, s"file:$dir", doomedIds.toDF("vec_id"), partCol = "pbin")
+    val rewritten = VectorQueries.deleteBins(
+      spark, tbl, doomedIds.toDF("vec_id"), "pbin", Some(mapPath))
     assert(rewritten == Seq(child), s"rewrote $rewritten, expected $child")
 
-    val after = files()
-    assert(!after.contains(s"pbin=$child"), "emptied child dir survives")
-    before.keys.filterNot(_ == s"pbin=$child").foreach { b =>
+    val after = binFiles(tbl, "pbin")
+    assert(!after.contains(child), "emptied child still has manifest entries")
+    before.keys.filterNot(_ == child).foreach { b =>
       assert(after(b) == before(b), s"calm bin $b changed under the takedown")
     }
     // survivors are exactly corpus minus the doomed child
-    val left = spark.read.option("basePath", s"file:$dir")
-      .parquet(s"file:$dir").select("vec_id").as[Long].collect().toSet
+    val left = headRows(tbl).select("vec_id").as[Long].collect().toSet
     val all = emb.select("vec_id").as[Long].collect().toSet
     assert(left == all -- doomedIds)
 
-    // the map refresh re-derives from the live index: the dead child is
-    // gone, every live physical bin is named, and each maps to the
-    // logical bin its rows carry
-    VectorQueries.refreshBinMap(spark, s"file:$dir", mapPath)
+    // the takedown's map refresh re-derives from the live manifest: the
+    // dead child is gone, every live physical bin is named, and each maps
+    // to the logical bin its rows carry
     val map = spark.read.parquet(mapPath)
       .collect().map(r => r.getLong(1) -> r.getLong(0)).toMap
-    val livePbins = spark.read.option("basePath", s"file:$dir")
-      .parquet(s"file:$dir")
-      .select(col("pbin").cast("long")).distinct()
-      .as[Long].collect().toSet
     assert(!map.contains(child), "refreshed map still names the dead child")
-    assert(map.keySet == livePbins,
-      s"map bins ${map.keySet} != live bins $livePbins")
+    assert(map.keySet == after.keySet,
+      s"map bins ${map.keySet} != live bins ${after.keySet}")
   }
 
   test("m12: the radix-2 NTT equals a driver-side direct DFT; field params hold") {
@@ -321,18 +312,10 @@ class PipelineQueriesSpec extends SparkSpec {
   }
 
   test("e21: delete rewrites only bins holding a doomed vector; empty bins drop") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-didx").toString
     val emb = RelationalQueries.table(spark, sfDir, "embeddings")
     val asg = VectorQueries.assignToCentroids(spark, sfDir, emb)
-    asg.write.mode("overwrite").partitionBy("centroid_id").parquet(s"file:$dir")
-    def files(): Map[String, Set[String]] =
-      new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("centroid_id=")).map { b =>
-          b.getName -> b.listFiles().filter(f => f.isFile &&
-            f.getName.startsWith("part-"))
-            .map(f => f.getName + ":" + f.lastModified()).toSet
-        }.toMap
-    val before = files()
+    val tbl = indexTable("graft-didx", asg, "centroid_id")
+    val before = binFiles(tbl, "centroid_id")
 
     // doom one whole bin plus a couple of ids from another bin
     val binOf = asg.select(col("vec_id"), col("centroid_id")).collect()
@@ -343,43 +326,32 @@ class PipelineQueriesSpec extends SparkSpec {
     val doomedIds = binOf.filter(_._2 == wholeBin).keys.toSeq ++
       binOf.filter(_._2 == partialBin).keys.toSeq.sorted.take(2)
     import spark.implicits._
-    val rewrittenBins = VectorQueries.deleteFromIvfIndex(
-      spark, s"file:$dir", doomedIds.toDF("vec_id"))
+    val rewrittenBins = VectorQueries.deleteBins(
+      spark, tbl, doomedIds.toDF("vec_id"), "centroid_id")
     assert(rewrittenBins.toSet == Set(wholeBin, partialBin))
 
-    val after = files()
+    val after = binFiles(tbl, "centroid_id")
     // untouched bins keep their exact files
-    before.keys.filterNot(b => rewrittenBins.map(i => s"centroid_id=$i")
-        .toSet.contains(b))
-      .foreach { b => assert(after(b) == before(b), s"untouched $b changed") }
-    // the fully-doomed bin's directory is gone
-    assert(!after.contains(s"centroid_id=$wholeBin"), after.keySet)
+    before.keys.filterNot(rewrittenBins.toSet)
+      .foreach { b => assert(after(b) == before(b), s"untouched bin $b changed") }
+    // the fully-doomed bin has no manifest entry left
+    assert(!after.contains(wholeBin), after.keySet)
     // survivors are exactly corpus minus doomed
-    val left = spark.read.parquet(s"file:$dir").select("vec_id")
-      .as[Long].collect().toSet
+    val left = headRows(tbl).select("vec_id").as[Long].collect().toSet
     assert(left == binOf.keySet -- doomedIds)
   }
 
   test("e23: compaction collapses fragmented bins to one file, keeps content and calm bins") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cidx").toString
     val emb = RelationalQueries.table(spark, sfDir, "embeddings")
     // fragment every bin with a 3-chunk append build
-    (0 to 2).foreach { r =>
-      VectorQueries.assignToCentroids(spark, sfDir,
-          emb.filter(pmod(col("vec_id"), lit(3)) === r))
-        .write.mode(if (r == 0) "overwrite" else "append")
-        .partitionBy("centroid_id").parquet(s"file:$dir")
-    }
-    def files(): Map[String, Set[String]] =
-      new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("centroid_id=")).map { b =>
-          b.getName -> b.listFiles().filter(f => f.isFile &&
-            f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-            .map(f => f.getName + ":" + f.lastModified()).toSet
-        }.toMap
-    val before = files()
+    def chunk(r: Int) = VectorQueries.assignToCentroids(spark, sfDir,
+      emb.filter(pmod(col("vec_id"), lit(3)) === r))
+    val tbl = indexTable("graft-cidx", chunk(0), "centroid_id")
+    (1 to 2).foreach(r =>
+      MicroBatchJob.appendKeyed(spark, tbl, chunk(r), s"chunk-$r", Some("centroid_id")))
+    val before = binFiles(tbl, "centroid_id")
     assert(before.values.exists(_.size > 1), before.view.mapValues(_.size).toMap)
-    val beforeContent = spark.read.parquet(s"file:$dir")
+    val beforeContent = headRows(tbl)
       .select("vec_id").collect().map(_.getLong(0)).toSet
 
     // threshold = the smallest bin's file count: bins above it compact,
@@ -388,17 +360,19 @@ class PipelineQueriesSpec extends SparkSpec {
     val counts = before.values.map(_.size)
     val threshold =
       if (counts.toSet.size == 1) counts.min - 1 else counts.min
-    val compacted = VectorQueries.compactIvfIndex(
-      spark, s"file:$dir", maxFiles = threshold)
-    assert(compacted.nonEmpty, before.view.mapValues(_.size).toMap)
-    val after = files()
+    val fragmented = before.filter(_._2.size > threshold).keySet
+    assert(SnapshotLog.compact(spark, tbl, Some("centroid_id"),
+      maxFilesPerPartition = threshold).isDefined,
+      before.view.mapValues(_.size).toMap)
+    val after = binFiles(tbl, "centroid_id")
     // compacted bins collapse to one file; calm bins keep their exact files
-    compacted.foreach { b => assert(after(s"centroid_id=$b").size == 1, b) }
-    before.keys.filterNot(b =>
-        compacted.map(i => s"centroid_id=$i").toSet.contains(b))
-      .foreach { b => assert(after(b) == before(b), s"calm $b changed") }
+    assert(fragmented.nonEmpty)
+    fragmented.foreach { b => assert(after(b).size == 1, b) }
+    before.keys.filterNot(fragmented).foreach { b =>
+      assert(after(b) == before(b), s"calm bin $b changed")
+    }
     // content survives byte-for-byte (same vec_id set, same count)
-    val afterContent = spark.read.parquet(s"file:$dir")
+    val afterContent = headRows(tbl)
       .select("vec_id").collect().map(_.getLong(0))
     assert(afterContent.toSet == beforeContent &&
       afterContent.length == beforeContent.size)

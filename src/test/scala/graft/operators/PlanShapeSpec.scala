@@ -1,6 +1,9 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.sources.SnapshotLog
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 /** Plan-shape assertions: the properties that make these queries scale are
   * locked in here so a refactor that silently loses a pushdown, a
@@ -9,9 +12,83 @@ import graft.SparkSpec
   */
 class PlanShapeSpec extends SparkSpec {
 
-  private def plan(name: String): String =
+  private def query(name: String): DataFrame =
     graft.SparkEntry.queries(name)(spark, sfDir)
-      .queryExecution.executedPlan.toString
+
+  private def plan(name: String): String =
+    query(name).queryExecution.executedPlan.toString
+
+  private def norm(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
+
+  /** The files `df`'s scans of the index table `tbl` read. */
+  private def indexScanFiles(df: DataFrame, tbl: String): Set[String] =
+    df.inputFiles.toSeq.map(norm).filter(_.startsWith(norm(tbl) + "/")).toSet
+
+  /** The index table `target/parity/<kind>-<sf tag>`. */
+  private def parityTable(kind: String): String =
+    s"file:${ScratchDirs.parity(s"$kind-${ScratchDirs.tag(sfDir)}")}"
+
+  /** The head-manifest data files of `tbl` whose `_<partCol>=` level is
+    * one of `bins`.
+    */
+  private def headBinFiles(tbl: String, partCol: String,
+      bins: Set[Long]): Set[String] = {
+    val v = SnapshotLog.latestVersion(spark, tbl).get
+    SnapshotLog.dataFiles(SnapshotLog.manifest(spark, tbl, v))
+      .filter(f => bins.exists(b => f.contains(s"/_$partCol=$b/")))
+      .map(norm).toSet
+  }
+
+  /** Pins that the index scans of `df` read exactly the head-manifest
+    * files of the probed `bins` of `tbl`: no other bin's file is opened.
+    */
+  private def assertReadsProbedBins(df: DataFrame, tbl: String,
+      partCol: String, bins: Set[Long]): Unit = {
+    val want = headBinFiles(tbl, partCol, bins)
+    assert(bins.nonEmpty && want.nonEmpty, s"no probed files in $tbl")
+    val got = indexScanFiles(df, tbl)
+    assert(got == want, s"index scan read ${got.size} files, the probed " +
+      s"bins $bins hold ${want.size}:\n${(got -- want).mkString("\n")}")
+  }
+
+  /** The distinct centroids among each query's `n` best by the decimal
+    * dot of (vec_id < 10)'s embeddings against `cents`' vector column `c`
+    * (score DESC, centroid_id ASC).
+    */
+  private def probedBins(cents: DataFrame, c: String, n: Int): Set[Long] = {
+    val dotOf = aggregate(zip_with(col("embedding"), col(c),
+      (x, y) => x.cast("double") * y.cast("double")), lit(0.0),
+      (acc, v) => acc + v)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("vec_id").orderBy(col("s").desc, col("centroid_id").asc)
+    RelationalQueries.table(spark, sfDir, "embeddings")
+      .filter(col("vec_id") < 10).select("vec_id", "embedding")
+      .crossJoin(cents)
+      .withColumn("s", dotOf.cast("decimal(20,6)"))
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= n)
+      .select(col("centroid_id").cast("long")).distinct()
+      .collect().map(_.getLong(0)).toSet
+  }
+
+  private def demoProbes(n: Int) =
+    probedBins(AssignRestatement.demoCents(spark, sfDir), "c_emb", n)
+
+  private def trainedProbes(n: Int) =
+    probedBins(VectorQueries.kmeansCentroids(spark, sfDir, 2), "c", n)
+
+  /** The physical bins the map at `<tbl>-map` routes `logical` to. */
+  private def mappedBins(tbl: String, logical: Set[Long]): Set[Long] =
+    spark.read.parquet(s"$tbl-map")
+      .filter(col("bin").isin(logical.toSeq: _*))
+      .select(col("pbin").cast("long")).collect().map(_.getLong(0)).toSet
+
+  /** The index scan lines of a plan string, each carrying the FileScan's
+    * Location, PushedFilters and ReadSchema (the AQE root hides scan nodes
+    * from collect, the X1PipelineSpec finding; the string does not).
+    */
+  private def scanLines(p: String, kind: String): Seq[String] =
+    p.linesIterator.filter(l => l.contains(kind) && !l.contains("-map")).toSeq
 
   test("q2: filters and projection reach the parquet scan") {
     val p = plan("q2_filter_project")
@@ -109,49 +186,44 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("e18: the persisted IVF index read is partition-pruned to probed bins") {
-    val p = plan("e18_persisted_ivf")
-    // the serving scan must carry a centroid_id PARTITION predicate — at
-    // scale unprobed bins' directories are never listed
-    assert("""PartitionFilters: \[[^\]]*centroid_id""".r.findFirstIn(p).isDefined, p)
+    // the serving scan opens exactly the probed lists' manifest files — at
+    // scale unprobed bins' files are never opened
+    assertReadsProbedBins(query("e18_persisted_ivf"), parityTable("ivf-index"),
+      "centroid_id", demoProbes(1))
   }
 
   test("st20: the per-batch raw-list serving plan prunes bins and broadcasts the batch") {
-    import org.apache.spark.sql.functions._
     // the exact plan the st20 stream's foreachBatch executes, via the
     // factored ivfServeBatch helper (st22's pqServeRefineBatch discipline):
-    // partition-pruned index scan + the batch broadcast into it
+    // the probed lists' files only + the batch broadcast into them
     val emb = RelationalQueries.table(spark, sfDir, "embeddings")
-    val dir = java.nio.file.Files.createTempDirectory("graft-st20-plan").toString
-    VectorQueries.assignToCentroids(spark, sfDir, emb)
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(s"file:$dir")
+    val tbl = "file:" +
+      java.nio.file.Files.createTempDirectory("graft-st20-plan").toString
+    SnapshotLog.commit(spark, tbl, VectorQueries.assignToCentroids(spark, sfDir, emb),
+      carried = Nil, partitionBy = Some("centroid_id"))
     val df = VectorQueries.ivfServeBatch(spark,
       emb.filter(col("vec_id") < 10).select(col("vec_id"), col("embedding")),
       VectorQueries.demoCodebook(spark, sfDir),
-      VectorQueries.resolveRawIvfLists(spark, dir), 3)
+      VectorQueries.ivfLists(spark, SnapshotLog.manifest(spark, tbl, 1),
+        "centroid_id"), 3)
     df.collect()
+    assertReadsProbedBins(df, tbl, "centroid_id", demoProbes(1))
     val p = df.queryExecution.executedPlan.toString
-    assert("""PartitionFilters: \[[^\]]*centroid_id""".r.findFirstIn(p).isDefined,
-      s"raw-list scan carries no centroid_id partition filter: $p")
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
   }
 
   test("e32: the persisted IVF-PQ code read is partition-pruned to probed bins") {
-    // the codes live in the on-disk inverted lists (partitionBy bin) and
-    // serving must read only the queries' coarse bins — at scale unprobed
-    // bins' code partitions are never listed, and what IS read is M-byte
-    // codes, never vectors. String-form pin: the AQE root hides scan
-    // nodes from collect (the X1PipelineSpec finding); the plan string
-    // prints each FileScan's Location, PartitionFilters and ReadSchema on
-    // one line regardless.
-    val p = plan("e32_persisted_ivfpq")
-    val idxLines = p.linesIterator.filter(_.contains("e32-index")).toSeq
-    assert(idxLines.nonEmpty, p)
+    // the codes live in the `bin`-keyed inverted lists and serving must
+    // read only the queries' coarse bins' files — at scale unprobed bins'
+    // codes are never opened, and what IS read is M-byte codes, never
+    // vectors
+    val df = query("e32_persisted_ivfpq")
+    assertReadsProbedBins(df, parityTable("e32-index"), "bin", trainedProbes(1))
+    val idxLines = scanLines(df.queryExecution.executedPlan.toString, "e32-index")
+    assert(idxLines.nonEmpty)
     idxLines.foreach { l =>
-      assert("""PartitionFilters: \[bin""".r.findFirstIn(l).isDefined,
-        s"index scan carries no bin partition filter: $l")
-      assert(!l.contains("embedding"),
-        s"index scan reads vectors, not codes: $l")
+      assert(!l.contains("embedding"), s"index scan reads vectors, not codes: $l")
     }
   }
 
@@ -159,14 +231,13 @@ class PlanShapeSpec extends SparkSpec {
       "predicate into the CODE scan") {
     // the payload-in-index design's whole point: the label predicate is
     // applied by the parquet reader of the code lists (PushedFilters),
-    // before any ADC work, and the scan still carries the bin partition
-    // filter and reads codes only — never vectors
-    val p = plan("e33_filtered_pq_serve")
-    val idxLines = p.linesIterator.filter(_.contains("e33-index")).toSeq
-    assert(idxLines.nonEmpty, p)
+    // before any ADC work, and the scan still opens only the probed bins'
+    // files and reads codes only — never vectors
+    val df = query("e33_filtered_pq_serve")
+    assertReadsProbedBins(df, parityTable("e33-index"), "bin", trainedProbes(2))
+    val idxLines = scanLines(df.queryExecution.executedPlan.toString, "e33-index")
+    assert(idxLines.nonEmpty)
     idxLines.foreach { l =>
-      assert("""PartitionFilters: \[bin""".r.findFirstIn(l).isDefined,
-        s"code scan carries no bin partition filter: $l")
       assert("""PushedFilters: \[[^\]]*label""".r.findFirstIn(l).isDefined,
         s"label predicate not pushed to the code scan: $l")
       assert(!l.contains("embedding"),
@@ -176,14 +247,13 @@ class PlanShapeSpec extends SparkSpec {
 
   test("e34: the range predicate pushes into the code scan exactly like e33's") {
     // the predicate axis is generic: swapping the fixture IN-list for a
-    // range predicate must keep every scan property — bin partition
-    // pruning, the predicate applied by the parquet reader, codes only
-    val p = plan("e34_filtered_serve_range")
-    val idxLines = p.linesIterator.filter(_.contains("e33-index")).toSeq
-    assert(idxLines.nonEmpty, p)
+    // range predicate must keep every scan property — only the probed
+    // bins' files, the predicate applied by the parquet reader, codes only
+    val df = query("e34_filtered_serve_range")
+    assertReadsProbedBins(df, parityTable("e33-index"), "bin", trainedProbes(2))
+    val idxLines = scanLines(df.queryExecution.executedPlan.toString, "e33-index")
+    assert(idxLines.nonEmpty)
     idxLines.foreach { l =>
-      assert("""PartitionFilters: \[bin""".r.findFirstIn(l).isDefined,
-        s"code scan carries no bin partition filter: $l")
       assert("""PushedFilters: \[[^\]]*label""".r.findFirstIn(l).isDefined,
         s"range predicate not pushed to the code scan: $l")
       assert(!l.contains("embedding"),
@@ -194,37 +264,36 @@ class PlanShapeSpec extends SparkSpec {
   test("e35: serving after a bin split is partition-pruned to mapped children") {
     // the split must not cost serving its pruning: the scan reads only the
     // PHYSICAL bins the logical→physical map routes the probes to
-    val p = plan("e35_bin_split_maintain")
-    val idxLines = p.linesIterator
-      .filter(l => l.contains("ivf-bindex") && !l.contains("-map")).toSeq
-    assert(idxLines.nonEmpty, p)
-    idxLines.foreach { l =>
-      assert("""PartitionFilters: \[[^\]]*pbin""".r.findFirstIn(l).isDefined,
-        s"post-split serving scan carries no pbin partition filter: $l")
-    }
+    val df = query("e35_bin_split_maintain")
+    val tbl = parityTable("ivf-bindex")
+    assertReadsProbedBins(df, tbl, "pbin", mappedBins(tbl, demoProbes(1)))
   }
 
   test("e36: serving after the full split lifecycle stays partition-pruned " +
       "through the refreshed map") {
-    // split → delete → compact → map refresh must not cost serving its
+    // split → delete → map refresh → compact must not cost serving its
     // pruning: the final scan reads only the SURVIVING physical children
-    // the refreshed map routes the probes to
-    val p = plan("e36_split_lifecycle")
-    val idxLines = p.linesIterator
-      .filter(l => l.contains("ivf-lindex") && !l.contains("-map")).toSeq
-    assert(idxLines.nonEmpty, p)
-    idxLines.foreach { l =>
-      assert("""PartitionFilters: \[[^\]]*pbin""".r.findFirstIn(l).isDefined,
-        s"post-lifecycle serving scan carries no pbin partition filter: $l")
-    }
+    // the refreshed map routes the probes to (the e36 queries leave out
+    // the doomed ids, vec_id % 10 = 3)
+    val df = query("e36_split_lifecycle")
+    val tbl = parityTable("ivf-lindex")
+    val logical = AssignRestatement.crossJoinAssign(
+        RelationalQueries.table(spark, sfDir, "embeddings")
+          .filter(col("vec_id") < 10 && pmod(col("vec_id"), lit(10)) =!= 3),
+        AssignRestatement.demoCents(spark, sfDir))
+      .select(col("centroid_id").cast("long")).distinct()
+      .collect().map(_.getLong(0)).toSet
+    assertReadsProbedBins(df, tbl, "pbin", mappedBins(tbl, logical))
   }
 
   test("e19: filtered serving prunes bins AND pushes the label predicate") {
-    val p = plan("e19_filtered_ivf")
-    // partition pruning to probed bins (e18's contract) ...
-    assert("""PartitionFilters: \[[^\]]*centroid_id""".r.findFirstIn(p).isDefined, p)
+    val df = query("e19_filtered_ivf")
+    // only the probed bins' files (e18's contract, at nprobe = 2) ...
+    assertReadsProbedBins(df, parityTable("ivf-findex"), "centroid_id",
+      demoProbes(2))
     // ... AND the metadata predicate reaches the parquet scan: the filter
     // runs in the read (row-group stats can skip), not a downstream operator
+    val p = df.queryExecution.executedPlan.toString
     assert("""PushedFilters: \[[^\]]*[Ii]n\(label""".r.findFirstIn(p).isDefined, p)
   }
 

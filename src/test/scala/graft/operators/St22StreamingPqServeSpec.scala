@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import graft.sources.SnapshotLog
 import org.apache.spark.sql.functions._
 
 /** st22 streaming compressed-index serving: streamed ≡ one-shot, one keyed
@@ -18,10 +19,12 @@ class St22StreamingPqServeSpec extends SparkSpec {
       .filter(col("vec_id") < 10).select(col("vec_id"), col("embedding"))
     val fine = VectorQueries.pqTrainedCodebooks(spark, sfDir, 2)
     val cents = VectorQueries.kmeansCentroids(spark, sfDir, 2)
-    val idxDir = VectorQueries.persistedIvfPqIndexDir(spark, sfDir, 2)
     VectorQueries.pqServeRefineBatch(spark, sfDir, q, fine, cents,
-      idxDir, 3, 10)
+      VectorQueries.ivfLists(spark, SnapshotLog.manifest(spark, indexTable,
+        SnapshotLog.latestVersion(spark, indexTable).get), "bin"), 3, 10)
   }
+
+  private def indexTable = VectorQueries.persistedIvfPqIndex(spark, sfDir, 2)
 
   private def key(r: org.apache.spark.sql.Row) =
     (r.getAs[Long]("query_id"), r.getAs[Int]("rank"),
@@ -63,14 +66,26 @@ class St22StreamingPqServeSpec extends SparkSpec {
     val df = oneShot
     df.collect()
     val p = df.queryExecution.executedPlan.toString
-    // the persisted-index scan: partition-pruned to probed bins, and the
-    // ReadSchema carries M-byte codes — never vectors (e32's pin, on the
-    // exact plan the stream's foreachBatch executes)
+    // the persisted-index scan opens only the probed bins' files (each
+    // query's own trained bin), and the ReadSchema carries M-byte codes —
+    // never vectors (e32's pin, on the exact plan the stream's
+    // foreachBatch executes)
+    def norm(f: String) = new org.apache.hadoop.fs.Path(f).toUri.getPath
+    val tbl = indexTable
+    val probed = VectorQueries.assignTrained(
+        RelationalQueries.table(spark, sfDir, "embeddings")
+          .filter(col("vec_id") < 10).select(col("vec_id"), col("embedding")),
+        VectorQueries.kmeansCentroids(spark, sfDir, 2))
+      .select(col("centroid_id").cast("long")).distinct()
+      .collect().map(_.getLong(0)).toSet
+    val want = SnapshotLog.dataFiles(SnapshotLog.manifest(spark, tbl,
+        SnapshotLog.latestVersion(spark, tbl).get))
+      .filter(f => probed.exists(b => f.contains(s"/_bin=$b/"))).map(norm).toSet
+    val got = df.inputFiles.toSeq.map(norm).filter(_.startsWith(norm(tbl) + "/")).toSet
+    assert(want.nonEmpty && got == want, s"index scan read $got, probed bins hold $want")
     val idxLines = p.linesIterator.filter(_.contains("e32-index")).toSeq
     assert(idxLines.nonEmpty, p)
     idxLines.foreach { l =>
-      assert("""PartitionFilters: \[bin""".r.findFirstIn(l).isDefined,
-        s"index scan carries no bin partition filter: $l")
       assert(!l.contains("embedding"),
         s"index scan reads vectors, not codes: $l")
     }

@@ -110,8 +110,8 @@ class St24StreamingSplitSpec extends SparkSpec {
       import spark.implicits._
       doomed.toSeq.toDF("vec_id")
     }
-    val replayed = VectorQueries.deleteSnapshotBins(spark, s"file:$indexDir",
-      doomedDf, mapPath, commitKey = "delete-2")
+    val replayed = VectorQueries.deleteBins(spark, s"file:$indexDir",
+      doomedDf, "pbin", Some(mapPath), commitKey = Some("delete-2"))
     assert(replayed.isEmpty, s"replayed takedown rewrote bins: $replayed")
     val vAfter = SnapshotLog.latestVersion(spark, s"file:$indexDir").get
     assert(SnapshotLog.manifest(spark, s"file:$indexDir", vAfter).toSet ==

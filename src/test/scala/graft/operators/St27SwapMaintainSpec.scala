@@ -80,8 +80,8 @@ class St27SwapMaintainSpec extends SparkSpec {
       "replayed swap advanced the log")
     val mapPath = "file:" + new java.io.File(
       s"target/parity/ivf-st27map-$sfTag").getAbsoluteFile.toString
-    val replayed = VectorQueries.splitSnapshotBins(spark, tbl, mapPath,
-      bound, commitKey = "split-3")
+    val replayed = VectorQueries.splitBins(spark, tbl, mapPath,
+      bound, commitKey = Some("split-3"))
     assert(replayed.isEmpty, s"replayed split rewrote bins: $replayed")
     assert(SnapshotLog.latestVersion(spark, tbl).get == v,
       "replayed split advanced the log")

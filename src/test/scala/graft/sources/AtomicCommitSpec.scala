@@ -7,13 +7,16 @@ import org.apache.spark.sql.types._
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicBoolean
 
-/** Stage-and-swap commit ([[PartitionSwap]]): a reader racing repeated
-  * overwrites of one partition must never observe a TORN partition — every
-  * successful read returns exactly one generation's full content (count AND
+/** Old-or-new commits: a reader racing repeated rewrites of one
+  * partition must never observe a TORN partition — every successful read
+  * returns exactly one generation's full content (count AND
   * content-marker agree), never a mix of generations or a partial file set.
-  * Transient absence/read errors during the two-rename window are
-  * legitimate retryable outcomes and are ignored. Landing, a bucket upsert
-  * and an IVF bin split all go through the one swap.
+  * Landing and a bucket upsert go through the stage-and-swap commit
+  * ([[PartitionSwap]]), where transient absence/read errors during the
+  * two-rename window are legitimate retryable outcomes and are ignored. An
+  * IVF bin split commits to a [[SnapshotLog]] index: a reader pins one
+  * manifest and no commit deletes a file, so there it must see no error
+  * at all.
   */
 class AtomicCommitSpec extends SparkSpec {
 
@@ -38,16 +41,19 @@ class AtomicCommitSpec extends SparkSpec {
 
   /** Runs `write(1)` … `write(rounds)` while a reader thread repeats
     * `read` (row count, content markers). Every completed read must be one
-    * of `valid` or the clean transient absence.
+    * of `valid` or, when `retryable`, the clean transient absence; a read
+    * error counts as a retryable outcome only when `retryable`.
     */
   private def assertNoTornReads(rounds: Int, valid: Set[(Long, Set[String])],
-      read: () => (Long, Set[String]))(write: Int => Unit): Unit = {
+      read: () => (Long, Set[String]), retryable: Boolean = true)(
+      write: Int => Unit): Unit = {
     val done = new AtomicBoolean(false)
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Set[String])]()
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val reader = new Thread(() => {
       while (!done.get()) {
         try seen.add(read())
-        catch { case _: Throwable => () } // clean transient error: retryable
+        catch { case e: Throwable => errors.add(e); () }
       }
     })
     reader.start()
@@ -63,8 +69,10 @@ class AtomicCommitSpec extends SparkSpec {
     val transientAbsence = (0L, Set.empty[String])
     val observed = seen.toArray(Array.empty[(Long, Set[String])]).toSet
     assert(observed.nonEmpty, "reader never completed a read")
-    val torn = observed -- valid - transientAbsence
+    val torn = observed -- valid -- (if (retryable) Set(transientAbsence) else Set.empty)
     assert(torn.isEmpty, s"torn reads observed: $torn")
+    assert(retryable || errors.isEmpty,
+      s"${errors.size} reads failed: ${Option(errors.peek()).map(_.toString)}")
   }
 
   /** (row count, distinct values of `markerCol`) of a parquet read. */
@@ -105,21 +113,29 @@ class AtomicCommitSpec extends SparkSpec {
       () => countAndMarkers(s"$dir/bucket=0", "gen"))(i => upsert(i))
   }
 
-  test("concurrent reader never sees a torn bin during splitIvfBins") {
+  test("concurrent reader never sees a torn bin during splitBins") {
     import spark.implicits._
     val dir = s"file:${Files.createTempDirectory("graft-atomic-split")}"
     // bin 0 holds 40 vectors in 4 files; a split at bound 20 leaves 20 in
-    // bin 0 and mints bin 1, and each round puts the 40 back through the
-    // swap (bin 1 named, so it is removed) — a reader of bin 0 sees 40 or
-    // 20, never a partial file set or both generations
+    // bin 0 and mints bin 1, and each round commits the 40 back as a
+    // replace-all version — a reader of bin 0's files in the head manifest
+    // sees 40 or 20, never a partial file set, both generations or an error
     val full = (0 until 40)
       .map(v => (v.toLong, Seq(v.toFloat, 1f), 0L, 0L))
       .toDF("vec_id", "embedding", "centroid_id", "pbin").repartition(4)
-    def restore() = PartitionSwap.overwrite(full, dir, Seq("pbin"), Seq("pbin=1"))
+    def restore() = SnapshotLog.commit(spark, dir, full, carried = Nil,
+      partitionBy = Some("pbin"))
     restore()
-    assertNoTornReads(3, Set((40L, Set("0")), (20L, Set("0"))),
-      () => countAndMarkers(s"$dir/pbin=0", "centroid_id")) { _ =>
-      assert(VectorQueries.splitIvfBins(spark, dir, s"$dir-map", 20L) == Seq((0L, 1L)))
+    def readBin0() = {
+      val v = SnapshotLog.latestVersion(spark, dir).get
+      val rows = SnapshotLog.readFiles(spark, SnapshotLog.manifest(spark, dir, v)
+          .filter(_.contains("/_pbin=0/")))
+        .select("centroid_id").collect()
+      (rows.length.toLong, rows.map(_.get(0).toString).toSet)
+    }
+    assertNoTornReads(3, Set((40L, Set("0")), (20L, Set("0"))), () => readBin0(),
+      retryable = false) { _ =>
+      assert(VectorQueries.splitBins(spark, dir, s"$dir-map", 20L) == Seq((0L, 1L)))
       restore()
     }
   }

@@ -14,9 +14,10 @@ import java.nio.file.Files
   * toggled the session-wide `spark.sql.sources.partitionOverwriteMode` with
   * a set/restore pattern; under Overlap one chain's `finally` restored
   * "static" while another chain's write was committing, and that write
-  * silently wiped every partition it did not touch. Every such write now
-  * goes through the staged swap ([[PartitionSwap]]), which requests no
-  * overwrite mode at all. This spec hammers the exact three store shapes u8
+  * silently wiped every partition it did not touch. The landing and
+  * serving writes now go through the staged swap ([[PartitionSwap]]) and
+  * the index's through [[SnapshotLog]]; neither requests an overwrite mode
+  * at all. This spec hammers the exact three store shapes u8
   * uses, many times, asserting no count drift and no lost partition — the
   * race was intermittent, so one green run proves nothing; N concurrent
   * rounds make a silent static-overwrite regression overwhelmingly likely
@@ -49,6 +50,8 @@ class ConcurrentMutationSpec extends SparkSpec {
     val landingDir = Files.createTempDirectory("graft-conc-landing")
     val servingDir = s"file:${Files.createTempDirectory("graft-conc-serve")}"
     val indexDir = s"file:${Files.createTempDirectory("graft-conc-index")}"
+    def indexHead() = SnapshotLog.read(spark, indexDir,
+      SnapshotLog.latestVersion(spark, indexDir).get)
     val cfg = IngestConfig(sourceBase = "unused",
       landingPath = s"file:$landingDir", schema = schema,
       partitionField = "event_ts", clusterField = "device_id")
@@ -76,16 +79,18 @@ class ConcurrentMutationSpec extends SparkSpec {
           Seq(4L).toDF("user_id"), "user_id", nBuckets = 4)
         (nb, spark.read.parquet(servingDir).count())
       }
-      // store 3: a partitioned index — full build (3 bins), then a delete
-      // that rewrites ONLY bin 0; bins 1 and 2 must survive
+      // store 3: a SnapshotLog index — full build (3 bins, a replace-all
+      // version), then a delete that rewrites ONLY bin 0; bins 1 and 2
+      // must survive
       val chainIndex = () => {
-        Seq((1L, 0L), (2L, 0L), (3L, 1L), (4L, 2L))
-          .toDF("vec_id", "centroid_id")
-          .write.mode("overwrite").partitionBy("centroid_id")
-          .parquet(indexDir)
-        val nb = spark.read.parquet(indexDir).count()
-        VectorQueries.deleteFromIvfIndex(spark, indexDir, Seq(2L).toDF("vec_id"))
-        (nb, spark.read.parquet(indexDir).count())
+        val v = SnapshotLog.commit(spark, indexDir,
+          Seq((1L, 0L), (2L, 0L), (3L, 1L), (4L, 2L))
+            .toDF("vec_id", "centroid_id"),
+          carried = Nil, partitionBy = Some("centroid_id"))
+        val nb = SnapshotLog.read(spark, indexDir, v).count()
+        VectorQueries.deleteBins(spark, indexDir, Seq(2L).toDF("vec_id"),
+          "centroid_id")
+        (nb, indexHead().count())
       }
       val (l, s, x) = Overlap.par3(chainLanding, chainServing, chainIndex)
       assert(l == ((4L, 2L)), s"round $i landing drift: $l")
@@ -94,8 +99,8 @@ class ConcurrentMutationSpec extends SparkSpec {
       // the recount... nb is read after upsert: 4 keys live) then deletes 4
       assert(s == ((4L, 3L)), s"round $i serving drift: $s")
       assert(x == ((4L, 3L)), s"round $i index drift: $x")
-      // the untouched bins' partitions must still exist on disk
-      val bins = spark.read.parquet(indexDir)
+      // the untouched bins must still be live
+      val bins = indexHead()
         .select(col("centroid_id").cast("long")).distinct()
         .as[Long].collect().toSet
       assert(bins == Set(0L, 1L, 2L), s"round $i lost partitions: $bins")

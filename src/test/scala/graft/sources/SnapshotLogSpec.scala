@@ -265,4 +265,27 @@ class SnapshotLogSpec extends SparkSpec {
     assert(staged.isDirectory,
       s"fresh staged parent swept because its aged empty subdir was: $deleted")
   }
+
+  test("versions past 99,999 are listed: a log commits on through v100001") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-snap-ceiling").toString
+    val path = s"file:$dir"
+    SnapshotLog.commit(spark, path, Seq(1L).toDF("id"), carried = Nil)
+    // renumber the head as if the log had already committed 99,998 times
+    val log = new java.io.File(dir, "_graft_log")
+    assert(new java.io.File(log, "v00001.manifest")
+      .renameTo(new java.io.File(log, "v99999.manifest")))
+    assert(SnapshotLog.latestVersion(spark, path).contains(99999))
+    def append(id: Long): Int = {
+      val head = SnapshotLog.latestVersion(spark, path).get
+      SnapshotLog.commit(spark, path, Seq(id).toDF("id"),
+        carried = SnapshotLog.manifest(spark, path, head))
+    }
+    assert(append(2L) == 100000)
+    assert(SnapshotLog.latestVersion(spark, path).contains(100000))
+    assert(append(3L) == 100001)
+    assert(SnapshotLog.latestVersion(spark, path).contains(100001))
+    assert(SnapshotLog.read(spark, path, 100001).as[Long].collect().sorted
+      .toSeq == Seq(1L, 2L, 3L))
+  }
 }
